@@ -76,155 +76,95 @@ object ArrowBridge {
   /** v5 IPC end-of-stream marker: continuation + zero length. */
   val EosBytes: Array[Byte] = Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0)
 
-  /** Parallel DataFrame → IPC stream: each partition serializes its own
-    * batches on the executors (all cores busy), the driver concatenates
-    * [schema][partition batch messages…][EOS] in partition order with a
-    * bounded prefetch window — constant driver memory, no row-at-a-time
-    * driver loop. This is the 100 TB-shaped serving path: on a cluster
-    * the driver only relays ~10 MB chunks.
+  /** Parallel DataFrame → IPC stream: each partition serializes (and,
+    * with `zstd`, compresses) its own batches inside its Spark task
+    * (all cores busy); the driver relays [schema][first dictionary]
+    * [partition batches…][EOS] in partition order with a bounded
+    * prefetch window — constant driver memory, no row-at-a-time driver
+    * loop. This is the 100 TB-shaped serving path: on a cluster the
+    * driver only relays ~10 MB chunks. The schema goes out before any
+    * partition finishes, so a client sees first bytes at once.
     *
-    * Not valid with dictionary columns (each partition would emit its
-    * own dictionary message mid-stream) — falls back to the row loop.
+    * Dictionary streams stay parallel: the value set is fixed at
+    * registration, so every partition emits IDENTICAL dictionary
+    * messages right after its schema; the relay keeps the first
+    * partition's and drops the rest, preserving one dictionary per
+    * stream on the wire (the reference's shape).
     *
-    * Returns (rows, batches, bytes).
+    * With `zstd` the HTTP-level zstd coding is done as INDEPENDENT
+    * zstd frames — one for the schema, one for the dictionary, one per
+    * non-empty partition chunk, one for EOS. Concatenated frames are
+    * standard zstd (the CLI produces them for multi-file input) and any
+    * zstd decoder reads them as one stream, so the decompressed bytes
+    * equal the uncoded output. (libzstd's own MT encoder,
+    * ZstdOutputStream.setWorkers, intermittently stalled serves 20–80 s
+    * under concurrent decode load; one-shot per-task frames share no
+    * native context. Ratio cost of per-chunk frames is < 0.5% on the
+    * ticker payload.)
+    *
+    * Returns (rows, batches, uncoded stream bytes); the IPC file format
+    * falls back to the row loop (bytes -1).
     */
   def writeParallel(df: org.apache.spark.sql.DataFrame, out: OutputStream,
-      opts: WriteOptions = WriteOptions(), window: Int = 8): (Long, Long, Long) = {
+      opts: WriteOptions = WriteOptions(), window: Int = 8,
+      zstd: Boolean = false): (Long, Long, Long) = {
     if (opts.fileFormat) {
+      require(!zstd, "zstd frames need the IPC stream format")
       val (r, b) = write(df.schema, internalRows(df), out, opts)
       return (r, b, -1L)
     }
+    def code(bytes: Array[Byte]): Array[Byte] =
+      if (zstd) com.github.luben.zstd.Zstd.compress(bytes, ZstdLevel) else bytes
     val header = schemaBytes(df.schema, opts)
-    out.write(header)
+    out.write(code(header))
+    out.flush()
+    val schema = df.schema
+    val parts = df.queryExecution.toRdd.mapPartitions { it =>
+      val bos = new java.io.ByteArrayOutputStream(1 << 20)
+      val (r, b) = write(schema, it, bos, opts)
+      val all = bos.toByteArray
+      // [schema][dictionaries…][batches…][EOS] → (dictionaries, batches)
+      val frames = IpcFrames.scan(all)
+      val dictStart = frames.head.end.toInt
+      val batchStart = frames.drop(1).find(!_.isDictionary)
+        .fold(all.length - EosBytes.length)(_.offset.toInt)
+      val dict = java.util.Arrays.copyOfRange(all, dictStart, batchStart)
+      val batches = java.util.Arrays.copyOfRange(all, batchStart, all.length - EosBytes.length)
+      def coded(raw: Array[Byte]) = if (raw.isEmpty) raw else code(raw)
+      Iterator.single(RelayPart(coded(dict), dict.length, coded(batches), batches.length, r, b))
+    }
     var rows = 0L
     var batches = 0L
     var bytes = header.length.toLong
-    // Dictionary streams stay parallel: the value set is fixed at
-    // registration, so every partition emits an IDENTICAL dictionary
-    // message right after its schema — the relay keeps the first and
-    // strips the duplicates, preserving one-dictionary-per-stream on
-    // the wire (the reference's shape) at executor-parallel speed.
-    var dictEmitted = false
-    foreachPartitionChunk(df, opts, window) { case (chunk, r, b) =>
-      val body =
-        if (opts.dictColumns.isEmpty) chunk
-        else {
-          val (dict, rest) = splitLeadingDictionary(chunk)
-          if (dict.isEmpty) chunk
-          else if (!dictEmitted) { dictEmitted = true; chunk }
-          else rest
-        }
-      out.write(body)
-      out.flush()
-      rows += r; batches += b; bytes += body.length
+    var dictSent = false
+    PartitionStreamer.foreachOrdered(parts, window) { p =>
+      if (!dictSent && p.dictLen > 0) {
+        dictSent = true
+        out.write(p.dict)
+        bytes += p.dictLen
+      }
+      if (p.batchesLen > 0) {
+        out.write(p.batches)
+        out.flush()
+      }
+      rows += p.rows; batches += p.batchCount; bytes += p.batchesLen
     }
-    out.write(EosBytes)
+    out.write(code(EosBytes))
     out.flush()
     (rows, batches, bytes + EosBytes.length)
   }
 
-  /** [[writeParallel]] with the HTTP-level zstd coding done as
-    * INDEPENDENT zstd frames — [frame(schema)][frame(chunk)]…[frame(EOS)]
-    * — compressed on a private pool of plain JVM threads and emitted in
-    * partition order. Concatenated frames are standard zstd (the CLI
-    * produces them for multi-file input) and ZstdInputStream decodes
-    * them as one stream, so the decompressed bytes are identical to
-    * writeParallel's output.
-    *
-    * Why not ZstdOutputStream.setWorkers (libzstd's own MT): it
-    * intermittently stalled the serve for 20–80 s per request under the
-    * bench's serve+decode loop (ticker probe, ~25% of reps, escalating
-    * then recovering) while the single-threaded encoder never did; this
-    * path gets the same compression overlap from deterministic JVM
-    * threads and one-shot ZSTD_compress calls with no shared native
-    * context. Ratio cost of per-chunk frames (window reset every ~27 MB
-    * chunk + 13-byte frame headers) is < 0.5% on the ticker payload.
-    *
-    * Backpressure: at most `workers + 2` frames are in flight; the
-    * relay blocks on the oldest future, so driver memory stays
-    * O((window + workers) × chunk). Returns (rows, batches,
-    * uncompressed stream bytes) like writeParallel. */
+  /** [[writeParallel]] coded as zstd frames. */
   def writeParallelZstd(df: org.apache.spark.sql.DataFrame, out: OutputStream,
-      opts: WriteOptions = WriteOptions(), workers: Int = 4, level: Int = 3,
-      window: Int = 8): (Long, Long, Long) = {
-    val nw = math.max(1, workers)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nw,
-      (r: Runnable) => { val t = new Thread(r, "zstd-frame"); t.setDaemon(true); t })
-    val pending = new java.util.ArrayDeque[java.util.concurrent.Future[Array[Byte]]]()
-    def submit(bytes: Array[Byte]): Unit = {
-      pending.add(pool.submit(() => com.github.luben.zstd.Zstd.compress(bytes, level)))
-      while (pending.size > nw + 2) { out.write(pending.poll().get()); out.flush() }
-    }
-    try {
-      val header = schemaBytes(df.schema, opts)
-      submit(header)
-      var rows = 0L
-      var batches = 0L
-      var bytes = header.length.toLong
-      var dictEmitted = false
-      foreachPartitionChunk(df, opts, window) { case (chunk, r, b) =>
-        val body =
-          if (opts.dictColumns.isEmpty) chunk
-          else {
-            val (dict, rest) = splitLeadingDictionary(chunk)
-            if (dict.isEmpty) chunk
-            else if (!dictEmitted) { dictEmitted = true; chunk }
-            else rest
-          }
-        submit(body)
-        rows += r; batches += b; bytes += body.length
-      }
-      submit(EosBytes)
-      while (!pending.isEmpty) { out.write(pending.poll().get()); out.flush() }
-      (rows, batches, bytes + EosBytes.length)
-    } finally pool.shutdownNow()
-  }
+      opts: WriteOptions = WriteOptions()): (Long, Long, Long) =
+    writeParallel(df, out, opts, zstd = true)
 
-  /** If `chunk` opens with a DictionaryBatch message, split it off:
-    * (dictionaryMessage, remainder); otherwise (empty, chunk). */
-  private def splitLeadingDictionary(chunk: Array[Byte]): (Array[Byte], Array[Byte]) = {
-    def readIntLE(off: Int): Int =
-      (chunk(off) & 0xff) | ((chunk(off + 1) & 0xff) << 8) |
-        ((chunk(off + 2) & 0xff) << 16) | ((chunk(off + 3) & 0xff) << 24)
-    if (chunk.length < 8 || readIntLE(0) != -1) return (Array.emptyByteArray, chunk)
-    val metaLen = readIntLE(4)
-    if (metaLen <= 0 || chunk.length < 8 + metaLen) return (Array.emptyByteArray, chunk)
-    val header = java.nio.ByteBuffer.wrap(chunk, 8, metaLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-    if (msg.headerType() != org.apache.arrow.flatbuf.MessageHeader.DictionaryBatch)
-      (Array.emptyByteArray, chunk)
-    else {
-      val end = 8 + metaLen + msg.bodyLength().toInt
-      (java.util.Arrays.copyOfRange(chunk, 0, end),
-        java.util.Arrays.copyOfRange(chunk, end, chunk.length))
-    }
-  }
+  private final val ZstdLevel = 3 // a constant: inlined, so task closures capture nothing
 
-  /** The executor-parallel chunk relay under [[writeParallel]]: each
-    * partition serializes its own batches; the driver sees, in
-    * partition order with a bounded prefetch window, one chunk per
-    * partition — a pure sequence of encapsulated batch messages (no
-    * schema prefix, no EOS). Driver memory is O(window × chunk). */
-  def foreachPartitionChunk(df: org.apache.spark.sql.DataFrame,
-      opts: WriteOptions = WriteOptions(), window: Int = 8)(
-      consume: (Array[Byte], Long, Long) => Unit): Unit = {
-    val schema = df.schema
-    val headerLen = schemaBytes(schema, opts).length
-    val chunks: org.apache.spark.rdd.RDD[(Array[Byte], Long, Long)] =
-      df.queryExecution.toRdd.mapPartitions { it =>
-        val bos = new java.io.ByteArrayOutputStream(1 << 20)
-        val (r, b) = write(schema, it, bos, opts)
-        val all = bos.toByteArray
-        // strip the schema prefix and EOS suffix; what remains is a
-        // pure sequence of encapsulated batch messages
-        Iterator.single((java.util.Arrays.copyOfRange(
-          all, headerLen, all.length - EosBytes.length), r, b))
-      }
-    PartitionStreamer.foreachOrdered(chunks, window) { case (chunk, r, b) =>
-      consume(chunk, r, b)
-    }
-  }
+  /** One partition's share of a [[writeParallel]] stream, coded; the
+    * lengths are the uncoded ones. */
+  private final case class RelayPart(dict: Array[Byte], dictLen: Int,
+      batches: Array[Byte], batchesLen: Int, rows: Long, batchCount: Long)
 
   /** Push-style streaming writer: append rows one at a time, constant
     * memory; flushes a batch every `opts.batchSize` rows. */

@@ -1,11 +1,11 @@
 package graft.dissociated
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, CountDownLatch}
 
 import org.apache.spark.sql.DataFrame
 
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, IpcFrames}
 
 /** Dissociated IPC: metadata and body of each record batch travel on
   * SEPARATE channels and are reassembled by sequence number — the
@@ -52,184 +52,27 @@ object Dissociated {
     splitStream(full.toByteArray)
   }
 
-  /** Split a pure sequence of encapsulated batch messages — a
-    * writeParallel partition chunk (no schema, no EOS) — into splits
-    * numbered from `startSeq`. */
-  def splitChunk(chunk: Array[Byte], startSeq: Int): Vector[Split] = {
-    def readIntLE(off: Int): Int =
-      (chunk(off) & 0xff) | ((chunk(off + 1) & 0xff) << 8) |
-        ((chunk(off + 2) & 0xff) << 16) | ((chunk(off + 3) & 0xff) << 24)
-    var off = 0
-    var seq = startSeq
-    val splits = Vector.newBuilder[Split]
-    while (off < chunk.length) {
-      require(readIntLE(off) == -1, s"expected continuation marker at $off")
-      val metaLen = readIntLE(off + 4)
-      val msgEnd = off + 8 + metaLen
-      val header = java.nio.ByteBuffer.wrap(chunk, off + 8, metaLen)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val bodyLen = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-        .bodyLength().toInt
-      splits += Split(seq, java.util.Arrays.copyOfRange(chunk, off, msgEnd),
-        java.util.Arrays.copyOfRange(chunk, msgEnd, msgEnd + bodyLen))
-      seq += 1
-      off = msgEnd + bodyLen
-    }
-    splits.result()
-  }
-
-  /** Serve a dataset's metadata channel partition-wise: the query runs
-    * through the writeParallel chunk relay and each chunk is split as
-    * it arrives — serving memory is O(window × chunk), independent of
-    * dataset size (the r1 path cached the entire serialized stream on
-    * the driver). Returns the batch count. */
-  def streamMetadataChannel(df: DataFrame, out: OutputStream,
-      batchSize: Int = 4096): Int = {
-    val d = new DataOutputStream(out)
-    val opts = ArrowBridge.WriteOptions(batchSize = batchSize)
-    writeMetaFrame(d, TypeSchema, 0, ArrowBridge.schemaBytes(df.schema, opts))
-    var seq = 0
-    ArrowBridge.foreachPartitionChunk(df, opts) { case (chunk, _, _) =>
-      splitChunk(chunk, seq + 1).foreach { s =>
-        writeMetaFrame(d, TypeBatch, s.seq, s.metadata)
-        seq = s.seq
-      }
-    }
-    writeMetaFrame(d, TypeEos, seq, Array.empty)
-    d.flush()
-    seq
-  }
-
-  /** Serve a dataset's body channel partition-wise (same chunk relay);
-    * delivery is permuted within windows of `shuffleWindow` frames to
-    * exercise out-of-order reassembly, mirroring the unordered tags of
-    * the reference transport. */
-  def streamBodyChannel(df: DataFrame, out: OutputStream,
-      batchSize: Int = 4096, shuffleWindow: Int = 8): Unit = {
-    val d = new DataOutputStream(out)
-    val opts = ArrowBridge.WriteOptions(batchSize = batchSize)
-    var seq = 0
-    val window = scala.collection.mutable.ArrayBuffer[Split]()
-    def flushWindow(): Unit = {
-      window.reverseIterator.foreach(s => writeBodyFrame(d, s.seq, s.body))
-      window.clear()
-    }
-    ArrowBridge.foreachPartitionChunk(df, opts) { case (chunk, _, _) =>
-      splitChunk(chunk, seq + 1).foreach { s =>
-        seq = s.seq
-        window += s
-        if (window.size >= shuffleWindow) flushWindow()
-      }
-    }
-    flushWindow()
-    d.flush()
-  }
-
-  /** Incrementally split an IPC stream read from `in`: `onSchema` fires
-    * for the schema message, `f` per batch split (sequence numbers from
-    * `startSeq`), stopping at EOS or EOF. Memory is O(one batch) — the
-    * streaming complement of [[splitStream]] for spilled artifacts.
-    * Returns the last sequence number consumed (startSeq-1 if none). */
-  def foreachSplitIn(in: InputStream, startSeq: Int)
-      (onSchema: Array[Byte] => Unit)(f: Split => Unit): Int = {
-    val d = new DataInputStream(in)
-    var seq = startSeq - 1
-    var done = false
-    while (!done) {
-      val marker = try d.readInt() catch { case _: EOFException => done = true; 0 }
-      if (!done) {
-        require(marker == -1, s"expected continuation marker, got $marker")
-        val metaLen = Integer.reverseBytes(d.readInt())
-        if (metaLen == 0) done = true // EOS
-        else {
-          // keep the 8-byte encapsulation prefix: reassembled streams
-          // must be byte-identical to plain IPC
-          val framed = new Array[Byte](8 + metaLen)
-          framed(0) = -1; framed(1) = -1; framed(2) = -1; framed(3) = -1
-          framed(4) = (metaLen & 0xff).toByte
-          framed(5) = ((metaLen >> 8) & 0xff).toByte
-          framed(6) = ((metaLen >> 16) & 0xff).toByte
-          framed(7) = ((metaLen >> 24) & 0xff).toByte
-          d.readFully(framed, 8, metaLen)
-          val header = java.nio.ByteBuffer.wrap(framed, 8, metaLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-          val body = new Array[Byte](msg.bodyLength().toInt)
-          d.readFully(body)
-          if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema)
-            onSchema(framed)
-          else {
-            seq += 1
-            f(Split(seq, framed, body))
-          }
-        }
-      }
-    }
-    seq
-  }
-
   /** Serve the metadata channel from spilled `.arrows` part files (one
     * per partition, name-sorted): reads ONLY the encapsulation headers —
     * body regions are `skip`ped (an lseek on a file stream, no read, no
-    * allocation). The r12 version ran the full [[foreachSplitIn]] here,
-    * which `readFully`d every body just to discard it: the metadata
-    * channel paid a whole-dataset read + alloc per request, and since
-    * reassembly can't emit a batch until its META frame arrives, the
-    * single-pair loop was gated on that wasted pass (the r12 verdict #2
-    * 0.62→0.80 s regression). The query that produced the spill is NOT
-    * re-run, so meta and body channels built from the same files are
-    * consistent by construction. Returns the batch count. */
+    * allocation), since reassembly can't emit a batch until its META
+    * frame arrives and a metadata channel that read every body would
+    * gate it on a whole-dataset pass. The query that produced the spill
+    * is NOT re-run, so meta and body channels built from the same files
+    * are consistent by construction. Returns the batch count. */
   def streamMetadataFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream): Int = {
     val d = new DataOutputStream(out)
     var schemaSent = false
     var seq = 0
     paths.foreach { p =>
-      val in = new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(p), 1 << 16)
-      try {
-        seq = foreachSplitMeta(in, seq + 1) { schema =>
-          if (!schemaSent) { writeMetaFrame(d, TypeSchema, 0, schema); schemaSent = true }
-        } { (s, metadata) => writeMetaFrame(d, TypeBatch, s, metadata) }
-      } finally in.close()
+      val frames = IpcFrames.open(p)
+      try frames.foreach { f =>
+        if (!f.isSchema) { seq += 1; writeMetaFrame(d, TypeBatch, seq, f.framedHeader) }
+        else if (!schemaSent) { writeMetaFrame(d, TypeSchema, 0, f.framedHeader); schemaSent = true }
+      } finally frames.close()
     }
     writeMetaFrame(d, TypeEos, seq, Array.empty)
     d.flush()
-    seq
-  }
-
-  /** Header-only variant of [[foreachSplitIn]]: `f(seq, framedHeader)`
-    * per batch, body bytes SKIPPED (never read, never allocated). */
-  def foreachSplitMeta(in: InputStream, startSeq: Int)
-      (onSchema: Array[Byte] => Unit)(f: (Int, Array[Byte]) => Unit): Int = {
-    val d = new DataInputStream(in)
-    var seq = startSeq - 1
-    var done = false
-    while (!done) {
-      val marker = try d.readInt() catch { case _: EOFException => done = true; 0 }
-      if (!done) {
-        require(marker == -1, s"expected continuation marker, got $marker")
-        val metaLen = Integer.reverseBytes(d.readInt())
-        if (metaLen == 0) done = true // EOS
-        else {
-          val framed = new Array[Byte](8 + metaLen)
-          framed(0) = -1; framed(1) = -1; framed(2) = -1; framed(3) = -1
-          framed(4) = (metaLen & 0xff).toByte
-          framed(5) = ((metaLen >> 8) & 0xff).toByte
-          framed(6) = ((metaLen >> 16) & 0xff).toByte
-          framed(7) = ((metaLen >> 24) & 0xff).toByte
-          d.readFully(framed, 8, metaLen)
-          val header = java.nio.ByteBuffer.wrap(framed, 8, metaLen)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-          d.skipNBytes(msg.bodyLength())
-          if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema)
-            onSchema(framed)
-          else {
-            seq += 1
-            f(seq, framed)
-          }
-        }
-      }
-    }
     seq
   }
 
@@ -238,10 +81,9 @@ object Dissociated {
     * out-of-order reassembly (reference transport tags are unordered).
     *
     * Bodies are read into a ring of `shuffleWindow` grow-only reused
-    * buffers — at most window-many bodies are ever live and NOTHING is
-    * allocated per batch after warm-up (the r12 version materialized a
-    * fresh header + body array per batch: the whole dataset volume in
-    * per-request allocation churn, a driver-box GC tax at bench scale). */
+    * buffers — at most window-many bodies are ever live and no body
+    * array is allocated per batch after warm-up (a fresh array per batch
+    * is the whole dataset volume in per-request allocation churn). */
   def streamBodyFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream,
       shuffleWindow: Int = 8): Unit = {
     val d = new DataOutputStream(out)
@@ -259,40 +101,20 @@ object Dissociated {
       }
       filled = 0
     }
-    val header = new Array[Byte](1 << 16)
     paths.foreach { p =>
-      val in = new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(p), 1 << 16)
-      val di = new DataInputStream(in)
-      try {
-        var done = false
-        while (!done) {
-          val marker = try di.readInt() catch { case _: EOFException => done = true; 0 }
-          if (!done) {
-            require(marker == -1, s"expected continuation marker, got $marker")
-            val metaLen = Integer.reverseBytes(di.readInt())
-            if (metaLen == 0) done = true // EOS
-            else {
-              require(metaLen <= header.length, s"metadata message $metaLen too large")
-              di.readFully(header, 0, metaLen)
-              val hb = java.nio.ByteBuffer.wrap(header, 0, metaLen)
-                .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(hb)
-              val bodyLen = msg.bodyLength().toInt
-              if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema) {
-                di.skipNBytes(bodyLen)
-              } else {
-                if (bufs(filled).length < bodyLen) bufs(filled) = new Array[Byte](bodyLen)
-                di.readFully(bufs(filled), 0, bodyLen)
-                seq += 1
-                seqs(filled) = seq
-                lens(filled) = bodyLen
-                filled += 1
-                if (filled >= shuffleWindow) flushWindow()
-              }
-            }
-          }
+      val frames = IpcFrames.open(p)
+      try frames.foreach { f =>
+        if (!f.isSchema) {
+          val bodyLen = f.bodyLength.toInt
+          if (bufs(filled).length < bodyLen) bufs(filled) = new Array[Byte](bodyLen)
+          frames.readBody(bufs(filled))
+          seq += 1
+          seqs(filled) = seq
+          lens(filled) = bodyLen
+          filled += 1
+          if (filled >= shuffleWindow) flushWindow()
         }
-      } finally in.close()
+      } finally frames.close()
     }
     flushWindow()
     d.flush()
@@ -301,39 +123,13 @@ object Dissociated {
   /** Split a serialized Arrow IPC stream into schema + batch messages,
     * each batch cut at its body offset. */
   def splitStream(stream: Array[Byte]): (Array[Byte], Vector[Split]) = {
-    def readIntLE(off: Int): Int =
-      (stream(off) & 0xff) | ((stream(off + 1) & 0xff) << 8) |
-        ((stream(off + 2) & 0xff) << 16) | ((stream(off + 3) & 0xff) << 24)
-
-    var off = 0
+    val frames = IpcFrames.reader(new ByteArrayInputStream(stream), stream.length)
     var schema: Array[Byte] = null
     val splits = Vector.newBuilder[Split]
-    var seq = 1
-    var done = false
-    while (!done && off < stream.length) {
-      require(readIntLE(off) == -1, s"expected continuation marker at $off")
-      val metaLen = readIntLE(off + 4)
-      if (metaLen == 0) { done = true; off += 8 } // EOS
-      else {
-        val msgEnd = off + 8 + metaLen
-        // the flatbuffer's bodyLength decides where this message ends;
-        // rather than parse it, use the next continuation marker — but
-        // bodies can contain 0xFFFFFFFF, so parse the header instead:
-        val header = java.nio.ByteBuffer.wrap(stream, off + 8, metaLen)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-        val bodyLen = msg.bodyLength().toInt
-        val total = msgEnd + bodyLen
-        val headerBytes = java.util.Arrays.copyOfRange(stream, off, msgEnd)
-        if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema) {
-          schema = headerBytes
-        } else {
-          splits += Split(seq, headerBytes,
-            java.util.Arrays.copyOfRange(stream, msgEnd, total))
-          seq += 1
-        }
-        off = total
-      }
+    var seq = 0
+    frames.foreach { f =>
+      if (f.isSchema) schema = f.framedHeader
+      else { seq += 1; splits += Split(seq, f.framedHeader, frames.body()) }
     }
     (schema, splits.result())
   }
@@ -495,11 +291,10 @@ object Dissociated {
         owned.writeOwned(m.bytes, m.bytes.length)
         // strip alignment padding: the IPC header records the true body
         // length; padded tail bytes beyond it are channel-only
-        val header = java.nio.ByteBuffer.wrap(m.bytes, 8, m.bytes.length - 8)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val trueLen = org.apache.arrow.flatbuf.Message.getRootAsMessage(header)
-          .bodyLength().toInt
-        owned.writeOwned(b, trueLen)
+        val trueLen = IpcFrames.bodyLength(m.bytes)
+        if (trueLen > b.length)
+          throw new IpcFrames.Malformed(s"batch $next: body frame of ${b.length} bytes < header's $trueLen")
+        owned.writeOwned(b, trueLen.toInt)
         bytes += m.bytes.length + trueLen
         ready -= next
         pendingGate.release()
@@ -508,8 +303,7 @@ object Dissociated {
       }
       if (error != null) throw error
     }
-    // EOS marker: continuation + zero length
-    sink.write(Array[Byte](-1, -1, -1, -1, 0, 0, 0, 0))
+    sink.write(ArrowBridge.EosBytes)
     sink.flush()
     // bounded join: a malformed channel with frames beyond EOS could
     // leave a (daemon) producer parked on the gate — don't hang with it

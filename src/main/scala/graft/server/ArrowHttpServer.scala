@@ -12,15 +12,22 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, IpcFrames}
+import graft.dissociated.Dissociated
 
 /** Driver-embedded HTTP service streaming DataFrames as Arrow IPC
   * streams — the engine surface reproducing the reference's http/
   * experiment family (SURVEY §2.3):
   *
   *   GET  /q/<name>          chunked Arrow stream, content negotiation
-  *                           (HTTP codings zstd>gzip; IPC codecs
-  *                           zstd,lz4 via Accept ;codecs), 406 path
+  *                           (HTTP codings zstd>br>gzip; IPC codecs
+  *                           zstd,lz4 via Accept ;codecs), 406 path.
+  *                           The zstd coding is a sequence of
+  *                           independent zstd frames: one for the
+  *                           schema, one for the dictionary of a
+  *                           dictionary-encoded dataset, one per
+  *                           non-empty partition chunk, one for EOS —
+  *                           any zstd decoder reads them as one stream
   *   GET  /multipart/<name>  multipart/mixed: JSON + Arrow + footnotes
   *   GET  /                  indirect JSON listing of /files artifacts
   *   GET  /files/<name>      static .arrows artifact, Content-Length +
@@ -34,6 +41,13 @@ import graft.arrow.ArrowBridge
 final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
   private val datasets = scala.collection.concurrent.TrieMap[String, () => DataFrame]()
+  /** Ingest spool file of each ingested dataset, and the references to
+    * each spool file: one from its registration, one per request
+    * reading its dataset (a DSv2 task opens its file lazily, after the
+    * request planned it). A spool file is deleted when its last
+    * reference goes. Both maps are guarded by `spoolRefs`. */
+  private val spools = scala.collection.mutable.Map[String, java.nio.file.Path]()
+  private val spoolRefs = scala.collection.mutable.Map[java.nio.file.Path, Int]()
   private val files = scala.collection.concurrent.TrieMap[String, java.nio.file.Path]()
   /** Per-dataset dictionary-encoded columns (value sets computed at
     * registration — one dictionary per stream, the reference's
@@ -45,14 +59,37 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   val httpCodings: Seq[String] = Seq("zstd", "br", "gzip")
   val ipcCodecs: Seq[String] = Seq("zstd", "lz4")
 
+  /** Runs `serve` on dataset `name` (404 when there is none), holding a
+    * reference to its spool file until `serve` returns. */
+  private def withDataset(exchange: HttpExchange, name: String)(
+      serve: (() => DataFrame) => Unit): Unit = {
+    val (dfFn, held) = spoolRefs.synchronized {
+      val held = spools.get(name)
+      held.foreach(p => spoolRefs(p) += 1)
+      (datasets.get(name), held)
+    }
+    try dfFn match {
+      case None => sendText(exchange, 404, s"no dataset $name")
+      case Some(f) => serve(f)
+    } finally held.foreach(releaseSpool)
+  }
+
+  private def releaseSpool(path: java.nio.file.Path): Unit = spoolRefs.synchronized {
+    val n = spoolRefs(path) - 1
+    if (n > 0) spoolRefs(path) = n
+    else {
+      spoolRefs.remove(path)
+      java.nio.file.Files.deleteIfExists(path)
+    }
+  }
+
   def register(name: String, df: => DataFrame): Unit = {
     spillCache.remove(name).foreach(_ =>
       files.keys.filter(_.startsWith(s"$name/")).foreach(files.remove))
     datasets.put(name, () => df)
   }
   def registerFile(name: String, path: java.nio.file.Path): Unit = {
-    offsetsCache.remove(name)
-    chanStatCache.remove(name)
+    frameIndexCache.remove(name)
     files.put(name, path)
   }
 
@@ -118,132 +155,123 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // ------------------------------------------------------------------
   server.createContext("/q/", exchange => safely(exchange) {
     val name = exchange.getRequestURI.getPath.stripPrefix("/q/")
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
-        val h = exchange.getRequestHeaders
-        Negotiation.negotiate(
-          Option(h.getFirst("Accept")), Option(h.getFirst("Accept-Encoding")),
-          ipcCodecs, httpCodings, http10 = exchange.getProtocol == "HTTP/1.0"
-        ) match {
-          case Left(diag) => sendText(exchange, 406, diag + "\n")
-          case Right(strategy) =>
-            val rh = exchange.getResponseHeaders
-            rh.set("Content-Type", strategy.contentType)
-            rh.set("Content-Disposition", s"""attachment; filename="$name.arrows"""")
-            // schema-only probe: answer [schema][EOS] without running
-            // the query (keeps DSv2 inferSchema from triggering a full
-            // serve that is then abandoned)
-            if (exchange.getRequestHeaders.containsKey("X-Arrow-Schema-Only")) {
-              exchange.sendResponseHeaders(200, 0)
-              val out = exchange.getResponseBody
-              // must reflect the dictionary layout of the real stream:
-              // one-dict streams prefix an (empty-tolerant) dictionary
-              // message; delta streams are schema-only until data flows
-              out.write(deltaDictCols.get(name) match {
-                case Some(cols) => ArrowBridge.deltaDictSchemaBytes(dfFn().schema, cols)
-                case None => ArrowBridge.schemaBytes(dfFn().schema,
-                  ArrowBridge.WriteOptions(dictColumns = dictCols.getOrElse(name, Map.empty)))
-              })
-              out.write(ArrowBridge.EosBytes)
-              out.close()
+    withDataset(exchange, name) { dfFn =>
+      val h = exchange.getRequestHeaders
+      Negotiation.negotiate(
+        Option(h.getFirst("Accept")), Option(h.getFirst("Accept-Encoding")),
+        ipcCodecs, httpCodings, http10 = exchange.getProtocol == "HTTP/1.0"
+      ) match {
+        case Left(diag) => sendText(exchange, 406, diag + "\n")
+        case Right(strategy) =>
+          val rh = exchange.getResponseHeaders
+          rh.set("Content-Type", strategy.contentType)
+          rh.set("Content-Disposition", s"""attachment; filename="$name.arrows"""")
+          // schema-only probe: answer [schema][EOS] without running
+          // the query (keeps DSv2 inferSchema from triggering a full
+          // serve that is then abandoned)
+          if (exchange.getRequestHeaders.containsKey("X-Arrow-Schema-Only")) {
+            exchange.sendResponseHeaders(200, 0)
+            val out = exchange.getResponseBody
+            // must reflect the dictionary layout of the real stream:
+            // one-dict streams prefix an (empty-tolerant) dictionary
+            // message; delta streams are schema-only until data flows
+            out.write(deltaDictCols.get(name) match {
+              case Some(cols) => ArrowBridge.deltaDictSchemaBytes(dfFn().schema, cols)
+              case None => ArrowBridge.schemaBytes(dfFn().schema,
+                ArrowBridge.WriteOptions(dictColumns = dictCols.getOrElse(name, Map.empty)))
+            })
+            out.write(ArrowBridge.EosBytes)
+            out.close()
+          } else {
+            strategy.httpCoding.foreach(c => rh.set("Content-Encoding", c))
+            exchange.sendResponseHeaders(200, 0) // 0 = chunked
+            val raw = exchange.getResponseBody
+            val sink = new CoalescingOutputStream(raw, 64 * 1024, flushFirst = true)
+            val df = dfFn()
+            // the parallel relay codes zstd as per-task frames
+            // (ArrowBridge.writeParallel); the delta-dict row loop
+            // keeps the single-threaded ZstdOutputStream
+            if (strategy.httpCoding.contains("zstd") &&
+                !deltaDictCols.contains(name)) {
+              try ArrowBridge.writeParallelZstd(df, sink,
+                ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
+                  dictColumns = dictCols.getOrElse(name, Map.empty)))
+              finally sink.close()
             } else {
-              strategy.httpCoding.foreach(c => rh.set("Content-Encoding", c))
-              exchange.sendResponseHeaders(200, 0) // 0 = chunked
-              val raw = exchange.getResponseBody
-              val sink = new CoalescingOutputStream(raw, 64 * 1024, flushFirst = true)
-              val df = dfFn()
-              // r15: the zstd coding on the parallel-relay path is
-              // compressed as independent per-chunk frames on plain JVM
-              // threads (ArrowBridge.writeParallelZstd) — libzstd's own
-              // MT encoder (ZstdOutputStream.setWorkers) intermittently
-              // stalled serves 20–80 s under concurrent decode load.
-              // The delta-dict row loop keeps the (stall-free)
-              // single-threaded ZstdOutputStream.
-              if (strategy.httpCoding.contains("zstd") &&
-                  !deltaDictCols.contains(name)) {
-                try ArrowBridge.writeParallelZstd(df, sink,
-                  ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
-                    dictColumns = dictCols.getOrElse(name, Map.empty)),
-                  workers = sys.env.getOrElse("SPARK_GRAFT_ZSTD_WORKERS", "4").toInt)
-                finally sink.close()
-              } else {
-                val out: OutputStream = strategy.httpCoding match {
-                  case Some("gzip") => new java.util.zip.GZIPOutputStream(sink, true)
-                  case Some("zstd") => new com.github.luben.zstd.ZstdOutputStream(sink)
-                  case Some("br")   => new Brotli.BrotliStoredOutputStream(sink)
-                  case _            => sink
-                }
-                try {
-                  deltaDictCols.get(name) match {
-                    case Some(cols) =>
-                      // single-pass growing-dictionary encode (no IPC body
-                      // codec on this path; HTTP coding still applies)
-                      ArrowBridge.writeDeltaDict(df.schema,
-                        ArrowBridge.internalRows(df), out, cols)
-                    case None =>
-                      ArrowBridge.writeParallel(df, out,
-                        ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
-                          dictColumns = dictCols.getOrElse(name, Map.empty)))
-                  }
-                } finally { out.close() }
+              val out: OutputStream = strategy.httpCoding match {
+                case Some("gzip") => new java.util.zip.GZIPOutputStream(sink, true)
+                case Some("zstd") => new com.github.luben.zstd.ZstdOutputStream(sink)
+                case Some("br")   => new Brotli.BrotliStoredOutputStream(sink)
+                case _            => sink
               }
+              try {
+                deltaDictCols.get(name) match {
+                  case Some(cols) =>
+                    // single-pass growing-dictionary encode (no IPC body
+                    // codec on this path; HTTP coding still applies)
+                    ArrowBridge.writeDeltaDict(df.schema,
+                      ArrowBridge.internalRows(df), out, cols)
+                  case None =>
+                    ArrowBridge.writeParallel(df, out,
+                      ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
+                        dictColumns = dictCols.getOrElse(name, Map.empty)))
+                }
+              } finally { out.close() }
             }
-        }
+          }
+      }
     }
   })
 
   // ------------------------------------------------------------------
   server.createContext("/multipart/", exchange => safely(exchange) {
     val name = exchange.getRequestURI.getPath.stripPrefix("/multipart/")
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
-        // CSPRNG boundary: 28 bytes entropy, base64url (reference
-        // algorithm, http/get_multipart/README.md:34-56)
-        val rnd = new Array[Byte](28)
-        new SecureRandom().nextBytes(rnd)
-        val boundary = Base64.getUrlEncoder.withoutPadding.encodeToString(rnd)
-        exchange.getResponseHeaders.set("Content-Type",
-          s"""multipart/mixed; boundary="$boundary"""")
-        exchange.sendResponseHeaders(200, 0)
-        val out = exchange.getResponseBody
-        val t0 = System.nanoTime()
-        val df = dfFn()
-        def part(ct: String): Unit =
-          out.write(s"\r\n--$boundary\r\nContent-Type: $ct\r\n\r\n".getBytes(UTF_8))
+    withDataset(exchange, name) { dfFn =>
+      // CSPRNG boundary: 28 bytes entropy, base64url (reference
+      // algorithm, http/get_multipart/README.md:34-56)
+      val rnd = new Array[Byte](28)
+      new SecureRandom().nextBytes(rnd)
+      val boundary = Base64.getUrlEncoder.withoutPadding.encodeToString(rnd)
+      exchange.getResponseHeaders.set("Content-Type",
+        s"""multipart/mixed; boundary="$boundary"""")
+      exchange.sendResponseHeaders(200, 0)
+      val out = exchange.getResponseBody
+      val t0 = System.nanoTime()
+      val df = dfFn()
+      def part(ct: String): Unit =
+        out.write(s"\r\n--$boundary\r\nContent-Type: $ct\r\n\r\n".getBytes(UTF_8))
 
-        part("application/json")
-        val cols = df.schema.fields.map(f =>
-          s"""{"name":"${f.name}","type":"${f.dataType.simpleString}"}""").mkString(",")
-        out.write(s"""{"name":"$name","columns":[$cols]}""".getBytes(UTF_8))
+      part("application/json")
+      val cols = df.schema.fields.map(f =>
+        s"""{"name":"${f.name}","type":"${f.dataType.simpleString}"}""").mkString(",")
+      out.write(s"""{"name":"$name","columns":[$cols]}""".getBytes(UTF_8))
 
-        part(Negotiation.ArrowMime)
-        val counting = new CountingOutputStream(out)
-        // digest computed WHILE streaming (no second pass, no buffering):
-        // feeds the integrity part below
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-        val (rows, batches, _) = ArrowBridge.writeParallel(df,
-          new java.security.DigestOutputStream(counting, digest))
-        counting.flush()
+      part(Negotiation.ArrowMime)
+      val counting = new CountingOutputStream(out)
+      // digest computed WHILE streaming (no second pass, no buffering):
+      // feeds the integrity part below
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+      val (rows, batches, _) = ArrowBridge.writeParallel(df,
+        new java.security.DigestOutputStream(counting, digest))
+      counting.flush()
 
-        part("text/plain")
-        val secs = (System.nanoTime() - t0) / 1e9
-        out.write(
-          f"""record batches sent: $batches%d
-             |arrow bytes sent: ${counting.count}%d
-             |rows sent: $rows%d
-             |seconds elapsed: $secs%.2f
-             |""".stripMargin.getBytes(UTF_8))
+      part("text/plain")
+      val secs = (System.nanoTime() - t0) / 1e9
+      out.write(
+        f"""record batches sent: $batches%d
+           |arrow bytes sent: ${counting.count}%d
+           |rows sent: $rows%d
+           |seconds elapsed: $secs%.2f
+           |""".stripMargin.getBytes(UTF_8))
 
-        // 4th part kind (beyond the reference's three): an integrity
-        // digest of the Arrow part's exact bytes, so a client can
-        // verify the payload it just decoded without re-reading it
-        part("application/vnd.graft.digest")
-        out.write((digest.digest().map("%02x".format(_)).mkString("sha256:", "", "") +
-          s" bytes:${counting.count}\n").getBytes(UTF_8))
-        out.write(s"\r\n--$boundary--\r\n".getBytes(UTF_8))
-        out.close()
+      // 4th part kind (beyond the reference's three): an integrity
+      // digest of the Arrow part's exact bytes, so a client can
+      // verify the payload it just decoded without re-reading it
+      part("application/vnd.graft.digest")
+      out.write((digest.digest().map("%02x".format(_)).mkString("sha256:", "", "") +
+        s" bytes:${counting.count}\n").getBytes(UTF_8))
+      out.write(s"\r\n--$boundary--\r\n".getBytes(UTF_8))
+      out.close()
     }
   })
 
@@ -293,80 +321,61 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
   server.createContext("/qsplit/", exchange => safely(exchange) {
     val name = exchange.getRequestURI.getPath.stripPrefix("/qsplit/")
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
-        val parts = ensureSpilled(name, dfFn)
-        val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k"}""").mkString(",\n  ")
-        exchange.getResponseHeaders.set("Content-Type", "application/json")
-        sendText(exchange, 200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
+    withDataset(exchange, name) { dfFn =>
+      val parts = ensureSpilled(name, dfFn)
+      val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k"}""").mkString(",\n  ")
+      exchange.getResponseHeaders.set("Content-Type", "application/json")
+      sendText(exchange, 200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
     }
   })
 
   // ------------------------------------------------------------------
   // batch-offset index for ranged-parallel clients: the stream format
-  // has no footer, so the server (which can afford one parse at
-  // registration) publishes message boundaries
-  private val offsetsCache = scala.collection.concurrent.TrieMap[String, String]()
-
+  // has no footer, so the server publishes message boundaries
   server.createContext("/offsets/", exchange => safely(exchange) {
     val name = exchange.getRequestURI.getPath.stripPrefix("/offsets/")
     files.get(name) match {
       case None => sendText(exchange, 404, s"no file $name")
-      case Some(p) =>
-        // parse once per file, not once per request — and only the
-        // encapsulation HEADERS of it: bodies are lseek-skipped, the
-        // same move the r13 dissociated metadata channel made. The old
-        // readAllBytes+splitStream form re-read the WHOLE dataset and
-        // allocated it on-heap per part (a 3.2 GB serve = 3.2 GB of
-        // humongous allocations just to learn ~24k message boundaries);
-        // the index is O(#batches), so building it must be too. This
-        // runs on the main DSv2 read path (probeRanges fetches /offsets
-        // per part before the ranged fetch), not just on probes.
-        val body = offsetsCache.getOrElseUpdate(name, {
-          val total = java.nio.file.Files.size(p)
-          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-            java.nio.file.Files.newInputStream(p), 1 << 16))
-          try {
-            var off = 0L
-            var schemaEnd = 0L
-            val spans = new StringBuilder
-            var n = 0
-            var done = false
-            while (!done) {
-              val marker =
-                try in.readInt()
-                catch { case _: java.io.EOFException => done = true; 0 }
-              if (!done) {
-                require(marker == -1, s"expected continuation marker in $name at $off")
-                val metaLen = Integer.reverseBytes(in.readInt())
-                if (metaLen == 0) done = true // EOS
-                else {
-                  val header = new Array[Byte](metaLen)
-                  in.readFully(header)
-                  val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(
-                    java.nio.ByteBuffer.wrap(header).order(java.nio.ByteOrder.LITTLE_ENDIAN))
-                  val bodyLen = msg.bodyLength()
-                  in.skipNBytes(bodyLen)
-                  val end = off + 8 + metaLen + bodyLen
-                  if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema)
-                    schemaEnd = end
-                  else {
-                    if (n > 0) spans.append(',')
-                    spans.append('[').append(off).append(',').append(end).append(']')
-                    n += 1
-                  }
-                  off = end
-                }
-              }
-            }
-            s"""{"schema_end": $schemaEnd, "total": $total, "batches": [$spans]}"""
-          } finally in.close()
-        })
+      case Some(_) =>
+        val ix = frameIndex(name)
+        val spans = ix.batches.map { case (start, end) => s"[$start,$end]" }.mkString(",")
         exchange.getResponseHeaders.set("Content-Type", "application/json")
-        sendText(exchange, 200, body)
+        sendText(exchange, 200,
+          s"""{"schema_end": ${ix.schemaEnd}, "total": ${ix.total}, "batches": [$spans]}""")
     }
   })
+
+  /** Message layout of each registered file, from a header-only scan
+    * (bodies are lseek-skipped, so building it is O(#batches), not
+    * O(bytes)); it serves both the /offsets index and the exact
+    * dissociated channel lengths. Cached per file until re-registration. */
+  private val frameIndexCache =
+    scala.collection.concurrent.TrieMap[String, ArrowHttpServer.FrameIndex]()
+
+  private def frameIndex(key: String): ArrowHttpServer.FrameIndex =
+    frameIndexCache.getOrElseUpdate(key, {
+      val p = files(key)
+      val frames = IpcFrames.open(p)
+      try {
+        var schemaEnd = 0L
+        var schemaFramed = 0L
+        var metaTotal = 0L
+        var bodyTotal = 0L
+        val batches = Vector.newBuilder[(Long, Long)]
+        frames.foreach { f =>
+          if (f.isSchema) { schemaEnd = f.end; schemaFramed = f.framedHeader.length }
+          else {
+            batches += ((f.offset, f.end))
+            // meta frame: [type:1][seq:4][len:4][8-byte prefix + header]
+            metaTotal += 9L + f.framedHeader.length
+            // body frame: [seq:4][len:4][body][pad to 8]
+            bodyTotal += 8L + f.bodyLength + ((8 - (f.bodyLength % 8)) % 8)
+          }
+        }
+        ArrowHttpServer.FrameIndex(java.nio.file.Files.size(p), schemaEnd, schemaFramed,
+          batches.result(), metaTotal, bodyTotal)
+      } finally frames.close()
+    })
 
   server.createContext("/files/", exchange => safely(exchange) {
     val name = exchange.getRequestURI.getPath.stripPrefix("/files/")
@@ -448,11 +457,23 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   }
 
   /** Expose a spooled artifact as dataset + temp view + static file —
-    * reads go through the DSv2 source, not driver memory. */
+    * reads go through the DSv2 source, not driver memory. The spool
+    * file it supersedes is deleted once no request reads it (see
+    * [[spoolRefs]]). Serialized per name with [[ensureSpilled]], so
+    * neither a concurrent ingest nor a spill of the old data can leave
+    * the view or the spill cache on a superseded file. */
   private def registerSpooled(name: String, path: java.nio.file.Path): Unit = {
-    registerFile(s"$name.arrows", path)
-    spark.read.format("arrows").load(path.toString).createOrReplaceTempView(name)
-    register(name, spark.table(name))
+    val df = spark.read.format("arrows").load(path.toString)
+    spillLocks.computeIfAbsent(name, _ => new Object).synchronized {
+      registerFile(s"$name.arrows", path)
+      df.createOrReplaceTempView(name)
+      val superseded = spoolRefs.synchronized {
+        spoolRefs(path) = 1
+        register(name, df)
+        spools.put(name, path)
+      }
+      superseded.foreach(releaseSpool)
+    }
   }
 
   server.createContext("/ingest/", exchange => safely(exchange) {
@@ -507,9 +528,10 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // (partition-parallel, through the DSv2 writer), then each channel is
   // a sequential O(one batch) pass over the part files — meta/body
   // sequence pairing is consistent by construction, with no
-  // plan-determinism premise and no second query run. A dataset that
-  // spills to zero part files (empty result) falls back to the direct
-  // chunk-relay path so a schema frame is still served.
+  // plan-determinism premise and no second query run. Every dataset
+  // spills to at least one part file: Spark runs one write task even for
+  // a plan with zero partitions, so an empty result is one part holding
+  // [schema][EOS].
 
   /** Split a dissoc path remainder into (dataset, optional part index):
     * `{name}` addresses the whole dataset, `{name}/{i}` one spilled
@@ -526,183 +548,97 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   server.createContext("/dissoc/info/", exchange => safely(exchange) {
     val (name, idx) = dissocTarget(
       exchange.getRequestURI.getPath.stripPrefix("/dissoc/info/"))
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
-        exchange.getResponseHeaders.set("Content-Type", "application/json")
-        val n = ensureSpilled(name, dfFn).size
-        idx match {
-          case Some(i) if i >= n =>
-            sendText(exchange, 404, s"no part $i of $name ($n parts)")
-          case Some(i) =>
-            sendText(exchange, 200,
-              s"""{"ticket": "$name/$i", "locations": [
-                 |  {"uri": "$baseUrl/dissoc/meta/$name/$i", "channel": "metadata"},
-                 |  {"uri": "$baseUrl/dissoc/data/$name/$i", "channel": "body"}
-                 |]}""".stripMargin)
-          case None =>
-            // whole-dataset channels stay first (single-pair clients);
-            // a multi-part spill additionally publishes one entry per
-            // part so a parallel scan plans one task per pair. Each
-            // entry carries its channel pair INLINE (metadata/body) so
-            // a planned task opens its two streams without a per-part
-            // discovery round-trip; the per-part info URI stays for
-            // indirection-style clients.
-            val parts =
-              if (n <= 1) ""
-              else (0 until n)
-                .map(i => s"""{"uri": "$baseUrl/dissoc/info/$name/$i", """ +
-                  s""""metadata": "$baseUrl/dissoc/meta/$name/$i", """ +
-                  s""""body": "$baseUrl/dissoc/data/$name/$i"}""")
-                .mkString(""", "parts": [""", ", ", "]")
-            sendText(exchange, 200,
-              s"""{"ticket": "$name", "locations": [
-                 |  {"uri": "$baseUrl/dissoc/meta/$name", "channel": "metadata"},
-                 |  {"uri": "$baseUrl/dissoc/data/$name", "channel": "body"}
-                 |]$parts}""".stripMargin)
-        }
+    withDataset(exchange, name) { dfFn =>
+      exchange.getResponseHeaders.set("Content-Type", "application/json")
+      val n = ensureSpilled(name, dfFn).size
+      idx match {
+        case Some(i) if i >= n =>
+          sendText(exchange, 404, s"no part $i of $name ($n parts)")
+        case Some(i) =>
+          sendText(exchange, 200,
+            s"""{"ticket": "$name/$i", "locations": [
+               |  {"uri": "$baseUrl/dissoc/meta/$name/$i", "channel": "metadata"},
+               |  {"uri": "$baseUrl/dissoc/data/$name/$i", "channel": "body"}
+               |]}""".stripMargin)
+        case None =>
+          // whole-dataset channels stay first (single-pair clients);
+          // a multi-part spill additionally publishes one entry per
+          // part so a parallel scan plans one task per pair. Each
+          // entry carries its channel pair INLINE (metadata/body) so
+          // a planned task opens its two streams without a per-part
+          // discovery round-trip; the per-part info URI stays for
+          // indirection-style clients.
+          val parts =
+            if (n <= 1) ""
+            else (0 until n)
+              .map(i => s"""{"uri": "$baseUrl/dissoc/info/$name/$i", """ +
+                s""""metadata": "$baseUrl/dissoc/meta/$name/$i", """ +
+                s""""body": "$baseUrl/dissoc/data/$name/$i"}""")
+              .mkString(""", "parts": [""", ", ", "]")
+          sendText(exchange, 200,
+            s"""{"ticket": "$name", "locations": [
+               |  {"uri": "$baseUrl/dissoc/meta/$name", "channel": "metadata"},
+               |  {"uri": "$baseUrl/dissoc/data/$name", "channel": "body"}
+               |]$parts}""".stripMargin)
+      }
     }
   })
-
-  private def spilledPaths(name: String, dfFn: () => DataFrame): Vector[java.nio.file.Path] =
-    ensureSpilled(name, dfFn).map(k => files(k))
-
-  /** Per-part channel-length summary (r15): exact byte lengths of the
-    * dissociated meta/body channel framings of one spilled part, from
-    * the same O(#batches) header-seek scan /offsets uses (bodies are
-    * lseek-skipped). Why: the JDK HttpServer sends unknown-length
-    * responses CHUNKED with a hard-coded 4 KiB chunk size — ~240k chunk
-    * writes (server) and chunk-header parses (client) per GB, and the
-    * r15 fan-out thread dumps show the client pinned in
-    * ChunkedInputStream.processRaw across the 2×32 concurrent channel
-    * streams. Publishing an exact Content-Length turns both sides into
-    * plain fixed-length socket I/O — no chunk framing at all — exactly
-    * how the /files/ static handler already serves. Cached per part
-    * file; invalidated with the offsets cache on re-registration. */
-  private val chanStatCache =
-    scala.collection.concurrent.TrieMap[String, ChanStat]()
-  private case class ChanStat(schemaFramed: Long, metaTotal: Long, bodyTotal: Long)
-
-  private def chanStats(key: String): ChanStat =
-    chanStatCache.getOrElseUpdate(key, {
-      val p = files(key)
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        java.nio.file.Files.newInputStream(p), 1 << 16))
-      try {
-        var schemaFramed = 0L
-        var metaTotal = 0L
-        var bodyTotal = 0L
-        var done = false
-        while (!done) {
-          val marker =
-            try in.readInt()
-            catch { case _: java.io.EOFException => done = true; 0 }
-          if (!done) {
-            require(marker == -1, s"expected continuation marker in $key")
-            val metaLen = Integer.reverseBytes(in.readInt())
-            if (metaLen == 0) done = true // EOS
-            else {
-              val header = new Array[Byte](metaLen)
-              in.readFully(header)
-              val msg = org.apache.arrow.flatbuf.Message.getRootAsMessage(
-                java.nio.ByteBuffer.wrap(header).order(java.nio.ByteOrder.LITTLE_ENDIAN))
-              val bodyLen = msg.bodyLength()
-              in.skipNBytes(bodyLen)
-              if (msg.headerType() == org.apache.arrow.flatbuf.MessageHeader.Schema)
-                schemaFramed = 8L + metaLen
-              else {
-                // meta frame: [type:1][seq:4][len:4][8-byte prefix + header]
-                metaTotal += 9L + 8L + metaLen
-                // body frame: [seq:4][len:4][body][pad to 8]
-                bodyTotal += 8L + bodyLen + ((8 - (bodyLen % 8)) % 8)
-              }
-            }
-          }
-        }
-        ChanStat(schemaFramed, metaTotal, bodyTotal)
-      } finally in.close()
-    })
 
   /** Exact meta-channel byte length of a set of spilled parts: one
     * schema frame (first part's), every batch meta frame, one EOS. */
   private def metaChannelLen(keys: Seq[String]): Long =
-    (9L + chanStats(keys.head).schemaFramed) +
-      keys.map(chanStats(_).metaTotal).sum + 9L
+    (9L + frameIndex(keys.head).schemaFramed) +
+      keys.map(frameIndex(_).metaTotal).sum + 9L
 
   private def bodyChannelLen(keys: Seq[String]): Long =
-    keys.map(chanStats(_).bodyTotal).sum
+    keys.map(frameIndex(_).bodyTotal).sum
 
-  // Both channel handlers publish an EXACT Content-Length computed from
-  // the cached per-part header scan (see chanStats): a known length
-  // makes the JDK server write the frames straight to the socket
-  // instead of re-framing them into hard-coded 4 KiB HTTP chunks, and
-  // the client reads a plain fixed-length stream with no chunk parsing
-  // — the r15 fan-out profile showed 2×32 concurrent client readers
-  // pinned in ChunkedInputStream chunk decode. A 64 KiB buffer
-  // coalesces the per-frame header writes (the meta channel is ~4 small
-  // writes per batch otherwise). The zero-spill fallback (dynamic
-  // serve) keeps the chunked path — its length is unknowable up front.
-  server.createContext("/dissoc/meta/", exchange => safely(exchange) {
-    val (name, idx) = dissocTarget(
-      exchange.getRequestURI.getPath.stripPrefix("/dissoc/meta/"))
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
+  /** A dissociated channel endpoint over the spilled parts it addresses
+    * (see [[dissocTarget]]). */
+  private def dissocChannel(prefix: String)(
+      serve: (HttpExchange, Vector[String]) => Unit): Unit =
+    server.createContext(prefix, exchange => safely(exchange) {
+      val (name, idx) = dissocTarget(exchange.getRequestURI.getPath.stripPrefix(prefix))
+      withDataset(exchange, name) { dfFn =>
         val keys = ensureSpilled(name, dfFn)
         if (idx.exists(_ >= keys.size))
           sendText(exchange, 404, s"no part ${idx.get} of $name (${keys.size} parts)")
         else {
           exchange.getResponseHeaders.set("Content-Type", "application/octet-stream")
-          val serveKeys = idx.map(i => Vector(keys(i))).getOrElse(keys)
-          if (serveKeys.nonEmpty) {
-            exchange.sendResponseHeaders(200, metaChannelLen(serveKeys))
-            val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
-            graft.dissociated.Dissociated.streamMetadataFromFiles(
-              serveKeys.map(files(_)), out)
-            out.close()
-          } else {
-            exchange.sendResponseHeaders(200, 0)
-            val out = exchange.getResponseBody
-            graft.dissociated.Dissociated.streamMetadataChannel(dfFn(), out)
-            out.close()
-          }
+          serve(exchange, idx.map(i => Vector(keys(i))).getOrElse(keys))
         }
-    }
-  })
+      }
+    })
 
-  server.createContext("/dissoc/data/", exchange => safely(exchange) {
-    val (name, idx) = dissocTarget(
-      exchange.getRequestURI.getPath.stripPrefix("/dissoc/data/"))
-    datasets.get(name) match {
-      case None => sendText(exchange, 404, s"no dataset $name")
-      case Some(dfFn) =>
-        val keys = ensureSpilled(name, dfFn)
-        if (idx.exists(_ >= keys.size))
-          sendText(exchange, 404, s"no part ${idx.get} of $name (${keys.size} parts)")
-        else {
-          exchange.getResponseHeaders.set("Content-Type", "application/octet-stream")
-          // out-of-order delivery within windows of 8 (stays under the
-          // client's bounded reassembly window)
-          val serveKeys = idx.map(i => Vector(keys(i))).getOrElse(keys)
-          val len = if (serveKeys.nonEmpty) bodyChannelLen(serveKeys) else 0L
-          if (serveKeys.nonEmpty && len > 0) {
-            exchange.sendResponseHeaders(200, len)
-            val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
-            graft.dissociated.Dissociated.streamBodyFromFiles(
-              serveKeys.map(files(_)), out)
-            out.close()
-          } else if (serveKeys.nonEmpty) {
-            exchange.sendResponseHeaders(200, -1) // zero batches: empty body
-            exchange.getResponseBody.close()
-          } else {
-            exchange.sendResponseHeaders(200, 0)
-            val out = exchange.getResponseBody
-            graft.dissociated.Dissociated.streamBodyChannel(dfFn(), out)
-            out.close()
-          }
-        }
+  // Both channels publish an EXACT Content-Length computed from the
+  // cached per-part frame index: a known length makes the JDK server
+  // write the frames straight to the socket instead of re-framing them
+  // into hard-coded 4 KiB HTTP chunks, and the client reads a plain
+  // fixed-length stream with no chunk parsing (2×parts concurrent
+  // client readers otherwise pin in ChunkedInputStream chunk decode). A
+  // 64 KiB buffer coalesces the per-frame header writes (the meta
+  // channel is ~4 small writes per batch otherwise).
+  dissocChannel("/dissoc/meta/") { (exchange, keys) =>
+    exchange.sendResponseHeaders(200, metaChannelLen(keys))
+    val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
+    Dissociated.streamMetadataFromFiles(keys.map(files(_)), out)
+    out.close()
+  }
+
+  // bodies are delivered out of order within windows of 8 (under the
+  // client's bounded reassembly window)
+  dissocChannel("/dissoc/data/") { (exchange, keys) =>
+    val len = bodyChannelLen(keys)
+    if (len == 0) { // zero batches: empty body
+      exchange.sendResponseHeaders(200, -1)
+      exchange.getResponseBody.close()
+    } else {
+      exchange.sendResponseHeaders(200, len)
+      val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
+      Dissociated.streamBodyFromFiles(keys.map(files(_)), out)
+      out.close()
     }
-  })
+  }
 
   // ------------------------------------------------------------------
   // indirect listing (JSON-of-URIs), reference get_indirect/server.py:23-44
@@ -726,13 +662,20 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     out.write(b); out.close()
   }
 
+  /** Runs a handler; every exception it ends with is logged to stderr
+    * as one line with the request path. */
   private def safely(exchange: HttpExchange)(body: => Unit): Unit =
     try body
     catch {
-      case _: IOException => // client went away mid-stream
       case e: Exception =>
-        try sendText(exchange, 500, s"error: ${e.getMessage}")
-        catch { case _: IOException => () }
+        System.err.println(s"[arrow-http] ${exchange.getRequestMethod} " +
+          s"${exchange.getRequestURI.getPath}: ${String.valueOf(e).replace('\n', ' ')}")
+        e match {
+          case _: IOException => // client went away mid-stream
+          case _ =>
+            try sendText(exchange, 500, s"error: ${e.getMessage}")
+            catch { case _: IOException => () }
+        }
     } finally exchange.close()
 
   def start(): ArrowHttpServer = { server.start(); this }
@@ -759,6 +702,13 @@ object ArrowHttpServer {
     * [[ArrowHttpServer.registerDict]]; beyond this the value set is no
     * longer "small" and must stream via registerDictDelta. */
   val MaxDictValues: Int = 4096
+
+  /** Message layout of a served file: its byte length, the end of its
+    * schema message and that message's framed length, each batch
+    * message's [start, end) span, and the byte totals of its
+    * dissociated meta and body channel frames. */
+  private final case class FrameIndex(total: Long, schemaEnd: Long, schemaFramed: Long,
+      batches: Vector[(Long, Long)], metaTotal: Long, bodyTotal: Long)
 
   /** Set TCP_NODELAY for all [[com.sun.net.httpserver.HttpServer]]
     * response sockets. The JDK server reads `sun.net.httpserver.nodelay`

@@ -42,40 +42,45 @@ class DissociatedSpec extends AnyFunSuite {
     res.close()
   }
 
+  /** Reassembles the whole-dataset channel pair of `name` over HTTP. */
+  private def fetchChannels(server: ArrowHttpServer, name: String)
+      : (Long, Vector[org.apache.spark.sql.Row]) = {
+    val meta = URI.create(s"${server.baseUrl}/dissoc/meta/$name").toURL.openStream()
+    val data = URI.create(s"${server.baseUrl}/dissoc/data/$name").toURL.openStream()
+    val sink = new ByteArrayOutputStream()
+    val (batches, _) = Dissociated.reassemble(meta, data, sink)
+    val res = ArrowBridge.read(new ByteArrayInputStream(sink.toByteArray))
+    try (batches, res.rows.toVector) finally res.close()
+  }
+
   test("streamed partition-wise channels reassemble to the full dataset") {
-    // the streamed writers batch per partition (2 partitions x 2500
+    // the channels batch per spilled partition (2 partitions x 2500
     // rows here), unlike the cached split's global row loop — the
     // contract is the decoded rows, not the batch layout
-    val df = Generators.ticker(spark, 5000, 2)
-    val metaStreamed = new ByteArrayOutputStream()
-    val n = Dissociated.streamMetadataChannel(df, metaStreamed)
-    assert(n === 2)
-    val bodyStreamed = new ByteArrayOutputStream()
-    Dissociated.streamBodyChannel(df, bodyStreamed)
-    val sink = new ByteArrayOutputStream()
-    val (batches, _) = Dissociated.reassemble(
-      new ByteArrayInputStream(metaStreamed.toByteArray),
-      new ByteArrayInputStream(bodyStreamed.toByteArray), sink)
-    assert(batches === n)
-    val res = ArrowBridge.read(new ByteArrayInputStream(sink.toByteArray))
-    val rows = res.rows.toVector
-    res.close()
-    assert(rows.size === 5000)
-    assert(rows.forall(_.getLong(1) % 100 == 0))
+    val server = new ArrowHttpServer(spark)
+    server.register("parts", Generators.ticker(spark, 5000, 2))
+    server.start()
+    try {
+      val (batches, rows) = fetchChannels(server, "parts")
+      assert(batches === 2)
+      assert(rows.size === 5000)
+      assert(rows.forall(_.getLong(1) % 100 == 0))
+    } finally server.stop()
   }
 
   test("reassemble: zero-batch stream terminates instead of blocking") {
-    val df = Generators.ticker(spark, 5000, 2).limit(0)
-    val metaCh = new ByteArrayOutputStream()
-    Dissociated.streamMetadataChannel(df, metaCh)
-    val sink = new ByteArrayOutputStream()
-    val (batches, _) = Dissociated.reassemble(
-      new ByteArrayInputStream(metaCh.toByteArray),
-      new ByteArrayInputStream(Array.emptyByteArray), sink)
-    assert(batches === 0)
-    val res = ArrowBridge.read(new ByteArrayInputStream(sink.toByteArray))
-    assert(res.rows.isEmpty)
-    res.close()
+    // a plan with no partitions still spills one (batch-free) part file,
+    // so the channels serve it like any other dataset
+    val empty = Generators.ticker(spark, 5000, 2).limit(0)
+    assert(empty.queryExecution.toRdd.getNumPartitions === 0)
+    val server = new ArrowHttpServer(spark)
+    server.register("empty", empty)
+    server.start()
+    try {
+      val (batches, rows) = fetchChannels(server, "empty")
+      assert(batches === 0)
+      assert(rows.isEmpty)
+    } finally server.stop()
   }
 
   test("reassemble: truncated body channel fails loudly, no deadlock") {

@@ -118,6 +118,41 @@ class ArrowHttpSpec extends AnyFunSuite {
       s"zstd-decoded ${bos.size} B != identity ${identity.length} B")
   }
 
+  test("zstd serve: the schema decodes before the last partition finishes") {
+    // the relay writes the (coded) schema before any partition result;
+    // a dataset whose last partition is held on a latch must still let
+    // a zstd client decode its schema
+    val base = Generators.flightBench(spark, 4000, 4)
+    val gated = spark.createDataFrame(base.rdd.mapPartitionsWithIndex { (i, it) =>
+      if (i == 3) FirstByteGate.latch.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      it
+    }, base.schema)
+    FirstByteGate.latch = new java.util.concurrent.CountDownLatch(1)
+    server.register("gated", gated)
+    val conn = URI.create(server.baseUrl + "/q/gated").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestProperty("Accept-Encoding", "zstd")
+    val alloc = ArrowBridge.newAllocator("first-byte-spec")
+    try {
+      val reader = try {
+        scala.concurrent.Await.result(scala.concurrent.Future {
+          val r = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+            new com.github.luben.zstd.ZstdInputStream(conn.getInputStream), alloc)
+          assert(r.getVectorSchemaRoot.getSchema.getFields.size === 4)
+          r
+        }(scala.concurrent.ExecutionContext.global), scala.concurrent.duration.Duration(30, "s"))
+      } finally {
+        val held = FirstByteGate.latch.getCount
+        FirstByteGate.latch.countDown()
+        assert(held === 1, "the last partition was released early")
+      }
+      var rows = 0L
+      while (reader.loadNextBatch()) rows += reader.getVectorSchemaRoot.getRowCount
+      reader.close()
+      assert(rows === 4000)
+    } finally alloc.close()
+  }
+
   test("negotiation: gzip HTTP coding round-trips (matrix completeness)") {
     val (code, headers, body) = get("/q/ticker", Map("Accept-Encoding" -> "gzip"))
     assert(code === 200)
@@ -344,6 +379,105 @@ class ArrowHttpSpec extends AnyFunSuite {
     assert(spark.table("posted").count() === 500)
   }
 
+  /** An IPC stream of `rows` ticker rows (written by a Spark job). */
+  private def tickerBody(rows: Int): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val df = Generators.ticker(spark, rows, 1)
+    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes)
+    bytes.toByteArray
+  }
+
+  private def postIngest(name: String, rows: Int): Unit = postIngest(name, tickerBody(rows))
+
+  private def postIngest(name: String, body: Array[Byte]): Unit = {
+    val conn = URI.create(s"${server.baseUrl}/ingest/$name").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setReadTimeout(30000)
+    conn.getOutputStream.write(body)
+    conn.getOutputStream.close()
+    assert(conn.getResponseCode === 200)
+    conn.getInputStream.readAllBytes()
+  }
+
+  /** The ingest spool files of dataset `name`. */
+  private def spoolFiles(name: String): Seq[java.io.File] =
+    server.spillRootPath.get.resolve("ingest").toFile.listFiles()
+      .filter(_.getName.startsWith(s"$name-")).toSeq
+
+  private def rowsOf(body: Array[Byte]): Int = {
+    val res = ArrowBridge.read(new java.io.ByteArrayInputStream(body))
+    try res.rows.size finally res.close()
+  }
+
+  test("POST /ingest twice to one name keeps one spool file, holding the second body") {
+    postIngest("respool", 300)
+    postIngest("respool", 700)
+    val spools = spoolFiles("respool")
+    assert(spools.length === 1, spools.mkString(", "))
+    assert(spark.table("respool").count() === 700)
+  }
+
+  test("concurrent POSTs to one name leave a readable view and one spool file") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    for (_ <- 0 until 4) {
+      val posts = Seq(200, 400).map(tickerBody).map(b => Future(postIngest("racy", b)))
+      posts.foreach(Await.result(_, scala.concurrent.duration.Duration(60, "s")))
+      val rows = spark.table("racy").count()
+      assert(rows === 200 || rows === 400)
+      val (code, _, body) = get("/q/racy")
+      assert(code === 200)
+      assert(rowsOf(body) === rows)
+    }
+    val spools = spoolFiles("racy")
+    assert(spools.length === 1, spools.mkString(", "))
+  }
+
+  test("a /q/ serve planned before a re-ingest still reads the file it planned") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    postIngest("held", 300)
+    val second = tickerBody(700)
+    // every task slot waits on a latch, so the serve's job is planned on
+    // the first spool file but its task opens that file only after the
+    // re-ingest below has superseded it
+    val slots = spark.sparkContext.defaultParallelism
+    SlotGate.started = new java.util.concurrent.CountDownLatch(slots)
+    SlotGate.release = new java.util.concurrent.CountDownLatch(1)
+    val busy = Future(spark.sparkContext.parallelize(0 until slots, slots).foreach { _ =>
+      SlotGate.started.countDown()
+      SlotGate.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    })
+    val alloc = ArrowBridge.newAllocator("held-serve-spec")
+    try {
+      assert(SlotGate.started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      val conn = URI.create(server.baseUrl + "/q/held").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setReadTimeout(30000)
+      // the schema arrives once the serve has resolved its dataset
+      val reader = Await.result(Future(new org.apache.arrow.vector.ipc.ArrowStreamReader(
+        conn.getInputStream, alloc)).map { r => r.getVectorSchemaRoot; r }, Duration(30, "s"))
+      postIngest("held", second)
+      SlotGate.release.countDown()
+      var rows = 0L
+      while (reader.loadNextBatch()) rows += reader.getVectorSchemaRoot.getRowCount
+      reader.close()
+      assert(rows === 300)
+    } finally {
+      SlotGate.release.countDown()
+      Await.result(busy, Duration(60, "s"))
+      alloc.close()
+    }
+    assert(spark.table("held").count() === 700)
+    // the superseded file goes once the serve that held it is done
+    val deadline = System.nanoTime() + 10000000000L
+    while (spoolFiles("held").length > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(spoolFiles("held").length === 1, spoolFiles("held").mkString(", "))
+  }
+
   test("POST /ingest streams to disk: multi-batch body, no driver buffering") {
     // 50k rows = many 4096-row batches — bigger than any single batch
     // buffer; the handler spools to a .arrows artifact and the view
@@ -473,6 +607,33 @@ class ArrowHttpSpec extends AnyFunSuite {
     assert(back.agg(org.apache.spark.sql.functions.sum("price")).head().getLong(0) === want)
   }
 
+  test("a corrupt registered file: /offsets answers 500 promptly and logs the path") {
+    val df = Generators.ticker(spark, 2000, 1)
+    val bytes = new ByteArrayOutputStream()
+    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes,
+      ArrowBridge.WriteOptions(batchSize = 500))
+    val bad = bytes.toByteArray
+    // a metaLen of 1 GiB in the second message
+    val second = graft.arrow.IpcFrames.scan(bad)(1).offset.toInt
+    java.nio.ByteBuffer.wrap(bad, second + 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(1 << 30)
+    val tmp = java.nio.file.Files.createTempFile("graft-corrupt", ".arrows")
+    java.nio.file.Files.write(tmp, bad)
+    server.registerFile("corrupt.arrows", tmp)
+    val err = new ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val t0 = System.nanoTime()
+    val code = try {
+      val conn = URI.create(server.baseUrl + "/offsets/corrupt.arrows").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setReadTimeout(5000)
+      conn.getResponseCode
+    } finally System.setErr(stderr)
+    assert(code === 500)
+    assert((System.nanoTime() - t0) / 1e9 < 5.0)
+    assert(err.toString(UTF_8).contains("/offsets/corrupt.arrows"), err.toString(UTF_8))
+  }
+
   test("DSv2 file write + multi-file read round-trip with pruning") {
     val df = Generators.ticker(spark, 3000, 3)
     val dir = java.nio.file.Files.createTempDirectory("graft-arrows").toString
@@ -505,4 +666,16 @@ class ArrowHttpSpec extends AnyFunSuite {
     assert(java.nio.file.Files.notExists(root.get),
       s"spill dir survived stop(): ${root.get}")
   }
+}
+
+/** The latch the first-byte spec holds a partition on (tasks run in
+  * this JVM in local mode). */
+object FirstByteGate {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
+}
+
+/** The latches the held-serve spec occupies every task slot with. */
+object SlotGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(0)
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
 }

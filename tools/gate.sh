@@ -1,11 +1,12 @@
 #!/usr/bin/env bash
-# Round-13 end-of-round evidence, all at ONE HEAD, ATOMIC (the r4-r8
-# verdicts' "land-after-the-gate" fix, with hard artifact checks):
+# End-of-round evidence, all at ONE HEAD, ATOMIC:
 # full suite -> sf0.01 oracle gate -> sf1 oracle gate -> sf1 FULL-
 # INVENTORY timing sweep -> d09 proportionality audit -> timed bench at
-# sf0.1 and sf1, artifacts under bench/. Sixth round of the same shape.
+# sf0.1 and sf1, artifacts under bench/r<round>_*.
 #
-# Rules (r8 verdict item 3):
+# Usage: tools/gate.sh <round>     e.g. tools/gate.sh 16
+#
+# Rules:
 #  - the ONLY commit after this script completes is the artifact commit;
 #  - any further operator work re-runs the script;
 #  - a truncated artifact must never be committed: every oracle gate
@@ -15,6 +16,10 @@
 #    JSONs must parse with their runs files present — the script EXITS
 #    NONZERO otherwise, so there is nothing plausible to commit.
 set -euo pipefail
+[[ $# -eq 1 && $1 =~ ^[0-9]+$ ]] || { echo "usage: $0 <round>" >&2; exit 2; }
+export R="r$1"
+# the generated sf0.01/sf0.1 tables the specs and benches read
+TESTDATA=/root/testdata
 cd "$(dirname "$0")/.."
 
 echo "== HEAD: $(git rev-parse HEAD) =="
@@ -41,21 +46,21 @@ echo "== 1/7 full suite =="
 sbt -batch test 2>&1 | grep -E "Tests:|All tests|FAILED"
 
 echo "== 2/7 sf0.01 oracle gate =="
-rm -rf /tmp/verify_r13_final
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_r13_final" > /tmp/r13_verify01.log 2>&1
-python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_r13_final | tee bench/r13_sf01_oracle_full.txt | tail -2
-footer_check bench/r13_sf01_oracle_full.txt /tmp/verify_r13_final
+rm -rf /tmp/verify_${R}_final
+sbt -batch "runMain graft.Verify $TESTDATA/sf0.01 /tmp/verify_${R}_final" > /tmp/${R}_verify01.log 2>&1
+python3 tools/check_oracle.py "$TESTDATA"/sf0.01 /tmp/verify_${R}_final | tee bench/${R}_sf01_oracle_full.txt | tail -2
+footer_check bench/${R}_sf01_oracle_full.txt /tmp/verify_${R}_final
 
 echo "== 3/7 sf1 oracle gate =="
-rm -rf /tmp/verify_r13_sf1
-SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.Verify data/sf1 /tmp/verify_r13_sf1" > /tmp/r13_verify_sf1.log 2>&1
-python3 tools/check_oracle.py data/sf1 /tmp/verify_r13_sf1 | tee bench/r13_sf1_oracle_full.txt | tail -2
-footer_check bench/r13_sf1_oracle_full.txt /tmp/verify_r13_sf1
+rm -rf /tmp/verify_${R}_sf1
+SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.Verify data/sf1 /tmp/verify_${R}_sf1" > /tmp/${R}_verify_sf1.log 2>&1
+python3 tools/check_oracle.py data/sf1 /tmp/verify_${R}_sf1 | tee bench/${R}_sf1_oracle_full.txt | tail -2
+footer_check bench/${R}_sf1_oracle_full.txt /tmp/verify_${R}_sf1
 
 echo "== 4/7 sf1 full-inventory timing sweep =="
-SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.Sweep data/sf1 bench/r13_sf1_sweep.json" > /tmp/r13_sweep.log 2>&1 || { tail -5 /tmp/r13_sweep.log; exit 1; }
+SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.Sweep data/sf1 bench/${R}_sf1_sweep.json" > /tmp/${R}_sweep.log 2>&1 || { tail -5 /tmp/${R}_sweep.log; exit 1; }
 python3 - <<'EOF'
-import json
+import json, os
 BUDGET = 15.0
 # cells allowed over budget, each with its committed audit note
 # (r12 verdict #7: every cell >= 10 s carries a note or a fix)
@@ -80,8 +85,9 @@ AUDITED = {
   "d03_minhash_lsh_pairs": 18.0,
   "d13_containment_complete": 18.0,
 }
-sweep = json.load(open("bench/r13_sf1_sweep.json"))
-oracle = json.load(open("/tmp/verify_r13_sf1/oracle_sql.json"))
+R = os.environ["R"]
+sweep = json.load(open(f"bench/{R}_sf1_sweep.json"))
+oracle = json.load(open(f"/tmp/verify_{R}_sf1/oracle_sql.json"))
 missing = set(oracle) - set(sweep["queries"])
 assert not missing, f"sweep missed {len(missing)} queries: {sorted(missing)[:5]}"
 over = {q: t for q, t in sweep["queries"].items() if t > AUDITED.get(q, BUDGET)}
@@ -93,10 +99,10 @@ print(f"sweep OK: {sweep['n_queries']} queries, total {tot:.1f}s, worst: " +
 EOF
 
 echo "== 5/7 d09 proportionality audit =="
-sbt -batch "runMain graft.D09Audit /root/testdata/sf0.1 /tmp/d09_sf0.1.json" > /tmp/r13_d09a.log 2>&1
-SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.D09Audit data/sf1 /tmp/d09_sf1.json" > /tmp/r13_d09b.log 2>&1
+sbt -batch "runMain graft.D09Audit $TESTDATA/sf0.1 /tmp/d09_sf0.1.json" > /tmp/${R}_d09a.log 2>&1
+SPARK_DRIVER_MEM=16g sbt -batch "runMain graft.D09Audit data/sf1 /tmp/d09_sf1.json" > /tmp/${R}_d09b.log 2>&1
 python3 - <<'EOF'
-import json
+import json, os
 a = json.load(open("/tmp/d09_sf0.1.json"))
 b = json.load(open("/tmp/d09_sf1.json"))
 # r13 reads: the 120-bit/4x30 sketch's collision probability per doc
@@ -112,7 +118,7 @@ out = {"sf0.1": a, "sf1": b,
                "under 4x30 the per-pair collision probability must stay "
                "SF-flat at the ~4e-4 level and max_bucket far under the "
                "2^16 guard (DedupOps.scala d09 comment)"}
-json.dump(out, open("bench/r13_d09_proportionality.json", "w"), indent=1)
+json.dump(out, open(f"bench/{os.environ['R']}_d09_proportionality.json", "w"), indent=1)
 print(f"d09 audit: collisions {a['collision_rows']} -> {b['collision_rows']}, "
       f"p/pair {p_pair(a):.2e} -> {p_pair(b):.2e}, "
       f"max_bucket {a['max_bucket']} -> {b['max_bucket']}, "
@@ -120,19 +126,20 @@ print(f"d09 audit: collisions {a['collision_rows']} -> {b['collision_rows']}, "
 EOF
 
 bench_run() { # sfdir tag
-  SPARK_GRAFT_SF_DIR="$1" sbt -batch "runMain graft.Bench" > "/tmp/r13_bench_$2.log" 2>&1
-  cp bench/last_bench.json "bench/r13_$2.json"
-  grep -o 'runs {"runs":.*' "/tmp/r13_bench_$2.log" | tail -1 | sed 's/^runs //' > "bench/r13_$2_runs.json"
-  grep -o 'rss {"rss_mb":.*' "/tmp/r13_bench_$2.log" | tail -1 | sed 's/^rss //' > "bench/r13_$2_rss.json"
+  SPARK_GRAFT_SF_DIR="$1" sbt -batch "runMain graft.Bench" > "/tmp/${R}_bench_$2.log" 2>&1
+  cp bench/last_bench.json "bench/${R}_$2.json"
+  grep -o 'runs {"runs":.*' "/tmp/${R}_bench_$2.log" | tail -1 | sed 's/^runs //' > "bench/${R}_$2_runs.json"
+  grep -o 'rss {"rss_mb":.*' "/tmp/${R}_bench_$2.log" | tail -1 | sed 's/^rss //' > "bench/${R}_$2_rss.json"
   python3 - "$2" <<'EOF'
-import json, sys
+import json, os, sys
 tag = sys.argv[1]
-d = json.load(open(f"bench/r13_{tag}.json"))
-r = json.load(open(f"bench/r13_{tag}_runs.json"))
-m = json.load(open(f"bench/r13_{tag}_rss.json"))
-assert d.get("queries") and d.get("value") is not None, f"bench/r13_{tag}.json incomplete"
-assert r.get("runs"), f"bench/r13_{tag}_runs.json incomplete"
-assert m.get("rss_mb"), f"bench/r13_{tag}_rss.json incomplete"
+R = os.environ["R"]
+d = json.load(open(f"bench/{R}_{tag}.json"))
+r = json.load(open(f"bench/{R}_{tag}_runs.json"))
+m = json.load(open(f"bench/{R}_{tag}_rss.json"))
+assert d.get("queries") and d.get("value") is not None, f"bench/{R}_{tag}.json incomplete"
+assert r.get("runs"), f"bench/{R}_{tag}_runs.json incomplete"
+assert m.get("rss_mb"), f"bench/{R}_{tag}_rss.json incomplete"
 # r12 verdict #5 acceptance: no cell's reps may grow monotonically >2x
 grow = [k for k, v in r["runs"].items()
         if len(v) >= 3 and all(b > a for a, b in zip(v, v[1:])) and v[-1] > 2 * v[0]]
@@ -144,10 +151,10 @@ EOF
 }
 
 echo "== 6/7 bench sf0.1 =="
-bench_run /root/testdata/sf0.1 sf0.1
+bench_run "$TESTDATA"/sf0.1 sf0.1
 
 echo "== 7/7 bench sf1 =="
 bench_run data/sf1 sf1
 
 echo "== ALL GATES DONE + ARTIFACTS VERIFIED at $(git rev-parse HEAD) =="
-echo "next (and ONLY) step: commit bench/r13_* artifacts + STATUS.md"
+echo "next (and ONLY) step: commit bench/${R}_* artifacts + STATUS.md"

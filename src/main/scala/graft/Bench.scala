@@ -99,7 +99,7 @@ object Bench {
     // 2.75 s isolated; 100M loop 10.42 vs 6.57) — the between-cell GC
     // checkpoints fixed the query cells but not this section. The
     // subprocess gets the SAME JVM flags/heap/classpath/env, so its
-    // numbers are the isolated LoopBench/DissocBench numbers by
+    // numbers are those of a standalone transport run by
     // construction; its per-cell reps and child-RSS rows merge into the
     // same runs/rss artifacts (rss rows for transport cells are the
     // CHILD's VmRSS — the flat line the r13 verdict asks to see).

@@ -9,8 +9,8 @@ import scala.jdk.CollectionConverters._
   * driver artifact than the same paths isolated on the same box
   * (fan-out 29.96 s artifact vs 2.75 s isolated; 100M loop 10.42 vs
   * 6.57). The between-cell GC checkpoints fixed the query cells but
-  * not this section — the honest fix is process isolation, which the
-  * isolated `LoopBench`/`DissocBench` reruns already proved out.
+  * not this section — the honest fix is process isolation, which
+  * isolated `LoopBench` reruns already proved out.
   *
   * [[Bench]] execs this main as a subprocess (same JVM flags, same
   * classpath, same env knobs) and merges the per-cell reps from the

@@ -1,7 +1,9 @@
 package graft.dissociated
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, InputStream, OutputStream}
-import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, CountDownLatch}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, IOException, InputStream, OutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 
@@ -18,29 +20,32 @@ import graft.arrow.{ArrowBridge, IpcFrames}
   * Wire format (little-endian lengths, mirroring the reference's 5-byte
   * `[type:1][seq:u32 LE]` AM prefix):
   *   metadata channel: frames [type:1][seq:4][len:4][bytes]; type 1 =
-  *     schema (seq 0), 2 = batch metadata, 0 = EOS (len = batch count)
+  *     schema (seq 0), 2 = batch metadata (seq 1, 2, ... in order),
+  *     0 = EOS (seq = batch count, len 0)
   *   body channel: frames [seq:4][len:4][bytes], 8-byte-aligned payloads
   *     (padding included in len; the IPC body alignment rule,
-  *     cudf-flight-server.cc:273-277)
+  *     cudf-flight-server.cc:273-277), in any order within the window
   *
   * A batch's IPC encapsulation is `[0xFFFFFFFF][metaLen:4][flatbuffer]
   * [padding][body]` — the splitter cuts at the body offset, the
   * reassembler concatenates, so a rebuilt stream is byte-identical to a
   * plain Arrow IPC stream and decodes with the standard reader.
+  *
+  * Window rule: a reader that has delivered every batch before `next`
+  * holds at most `maxPending` early bodies, and a body whose seq is at
+  * or beyond `next + maxPending` THROWS [[IpcFrames.Malformed]] rather
+  * than blocking (the reference's `outstanding_tags_` is unbounded,
+  * SURVEY §7 hard parts). So is a body seq repeated, already delivered
+  * or past the EOS count, a body length other than its header's body
+  * length padded to 8, and a metadata frame out of order or longer
+  * than `8 + IpcFrames.MaxMetaLen`. A channel that ends before its EOS
+  * count throws `EOFException` ("truncated").
   */
 object Dissociated {
 
   val TypeEos: Byte = 0
   val TypeSchema: Byte = 1
   val TypeBatch: Byte = 2
-
-  /** A reassembly sink that can take OWNERSHIP of a chunk: every array
-    * [[reassemble]] emits is freshly read off a channel and never
-    * touched again, so a sink implementing this skips the defensive
-    * copy a generic OutputStream write needs (~the whole body volume
-    * in allocation + memcpy per read). `len` ≤ `chunk.length` (channel
-    * padding beyond the true IPC body length is dropped). */
-  trait OwnedChunkSink { def writeOwned(chunk: Array[Byte], len: Int): Unit }
 
   final case class Split(seq: Int, metadata: Array[Byte], body: Array[Byte])
 
@@ -178,137 +183,160 @@ object Dissociated {
 
   // ---------------- client: reassembly ----------------
 
-  final case class MetaFrame(tpe: Byte, seq: Int, bytes: Array[Byte])
-
-  def readMetaFrame(in: DataInputStream): Option[MetaFrame] =
-    try {
-      val tpe = in.readByte()
-      val seq = Integer.reverseBytes(in.readInt())
-      val len = Integer.reverseBytes(in.readInt())
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      Some(MetaFrame(tpe, seq, b))
-    } catch { case _: EOFException => None }
-
-  def readBodyFrame(in: DataInputStream): Option[(Int, Array[Byte])] =
-    try {
-      val seq = Integer.reverseBytes(in.readInt())
-      val len = Integer.reverseBytes(in.readInt())
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      Some((seq, b))
-    } catch { case _: EOFException => None }
-
-  /** Reads both channels concurrently (out-of-order completion), emits a
-    * standard Arrow IPC stream in sequence order with BOUNDED buffering
-    * (`maxPending` reassembly slots — the backpressure the reference's
-    * unbounded `outstanding_tags_` lacks, SURVEY §7 hard parts). */
+  /** Copies the reassembled stream of a channel pair to `sink`:
+    * (batches, bytes written including EOS). */
   def reassemble(meta: InputStream, body: InputStream, sink: OutputStream,
       maxPending: Int = 16): (Long, Long) = {
-    val metaBySeq = new ConcurrentHashMap[Int, MetaFrame]()
-    val bodyBySeq = new ConcurrentHashMap[Int, Array[Byte]]()
-    val schemaLatch = new CountDownLatch(1)
-    @volatile var schema: Array[Byte] = null
-    @volatile var eosCount = -1
-    @volatile var error: Throwable = null
-    val available = new ArrayBlockingQueue[Int](1024)
-    val pendingGate = new java.util.concurrent.Semaphore(maxPending)
+    val r = new Reassembler(meta, () => body, maxPending)
+    val bytes = r.transferTo(sink)
+    sink.flush()
+    (r.batches, bytes)
+  }
 
-    def noteAvailable(seq: Int): Unit =
-      if (metaBySeq.containsKey(seq) && bodyBySeq.containsKey(seq)) available.put(seq)
+  /** The Arrow IPC stream of a (metadata, body) channel pair, rebuilt on
+    * the reading thread as it reads: schema, then each batch's metadata
+    * and body in seq order, then EOS. The body channel is opened by the
+    * first read past the schema, so a schema probe never requests it.
+    * Bodies that arrive early wait in at most `maxPending` slots (the
+    * window rule in the object's header). Every frame's length is
+    * checked before it is allocated. `close()` closes whichever channels
+    * are open. */
+  final class Reassembler(meta: InputStream, openBody: () => InputStream,
+      maxPending: Int = 16) extends InputStream {
+    require(maxPending >= 1, s"maxPending $maxPending")
+    private final class Meta(val framed: Array[Byte], val bodyLen: Int)
 
-    // A producer thread that dies (error OR clean EOF) pushes a sentinel
-    // so the consumer's take() can never block forever: zero-batch
-    // streams, errors after the schema latch, and truncated channels all
-    // surface instead of deadlocking.
-    val Sentinel = Int.MinValue
+    private val metaIn = new DataInputStream(meta)
+    private var bodyIn: DataInputStream = _
+    private val metas = mutable.HashMap.empty[Int, Meta]
+    private val bodies = mutable.HashMap.empty[Int, Array[Byte]]
+    private var metaSeq = -1 // seq of the last metadata frame read; the schema is 0
+    private var eos = -1 // the batch count, once the EOS frame is read
+    private var next = 1 // the batch to deliver next
 
-    val metaThread = new Thread(() => {
-      try {
-        val d = new DataInputStream(meta)
-        var frame = readMetaFrame(d)
-        while (frame.isDefined) {
-          val f = frame.get
-          f.tpe match {
-            case TypeSchema => schema = f.bytes; schemaLatch.countDown()
-            case TypeBatch  => metaBySeq.put(f.seq, f); noteAvailable(f.seq)
-            case TypeEos    => eosCount = f.seq
-            case other      => throw new IllegalStateException(s"meta frame type $other")
-          }
-          frame = readMetaFrame(d)
-        }
-      } catch { case t: Throwable => error = t; schemaLatch.countDown() }
-      finally available.put(Sentinel)
-    }, "dissoc-meta")
-    metaThread.setDaemon(true)
+    // the chunk being read out, and the body due after the current metadata
+    private var chunk = Array.emptyByteArray
+    private var pos = 0
+    private var lim = 0
+    private var held: Array[Byte] = _
+    private var heldLen = 0
+    private var done = false
+    private var closed = false
 
-    val bodyThread = new Thread(() => {
-      try {
-        val d = new DataInputStream(body)
-        var frame = readBodyFrame(d)
-        while (frame.isDefined) {
-          pendingGate.acquire() // bound unprocessed bodies in memory
-          val (seq, bytes) = frame.get
-          bodyBySeq.put(seq, bytes)
-          noteAvailable(seq)
-          frame = readBodyFrame(d)
-        }
-      } catch { case t: Throwable => error = t }
-      finally available.put(Sentinel)
-    }, "dissoc-body")
-    bodyThread.setDaemon(true)
+    /** Batches delivered so far. */
+    def batches: Long = next - 1
 
-    metaThread.start(); bodyThread.start()
-    schemaLatch.await()
-    if (error != null) throw error
-    // owned-chunk fast path: every array this loop emits is fresh off a
-    // channel and never reused, so a sink that can take ownership skips
-    // the defensive copy (and its allocation) per frame
-    val owned: OwnedChunkSink = sink match {
-      case o: OwnedChunkSink => o
-      case _ => (chunk, len) => sink.write(chunk, 0, len)
+    private def malformed(msg: String): Nothing = throw new IpcFrames.Malformed(msg)
+
+    private def fully[T](channel: String)(read: => T): T =
+      try read catch {
+        case _: EOFException => throw new EOFException(
+          s"dissociated stream truncated: $channel channel ended after batch ${next - 1} of " +
+            (if (eos < 0) "unknown (no EOS)" else eos.toString))
+      }
+
+    private def intLE(in: DataInputStream, channel: String): Int =
+      fully(channel)(Integer.reverseBytes(in.readInt()))
+
+    /** Reads the next metadata frame: the schema, then batches in seq
+      * order, then EOS carrying the batch count. */
+    private def readMeta(): Unit = {
+      val tpe = fully("metadata")(metaIn.readByte())
+      val seq = intLE(metaIn, "metadata")
+      val len = intLE(metaIn, "metadata")
+      if (tpe == TypeEos && metaSeq >= 0) {
+        if (seq != metaSeq || len != 0) malformed(s"EOS frame ($seq, $len bytes) after batch $metaSeq")
+        eos = seq
+      } else {
+        if (tpe != (if (metaSeq < 0) TypeSchema else TypeBatch) || seq != metaSeq + 1)
+          malformed(s"metadata frame type $tpe seq $seq after frame $metaSeq")
+        if (len < 8 || len > 8 + IpcFrames.MaxMetaLen) malformed(s"metadata frame $seq of $len bytes")
+        // the frame is an IPC framed header whose own prefix must agree
+        // with the channel's length before that length is allocated
+        val marker = intLE(metaIn, "metadata")
+        val metaLen = intLE(metaIn, "metadata")
+        if (marker != -1 || metaLen != len - 8)
+          malformed(s"metadata frame $seq: prefix ($marker, $metaLen) in a $len-byte frame")
+        val framed = new Array[Byte](len)
+        ByteBuffer.wrap(framed).order(ByteOrder.LITTLE_ENDIAN).putInt(marker).putInt(metaLen)
+        fully("metadata")(metaIn.readFully(framed, 8, len - 8))
+        val bodyLen = IpcFrames.bodyLength(framed)
+        if (bodyLen > Int.MaxValue - 8) malformed(s"batch $seq: body of $bodyLen bytes")
+        metas(seq) = new Meta(framed, bodyLen.toInt)
+        metaSeq = seq
+      }
     }
-    owned.writeOwned(schema, schema.length)
 
-    var emitted = 0L
-    var bytes = schema.length.toLong
-    var next = 1
-    var liveProducers = 2
-    val ready = scala.collection.mutable.Set[Int]()
-    while (eosCount < 0 || emitted < eosCount) {
-      val seq = available.take()
-      if (seq == Sentinel) {
-        liveProducers -= 1
-        if (error != null) throw error
-        if (liveProducers == 0 && (eosCount < 0 || emitted < eosCount))
-          throw new EOFException(
-            s"dissociated stream truncated: emitted $emitted of " +
-              (if (eosCount < 0) "unknown (no EOS)" else eosCount.toString))
-      } else ready += seq
-      while (ready.contains(next)) {
-        val m = metaBySeq.remove(next)
-        val b = bodyBySeq.remove(next)
-        owned.writeOwned(m.bytes, m.bytes.length)
-        // strip alignment padding: the IPC header records the true body
-        // length; padded tail bytes beyond it are channel-only
-        val trueLen = IpcFrames.bodyLength(m.bytes)
-        if (trueLen > b.length)
-          throw new IpcFrames.Malformed(s"batch $next: body frame of ${b.length} bytes < header's $trueLen")
-        owned.writeOwned(b, trueLen.toInt)
-        bytes += m.bytes.length + trueLen
-        ready -= next
-        pendingGate.release()
-        emitted += 1
+    /** Whether batch `seq` exists: reads metadata up to it or to EOS. */
+    private def metaUpTo(seq: Int): Boolean = {
+      while (metaSeq < seq && eos < 0) readMeta()
+      seq <= metaSeq
+    }
+
+    /** Reads one body frame into its slot of the window. */
+    private def readBody(): Unit = {
+      val seq = intLE(bodyIn, "body")
+      val len = intLE(bodyIn, "body")
+      if (seq < next || bodies.contains(seq)) malformed(s"body $seq repeated (next is $next)")
+      if (seq.toLong - next >= maxPending)
+        malformed(s"body $seq outside the $maxPending-batch window after $next")
+      if (!metaUpTo(seq)) malformed(s"body $seq beyond the stream's $eos batches")
+      val padded = (metas(seq).bodyLen + 7) & ~7
+      if (len != padded) malformed(s"body $seq: frame of $len bytes, its header says $padded")
+      val b = new Array[Byte](len)
+      fully("body")(bodyIn.readFully(b))
+      bodies(seq) = b
+    }
+
+    private def emit(bytes: Array[Byte], len: Int): Unit = { chunk = bytes; pos = 0; lim = len }
+
+    /** Moves to the next chunk; false once EOS has been read out. */
+    private def advance(): Boolean = {
+      if (closed) throw new IOException("dissociated stream closed")
+      if (held != null) { emit(held, heldLen); held = null }
+      else if (done) return false
+      else if (metaSeq < 0) { readMeta(); val s = metas.remove(0).get.framed; emit(s, s.length) }
+      else if (!metaUpTo(next)) { emit(ArrowBridge.EosBytes, 8); done = true }
+      else {
+        if (bodyIn == null) bodyIn = new DataInputStream(openBody())
+        while (!bodies.contains(next)) readBody()
+        val m = metas.remove(next).get
+        held = bodies.remove(next).get
+        heldLen = m.bodyLen // channel padding past the IPC body is dropped
+        emit(m.framed, m.framed.length)
         next += 1
       }
-      if (error != null) throw error
+      true
     }
-    sink.write(ArrowBridge.EosBytes)
-    sink.flush()
-    // bounded join: a malformed channel with frames beyond EOS could
-    // leave a (daemon) producer parked on the gate — don't hang with it
-    metaThread.join(10000); bodyThread.join(10000)
-    if (error != null) throw error
-    (emitted, bytes + 8)
+
+    private def ready(): Boolean = {
+      while (pos >= lim) if (!advance()) return false
+      true
+    }
+
+    override def read(): Int =
+      if (!ready()) -1 else { pos += 1; chunk(pos - 1) & 0xff }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (!ready()) -1
+      else {
+        val n = math.min(len, lim - pos)
+        System.arraycopy(chunk, pos, b, off, n)
+        pos += n
+        n
+      }
+
+    /** Writes whole chunks, with no copy through a transfer buffer. */
+    override def transferTo(out: OutputStream): Long = {
+      var n = 0L
+      while (ready()) { out.write(chunk, pos, lim - pos); n += lim - pos; pos = lim }
+      n
+    }
+
+    override def close(): Unit = if (!closed) {
+      closed = true
+      try metaIn.close() finally if (bodyIn != null) bodyIn.close()
+    }
   }
 }

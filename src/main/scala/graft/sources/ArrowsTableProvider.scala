@@ -111,23 +111,18 @@ object ArrowsTableProvider {
     * a localhost (or LAN) server where a fresh connect is ~50 µs, and
     * at scale the probe fan-out per query is O(#parts), not a hot loop.
     * Opting every request out removes the stale-checkout race class
-    * entirely. Env-tunable for deployments that want the pool back:
-    * SPARK_GRAFT_HTTP_KEEPALIVE=1. */
-  private val keepAlive =
-    sys.env.getOrElse("SPARK_GRAFT_HTTP_KEEPALIVE", "0") == "1"
+    * entirely. */
   private def httpTimeouts(conn: HttpURLConnection): HttpURLConnection = {
     conn.setConnectTimeout(
       sys.env.getOrElse("SPARK_GRAFT_HTTP_CONNECT_MS", "30000").toInt)
     conn.setReadTimeout(
       sys.env.getOrElse("SPARK_GRAFT_HTTP_READ_MS", "180000").toInt)
-    if (!keepAlive) conn.setRequestProperty("Connection", "close")
+    conn.setRequestProperty("Connection", "close")
     conn
   }
 
   def open(path: String, schemaOnly: Boolean, accept: String = ""): InputStream =
     if (isUrl(path)) {
-      // keep-alive opt-out happens inside httpTimeouts (r15: EVERY
-      // request, schema probes included — see the note there)
       val conn = httpTimeouts(
         URI.create(path).toURL.openConnection().asInstanceOf[HttpURLConnection])
       conn.setRequestProperty("Accept", "application/vnd.apache.arrow.stream")
@@ -246,11 +241,8 @@ object ArrowsTableProvider {
   }
 
   private def openRaw(url: String): InputStream = {
-    // keep-alive opt-out inside httpTimeouts: a pooled channel
-    // connection buys nothing (each is drained to EOF once) and exposes
-    // the stale-checkout race — a connection the server half-closed
-    // stalls the first read ~25 s until TCP gives up (observed as rare
-    // outlier reps in DissocBench)
+    // a channel is drained to EOF once, so a pooled connection buys
+    // nothing; httpTimeouts opts it out of the keep-alive pool
     val conn = httpTimeouts(
       URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection])
     val code = conn.getResponseCode
@@ -258,118 +250,11 @@ object ArrowsTableProvider {
     new BufferedInputStream(conn.getInputStream, 1 << 16)
   }
 
-  /** EOF that re-throws the background fetch failure instead of letting a
-    * closed pipe read as a clean (but truncated) stream. */
-  private final class ErrSurfacingStream(in: InputStream,
-      err: java.util.concurrent.atomic.AtomicReference[Throwable])
-      extends java.io.FilterInputStream(in) {
-    private def chk(n: Int): Int = {
-      if (n < 0 && err.get != null)
-        throw new java.io.IOException("dissociated fetch failed", err.get)
-      n
-    }
-    override def read(): Int = chk(super.read())
-    override def read(b: Array[Byte], off: Int, len: Int): Int =
-      chk(super.read(b, off, len))
-  }
-
-  /** Bounded chunk pipe between the fetch thread and the reader.
-    *
-    * Replaces `java.io.Piped{Input,Output}Stream`, whose circular
-    * buffer parks both sides in `wait(1000)` polling loops — measured
-    * at ~0.5 s of stall per dissociated PART read (1 s-granular
-    * first-byte/drain spikes), which multiplied by the r12 per-part
-    * parallel scan turned a 0.6 s loop into a 2 s one. A
-    * `ArrayBlockingQueue[Array[Byte]]` handoff has none of that: every
-    * put/take wakes its peer immediately, and the bound (32 × ≤64 KiB
-    * chunks ≈ 2 MiB) keeps the same backpressure the 1 MiB pipe gave. */
-  private final case class PipeChunk(bytes: Array[Byte], len: Int)
-
-  /** The pipe's write end: an OutputStream that can also take chunk
-    * ownership (the reassemble fast path). */
-  private abstract class ChunkPipeOut extends java.io.OutputStream
-    with graft.dissociated.Dissociated.OwnedChunkSink
-
-  private final class ChunkPipe {
-    private val queue =
-      new java.util.concurrent.ArrayBlockingQueue[PipeChunk](32)
-    private val Eof = PipeChunk(null, -1)
-    @volatile private var readerClosed = false
-
-    val out: ChunkPipeOut = new ChunkPipeOut {
-      private def put(chunk: PipeChunk): Unit = {
-        // offer-with-timeout instead of put: a reader that abandoned the
-        // stream (schema probes read only the prefix) must break the
-        // producer out instead of parking it forever on a full queue —
-        // the "pipe broken" contract java.io pipes get from readSide
-        // liveness checks
-        while (!queue.offer(chunk, 100,
-            java.util.concurrent.TimeUnit.MILLISECONDS)) {
-          if (readerClosed)
-            throw new java.io.IOException("dissociated pipe closed by reader")
-        }
-      }
-      // ownership handoff (r13): reassemble's arrays are fresh off the
-      // channel and never reused — enqueue them directly, no copy, no
-      // allocation (the generic write path below copied the whole body
-      // volume once more per read)
-      override def writeOwned(chunk: Array[Byte], len: Int): Unit = {
-        if (readerClosed)
-          throw new java.io.IOException("dissociated pipe closed by reader")
-        if (len > 0) put(PipeChunk(chunk, len))
-      }
-      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
-      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-        if (readerClosed)
-          throw new java.io.IOException("dissociated pipe closed by reader")
-        var o = off
-        var rem = len
-        while (rem > 0) {
-          val n = math.min(rem, 1 << 16)
-          put(PipeChunk(java.util.Arrays.copyOfRange(b, o, o + n), n))
-          o += n; rem -= n
-        }
-      }
-      override def close(): Unit =
-        try put(Eof) catch { case _: java.io.IOException => () }
-    }
-
-    val in: InputStream = new InputStream {
-      private var cur: Array[Byte] = null
-      private var curLen = 0
-      private var pos = 0
-      private var eof = false
-      private def ensure(): Boolean = {
-        if (eof) return false
-        while (cur == null || pos >= curLen) {
-          val c = queue.take()
-          if (c eq Eof) { eof = true; return false }
-          cur = c.bytes; curLen = c.len; pos = 0
-        }
-        true
-      }
-      override def read(): Int =
-        if (!ensure()) -1 else { val v = cur(pos) & 0xFF; pos += 1; v }
-      override def read(b: Array[Byte], off: Int, len: Int): Int = {
-        if (len == 0) return 0
-        if (!ensure()) return -1
-        val n = math.min(len, curLen - pos)
-        System.arraycopy(cur, pos, b, off, n)
-        pos += n
-        n
-      }
-      // unblock a producer parked on a full queue so its finally-close
-      // (and connection teardown) can run when the reader abandons the
-      // stream early (schema probes read only the prefix)
-      override def close(): Unit = { eof = true; readerClosed = true; queue.clear() }
-    }
-  }
-
-  /** The reassembled Arrow IPC stream behind a dissoc info URL: both
-    * channels are fetched CONCURRENTLY on a daemon thread, bodies may
-    * complete out of order, and [[graft.dissociated.Dissociated.reassemble]]'s
-    * bounded window (16 pending slots — constant memory at any stream
-    * length) delivers batches in sequence order through a pipe. */
+  /** The reassembled Arrow IPC stream behind a dissoc info URL:
+    * [[graft.dissociated.Dissociated.Reassembler]] rebuilds it on the
+    * reading thread, bodies may arrive out of order within its bounded
+    * window (16 pending slots: constant memory at any stream length),
+    * and batches come out in sequence order. */
   def openDissoc(infoUrl: String): InputStream = {
     val (metaUrl, bodyUrl) = resolveDissoc(infoUrl)
     openDissocPair(metaUrl, bodyUrl)
@@ -378,44 +263,17 @@ object ArrowsTableProvider {
   /** As [[openDissoc]] with the channel pair already resolved (planned
     * tasks get theirs inline from the top-level discovery document).
     *
-    * Both channel requests open CONCURRENTLY (r12 ADVICE): a sequential
-    * meta-then-body open serializes two server handshakes per pair, and
-    * with a fan-out of parts against a fixed-size server pool it
-    * courts a queue-order deadlock — meta handlers streaming to
-    * consumers whose body requests are still queued behind other
-    * parts' meta handlers. Opening both up front enqueues each pair's
-    * two requests back-to-back. */
-  def openDissocPair(metaUrl: String, bodyUrl: String): InputStream = {
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val pipe = new ChunkPipe
-    val t = new Thread(() => {
-      try {
-        val bodyF = new java.util.concurrent.CompletableFuture[InputStream]()
-        val bt = new Thread(() => {
-          try bodyF.complete(openRaw(bodyUrl))
-          catch { case e: Throwable => bodyF.completeExceptionally(e) }
-        }, "dissoc-dsv2-open-body")
-        bt.setDaemon(true)
-        bt.start()
-        val meta = openRaw(metaUrl)
-        val body =
-          try bodyF.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              meta.close(); throw e.getCause
-          }
-        try graft.dissociated.Dissociated.reassemble(meta, body, pipe.out)
-        finally { meta.close(); body.close() }
-      } catch { case e: Throwable => err.set(e) }
-      finally scala.util.Try(pipe.out.close())
-    }, "dissoc-dsv2-fetch")
-    t.setDaemon(true)
-    t.start()
-    new ErrSurfacingStream(pipe.in, err)
-  }
+    * The metadata channel opens now, the body channel on the first read
+    * past the schema. Opening them one after the other cannot starve a
+    * fan-out: the server's pool (2 × parallelism + 8 handler threads)
+    * covers both channels of every reader task that can run at once, so
+    * a body request never queues behind another task's streaming meta
+    * handler. */
+  def openDissocPair(metaUrl: String, bodyUrl: String): InputStream =
+    new graft.dissociated.Dissociated.Reassembler(openRaw(metaUrl), () => openRaw(bodyUrl))
 
-  /** Schema of a dissociated dataset: read the reassembled stream's
-    * schema message only (the channel fetch stops at the prefix). */
+  /** Schema of a dissociated dataset: reads the schema frame off the
+    * metadata channel only; the body channel is never requested. */
   def dissocSchema(infoUrl: String): StructType = {
     val alloc = ArrowBridge.newAllocator("dissoc-schema-probe")
     try {

@@ -19,6 +19,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Arrow IPC ⇄ Spark bridge: streaming writer from InternalRow iterators
   * and streaming reader to external Rows, covering the reference's type
@@ -365,7 +366,7 @@ object ArrowBridge {
       opts: WriteOptions, alloc: BufferAllocator): WriteState = {
     {
       val provider = new DictionaryProvider.MapDictionaryProvider()
-      val dictIndex: Map[String, java.util.HashMap[String, Integer]] =
+      val dictIndex: Map[String, java.util.HashMap[UTF8String, Integer]] =
         opts.dictColumns.toSeq.zipWithIndex.map { case ((name, values), i) =>
           val dictVec = new VarCharVector(s"$name-dict", alloc)
           dictVec.allocateNew(values.length)
@@ -373,8 +374,8 @@ object ArrowBridge {
           dictVec.setValueCount(values.length)
           provider.put(new Dictionary(dictVec,
             new DictionaryEncoding(i.toLong, false, new ArrowType.Int(32, true))))
-          val lookup = new java.util.HashMap[String, Integer]()
-          values.zipWithIndex.foreach { case (v, j) => lookup.put(v, j) }
+          val lookup = new java.util.HashMap[UTF8String, Integer]()
+          values.zipWithIndex.foreach { case (v, j) => lookup.put(UTF8String.fromString(v), j) }
           name -> lookup
         }.toMap
 
@@ -395,9 +396,16 @@ object ArrowBridge {
             if (opts.dictColumns.contains(f.name)) {
               val lookup = dictIndex(f.name)
               val iv = vec.asInstanceOf[IntVector]
+              // probed with the row's own bytes: no String per row
               (g: SpecializedGetters, src: Int, dst: Int) =>
                 if (g.isNullAt(src)) iv.setNull(dst)
-                else iv.setSafe(dst, lookup.get(g.getUTF8String(src).toString).intValue())
+                else {
+                  val v = g.getUTF8String(src)
+                  val j = lookup.get(v)
+                  if (j == null) throw new IllegalArgumentException(
+                    s"dictionary column '${f.name}': value '$v' is not in its dictionary")
+                  iv.setSafe(dst, j.intValue())
+                }
             } else mkSetter(vec, f.dataType, origTag(f))
           }
 

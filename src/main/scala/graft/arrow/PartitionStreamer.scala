@@ -30,12 +30,16 @@ object PartitionStreamer {
 
     val inFlight = mutable.Queue[org.apache.spark.FutureAction[Array[T]]]()
     var next = 0
-    while (next < math.min(window, n)) { inFlight += submit(next); next += 1 }
-    while (inFlight.nonEmpty) {
-      val head = inFlight.dequeue()
-      val res = Await.result(head, Duration.Inf)
-      if (next < n) { inFlight += submit(next); next += 1 }
-      res.foreach(consume)
-    }
+    // a throwing `consume` (a client gone mid-stream) or a failed job
+    // cancels the jobs still in flight instead of leaving them to run
+    try {
+      while (next < math.min(window, n)) { inFlight += submit(next); next += 1 }
+      while (inFlight.nonEmpty) {
+        val head = inFlight.dequeue()
+        val res = Await.result(head, Duration.Inf)
+        if (next < n) { inFlight += submit(next); next += 1 }
+        res.foreach(consume)
+      }
+    } finally inFlight.foreach(job => if (!job.isCompleted) job.cancel())
   }
 }

@@ -307,12 +307,6 @@ object DedupOps {
           size(array_union(col("ga"), col("gb")))).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
 
-  /** Connected-component labels over the verified near-dup pairs:
-    * (src, cluster) where cluster = min doc_id reachable within <= 4
-    * hops (two doubling self-joins — the log-diameter closure d07
-    * documents). Shared by d07 (cluster report) and d14 (corpus
-    * materialization). Only docs that appear in some pair get a row;
-    * singleton docs are implicitly their own cluster. */
   /** Probe hooks (r15 diagnosis, D24Probe): expose the two phases of
     * the clusterLabels pipeline for isolated timing. */
   private[graft] def probeCandidatePairs(s: SparkSession, d: String): DataFrame =
@@ -320,6 +314,14 @@ object DedupOps {
   private[graft] def probeClusterLabels(s: SparkSession, d: String): DataFrame =
     clusterLabels(s, d)
 
+  /** Min doc id within ≤ 4 hops over the verified near-dup pairs:
+    * (src, cluster) where cluster = min doc_id reachable within <= 4
+    * hops (two doubling self-joins — the log-diameter closure d07
+    * documents). These are not connected components: a chain longer
+    * than 4 hops keeps more than one label, as the DuckDB oracle's
+    * `oLabelCtes` does. Shared by d07 (cluster report) and d14 (corpus
+    * materialization). Only docs that appear in some pair get a row;
+    * singleton docs are implicitly their own cluster. */
   private[operators] def clusterLabels(s: SparkSession, d: String): DataFrame = {
     // persist() barriers are load-bearing twice over: the edge frame is
     // referenced 4 ways by the union and TWICE per doubling self-join,

@@ -1,16 +1,11 @@
 package graft.server
 
 import java.io.{IOException, OutputStream}
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.SecureRandom
 import java.util.Base64
-import java.util.concurrent.Executors
 
-import scala.jdk.CollectionConverters._
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.arrow.{ArrowBridge, IpcFrames}
 import graft.dissociated.Dissociated
@@ -32,11 +27,15 @@ import graft.dissociated.Dissociated
   *   GET  /                  indirect JSON listing of /files artifacts
   *   GET  /files/<name>      static .arrows artifact, Content-Length +
   *                           Accept-Ranges + single-range GETs
-  *   POST /ingest/<name>     Arrow stream request body → temp view
+  *   POST /ingest/<name>     Arrow stream request body → temp view;
+  *                           a body that is not one IPC stream is 400
   *
-  * Streaming policy mirrors the reference: one flush per record batch
-  * (TTFB), 64 KiB coalescing floor on the compressed path with the
-  * first chunk force-flushed (server.py:388,421-429).
+  * Streaming policy mirrors the reference (server.py:97-142,388,
+  * 421-429): the HTTP framing is ours ([[HttpCore]]), and a streamed
+  * response goes out as one chunk per flush or per 64 KiB. The relay
+  * flushes once after the schema (TTFB) and once per partition, so
+  * each partition travels as one chunk; a coded stream that never
+  * flushes goes out in 64 KiB chunks, its first write at once.
   */
 final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
@@ -61,7 +60,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
   /** Runs `serve` on dataset `name` (404 when there is none), holding a
     * reference to its spool file until `serve` returns. */
-  private def withDataset(exchange: HttpExchange, name: String)(
+  private def withDataset(exchange: HttpCore.Exchange, name: String)(
       serve: (() => DataFrame) => Unit): Unit = {
     val (dfFn, held) = spoolRefs.synchronized {
       val held = spools.get(name)
@@ -69,7 +68,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       (datasets.get(name), held)
     }
     try dfFn match {
-      case None => sendText(exchange, 404, s"no dataset $name")
+      case None => exchange.sendText(404, s"no dataset $name")
       case Some(f) => serve(f)
     } finally held.foreach(releaseSpool)
   }
@@ -126,13 +125,6 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     register(name, df)
   }
 
-  // TCP_NODELAY on response sockets (read once at HttpServer class-init):
-  // without it, Nagle + delayed-ACK stalls each small framed write behind
-  // the peer's 40 ms ACK timer — measured at ~65 ms per dissociated
-  // channel request (≈76 small frames each), which multiplied across the
-  // per-part parallel scan's 2×parts requests dominated the loop.
-  ArrowHttpServer.ensureNoDelay()
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // Sized for the parallel dissociated scan (r12 ADVICE): each of up to
   // `defaultParallelism` reader tasks holds TWO long-lived channel
   // streams (meta + body) concurrently, plus short info requests — a
@@ -141,37 +133,29 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // 0.9 s behind 72). Threads are cheap here — every handler streams in
   // O(64 KiB) chunks, so per-thread memory is bounded regardless of
   // pool width.
-  private val pool = Executors.newFixedThreadPool(
-    2 * spark.sparkContext.defaultParallelism + 8, r => {
-    val t = new Thread(r, "arrow-http")
-    t.setDaemon(true) // never pin the JVM open
-    t
-  })
-  server.setExecutor(pool)
+  private val server = new HttpCore(port, 2 * spark.sparkContext.defaultParallelism + 8)
 
-  def boundPort: Int = server.getAddress.getPort
+  def boundPort: Int = server.boundPort
   def baseUrl: String = s"http://127.0.0.1:$boundPort"
 
   // ------------------------------------------------------------------
-  server.createContext("/q/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/q/")
+  server.route("/q/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/q/")
     withDataset(exchange, name) { dfFn =>
-      val h = exchange.getRequestHeaders
       Negotiation.negotiate(
-        Option(h.getFirst("Accept")), Option(h.getFirst("Accept-Encoding")),
-        ipcCodecs, httpCodings, http10 = exchange.getProtocol == "HTTP/1.0"
+        exchange.requestHeader("Accept"), exchange.requestHeader("Accept-Encoding"),
+        ipcCodecs, httpCodings, http10 = exchange.protocol == "HTTP/1.0"
       ) match {
-        case Left(diag) => sendText(exchange, 406, diag + "\n")
+        case Left(diag) => exchange.sendText(406, diag + "\n")
         case Right(strategy) =>
-          val rh = exchange.getResponseHeaders
-          rh.set("Content-Type", strategy.contentType)
-          rh.set("Content-Disposition", s"""attachment; filename="$name.arrows"""")
+          exchange.setHeader("Content-Type", strategy.contentType)
+          exchange.setHeader("Content-Disposition", s"""attachment; filename="$name.arrows"""")
           // schema-only probe: answer [schema][EOS] without running
           // the query (keeps DSv2 inferSchema from triggering a full
           // serve that is then abandoned)
-          if (exchange.getRequestHeaders.containsKey("X-Arrow-Schema-Only")) {
+          if (exchange.requestHeader("X-Arrow-Schema-Only").isDefined) {
             exchange.sendResponseHeaders(200, 0)
-            val out = exchange.getResponseBody
+            val out = exchange.responseBody
             // must reflect the dictionary layout of the real stream:
             // one-dict streams prefix an (empty-tolerant) dictionary
             // message; delta streams are schema-only until data flows
@@ -183,10 +167,9 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
             out.write(ArrowBridge.EosBytes)
             out.close()
           } else {
-            strategy.httpCoding.foreach(c => rh.set("Content-Encoding", c))
+            strategy.httpCoding.foreach(c => exchange.setHeader("Content-Encoding", c))
             exchange.sendResponseHeaders(200, 0) // 0 = chunked
-            val raw = exchange.getResponseBody
-            val sink = new CoalescingOutputStream(raw, 64 * 1024, flushFirst = true)
+            val sink = exchange.responseBody
             val df = dfFn()
             // the parallel relay codes zstd as per-task frames
             // (ArrowBridge.writeParallel); the delta-dict row loop
@@ -221,21 +204,21 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
           }
       }
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
-  server.createContext("/multipart/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/multipart/")
+  server.route("/multipart/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/multipart/")
     withDataset(exchange, name) { dfFn =>
       // CSPRNG boundary: 28 bytes entropy, base64url (reference
       // algorithm, http/get_multipart/README.md:34-56)
       val rnd = new Array[Byte](28)
       new SecureRandom().nextBytes(rnd)
       val boundary = Base64.getUrlEncoder.withoutPadding.encodeToString(rnd)
-      exchange.getResponseHeaders.set("Content-Type",
+      exchange.setHeader("Content-Type",
         s"""multipart/mixed; boundary="$boundary"""")
       exchange.sendResponseHeaders(200, 0)
-      val out = exchange.getResponseBody
+      val out = exchange.responseBody
       val t0 = System.nanoTime()
       val df = dfFn()
       def part(ct: String): Unit =
@@ -273,7 +256,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       out.write(s"\r\n--$boundary--\r\n".getBytes(UTF_8))
       out.close()
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
   // spill-to-artifact split listing: the first request runs the query
@@ -319,31 +302,31 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     })
   }
 
-  server.createContext("/qsplit/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/qsplit/")
+  server.route("/qsplit/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/qsplit/")
     withDataset(exchange, name) { dfFn =>
       val parts = ensureSpilled(name, dfFn)
       val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k"}""").mkString(",\n  ")
-      exchange.getResponseHeaders.set("Content-Type", "application/json")
-      sendText(exchange, 200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
+      exchange.setHeader("Content-Type", "application/json")
+      exchange.sendText(200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
   // batch-offset index for ranged-parallel clients: the stream format
   // has no footer, so the server publishes message boundaries
-  server.createContext("/offsets/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/offsets/")
+  server.route("/offsets/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/offsets/")
     files.get(name) match {
-      case None => sendText(exchange, 404, s"no file $name")
+      case None => exchange.sendText(404, s"no file $name")
       case Some(_) =>
         val ix = frameIndex(name)
         val spans = ix.batches.map { case (start, end) => s"[$start,$end]" }.mkString(",")
-        exchange.getResponseHeaders.set("Content-Type", "application/json")
-        sendText(exchange, 200,
+        exchange.setHeader("Content-Type", "application/json")
+        exchange.sendText(200,
           s"""{"schema_end": ${ix.schemaEnd}, "total": ${ix.total}, "batches": [$spans]}""")
     }
-  })
+  }}
 
   /** Message layout of each registered file, from a header-only scan
     * (bodies are lseek-skipped, so building it is O(#batches), not
@@ -377,22 +360,21 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       } finally frames.close()
     })
 
-  server.createContext("/files/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/files/")
+  server.route("/files/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/files/")
     files.get(name) match {
-      case None => sendText(exchange, 404, s"no file $name")
+      case None => exchange.sendText(404, s"no file $name")
       case Some(p) =>
         val bytes = java.nio.file.Files.size(p)
-        val rh = exchange.getResponseHeaders
-        rh.set("Content-Type", Negotiation.ArrowMime)
-        rh.set("Accept-Ranges", "bytes")
-        val range = Option(exchange.getRequestHeaders.getFirst("Range"))
+        exchange.setHeader("Content-Type", Negotiation.ArrowMime)
+        exchange.setHeader("Accept-Ranges", "bytes")
+        val range = exchange.requestHeader("Range")
         // RFC 9110 §14: clamp end to size-1; suffix ranges larger than
         // the file cover the whole file; syntactically or semantically
         // unsatisfiable ranges → 416 with the */size form.
         def unsatisfiable(): Unit = {
-          exchange.getResponseHeaders.set("Content-Range", s"bytes */$bytes")
-          sendText(exchange, 416, "unsatisfiable range")
+          exchange.setHeader("Content-Range", s"bytes */$bytes")
+          exchange.sendText(416, "unsatisfiable range")
         }
         range match {
           case Some(r) if r.startsWith("bytes=") &&
@@ -406,9 +388,9 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
             if (start > end || start >= bytes) unsatisfiable()
             else {
               val len = end - start + 1
-              rh.set("Content-Range", s"bytes $start-$end/$bytes")
+              exchange.setHeader("Content-Range", s"bytes $start-$end/$bytes")
               exchange.sendResponseHeaders(206, len)
-              val out = exchange.getResponseBody
+              val out = exchange.responseBody
               val ch = java.nio.file.Files.newByteChannel(p)
               try {
                 ch.position(start)
@@ -424,36 +406,54 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
             }
           case _ =>
             exchange.sendResponseHeaders(200, bytes)
-            val out = exchange.getResponseBody
+            val out = exchange.responseBody
             java.nio.file.Files.copy(p, out)
             out.close()
         }
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
   /** Spool an Arrow IPC body to a .arrows artifact — the bytes stream
-    * straight to disk (O(64 KiB) driver memory, never a Vector[Row]),
-    * then one batch-at-a-time pass counts rows. Returns (path, rows,
-    * columns). */
+    * straight to disk (O(64 KiB) driver memory, never a Vector[Row]).
+    * Then [[IpcFrames]] checks the file's framing, with every length
+    * bounded before anything is allocated for it, and one
+    * batch-at-a-time pass counts rows. A body that is not one IPC
+    * stream starting with its schema fails as a
+    * [[HttpCore.BadRequest]]. The spool file is deleted on every
+    * failure. Returns (path, rows, columns). */
   private def spoolIngest(name: String, in: java.io.InputStream)
       : (java.nio.file.Path, Long, Int) = {
     val dir = spillRoot.resolve("ingest")
     java.nio.file.Files.createDirectories(dir)
     val path = dir.resolve(
       s"$name-${java.util.UUID.randomUUID.toString.take(8)}.arrows")
-    java.nio.file.Files.copy(in, path,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val alloc = ArrowBridge.newAllocator("ingest-count")
-    val rdr = new org.apache.arrow.vector.ipc.ArrowStreamReader(
-      new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(path), 1 << 16),
-      alloc, org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
     try {
-      val cols = rdr.getVectorSchemaRoot.getSchema.getFields.size
-      var rows = 0L
-      while (rdr.loadNextBatch()) rows += rdr.getVectorSchemaRoot.getRowCount
-      (path, rows, cols)
-    } finally { rdr.close(); alloc.close() }
+      java.nio.file.Files.copy(in, path,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      try {
+        val frames = IpcFrames.open(path)
+        try {
+          if (!frames.hasNext || !frames.next().isSchema)
+            throw new IpcFrames.Malformed("the stream does not start with a schema message")
+          frames.foreach(_ => ())
+        } finally frames.close()
+        val alloc = ArrowBridge.newAllocator("ingest-count")
+        val rdr = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+          new java.io.BufferedInputStream(java.nio.file.Files.newInputStream(path), 1 << 16),
+          alloc, org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
+        try {
+          val cols = rdr.getVectorSchemaRoot.getSchema.getFields.size
+          var rows = 0L
+          while (rdr.loadNextBatch()) rows += rdr.getVectorSchemaRoot.getRowCount
+          (path, rows, cols)
+        } finally { rdr.close(); alloc.close() }
+      } catch {
+        case e: Exception => throw new HttpCore.BadRequest(400, s"invalid Arrow IPC stream: $e")
+      }
+    } catch {
+      case e: Throwable => java.nio.file.Files.deleteIfExists(path); throw e
+    }
   }
 
   /** Expose a spooled artifact as dataset + temp view + static file —
@@ -463,7 +463,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     * neither a concurrent ingest nor a spill of the old data can leave
     * the view or the spill cache on a superseded file. */
   private def registerSpooled(name: String, path: java.nio.file.Path): Unit = {
-    val df = spark.read.format("arrows").load(path.toString)
+    val df = try spark.read.format("arrows").load(path.toString)
+      catch { case e: Throwable => java.nio.file.Files.deleteIfExists(path); throw e }
     spillLocks.computeIfAbsent(name, _ => new Object).synchronized {
       registerFile(s"$name.arrows", path)
       df.createOrReplaceTempView(name)
@@ -476,49 +477,58 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     }
   }
 
-  server.createContext("/ingest/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/ingest/")
-    if (exchange.getRequestMethod != "POST") sendText(exchange, 405, "POST only")
+  server.route("/ingest/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/ingest/")
+    if (exchange.method != "POST") exchange.sendText(405, "POST only")
     else {
-      val (path, rows, cols) = spoolIngest(name, exchange.getRequestBody)
+      val (path, rows, cols) = spoolIngest(name, exchange.requestBody)
       registerSpooled(name, path)
-      sendText(exchange, 200,
+      exchange.sendText(200,
         s"""{"name":"$name","rows":$rows,"columns":$cols}""")
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
   // multipart/form-data POST ingest: JSON metadata part + Arrow stream
   // part (http/post_multipart/README.md:20-22 — spec-only in the
   // reference; implemented here with the streaming boundary scanner)
-  server.createContext("/ingest-multipart/", exchange => safely(exchange) {
-    val name = exchange.getRequestURI.getPath.stripPrefix("/ingest-multipart/")
-    val ct = Option(exchange.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-    if (exchange.getRequestMethod != "POST") sendText(exchange, 405, "POST only")
-    else if (!ct.startsWith("multipart/")) sendText(exchange, 400, "multipart body required")
+  server.route("/ingest-multipart/") { exchange => safely(exchange) {
+    val name = exchange.path.stripPrefix("/ingest-multipart/")
+    val ct = exchange.requestHeader("Content-Type").getOrElse("")
+    if (exchange.method != "POST") exchange.sendText(405, "POST only")
+    else if (!ct.startsWith("multipart/") || !ct.contains("boundary="))
+      exchange.sendText(400, "multipart body with a boundary required")
     else {
       val boundary = ct.split("boundary=")(1).stripPrefix("\"").stripSuffix("\"")
       var meta = "{}"
       var spooled: Option[(java.nio.file.Path, Long, Int)] = None
-      MultipartStream.parse(exchange.getRequestBody, boundary) { part =>
+      def dropSpooled(): Unit = spooled.foreach(s => java.nio.file.Files.deleteIfExists(s._1))
+      try MultipartStream.parse(exchange.requestBody, boundary) { part =>
         part.headers.getOrElse("content-type", "") match {
           case Negotiation.ArrowMime =>
-            // the Arrow part streams straight to disk, like /ingest/
+            // the Arrow part streams straight to disk, like /ingest/;
+            // a later Arrow part replaces an earlier one
+            dropSpooled()
             spooled = Some(spoolIngest(name, part.body))
           case "application/json" =>
             meta = new String(part.body.readAllBytes(), UTF_8)
           case _ => () // ignore unknown parts
         }
+      } catch {
+        case e: IOException => dropSpooled(); throw e
+        case e: Exception =>
+          dropSpooled()
+          throw new HttpCore.BadRequest(400, s"malformed multipart body: ${e.getMessage}")
       }
       spooled match {
-        case None => sendText(exchange, 400, "no arrow part in body")
+        case None => exchange.sendText(400, "no arrow part in body")
         case Some((path, rows, cols)) =>
           registerSpooled(name, path)
-          sendText(exchange, 200,
+          exchange.sendText(200,
             s"""{"name":"$name","rows":$rows,"columns":$cols,"metadata":$meta}""")
       }
     }
-  })
+  }}
 
   // ------------------------------------------------------------------
   // dissociated IPC: discovery + metadata/body channels (the reference's
@@ -545,17 +555,17 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     else (path, None)
   }
 
-  server.createContext("/dissoc/info/", exchange => safely(exchange) {
+  server.route("/dissoc/info/") { exchange => safely(exchange) {
     val (name, idx) = dissocTarget(
-      exchange.getRequestURI.getPath.stripPrefix("/dissoc/info/"))
+      exchange.path.stripPrefix("/dissoc/info/"))
     withDataset(exchange, name) { dfFn =>
-      exchange.getResponseHeaders.set("Content-Type", "application/json")
+      exchange.setHeader("Content-Type", "application/json")
       val n = ensureSpilled(name, dfFn).size
       idx match {
         case Some(i) if i >= n =>
-          sendText(exchange, 404, s"no part $i of $name ($n parts)")
+          exchange.sendText(404, s"no part $i of $name ($n parts)")
         case Some(i) =>
-          sendText(exchange, 200,
+          exchange.sendText(200,
             s"""{"ticket": "$name/$i", "locations": [
                |  {"uri": "$baseUrl/dissoc/meta/$name/$i", "channel": "metadata"},
                |  {"uri": "$baseUrl/dissoc/data/$name/$i", "channel": "body"}
@@ -575,14 +585,14 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
                 s""""metadata": "$baseUrl/dissoc/meta/$name/$i", """ +
                 s""""body": "$baseUrl/dissoc/data/$name/$i"}""")
               .mkString(""", "parts": [""", ", ", "]")
-          sendText(exchange, 200,
+          exchange.sendText(200,
             s"""{"ticket": "$name", "locations": [
                |  {"uri": "$baseUrl/dissoc/meta/$name", "channel": "metadata"},
                |  {"uri": "$baseUrl/dissoc/data/$name", "channel": "body"}
                |]$parts}""".stripMargin)
       }
     }
-  })
+  }}
 
   /** Exact meta-channel byte length of a set of spilled parts: one
     * schema frame (first part's), every batch meta frame, one EOS. */
@@ -596,33 +606,29 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   /** A dissociated channel endpoint over the spilled parts it addresses
     * (see [[dissocTarget]]). */
   private def dissocChannel(prefix: String)(
-      serve: (HttpExchange, Vector[String]) => Unit): Unit =
-    server.createContext(prefix, exchange => safely(exchange) {
-      val (name, idx) = dissocTarget(exchange.getRequestURI.getPath.stripPrefix(prefix))
+      serve: (HttpCore.Exchange, Vector[String]) => Unit): Unit =
+    server.route(prefix) { exchange => safely(exchange) {
+      val (name, idx) = dissocTarget(exchange.path.stripPrefix(prefix))
       withDataset(exchange, name) { dfFn =>
         val keys = ensureSpilled(name, dfFn)
         if (idx.exists(_ >= keys.size))
-          sendText(exchange, 404, s"no part ${idx.get} of $name (${keys.size} parts)")
+          exchange.sendText(404, s"no part ${idx.get} of $name (${keys.size} parts)")
         else {
-          exchange.getResponseHeaders.set("Content-Type", "application/octet-stream")
+          exchange.setHeader("Content-Type", "application/octet-stream")
           serve(exchange, idx.map(i => Vector(keys(i))).getOrElse(keys))
         }
       }
-    })
+    }}
 
   // Both channels publish an EXACT Content-Length computed from the
-  // cached per-part frame index: a known length makes the JDK server
-  // write the frames straight to the socket instead of re-framing them
-  // into hard-coded 4 KiB HTTP chunks, and the client reads a plain
-  // fixed-length stream with no chunk parsing (2×parts concurrent
-  // client readers otherwise pin in ChunkedInputStream chunk decode). A
-  // 64 KiB buffer coalesces the per-frame header writes (the meta
-  // channel is ~4 small writes per batch otherwise).
+  // cached per-part frame index: the client reads a plain fixed-length
+  // stream with no chunk parsing at all (2×parts concurrent readers of
+  // a chunked channel pinned in ChunkedInputStream chunk decode), and
+  // the connection's 64 KiB socket buffer coalesces the per-frame
+  // writes (the meta channel makes ~4 small writes per batch).
   dissocChannel("/dissoc/meta/") { (exchange, keys) =>
     exchange.sendResponseHeaders(200, metaChannelLen(keys))
-    val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
-    Dissociated.streamMetadataFromFiles(keys.map(files(_)), out)
-    out.close()
+    Dissociated.streamMetadataFromFiles(keys.map(files(_)), exchange.responseBody)
   }
 
   // bodies are delivered out of order within windows of 8 (under the
@@ -631,56 +637,47 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     val len = bodyChannelLen(keys)
     if (len == 0) { // zero batches: empty body
       exchange.sendResponseHeaders(200, -1)
-      exchange.getResponseBody.close()
     } else {
       exchange.sendResponseHeaders(200, len)
-      val out = new java.io.BufferedOutputStream(exchange.getResponseBody, 1 << 16)
-      Dissociated.streamBodyFromFiles(keys.map(files(_)), out)
-      out.close()
+      Dissociated.streamBodyFromFiles(keys.map(files(_)), exchange.responseBody)
     }
   }
 
   // ------------------------------------------------------------------
   // indirect listing (JSON-of-URIs), reference get_indirect/server.py:23-44
-  server.createContext("/", exchange => safely(exchange) {
-    if (exchange.getRequestURI.getPath != "/") sendText(exchange, 404, "not found")
+  server.route("/") { exchange => safely(exchange) {
+    if (exchange.path != "/") exchange.sendText(404, "not found")
     else {
       val uris = files.keys.toSeq.sorted.map(n =>
         s"""{"uri": "$baseUrl/files/$n"}""").mkString(",\n  ")
       val body = s"""{"arrow_stream_files": [\n  $uris\n]}"""
-      exchange.getResponseHeaders.set("Content-Type", "application/json")
-      sendText(exchange, 200, body)
+      exchange.setHeader("Content-Type", "application/json")
+      exchange.sendText(200, body)
     }
-  })
-
-  private def sendText(exchange: HttpExchange, code: Int, body: String): Unit = {
-    val b = body.getBytes(UTF_8)
-    if (!exchange.getResponseHeaders.containsKey("Content-Type"))
-      exchange.getResponseHeaders.set("Content-Type", "text/plain; charset=utf-8")
-    exchange.sendResponseHeaders(code, b.length)
-    val out = exchange.getResponseBody
-    out.write(b); out.close()
-  }
+  }}
 
   /** Runs a handler; every exception it ends with is logged to stderr
-    * as one line with the request path. */
-  private def safely(exchange: HttpExchange)(body: => Unit): Unit =
+    * as one line with the request path. A failure after the response
+    * started aborts it, so the client never reads a clean end; before
+    * that, a malformed request answers its 4xx and any other failure
+    * that is not a lost client answers 500. */
+  private def safely(exchange: HttpCore.Exchange)(body: => Unit): Unit =
     try body
     catch {
       case e: Exception =>
-        System.err.println(s"[arrow-http] ${exchange.getRequestMethod} " +
-          s"${exchange.getRequestURI.getPath}: ${String.valueOf(e).replace('\n', ' ')}")
+        System.err.println(s"[arrow-http] ${exchange.method} " +
+          s"${exchange.path}: ${String.valueOf(e).replace('\n', ' ')}")
         e match {
-          case _: IOException => // client went away mid-stream
-          case _ =>
-            try sendText(exchange, 500, s"error: ${e.getMessage}")
-            catch { case _: IOException => () }
+          case _ if exchange.sent => exchange.abort()
+          case b: HttpCore.BadRequest => exchange.sendText(b.status, s"bad request: ${b.getMessage}\n")
+          case _: IOException => // client went away
+          case _ => exchange.sendText(500, s"error: ${e.getMessage}")
         }
-    } finally exchange.close()
+    }
 
   def start(): ArrowHttpServer = { server.start(); this }
   def stop(): Unit = {
-    server.stop(0); pool.shutdownNow()
+    server.stop()
     // Reclaim the qsplit spill artifacts NOW, not at JVM exit:
     // deleteOnExit() cannot remove non-empty directories, so a
     // long-lived process (or a bench looping servers) would leak one
@@ -709,51 +706,6 @@ object ArrowHttpServer {
     * dissociated meta and body channel frames. */
   private final case class FrameIndex(total: Long, schemaEnd: Long, schemaFramed: Long,
       batches: Vector[(Long, Long)], metaTotal: Long, bodyTotal: Long)
-
-  /** Set TCP_NODELAY for all [[com.sun.net.httpserver.HttpServer]]
-    * response sockets. The JDK server reads `sun.net.httpserver.nodelay`
-    * once in ServerConfig's static init, so this must run before the
-    * FIRST HttpServer.create in the JVM — hence the call from the
-    * constructor, idempotently, ahead of create().
-    *
-    * Hardening (r12 ADVICE): the lazy set is a silent no-op when some
-    * other component created a com.sun HttpServer first (ServerConfig's
-    * static init already read the property). The primary defense is now
-    * `-Dsun.net.httpserver.nodelay=true` in build.sbt's javaOptions —
-    * set before ANY class init in every forked run/test JVM — with this
-    * constructor-path set kept for non-sbt embedders, and a loud WARN
-    * when the property was explicitly overridden to something else. */
-  @volatile private var noDelayChecked = false
-  private[server] def ensureNoDelay(): Unit = {
-    val v = System.getProperty("sun.net.httpserver.nodelay")
-    if (v == null) System.setProperty("sun.net.httpserver.nodelay", "true")
-    else if (v != "true" && !noDelayChecked) {
-      // explicit external override — say so instead of silently stalling
-      System.err.println(s"[arrow-http] WARN: sun.net.httpserver.nodelay=$v " +
-        "— TCP_NODELAY disabled externally; expect ~65 ms/request Nagle stalls")
-    }
-    noDelayChecked = true
-  }
-}
-
-/** Coalesces writes to >= minSize before forwarding (the reference's
-  * 64 KiB floor), force-flushing the first chunk for low TTFB. */
-final class CoalescingOutputStream(under: OutputStream, minSize: Int,
-    flushFirst: Boolean) extends OutputStream {
-  private val buf = new java.io.ByteArrayOutputStream(minSize * 2)
-  private var first = flushFirst
-
-  override def write(b: Int): Unit = { buf.write(b); maybeFlush() }
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    buf.write(b, off, len); maybeFlush()
-  }
-  private def maybeFlush(): Unit =
-    if (first || buf.size() >= minSize) { forward(); first = false }
-  private def forward(): Unit = if (buf.size() > 0) {
-    buf.writeTo(under); buf.reset(); under.flush()
-  }
-  override def flush(): Unit = { forward(); under.flush() }
-  override def close(): Unit = { forward(); under.close() }
 }
 
 final class CountingOutputStream(under: OutputStream) extends OutputStream {

@@ -101,6 +101,15 @@ class ArrowBridgeSpec extends AnyFunSuite {
     assert(dict < plain) // dictionary-encoded ticker strings shrink the wire
   }
 
+  test("a value outside the registered dictionary fails naming the column and the value") {
+    val df = spark.range(3).selectExpr("if(id = 2, 'ZZQX', 'AAPL') AS ticker", "id")
+    val e = intercept[IllegalArgumentException] {
+      ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), new ByteArrayOutputStream(),
+        ArrowBridge.WriteOptions(dictColumns = Map("ticker" -> Array("AAPL", "MSFT"))))
+    }
+    assert(e.getMessage.contains("'ticker'") && e.getMessage.contains("'ZZQX'"), e.getMessage)
+  }
+
   test("empty and single-row streams round-trip (schema survives)") {
     val df0 = Generators.ticker(spark, 5000, 1).filter("price < 0") // empty
     val (schema0, rows0, n0, b0) = roundTrip(df0)

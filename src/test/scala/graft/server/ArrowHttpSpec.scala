@@ -531,6 +531,75 @@ class ArrowHttpSpec extends AnyFunSuite {
     assert(spark.table("mp_posted").count() === 300)
   }
 
+  test("a malformed /ingest body answers 400, registers no view and leaves no spool file") {
+    val good = tickerBody(2000)
+    val hugeMeta = good.clone()
+    java.nio.ByteBuffer.wrap(hugeMeta, 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(0x7ffffff0)
+    val random = new Array[Byte](1024)
+    new scala.util.Random(11).nextBytes(random)
+    val bodies = Seq("bad_half" -> good.take(good.length / 2), "bad_meta" -> hugeMeta,
+      "bad_random" -> random)
+    for ((name, body) <- bodies) {
+      val t0 = System.nanoTime()
+      val conn = URI.create(s"${server.baseUrl}/ingest/$name").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.setReadTimeout(5000)
+      conn.setFixedLengthStreamingMode(body.length.toLong)
+      conn.getOutputStream.write(body)
+      conn.getOutputStream.close()
+      assert(conn.getResponseCode === 400, name)
+      val msg = new String(conn.getErrorStream.readAllBytes(), UTF_8)
+      assert((System.nanoTime() - t0) / 1e9 < 5.0, name)
+      assert(msg.contains("invalid Arrow IPC stream"), s"$name: $msg")
+      assert(!spark.catalog.tableExists(name), name)
+      assert(spoolFiles(name).isEmpty, s"$name: ${spoolFiles(name).mkString(", ")}")
+    }
+  }
+
+  test("a client gone mid-stream cancels the serve's jobs still in flight") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val window = 8 // writeParallel's
+    val held = window + 1
+    // partition `held` is submitted once partition 1 is consumed, and
+    // holds until its job is cancelled; partition 2 holds the relay
+    // until the client is gone, so a write fails while `held` runs
+    CancelGate.reset()
+    val gate = udf { (x: Long) =>
+      val p = org.apache.spark.TaskContext.getPartitionId()
+      if (p == held) CancelGate.hold()
+      else if (p == 2) CancelGate.clientGone.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      x >= Long.MinValue
+    }
+    server.register("cancel", Generators.flightBench(spark, 16 * 4096, 16).filter(gate(col("a"))))
+    val alloc = ArrowBridge.newAllocator("cancel-spec")
+    try {
+      val conn = URI.create(server.baseUrl + "/q/cancel").toURL
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestProperty("Connection", "close")
+      conn.setReadTimeout(30000)
+      val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(conn.getInputStream, alloc)
+      assert(reader.loadNextBatch())
+      assert(CancelGate.heldRunning.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      conn.disconnect()
+      CancelGate.clientGone.countDown()
+      try reader.close() catch { case _: java.io.IOException => () }
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 30000000000L
+      while ((!CancelGate.killed || tracker.getActiveJobIds.nonEmpty) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      assert(CancelGate.killed, "the held task was never cancelled")
+      assert(tracker.getActiveJobIds.isEmpty,
+        s"jobs still active: ${tracker.getActiveJobIds.mkString(", ")}")
+    } finally {
+      CancelGate.never.countDown()
+      CancelGate.clientGone.countDown()
+      alloc.close()
+    }
+  }
+
   test("indirect listing + ranged fetch reassembles to the full file") {
     // materialize an artifact and register it
     val df = Generators.ticker(spark, 2000, 1)
@@ -678,4 +747,31 @@ object FirstByteGate {
 object SlotGate {
   @volatile var started = new java.util.concurrent.CountDownLatch(0)
   @volatile var release = new java.util.concurrent.CountDownLatch(0)
+}
+
+/** The latches the disconnect spec holds two partitions on. The held
+  * task waits for `never`, and records and ends its own kill when its
+  * job is cancelled first. */
+object CancelGate {
+  @volatile var heldRunning = new java.util.concurrent.CountDownLatch(1)
+  @volatile var clientGone = new java.util.concurrent.CountDownLatch(1)
+  @volatile var never = new java.util.concurrent.CountDownLatch(1)
+  @volatile var killed = false
+
+  def reset(): Unit = {
+    heldRunning = new java.util.concurrent.CountDownLatch(1)
+    clientGone = new java.util.concurrent.CountDownLatch(1)
+    never = new java.util.concurrent.CountDownLatch(1)
+    killed = false
+  }
+
+  def hold(): Unit = {
+    heldRunning.countDown()
+    val ctx = org.apache.spark.TaskContext.get()
+    val deadline = System.nanoTime() + 60000000000L
+    while (!never.await(20, java.util.concurrent.TimeUnit.MILLISECONDS) &&
+        System.nanoTime() < deadline) {
+      if (ctx.isInterrupted()) { killed = true; throw new org.apache.spark.TaskKilledException("cancelled") }
+    }
+  }
 }

@@ -21,6 +21,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, fn: (SparkSession, String) => DataFrame, oracle: String): QueryDef =
     QueryDef(name, fn, Some(oracle))
-  def rowsOnly(name: String, fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * (fan-out 29.96 s artifact vs 2.75 s isolated; 100M loop 10.42 vs
   * 6.57). The between-cell GC checkpoints fixed the query cells but
   * not this section — the honest fix is process isolation, which
-  * isolated `LoopBench` reruns already proved out.
+  * isolated reruns of the loop already proved out
+  * (`bench/r7_loop_recheck.jsonl`).
   *
   * [[Bench]] execs this main as a subprocess (same JVM flags, same
   * classpath, same env knobs) and merges the per-cell reps from the

@@ -103,17 +103,13 @@ object ArrowBridge {
     * native context. Ratio cost of per-chunk frames is < 0.5% on the
     * ticker payload.)
     *
-    * Returns (rows, batches, uncoded stream bytes); the IPC file format
-    * falls back to the row loop (bytes -1).
+    * Returns (rows, batches, uncoded stream bytes). The relay writes
+    * the IPC stream format only.
     */
   def writeParallel(df: org.apache.spark.sql.DataFrame, out: OutputStream,
-      opts: WriteOptions = WriteOptions(), window: Int = 8,
+      opts: WriteOptions = WriteOptions(),
       zstd: Boolean = false): (Long, Long, Long) = {
-    if (opts.fileFormat) {
-      require(!zstd, "zstd frames need the IPC stream format")
-      val (r, b) = write(df.schema, internalRows(df), out, opts)
-      return (r, b, -1L)
-    }
+    require(!opts.fileFormat, "writeParallel writes the IPC stream format only")
     def code(bytes: Array[Byte]): Array[Byte] =
       if (zstd) com.github.luben.zstd.Zstd.compress(bytes, ZstdLevel) else bytes
     val header = schemaBytes(df.schema, opts)
@@ -138,7 +134,7 @@ object ArrowBridge {
     var batches = 0L
     var bytes = header.length.toLong
     var dictSent = false
-    PartitionStreamer.foreachOrdered(parts, window) { p =>
+    PartitionStreamer.foreachOrdered(parts, RelayWindow) { p =>
       if (!dictSent && p.dictLen > 0) {
         dictSent = true
         out.write(p.dict)
@@ -161,6 +157,10 @@ object ArrowBridge {
     writeParallel(df, out, opts, zstd = true)
 
   private final val ZstdLevel = 3 // a constant: inlined, so task closures capture nothing
+
+  /** Partition jobs the [[writeParallel]] relay keeps in flight; the
+    * driver holds at most this many partition results. */
+  final val RelayWindow = 8
 
   /** One partition's share of a [[writeParallel]] stream, coded; the
     * lengths are the uncoded ones. */
@@ -568,7 +568,7 @@ object ArrowBridge {
               mkGetter(dv.asInstanceOf[FieldVector], StringType, None)
             } else {
               val sf = ArrowSchemas.fromArrowField(f)
-              mkGetter(fv, sf.dataType, origTagOf(sf))
+              mkGetter(fv, sf.dataType, origTag(sf))
             }
           }
           val out = new Array[Row](n)
@@ -594,11 +594,6 @@ object ArrowBridge {
 
     new ReadResult(schema, rowIter, () => { reader.close(); alloc.close() })
   }
-
-  private def origTagOf(f: StructField): Option[String] =
-    if (f.metadata.contains(ArrowSchemas.OrigTypeKey))
-      Some(f.metadata.getString(ArrowSchemas.OrigTypeKey))
-    else None
 
   /** Getter producing Spark *external* values (java.sql dates etc.). */
   private def mkGetter(vec: FieldVector, dt: DataType, orig: Option[String]): Int => AnyRef = {
@@ -659,7 +654,7 @@ object ArrowBridge {
       case (_, st: StructType) =>
         val v = vec.asInstanceOf[StructVector]
         val childGetters = st.fields.zipWithIndex.map { case (cf, ci) =>
-          mkGetter(v.getChildrenFromFields.get(ci), cf.dataType, origTagOf(cf))
+          mkGetter(v.getChildrenFromFields.get(ci), cf.dataType, origTag(cf))
         }
         nn(i => Row.fromSeq(childGetters.map(g => g(i)).toIndexedSeq))
       case (_, other) => throw new UnsupportedOperationException(s"read: $other")

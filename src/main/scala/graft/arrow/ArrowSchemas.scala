@@ -65,9 +65,6 @@ object ArrowSchemas {
     }
   }
 
-  def toArrowSchema(st: StructType): ArrowSchema =
-    new ArrowSchema(st.fields.map(toArrowField).toList.asJava)
-
   // ---------- Arrow -> Spark ----------
 
   /** Spark type + original-type tag for metadata. */

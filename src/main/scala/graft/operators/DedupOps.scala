@@ -307,13 +307,6 @@ object DedupOps {
           size(array_union(col("ga"), col("gb")))).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
 
-  /** Probe hooks (r15 diagnosis, D24Probe): expose the two phases of
-    * the clusterLabels pipeline for isolated timing. */
-  private[graft] def probeCandidatePairs(s: SparkSession, d: String): DataFrame =
-    candidatePairs(s, d)
-  private[graft] def probeClusterLabels(s: SparkSession, d: String): DataFrame =
-    clusterLabels(s, d)
-
   /** Min doc id within ≤ 4 hops over the verified near-dup pairs:
     * (src, cluster) where cluster = min doc_id reachable within <= 4
     * hops (two doubling self-joins — the log-diameter closure d07
@@ -339,9 +332,10 @@ object DedupOps {
     // r15: the r14 union referenced the candidate-pair frame FOUR times
     // INSIDE the persisted edge frame — the persist stops downstream
     // recompute, but its own one-time materialization ran the whole
-    // LSH-verify pipeline once per union branch (D24Probe: labels
-    // 3.2–5.0 s vs 1.0 s for one pairs pass). One explode emits the
-    // same four edges per pair from ONE pass; distinct unchanged.
+    // LSH-verify pipeline once per union branch (labels 3.2–5.0 s vs
+    // 1.0 s for one pairs pass, OPTIMIZATION_r15.md §8). One explode
+    // emits the same four edges per pair from ONE pass; distinct
+    // unchanged.
     val p = candidatePairs(s, d).select(col("a_id"), col("b_id"))
     val e = OpUtils.transientPersist(s, s"d07edges:$d",
       p.select(explode(array(

@@ -28,7 +28,8 @@ import graft.dissociated.Dissociated
   *   GET  /files/<name>      static .arrows artifact, Content-Length +
   *                           Accept-Ranges + single-range GETs
   *   POST /ingest/<name>     Arrow stream request body → temp view;
-  *                           a body that is not one IPC stream is 400
+  *                           a body that is not one IPC stream, or a
+  *                           name that is not an identifier, is 400
   *
   * Streaming policy mirrors the reference (server.py:97-142,388,
   * 421-429): the HTTP framing is ours ([[HttpCore]]), and a streamed
@@ -477,8 +478,18 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     }
   }
 
+  /** The dataset name an ingest path ends with. It names the spool
+    * file and the temp view, so anything but a plain identifier (a
+    * decoded `%2F`, a dot segment) is a [[HttpCore.BadRequest]]. */
+  private def ingestName(exchange: HttpCore.Exchange, prefix: String): String = {
+    val name = exchange.path.stripPrefix(prefix)
+    if (!ArrowHttpServer.IngestName.matches(name))
+      throw new HttpCore.BadRequest(400, s"ingest name must match ${ArrowHttpServer.IngestName}")
+    name
+  }
+
   server.route("/ingest/") { exchange => safely(exchange) {
-    val name = exchange.path.stripPrefix("/ingest/")
+    val name = ingestName(exchange, "/ingest/")
     if (exchange.method != "POST") exchange.sendText(405, "POST only")
     else {
       val (path, rows, cols) = spoolIngest(name, exchange.requestBody)
@@ -493,7 +504,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // part (http/post_multipart/README.md:20-22 — spec-only in the
   // reference; implemented here with the streaming boundary scanner)
   server.route("/ingest-multipart/") { exchange => safely(exchange) {
-    val name = exchange.path.stripPrefix("/ingest-multipart/")
+    val name = ingestName(exchange, "/ingest-multipart/")
     val ct = exchange.requestHeader("Content-Type").getOrElse("")
     if (exchange.method != "POST") exchange.sendText(405, "POST only")
     else if (!ct.startsWith("multipart/") || !ct.contains("boundary="))
@@ -547,11 +558,12 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     * `{name}` addresses the whole dataset, `{name}/{i}` one spilled
     * part (per-part channel pairs are the dissociated scan's unit of
     * parallelism — the reference FlightInfo's plural endpoint list,
-    * cudf-flight-server.cc:349-365). */
+    * cudf-flight-server.cc:349-365). An index past the Int range
+    * reads as `Int.MaxValue`, which is past every part count. */
   private def dissocTarget(path: String): (String, Option[Int]) = {
     val k = path.lastIndexOf('/')
     if (k > 0 && path.length > k + 1 && path.drop(k + 1).forall(_.isDigit))
-      (path.take(k), Some(path.drop(k + 1).toInt))
+      (path.take(k), Some(path.drop(k + 1).toIntOption.getOrElse(Int.MaxValue)))
     else (path, None)
   }
 
@@ -699,6 +711,8 @@ object ArrowHttpServer {
     * [[ArrowHttpServer.registerDict]]; beyond this the value set is no
     * longer "small" and must stream via registerDictDelta. */
   val MaxDictValues: Int = 4096
+
+  private val IngestName = "[A-Za-z_][A-Za-z0-9_]*".r
 
   /** Message layout of a served file: its byte length, the end of its
     * schema message and that message's framed length, each batch

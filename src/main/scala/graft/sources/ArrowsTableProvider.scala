@@ -113,10 +113,8 @@ object ArrowsTableProvider {
     * Opting every request out removes the stale-checkout race class
     * entirely. */
   private def httpTimeouts(conn: HttpURLConnection): HttpURLConnection = {
-    conn.setConnectTimeout(
-      sys.env.getOrElse("SPARK_GRAFT_HTTP_CONNECT_MS", "30000").toInt)
-    conn.setReadTimeout(
-      sys.env.getOrElse("SPARK_GRAFT_HTTP_READ_MS", "180000").toInt)
+    conn.setConnectTimeout(30000)
+    conn.setReadTimeout(180000)
     conn.setRequestProperty("Connection", "close")
     conn
   }
@@ -588,7 +586,6 @@ final class ArrowsStreamingWrite(schema: StructType, options: Map[String, String
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     new java.io.File(path).mkdirs()
     val opts = ArrowBridge.WriteOptions(
-      batchSize = options.get("batchsize").map(_.toInt).getOrElse(4096),
       codec = options.get("codec").filter(_ != "identity"))
     ArrowsStreamingWriterFactory(path, schema, opts)
   }
@@ -613,7 +610,6 @@ final class ArrowsBatchWrite(schema: StructType, options: Map[String, String])
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     new java.io.File(path).mkdirs()
     val opts = ArrowBridge.WriteOptions(
-      batchSize = options.get("batchsize").map(_.toInt).getOrElse(4096),
       codec = options.get("codec").filter(_ != "identity"),
       fileFormat = options.get("variant").contains("file"))
     ArrowsWriterFactory(path, schema, opts)

@@ -10,10 +10,4 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Drain the async listener bus so SparkListener-collected task
-    * metrics (AsofScaleBench's peak-memory probe) are complete before
-    * they are read. `listenerBus` is `private[spark]`. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -561,7 +561,7 @@ class ArrowHttpSpec extends AnyFunSuite {
 
   test("a client gone mid-stream cancels the serve's jobs still in flight") {
     import org.apache.spark.sql.functions.{col, udf}
-    val window = 8 // writeParallel's
+    val window = ArrowBridge.RelayWindow
     val held = window + 1
     // partition `held` is submitted once partition 1 is consumed, and
     // holds until its job is cancelled; partition 2 holds the relay

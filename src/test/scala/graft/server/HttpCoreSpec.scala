@@ -91,6 +91,26 @@ class HttpCoreSpec extends AnyFunSuite {
     server.spillRootPath.map(_.resolve("ingest").toFile).filter(_.isDirectory)
       .map(_.listFiles().filter(_.getName.startsWith(s"$name-")).toSeq).getOrElse(Nil)
 
+  /** Status of a raw request with a `Content-Length` body. */
+  private def status(method: String, path: String, headers: String = "",
+      body: Array[Byte] = Array.empty): Int = {
+    val s = connect()
+    try {
+      send(s, s"$method $path HTTP/1.1\r\nHost: localhost\r\n$headers" +
+        s"Content-Length: ${body.length}\r\nConnection: close\r\n\r\n", body)
+      head(new BufferedInputStream(s.getInputStream))._1
+    } finally s.close()
+  }
+
+  /** Files named `prefix*` in the temp dir, the spill root and its
+    * ingest spool dir: where a name with `../` segments would spool. */
+  private def filesNamed(prefix: String): Set[java.io.File] = {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val spill = server.spillRootPath.toSeq.flatMap(r => Seq(r.toFile, r.resolve("ingest").toFile))
+    (tmp +: spill).filter(_.isDirectory)
+      .flatMap(_.listFiles().filter(_.getName.startsWith(prefix))).toSet
+  }
+
   test("GET /q/ of a 32-partition dataset: one chunk per partition, each >= 64 KiB") {
     val s = connect()
     try {
@@ -207,5 +227,31 @@ class HttpCoreSpec extends AnyFunSuite {
       val results = ops.map(Await.result(_, Duration(120, "s")))
       assert(results.forall(_ == ((200, true))), results.mkString(", "))
     } finally threads.shutdownNow()
+  }
+
+  test("an ingest name that is not an identifier answers 400 and spools nothing") {
+    val body = tickerBody(200)
+    val boundary = "graftEscapeBoundary"
+    val multipart = new ByteArrayOutputStream()
+    multipart.write(s"\r\n--$boundary\r\nContent-Type: ${Negotiation.ArrowMime}\r\n\r\n"
+      .getBytes(UTF_8))
+    multipart.write(body)
+    multipart.write(s"\r\n--$boundary--\r\n".getBytes(UTF_8))
+    val before = filesNamed("escape-")
+    assert(status("POST", "/ingest/..%2F..%2Fescape", body = body) === 400)
+    assert(status("POST", "/ingest-multipart/..%2Fescape",
+      s"Content-Type: multipart/form-data; boundary=\"$boundary\"\r\n",
+      multipart.toByteArray) === 400)
+    assert(filesNamed("escape-") === before)
+    for (name <- Seq("..%2F..%2Fescape", "..%2Fescape", "escape"))
+      assert(status("GET", s"/q/$name") === 404, name)
+  }
+
+  test("a dissociated part index past the part count answers 404") {
+    val (_, parts) = graft.sources.ArrowsTableProvider
+      .dissocInfo(s"${server.baseUrl}/dissoc/info/ticker")
+    assert(parts.size === 2)
+    for (path <- Seq(s"/dissoc/info/ticker/${parts.size}", "/dissoc/meta/ticker/99999999999"))
+      assert(status("GET", path) === 404, path)
   }
 }

@@ -80,11 +80,13 @@ object ArrowBridge {
   /** Parallel DataFrame → IPC stream: each partition serializes (and,
     * with `zstd`, compresses) its own batches inside its Spark task
     * (all cores busy); the driver relays [schema][first dictionary]
-    * [partition batches…][EOS] in partition order with a bounded
-    * prefetch window — constant driver memory, no row-at-a-time driver
-    * loop. This is the 100 TB-shaped serving path: on a cluster the
-    * driver only relays ~10 MB chunks. The schema goes out before any
-    * partition finishes, so a client sees first bytes at once.
+    * [partition batches…][EOS] in partition order, one Spark job per
+    * group of up to [[RelayWindow]] partitions with two groups in
+    * flight (see [[PartitionStreamer]] for how groups are sized) —
+    * constant driver memory, no row-at-a-time driver loop. This is the
+    * 100 TB-shaped serving path: on a cluster the driver only relays
+    * ~10 MB chunks. The schema goes out before any partition finishes,
+    * so a client sees first bytes at once.
     *
     * Dictionary streams stay parallel: the value set is fixed at
     * registration, so every partition emits IDENTICAL dictionary
@@ -134,7 +136,8 @@ object ArrowBridge {
     var batches = 0L
     var bytes = header.length.toLong
     var dictSent = false
-    PartitionStreamer.foreachOrdered(parts, RelayWindow) { p =>
+    PartitionStreamer.foreachOrdered(parts, RelayWindow,
+        (p: RelayPart) => p.dict.length.toLong + p.batches.length) { p =>
       if (!dictSent && p.dictLen > 0) {
         dictSent = true
         out.write(p.dict)
@@ -158,8 +161,10 @@ object ArrowBridge {
 
   private final val ZstdLevel = 3 // a constant: inlined, so task closures capture nothing
 
-  /** Partition jobs the [[writeParallel]] relay keeps in flight; the
-    * driver holds at most this many partition results. */
+  /** Most partitions per Spark job of the [[writeParallel]] relay (fewer
+    * when `spark.driver.maxResultSize` needs it), which keeps two such
+    * groups in flight; the driver holds at most 2 × this many partition
+    * results (one more while partition 0 is written). */
   final val RelayWindow = 8
 
   /** One partition's share of a [[writeParallel]] stream, coded; the

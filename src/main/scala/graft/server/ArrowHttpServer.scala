@@ -462,18 +462,22 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     * file it supersedes is deleted once no request reads it (see
     * [[spoolRefs]]). Serialized per name with [[ensureSpilled]], so
     * neither a concurrent ingest nor a spill of the old data can leave
-    * the view or the spill cache on a superseded file. */
+    * the view or the spill cache on a superseded file. A throw from
+    * `load` or from the view deletes the spool file before anything
+    * names it; the bookkeeping after cannot throw, and the `/files/`
+    * entry is published last. */
   private def registerSpooled(name: String, path: java.nio.file.Path): Unit = {
-    val df = try spark.read.format("arrows").load(path.toString)
-      catch { case e: Throwable => java.nio.file.Files.deleteIfExists(path); throw e }
+    def orDiscard[A](step: => A): A =
+      try step catch { case e: Throwable => java.nio.file.Files.deleteIfExists(path); throw e }
+    val df = orDiscard(spark.read.format("arrows").load(path.toString))
     spillLocks.computeIfAbsent(name, _ => new Object).synchronized {
-      registerFile(s"$name.arrows", path)
-      df.createOrReplaceTempView(name)
+      orDiscard(df.createOrReplaceTempView(name))
       val superseded = spoolRefs.synchronized {
         spoolRefs(path) = 1
         register(name, df)
         spools.put(name, path)
       }
+      registerFile(s"$name.arrows", path)
       superseded.foreach(releaseSpool)
     }
   }

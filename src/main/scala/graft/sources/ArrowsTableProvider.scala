@@ -33,7 +33,7 @@ import graft.arrow.{ArrowBridge, ArrowSchemas, InternalGetters}
   * conversion.
   *
   * Write: partition-parallel part files (`part-NNNNN.arrows`) with
-  * batch-size / lz4|zstd codec / IPC file-format options.
+  * lz4|zstd codec / IPC file-format options.
   */
 class ArrowsTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "arrows"

@@ -5,13 +5,14 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 import graft.arrow.ArrowBridge
 import graft.datagen.Generators
 
-class ArrowHttpSpec extends AnyFunSuite {
+class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder("arrow-http-spec", "4").getOrCreate()
 
   lazy val server: ArrowHttpServer = {
@@ -19,7 +20,14 @@ class ArrowHttpSpec extends AnyFunSuite {
     s.register("ticker", Generators.ticker(spark, 5000, 2))
     s.register("bench", Generators.flightBench(spark, 10000, 2))
     s.start()
+    serverStarted = true
+    s
   }
+  private var serverStarted = false
+
+  // stopping the server removes its qsplit spill directory
+  override def afterAll(): Unit =
+    try if (serverStarted) server.stop() finally super.afterAll()
 
   private def get(path: String, headers: Map[String, String] = Map.empty)
       : (Int, Map[String, String], Array[Byte]) = {
@@ -563,9 +571,10 @@ class ArrowHttpSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, udf}
     val window = ArrowBridge.RelayWindow
     val held = window + 1
-    // partition `held` is submitted once partition 1 is consumed, and
-    // holds until its job is cancelled; partition 2 holds the relay
-    // until the client is gone, so a write fails while `held` runs
+    // partition `held` is in the second group job, submitted with the
+    // first once partition 0's own job has ended, and holds until its
+    // job is cancelled; partition 2 holds the relay until the client is
+    // gone, so a write fails while `held` runs
     CancelGate.reset()
     val gate = udf { (x: Long) =>
       val p = org.apache.spark.TaskContext.getPartitionId()

@@ -5,6 +5,7 @@ import java.net.{HttpURLConnection, Socket, SocketException, SocketTimeoutExcept
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
@@ -12,7 +13,7 @@ import graft.arrow.ArrowBridge
 import graft.datagen.Generators
 
 /** The server's HTTP framing, seen on the wire through raw sockets. */
-class HttpCoreSpec extends AnyFunSuite {
+class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder("http-core-spec", "4").getOrCreate()
 
   lazy val server: ArrowHttpServer = {
@@ -20,7 +21,14 @@ class HttpCoreSpec extends AnyFunSuite {
     s.register("wide", Generators.flightBench(spark, 1000000, 32))
     s.register("ticker", Generators.ticker(spark, 5000, 2))
     s.start()
+    serverStarted = true
+    s
   }
+  private var serverStarted = false
+
+  // stopping the server removes its qsplit spill directory
+  override def afterAll(): Unit =
+    try if (serverStarted) server.stop() finally super.afterAll()
 
   private def connect(): Socket = {
     val s = new Socket("127.0.0.1", server.boundPort)

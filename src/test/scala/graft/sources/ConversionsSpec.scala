@@ -55,9 +55,10 @@ class ConversionsSpec extends AnyFunSuite {
   }
 
   test("arrow-commits golden fixture: JSONL slice round-trips through .arrows") {
-    // the F5 pipeline (arrow-commits.R): git-log table → .arrows with
-    // 1024-row batches + .jsonl twin, with the R script's stopifnot
-    // round-trip identity (:66) as the contract
+    // the F5 pipeline (arrow-commits.R): git-log table → .arrows +
+    // .jsonl twin, with the R script's stopifnot round-trip identity
+    // (:66) as the contract; the writer's default batch size holds all
+    // 48 rows in one batch
     import org.apache.spark.sql.types._
     val f5 = StructType(Seq(
       StructField("commit", StringType), StructField("time", TimestampType),
@@ -73,8 +74,7 @@ class ConversionsSpec extends AnyFunSuite {
     assert(docs.filter(col("message").contains("\n")).count() === 0)
 
     val dir = tmpDir("commits")
-    docs.coalesce(1).write.format("arrows")
-      .option("batchsize", "1024").mode("overwrite").save(dir)
+    docs.coalesce(1).write.format("arrows").mode("overwrite").save(dir)
     val back = spark.read.format("arrows").load(dir)
     // identical: same schema, same rows (the stopifnot)
     assert(back.schema.map(f => (f.name, f.dataType)) ===

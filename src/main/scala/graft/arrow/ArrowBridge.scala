@@ -12,11 +12,11 @@ import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.{ListVector, StructVector}
 import org.apache.arrow.vector.compression.CompressionUtil
-import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryEncoder, DictionaryProvider}
+import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ASchema}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -308,7 +308,7 @@ object ArrowBridge {
                 iv.setSafe(dst, idx.intValue())
               }
           } else {
-            val s = mkSetter(vec, f.dataType, origTag(f))
+            val s = mkSetter(vec, f.dataType, ArrowSchemas.origTag(f))
             (r: InternalRow, dst: Int) => s(r, i, dst)
           }
         }
@@ -411,7 +411,7 @@ object ArrowBridge {
                     s"dictionary column '${f.name}': value '$v' is not in its dictionary")
                   iv.setSafe(dst, j.intValue())
                 }
-            } else mkSetter(vec, f.dataType, origTag(f))
+            } else mkSetter(vec, f.dataType, ArrowSchemas.origTag(f))
           }
 
         val chan = Channels.newChannel(out)
@@ -436,11 +436,6 @@ object ArrowBridge {
       }
     }
   }
-
-  private def origTag(f: StructField): Option[String] =
-    if (f.metadata.contains(ArrowSchemas.OrigTypeKey))
-      Some(f.metadata.getString(ArrowSchemas.OrigTypeKey))
-    else None
 
   /** Setter writing value `src`-th field of a SpecializedGetters into
     * vector position `dst`. Children of lists/structs recurse. */
@@ -514,7 +509,7 @@ object ArrowBridge {
       case (_, st: StructType) =>
         val v = vec.asInstanceOf[StructVector]
         val childSetters = st.fields.zipWithIndex.map { case (cf, ci) =>
-          mkSetter(v.getChildrenFromFields.get(ci), cf.dataType, origTag(cf))
+          mkSetter(v.getChildrenFromFields.get(ci), cf.dataType, ArrowSchemas.origTag(cf))
         }
         (g, s, d) => {
           if (g.isNullAt(s)) v.setNull(d)
@@ -548,127 +543,16 @@ object ArrowBridge {
   }
 
   /** Streaming read of an Arrow IPC stream: batches are decoded one at a
-    * time; dictionary-encoded columns are decoded to their value type. */
+    * time by [[InternalRows]] (dictionary-encoded columns to their value
+    * type) and each row becomes an external `Row` through Spark's own
+    * converter, the one `collect()` uses. */
   def read(in: InputStream): ReadResult = {
     val alloc = newAllocator("read")
     val reader = new ArrowStreamReader(in, alloc, CommonsCompressionFactory.INSTANCE)
-    val vroot = reader.getVectorSchemaRoot
-    val schema = ArrowSchemas.fromArrowSchema(vroot.getSchema)
-
-    val rowIter: Iterator[Row] = new Iterator[Row] {
-      private var batch: Array[Row] = Array.empty
-      private var pos = 0
-      private var done = false
-
-      private def loadNext(): Unit = {
-        if (reader.loadNextBatch()) {
-          val n = vroot.getRowCount
-          val decoded = new scala.collection.mutable.ArrayBuffer[ValueVector]()
-          val getters: Array[Int => AnyRef] = vroot.getFieldVectors.asScala.toArray.map { fv =>
-            val f = fv.getField
-            if (f.getDictionary != null) {
-              val dict = reader.getDictionaryVectors.get(f.getDictionary.getId)
-              val dv = DictionaryEncoder.decode(fv, dict)
-              decoded += dv
-              mkGetter(dv.asInstanceOf[FieldVector], StringType, None)
-            } else {
-              val sf = ArrowSchemas.fromArrowField(f)
-              mkGetter(fv, sf.dataType, origTag(sf))
-            }
-          }
-          val out = new Array[Row](n)
-          var i = 0
-          while (i < n) {
-            val vals = new Array[Any](getters.length)
-            var j = 0
-            while (j < getters.length) { vals(j) = getters(j)(i); j += 1 }
-            out(i) = Row.fromSeq(vals.toIndexedSeq)
-            i += 1
-          }
-          decoded.foreach(_.close())
-          batch = out; pos = 0
-        } else { done = true; batch = Array.empty; pos = 0 }
-      }
-
-      override def hasNext: Boolean = {
-        while (!done && pos >= batch.length) loadNext()
-        !done && pos < batch.length
-      }
-      override def next(): Row = { if (!hasNext) throw new NoSuchElementException; pos += 1; batch(pos - 1) }
-    }
-
-    new ReadResult(schema, rowIter, () => { reader.close(); alloc.close() })
-  }
-
-  /** Getter producing Spark *external* values (java.sql dates etc.). */
-  private def mkGetter(vec: FieldVector, dt: DataType, orig: Option[String]): Int => AnyRef = {
-    def nn(f: Int => AnyRef): Int => AnyRef = i => if (vec.isNull(i)) null else f(i)
-    (orig, dt) match {
-      case (Some("uint8"), ShortType) =>
-        val v = vec.asInstanceOf[UInt1Vector]
-        nn(i => java.lang.Short.valueOf(((v.get(i): Byte) & 0xff).toShort))
-      case (Some("uint16"), IntegerType) =>
-        val v = vec.asInstanceOf[UInt2Vector]
-        nn(i => java.lang.Integer.valueOf(v.get(i).toInt))
-      case (Some("uint32"), LongType) =>
-        val v = vec.asInstanceOf[UInt4Vector]
-        nn(i => java.lang.Long.valueOf(java.lang.Integer.toUnsignedLong(v.get(i))))
-      case (Some("uint64"), _: DecimalType) =>
-        val v = vec.asInstanceOf[UInt8Vector]
-        nn(i => new java.math.BigDecimal(java.lang.Long.toUnsignedString(v.get(i))))
-      case (Some("date64"), DateType) =>
-        val v = vec.asInstanceOf[DateMilliVector]
-        nn(i => new java.sql.Date(Math.floorDiv(v.get(i), 86400000L) * 86400000L))
-      case (Some("timestamp_ns"), TimestampType) =>
-        val v = vec.asInstanceOf[TimeStampNanoTZVector]
-        nn(i => microsToSqlTimestamp(Math.floorDiv(v.get(i), 1000L)))
-      case (_, ByteType)    => val v = vec.asInstanceOf[TinyIntVector]; nn(i => java.lang.Byte.valueOf(v.get(i)))
-      case (_, ShortType)   => val v = vec.asInstanceOf[SmallIntVector]; nn(i => java.lang.Short.valueOf(v.get(i)))
-      case (_, IntegerType) => val v = vec.asInstanceOf[IntVector]; nn(i => java.lang.Integer.valueOf(v.get(i)))
-      case (_, LongType)    => val v = vec.asInstanceOf[BigIntVector]; nn(i => java.lang.Long.valueOf(v.get(i)))
-      case (_, FloatType)   => val v = vec.asInstanceOf[Float4Vector]; nn(i => java.lang.Float.valueOf(v.get(i)))
-      case (_, DoubleType)  => val v = vec.asInstanceOf[Float8Vector]; nn(i => java.lang.Double.valueOf(v.get(i)))
-      case (_, StringType)  =>
-        val v = vec.asInstanceOf[VarCharVector]; nn(i => new String(v.get(i), UTF_8))
-      case (_, BinaryType)  => val v = vec.asInstanceOf[VarBinaryVector]; nn(i => v.get(i))
-      case (_, BooleanType) =>
-        val v = vec.asInstanceOf[BitVector]; nn(i => java.lang.Boolean.valueOf(v.get(i) == 1))
-      case (_, DateType) =>
-        val v = vec.asInstanceOf[DateDayVector]
-        nn(i => new java.sql.Date(v.get(i).toLong * 86400000L))
-      case (_, TimestampType) =>
-        val v = vec.asInstanceOf[TimeStampMicroTZVector]
-        nn(i => microsToSqlTimestamp(v.get(i)))
-      case (_, TimestampNTZType) =>
-        val v = vec.asInstanceOf[TimeStampMicroVector]
-        nn(i => java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(v.get(i), 1000000L),
-          (Math.floorMod(v.get(i), 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC))
-      case (_, _: DecimalType) =>
-        val v = vec.asInstanceOf[DecimalVector]; nn(i => v.getObject(i))
-      case (_, NullType) => _ => null
-      case (_, ArrayType(et, _)) =>
-        val v = vec.asInstanceOf[ListVector]
-        val childGetter = mkGetter(v.getDataVector.asInstanceOf[FieldVector], et, None)
-        nn { i =>
-          val start = v.getElementStartIndex(i)
-          val end = v.getElementEndIndex(i)
-          (start until end).map(childGetter).toIndexedSeq
-        }
-      case (_, st: StructType) =>
-        val v = vec.asInstanceOf[StructVector]
-        val childGetters = st.fields.zipWithIndex.map { case (cf, ci) =>
-          mkGetter(v.getChildrenFromFields.get(ci), cf.dataType, origTag(cf))
-        }
-        nn(i => Row.fromSeq(childGetters.map(g => g(i)).toIndexedSeq))
-      case (_, other) => throw new UnsupportedOperationException(s"read: $other")
-    }
-  }
-
-  private def microsToSqlTimestamp(us: Long): java.sql.Timestamp = {
-    val ts = new java.sql.Timestamp(Math.floorDiv(us, 1000L))
-    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    ts
+    val schema = ArrowSchemas.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
+    val rows = new InternalRows(reader, schema)
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    new ReadResult(schema, rows.map(r => toRow(r).asInstanceOf[Row]),
+      () => { rows.close(); reader.close(); alloc.close() })
   }
 }

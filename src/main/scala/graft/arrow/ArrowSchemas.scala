@@ -20,12 +20,14 @@ object ArrowSchemas {
 
   val OrigTypeKey = "graft.arrow.type"
 
+  /** The original Arrow type a field's metadata records, if any. */
+  def origTag(f: StructField): Option[String] =
+    if (f.metadata.contains(OrigTypeKey)) Some(f.metadata.getString(OrigTypeKey)) else None
+
   // ---------- Spark -> Arrow ----------
 
-  def toArrowField(f: StructField): Field = {
-    val orig = if (f.metadata.contains(OrigTypeKey)) Some(f.metadata.getString(OrigTypeKey)) else None
-    toArrowField(f.name, f.dataType, f.nullable, orig)
-  }
+  def toArrowField(f: StructField): Field =
+    toArrowField(f.name, f.dataType, f.nullable, origTag(f))
 
   def toArrowField(name: String, dt: DataType, nullable: Boolean, orig: Option[String]): Field = {
     def prim(at: ArrowType): Field =
@@ -117,8 +119,8 @@ object ArrowSchemas {
         (StructType(f.getChildren.asScala.map(fromArrowField).toArray), None)
       case at => fromArrowType(at)
     }
-    val origTag = if (f.getDictionary != null) Some("dictionary") else orig
-    val md = origTag.fold(Metadata.empty)(t =>
+    val tag = if (f.getDictionary != null) Some("dictionary") else orig
+    val md = tag.fold(Metadata.empty)(t =>
       new MetadataBuilder().putString(OrigTypeKey, t).build())
     StructField(f.getName, dt, f.isNullable, md)
   }

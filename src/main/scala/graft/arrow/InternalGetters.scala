@@ -1,9 +1,11 @@
 package graft.arrow
 
-import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.{ListVector, StructVector}
+import org.apache.arrow.vector.dictionary.DictionaryEncoder
+import org.apache.arrow.vector.ipc.ArrowReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -11,10 +13,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Arrow vector → Spark *internal* value getters (UTF8String, epoch
-  * micros, days, Decimal, GenericArrayData) — the DSv2 row-based read
-  * path for schemas that need conversion (unsigned widening, date64, ns
-  * timestamps, dictionary decode). Exact-mapped schemas take the
-  * zero-copy columnar path instead (ArrowColumnVector).
+  * micros, days, Decimal, GenericArrayData): the one Arrow → Spark value
+  * mapping of the read side, over the lattice of [[ArrowSchemas]]
+  * (unsigned widening, date64, ns timestamps, nested lists and structs).
+  * [[InternalRows]] drives it for both readers: the DSv2 row reader
+  * (schemas that need conversion; exact-mapped schemas take the
+  * zero-copy columnar path, ArrowColumnVector) and [[ArrowBridge.read]],
+  * which turns its rows into external `Row`s.
   */
 object InternalGetters {
 
@@ -68,9 +73,7 @@ object InternalGetters {
       case (_, st: StructType) =>
         val v = vec.asInstanceOf[StructVector]
         val children = st.fields.zipWithIndex.map { case (cf, ci) =>
-          val tag = if (cf.metadata.contains(ArrowSchemas.OrigTypeKey))
-            Some(cf.metadata.getString(ArrowSchemas.OrigTypeKey)) else None
-          forField(v.getChildrenFromFields.get(ci), cf.dataType, tag)
+          forField(v.getChildrenFromFields.get(ci), cf.dataType, ArrowSchemas.origTag(cf))
         }
         nn { i =>
           val arr = new Array[Any](children.length)
@@ -81,10 +84,66 @@ object InternalGetters {
       case (_, other) => throw new UnsupportedOperationException(s"internal read: $other")
     }
   }
+}
 
-  /** String value getter for dictionary-decoded VarCharVector. */
-  def utf8(vec: VarCharVector): Int => Any =
-    i => if (vec.isNull(i)) null else UTF8String.fromBytes(vec.get(i))
+/** The rows of an [[ArrowReader]]'s batches as InternalRows of
+  * `required` (stream fields matched by name), a batch at a time: each
+  * batch resolves one [[InternalGetters.forField]] getter per column,
+  * and a dictionary-encoded column is decoded to its value vector, which
+  * lives until the next batch or `close`. The reader stays the caller's
+  * to close. */
+final class InternalRows(reader: ArrowReader, required: StructType)
+    extends Iterator[InternalRow] with AutoCloseable {
+  private val root = reader.getVectorSchemaRoot
+  private val columns: Array[Int] = {
+    val names = root.getSchema.getFields.asScala.map(_.getName).toIndexedSeq
+    // positional when the names line up (a full-schema read may repeat a name)
+    required.fieldNames.zipWithIndex.map { case (n, j) =>
+      val k = if (j < names.length && names(j) == n) j else names.indexOf(n)
+      require(k >= 0, s"no column $n in the Arrow stream")
+      k
+    }
+  }
+  private val tags = required.fields.map(ArrowSchemas.origTag)
+  private var getters: Array[Int => Any] = Array.empty
+  private var decoded: List[ValueVector] = Nil
+  private var rowCount = 0
+  private var pos = 0
+  private var done = false
 
-  private def unusedSilence(): Unit = { val _ = UTF_8 }
+  private def loadBatch(): Boolean = {
+    close()
+    if (!reader.loadNextBatch()) return false
+    rowCount = root.getRowCount
+    pos = 0
+    getters = Array.tabulate(columns.length) { j =>
+      val fv = root.getVector(columns(j))
+      val enc = fv.getField.getDictionary
+      val vec =
+        if (enc == null) fv
+        else {
+          val dv = DictionaryEncoder.decode(fv, reader.getDictionaryVectors.get(enc.getId))
+          decoded ::= dv
+          dv.asInstanceOf[FieldVector]
+        }
+      InternalGetters.forField(vec, required(j).dataType, tags(j))
+    }
+    true
+  }
+
+  override def hasNext: Boolean = {
+    while (!done && pos >= rowCount) done = !loadBatch()
+    !done
+  }
+
+  override def next(): InternalRow = {
+    if (!hasNext) throw new NoSuchElementException
+    val arr = new Array[Any](getters.length)
+    var j = 0
+    while (j < getters.length) { arr(j) = getters(j)(pos); j += 1 }
+    pos += 1
+    new GenericInternalRow(arr)
+  }
+
+  override def close(): Unit = { decoded.foreach(_.close()); decoded = Nil }
 }

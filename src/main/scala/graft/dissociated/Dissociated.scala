@@ -141,6 +141,17 @@ object Dissociated {
 
   // ---------------- channel framing ----------------
 
+  /** Channel bytes of a metadata frame with a `len`-byte payload:
+    * `[type:1][seq:4][len:4]` then the payload. */
+  def metaFrameLen(len: Long): Long = 9L + len
+
+  /** Channel bytes of a body frame with a `len`-byte IPC body:
+    * `[seq:4][len:4]` then the body padded to 8. */
+  def bodyFrameLen(len: Long): Long = 8L + padTo8(len)
+
+  /** `len` rounded up to the 8-byte alignment of IPC bodies. */
+  private def padTo8(len: Long): Long = (len + 7) & ~7L
+
   def writeMetaFrame(out: DataOutputStream, tpe: Byte, seq: Int, bytes: Array[Byte]): Unit = {
     out.writeByte(tpe)
     out.writeInt(Integer.reverseBytes(seq))
@@ -154,7 +165,7 @@ object Dissociated {
   /** [[writeBodyFrame]] over a reused buffer prefix. */
   def writeBodyFrameRef(out: DataOutputStream, seq: Int,
       bytes: Array[Byte], len: Int): Unit = {
-    val pad = (8 - (len % 8)) % 8 // 8-byte alignment rule
+    val pad = (padTo8(len) - len).toInt
     out.writeInt(Integer.reverseBytes(seq))
     out.writeInt(Integer.reverseBytes(len + pad))
     out.write(bytes, 0, len)
@@ -281,7 +292,7 @@ object Dissociated {
       if (seq.toLong - next >= maxPending)
         malformed(s"body $seq outside the $maxPending-batch window after $next")
       if (!metaUpTo(seq)) malformed(s"body $seq beyond the stream's $eos batches")
-      val padded = (metas(seq).bodyLen + 7) & ~7
+      val padded = padTo8(metas(seq).bodyLen)
       if (len != padded) malformed(s"body $seq: frame of $len bytes, its header says $padded")
       val b = new Array[Byte](len)
       fully("body")(bodyIn.readFully(b))

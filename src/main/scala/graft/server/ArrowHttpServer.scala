@@ -350,10 +350,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
           if (f.isSchema) { schemaEnd = f.end; schemaFramed = f.framedHeader.length }
           else {
             batches += ((f.offset, f.end))
-            // meta frame: [type:1][seq:4][len:4][8-byte prefix + header]
-            metaTotal += 9L + f.framedHeader.length
-            // body frame: [seq:4][len:4][body][pad to 8]
-            bodyTotal += 8L + f.bodyLength + ((8 - (f.bodyLength % 8)) % 8)
+            metaTotal += Dissociated.metaFrameLen(f.framedHeader.length)
+            bodyTotal += Dissociated.bodyFrameLen(f.bodyLength)
           }
         }
         ArrowHttpServer.FrameIndex(java.nio.file.Files.size(p), schemaEnd, schemaFramed,
@@ -613,8 +611,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   /** Exact meta-channel byte length of a set of spilled parts: one
     * schema frame (first part's), every batch meta frame, one EOS. */
   private def metaChannelLen(keys: Seq[String]): Long =
-    (9L + frameIndex(keys.head).schemaFramed) +
-      keys.map(frameIndex(_).metaTotal).sum + 9L
+    Dissociated.metaFrameLen(frameIndex(keys.head).schemaFramed) +
+      keys.map(frameIndex(_).metaTotal).sum + Dissociated.metaFrameLen(0)
 
   private def bodyChannelLen(keys: Seq[String]): Long =
     keys.map(frameIndex(_).bodyTotal).sum

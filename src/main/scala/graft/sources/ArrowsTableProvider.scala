@@ -6,11 +6,8 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.arrow.vector.FieldVector
-import org.apache.arrow.vector.dictionary.DictionaryEncoder
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -20,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch}
 
-import graft.arrow.{ArrowBridge, ArrowSchemas, InternalGetters}
+import graft.arrow.{ArrowBridge, ArrowSchemas, InternalRows}
 
 /** DataSource V2 for Arrow IPC streams: `format("arrows")`.
   *
@@ -57,15 +54,8 @@ object ArrowsTableProvider {
   def isUrl(p: String): Boolean = p.startsWith("http://") || p.startsWith("https://")
 
   /** Expand paths: multi-path load, directories → their .arrows files. */
-  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).toSeq.flatMap { json =>
-      // Spark passes load(paths*) as a JSON string array
-      json.stripPrefix("[").stripSuffix("]").split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-    }
-    val single = Option(options.get("path")).toSeq
-    val urls = Option(options.get("url")).toSeq
-    (multi ++ single ++ urls).flatMap { p =>
+  def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    rawPaths(options).flatMap { p =>
       if (isUrl(p)) Seq(p)
       else {
         val f = new java.io.File(stripScheme(p))
@@ -75,7 +65,6 @@ object ArrowsTableProvider {
         else Seq(f.getPath)
       }
     }
-  }
 
   private[sources] def stripScheme(p: String): String =
     if (p.startsWith("file:")) URI.create(p).getPath else p
@@ -83,9 +72,10 @@ object ArrowsTableProvider {
   /** The unexpanded path options (directories stay directories) —
     * the streaming source re-lists them per micro-batch. */
   def rawPaths(options: CaseInsensitiveStringMap): Seq[String] = {
+    // Spark passes load(paths*) as a JSON string array
     val multi = Option(options.get("paths")).toSeq.flatMap { json =>
-      json.stripPrefix("[").stripSuffix("]").split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq
     }
     multi ++ Option(options.get("path")).toSeq ++ Option(options.get("url")).toSeq
   }
@@ -272,15 +262,9 @@ object ArrowsTableProvider {
 
   /** Schema of a dissociated dataset: reads the schema frame off the
     * metadata channel only; the body channel is never requested. */
-  def dissocSchema(infoUrl: String): StructType = {
-    val alloc = ArrowBridge.newAllocator("dissoc-schema-probe")
-    try {
-      val r = new ArrowStreamReader(openDissoc(infoUrl), alloc,
-        org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
-      try ArrowSchemas.fromArrowSchema(r.getVectorSchemaRoot.getSchema)
-      finally r.close()
-    } finally alloc.close()
-  }
+  def dissocSchema(infoUrl: String): StructType =
+    probeSchema("dissoc-schema-probe")(new ArrowStreamReader(openDissoc(infoUrl), _,
+      org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE))
 
   /** Local file in the Arrow IPC *file* format? (ARROW1 magic) */
   def isFileFormat(path: String): Boolean =
@@ -305,10 +289,16 @@ object ArrowsTableProvider {
     } else new ArrowStreamReader(open(path, schemaOnly, accept), alloc,
       org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
 
-  def readSchema(path: String): StructType = {
-    val alloc = ArrowBridge.newAllocator("schema-probe")
+  def readSchema(path: String): StructType =
+    probeSchema("schema-probe")(openReader(path, _, schemaOnly = true))
+
+  /** The Spark schema of the reader `open` returns; reads no batch. */
+  private def probeSchema(tag: String)(
+      open: org.apache.arrow.memory.BufferAllocator => org.apache.arrow.vector.ipc.ArrowReader)
+      : StructType = {
+    val alloc = ArrowBridge.newAllocator(tag)
     try {
-      val reader = openReader(path, alloc, schemaOnly = true)
+      val reader = open(alloc)
       try ArrowSchemas.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
       finally reader.close()
     } finally alloc.close()
@@ -443,7 +433,7 @@ final case class ArrowsInputPartition(path: String,
 /** 1:1 Arrow↔Spark mapping (no widening/dictionary) → columnar OK. */
 object ExactMap {
   def ok(st: StructType): Boolean = st.fields.forall { f =>
-    !f.metadata.contains(ArrowSchemas.OrigTypeKey) && (f.dataType match {
+    ArrowSchemas.origTag(f).isEmpty && (f.dataType match {
       case s: StructType => ok(s)
       case org.apache.spark.sql.types.ArrayType(e, _) =>
         ok(StructType(Seq(org.apache.spark.sql.types.StructField("e", e))))
@@ -490,14 +480,14 @@ abstract class ArrowsReaderBase(part: ArrowsInputPartition) {
         alloc, org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE)
     } else ArrowsTableProvider.openReader(part.path, alloc, accept = part.accept)
   protected val root = reader.getVectorSchemaRoot
-  protected val arrowFieldIndex: Map[String, Int] =
-    root.getSchema.getFields.asScala.map(_.getName).zipWithIndex.toMap
 
   def closeAll(): Unit = { reader.close(); alloc.close() }
 }
 
 final class ArrowsColumnarReader(part: ArrowsInputPartition, required: StructType)
     extends ArrowsReaderBase(part) with PartitionReader[ColumnarBatch] {
+  private val arrowFieldIndex: Map[String, Int] =
+    root.getSchema.getFields.asScala.map(_.getName).zipWithIndex.toMap
   private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
@@ -516,47 +506,12 @@ final class ArrowsColumnarReader(part: ArrowsInputPartition, required: StructTyp
 
 final class ArrowsRowReader(part: ArrowsInputPartition, required: StructType)
     extends ArrowsReaderBase(part) with PartitionReader[InternalRow] {
-  private var getters: Array[Int => Any] = _
-  private var decoded: Seq[org.apache.arrow.vector.ValueVector] = Nil
-  private var rowCount = 0
-  private var pos = 0
+  private val rows = new InternalRows(reader, required)
+  private var row: InternalRow = _
 
-  private def loadBatch(): Boolean = {
-    decoded.foreach(_.close()); decoded = Nil
-    if (!reader.loadNextBatch()) return false
-    rowCount = root.getRowCount
-    pos = 0
-    getters = required.fields.map { f =>
-      val fv = root.getVector(arrowFieldIndex(f.name))
-      if (fv.getField.getDictionary != null) {
-        val dict = reader.getDictionaryVectors.get(fv.getField.getDictionary.getId)
-        val dv = DictionaryEncoder.decode(fv, dict)
-        decoded = decoded :+ dv
-        InternalGetters.utf8(dv.asInstanceOf[org.apache.arrow.vector.VarCharVector])
-      } else {
-        val tag = if (f.metadata.contains(ArrowSchemas.OrigTypeKey))
-          Some(f.metadata.getString(ArrowSchemas.OrigTypeKey)) else None
-        InternalGetters.forField(fv.asInstanceOf[FieldVector], f.dataType, tag)
-      }
-    }
-    true
-  }
-
-  override def next(): Boolean = {
-    while (pos >= rowCount) if (!loadBatch()) return false
-    pos += 1
-    true
-  }
-
-  override def get(): InternalRow = {
-    val i = pos - 1
-    val arr = new Array[Any](getters.length)
-    var j = 0
-    while (j < getters.length) { arr(j) = getters(j)(i); j += 1 }
-    new GenericInternalRow(arr)
-  }
-
-  override def close(): Unit = { decoded.foreach(_.close()); closeAll() }
+  override def next(): Boolean = rows.hasNext && { row = rows.next(); true }
+  override def get(): InternalRow = row
+  override def close(): Unit = { rows.close(); closeAll() }
 }
 
 // ============================ write ============================

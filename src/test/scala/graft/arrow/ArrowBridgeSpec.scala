@@ -12,17 +12,37 @@ import graft.datagen.Generators
 class ArrowBridgeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("arrow-bridge-spec", "4").getOrCreate()
 
+  /** write df → IPC bytes; returns (bytes, rows, batches). */
+  private def encode(df: DataFrame, opts: ArrowBridge.WriteOptions)
+      : (Array[Byte], Long, Long) = {
+    val out = new ByteArrayOutputStream()
+    val (nRows, nBatches) = ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out, opts)
+    (out.toByteArray, nRows, nBatches)
+  }
+
+  private def readBack(bytes: Array[Byte]): (StructType, Seq[Row]) = {
+    val res = ArrowBridge.read(new ByteArrayInputStream(bytes))
+    val rows = res.rows.toVector
+    res.close()
+    (res.schema, rows)
+  }
+
   /** write df → IPC bytes → read back; returns (schema, rows). */
   private def roundTrip(df: DataFrame,
       opts: ArrowBridge.WriteOptions = ArrowBridge.WriteOptions())
       : (StructType, Seq[Row], Long, Long) = {
-    val out = new ByteArrayOutputStream()
-    val it = ArrowBridge.internalRows(df)
-    val (nRows, nBatches) = ArrowBridge.write(df.schema, it, out, opts)
-    val res = ArrowBridge.read(new ByteArrayInputStream(out.toByteArray))
-    val rows = res.rows.toVector
-    res.close()
-    (res.schema, rows, nRows, nBatches)
+    val (bytes, nRows, nBatches) = encode(df, opts)
+    val (schema, rows) = readBack(bytes)
+    (schema, rows, nRows, nBatches)
+  }
+
+  /** The same IPC bytes read by the DSv2 source, as a `.arrows` file. */
+  private def viaSource(bytes: Array[Byte]): Seq[Seq[Any]] = {
+    val f = java.nio.file.Files.createTempFile("graft-bridge", ".arrows")
+    try {
+      java.nio.file.Files.write(f, bytes)
+      rowsOf(spark.read.format("arrows").load(f.toString))
+    } finally java.nio.file.Files.delete(f)
   }
 
   // canonical form: every collection becomes a List so both toString
@@ -40,9 +60,10 @@ class ArrowBridgeSpec extends AnyFunSuite {
 
   test("21-type lattice round-trips (values + batch count)") {
     val df = Generators.manyTypes(spark, 1000, 4)
-    val (schema, rows, nRows, nBatches) = roundTrip(df,
+    val (bytes, nRows, nBatches) = encode(df,
       ArrowBridge.WriteOptions(batchSize = 100,
         dictColumns = Map("col_19" -> Array("alpha", "beta", "gamma", "delta"))))
+    val (schema, rows) = readBack(bytes)
     assert(nRows === 1000)
     assert(nBatches === 10) // global iterator: 1000 rows / 100 per batch
     assert(schema.fieldNames.toSeq === df.schema.fieldNames.toSeq)
@@ -54,16 +75,22 @@ class ArrowBridgeSpec extends AnyFunSuite {
     val want = rowsOf(df).sortBy(_.mkString("|"))
     assert(got.size === want.size)
     got.zip(want).foreach { case (g, w) => assert(g === w) }
+    // the DSv2 row reader (col_19's dictionary tag keeps the scan off the
+    // columnar path) decodes the same bytes to the same values
+    assert(viaSource(bytes).sortBy(_.mkString("|")) === want)
   }
 
   test("nulls round-trip across all types") {
     val df = Generators.withNulls(Generators.manyTypes(spark, 300, 2))
-    val (_, rows, nRows, _) = roundTrip(df)
+    val (bytes, nRows, _) = encode(df, ArrowBridge.WriteOptions())
+    val (_, rows) = readBack(bytes)
     assert(nRows === 300)
     val got = rows.map(_.toSeq.toList.map(normalize)).sortBy(_.mkString("|"))
     val want = rowsOf(df).sortBy(_.mkString("|"))
     got.zip(want).foreach { case (g, w) => assert(g === w) }
     assert(rows.exists(_.toSeq.exists(_ == null)))
+    // the DSv2 row reader (widened uint columns) decodes the same bytes
+    assert(viaSource(bytes).sortBy(_.mkString("|")) === want)
   }
 
   test("flight-bench shape: 4xint64, 4096-row batches, sliced tail") {

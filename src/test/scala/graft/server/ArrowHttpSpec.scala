@@ -25,9 +25,18 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   private var serverStarted = false
 
+  /** Temp files and directories the tests make; deleted after the server stops. */
+  private val temps = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+  private def temp(p: java.nio.file.Path): java.nio.file.Path = { temps += p; p }
+
   // stopping the server removes its qsplit spill directory
   override def afterAll(): Unit =
-    try if (serverStarted) server.stop() finally super.afterAll()
+    try if (serverStarted) server.stop()
+    finally {
+      temps.foreach(t => java.nio.file.Files.walk(t).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+      super.afterAll()
+    }
 
   private def get(path: String, headers: Map[String, String] = Map.empty)
       : (Int, Map[String, String], Array[Byte]) = {
@@ -612,7 +621,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("indirect listing + ranged fetch reassembles to the full file") {
     // materialize an artifact and register it
     val df = Generators.ticker(spark, 2000, 1)
-    val tmp = java.nio.file.Files.createTempFile("graft", ".arrows")
+    val tmp = temp(java.nio.file.Files.createTempFile("graft", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
     ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
     out.close()
@@ -645,7 +654,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("range validation: clamped ends, 416 for unsatisfiable or malformed") {
     val df = Generators.ticker(spark, 1000, 1)
-    val tmp = java.nio.file.Files.createTempFile("graft-rv", ".arrows")
+    val tmp = temp(java.nio.file.Files.createTempFile("graft-rv", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
     ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
     out.close()
@@ -669,7 +678,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ranged-parallel read: offsets index splits one URL into partitions") {
     val df = Generators.ticker(spark, 20000, 1)
-    val tmp = java.nio.file.Files.createTempFile("graft-ranged", ".arrows")
+    val tmp = temp(java.nio.file.Files.createTempFile("graft-ranged", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
     ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out,
       ArrowBridge.WriteOptions(batchSize = 1000)) // 20 batches
@@ -694,7 +703,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a metaLen of 1 GiB in the second message
     val second = graft.arrow.IpcFrames.scan(bad)(1).offset.toInt
     java.nio.ByteBuffer.wrap(bad, second + 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(1 << 30)
-    val tmp = java.nio.file.Files.createTempFile("graft-corrupt", ".arrows")
+    val tmp = temp(java.nio.file.Files.createTempFile("graft-corrupt", ".arrows"))
     java.nio.file.Files.write(tmp, bad)
     server.registerFile("corrupt.arrows", tmp)
     val err = new ByteArrayOutputStream()
@@ -714,7 +723,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DSv2 file write + multi-file read round-trip with pruning") {
     val df = Generators.ticker(spark, 3000, 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-arrows").toString
+    val dir = temp(java.nio.file.Files.createTempDirectory("graft-arrows")).toString
     df.write.format("arrows").option("codec", "lz4").mode("overwrite").save(dir)
     val back = spark.read.format("arrows").load(dir)
     assert(back.count() === 3000)

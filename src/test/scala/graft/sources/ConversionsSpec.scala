@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
@@ -11,11 +12,20 @@ import graft.datagen.Generators
   * reference's rand-many-types pipeline (data/rand-many-types/Makefile:
   * 18-33: .arrows → .arrow → .parquet → embedded DBs; arrow-commits
   * .arrows vs .jsonl twins). */
-class ConversionsSpec extends AnyFunSuite {
+class ConversionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder("conversions-spec", "4").getOrCreate()
 
-  private def tmpDir(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+  private val dirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+  private def tmpDir(tag: String) = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+    dirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try dirs.foreach(d => java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+    finally super.afterAll()
 
   test("arrows → arrow-file → parquet → jsonl all agree") {
     // ticker table: JSON-safe types (jsonl can't carry binary/decimal
@@ -109,5 +119,21 @@ class ConversionsSpec extends AnyFunSuite {
     assert(back.count() === 500)
     // null column type survives
     assert(back.schema("col_20").dataType === org.apache.spark.sql.types.NullType)
+  }
+
+  test("multi-path load reads every path, commas in a path included") {
+    val root = tmpDir("paths")
+    val a = Generators.ticker(spark, 300, 1)
+    val b = Generators.ticker(spark, 200, 1)
+    def save(df: org.apache.spark.sql.DataFrame, dir: String): String = {
+      df.coalesce(1).write.format("arrows").mode("overwrite").save(dir)
+      new java.io.File(dir).listFiles().map(_.getPath).filter(_.endsWith(".arrows")).head
+    }
+    // Spark hands load(p1, p2) to the source as a JSON array of paths
+    val p1 = save(a, s"$root/dir1")
+    val p2 = save(b, s"$root/dirWith,Comma")
+    val back = spark.read.format("arrows").load(p1, p2)
+    assert(back.count() === 500)
+    assert(back.except(a.union(b)).count() === 0 && a.union(b).except(back).count() === 0)
   }
 }

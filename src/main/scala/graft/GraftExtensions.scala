@@ -2,39 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Standard Spark extensions entry point: installs graft's native
   * expressions into ANY session via
   *
   *   --conf spark.sql.extensions=graft.GraftExtensions
   *
-  * so a cluster user gets `cosine_sim` / `poly_hash` / `poly_hash_min`
-  * in SQL without calling [[functions.GraftFunctions.register]]
+  * so a cluster user gets every function of
+  * [[functions.GraftFunctions.builtins]] (`cosine_sim`, `word_profile`,
+  * …) in SQL without calling [[functions.GraftFunctions.register]]
   * programmatically. (GraftSession still registers eagerly for the
-  * embedded mains — same expressions either way.)
+  * embedded mains — same table, same expressions either way.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two ARRAY<DOUBLE>"),
-      (exprs: Seq[Expression]) => functions.CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      info("poly_hash", "poly_hash(str) - polynomial fingerprint mod 1e9+7"),
-      (exprs: Seq[Expression]) => functions.PolyHashFull(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("poly_hash_min"),
-      info("poly_hash_min", "poly_hash_min(str, w) - min rolling-window poly hash"),
-      (exprs: Seq[Expression]) => functions.PolyHashMin(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("int8_dot"),
-      info("int8_dot", "int8_dot(a, b) - integer dot product of two ARRAY<BIGINT>"),
-      (exprs: Seq[Expression]) => functions.Int8Dot(exprs(0), exprs(1))))
+    functions.GraftFunctions.builtins.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, "", "", "", "", "", "", "", "built-in"),
+        build))
+    }
     // custom-operator tier (c): the AS-OF and INTERVAL join strategies
     ext.injectPlannerStrategy(_ => plans.AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => plans.IntervalJoinStrategy)

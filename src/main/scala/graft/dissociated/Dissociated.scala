@@ -81,22 +81,24 @@ object Dissociated {
     seq
   }
 
+  /** Body frames per delivery window of [[streamBodyFromFiles]]. */
+  private val ShuffleWindow = 8
+
   /** Serve the body channel from the same spilled part files; delivery
-    * is permuted within `shuffleWindow`-frame windows to exercise
+    * is permuted within `ShuffleWindow`-frame windows to exercise
     * out-of-order reassembly (reference transport tags are unordered).
     *
-    * Bodies are read into a ring of `shuffleWindow` grow-only reused
+    * Bodies are read into a ring of `ShuffleWindow` grow-only reused
     * buffers — at most window-many bodies are ever live and no body
     * array is allocated per batch after warm-up (a fresh array per batch
     * is the whole dataset volume in per-request allocation churn). */
-  def streamBodyFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream,
-      shuffleWindow: Int = 8): Unit = {
+  def streamBodyFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream): Unit = {
     val d = new DataOutputStream(out)
     var seq = 0
     // ring slot: (seq, buffer, true body length)
-    val bufs = Array.fill(shuffleWindow)(new Array[Byte](0))
-    val seqs = new Array[Int](shuffleWindow)
-    val lens = new Array[Int](shuffleWindow)
+    val bufs = Array.fill(ShuffleWindow)(new Array[Byte](0))
+    val seqs = new Array[Int](ShuffleWindow)
+    val lens = new Array[Int](ShuffleWindow)
     var filled = 0
     def flushWindow(): Unit = {
       var i = filled - 1
@@ -117,7 +119,7 @@ object Dissociated {
           seqs(filled) = seq
           lens(filled) = bodyLen
           filled += 1
-          if (filled >= shuffleWindow) flushWindow()
+          if (filled >= ShuffleWindow) flushWindow()
         }
       } finally frames.close()
     }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -87,83 +88,54 @@ object GraftFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
 
-  /** Install graft's native expressions into a session's function
-    * registry (GraftSession does this automatically): `cosine_sim` is
-    * then usable from SQL and via [[cosineSim]]. Idempotent and quiet:
-    * a session is only registered once. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHashFull(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash_min", exprs => PolyHashMin(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_dot", exprs => Int8Dot(exprs(0), exprs(1)), "built-in")
+  /** Every native function graft installs, by SQL name: the one table
+    * [[register]] and [[graft.GraftExtensions]] both install from. */
+  val builtins: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
+    "poly_hash" -> (exprs => PolyHashFull(exprs(0))),
+    "poly_hash_min" -> (exprs => PolyHashMin(exprs(0), exprs(1))),
+    "int8_dot" -> (exprs => Int8Dot(exprs(0), exprs(1))),
     // Catalyst's Bloom-filter pair is runtime-filter-internal (not in
     // the public SQL registry); exposing it gives the ingest tier its
     // shuffle-free membership probe (d18). Aggregate builds the filter
     // over LONG keys; probe is an O(1) map-side test per row.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mips_buckets", exprs => MipsBuckets(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_mask60", exprs => SignMask60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dup_gram_stats", exprs => DupGramStats(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dup_gram_profile", exprs => DupGramProfile(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes60", exprs => GramHashes60(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes120", exprs => GramHashes120(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash120", exprs => SimHash120(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bucket_mass2", exprs => BucketMass2(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_agg",
-      exprs => CountMinAgg(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate",
-      exprs => CountMinEstimate(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cov_triangle_agg",
-      exprs => CovTriangleAgg(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_value_counts", exprs => LongValueCounts(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_profile", exprs => WordProfile(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_dist_table", exprs => PqDistTable(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_pairs", exprs => HammingPairs(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "value_pairs", exprs => ValuePairs(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bucket8", exprs => HyperplaneBucket8(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig16", exprs => MinhashSig16(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmin_dl", exprs => ArgminDoubleLong(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_md5", exprs => GramMd5(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_fold", exprs => DotFold(exprs(0), exprs(1)), "built-in")
+    "graft_bloom_agg" ->
+      (exprs => BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0)),
+    "graft_bloom_might_contain" -> (exprs => BloomFilterMightContain(exprs(0), exprs(1))),
+    "mips_buckets" -> (exprs => MipsBuckets(exprs(0))),
+    "simhash60" -> (exprs => SimHash60(exprs(0))),
+    "sign_mask60" -> (exprs => SignMask60(exprs(0))),
+    "dup_gram_stats" -> (exprs => DupGramStats(exprs(0))),
+    "dup_gram_profile" -> (exprs => DupGramProfile(exprs(0))),
+    "gram_hashes60" -> (exprs => GramHashes60(exprs(0), exprs(1))),
+    "gram_hashes120" -> (exprs => GramHashes120(exprs(0), exprs(1))),
+    "simhash120" -> (exprs => SimHash120(exprs(0))),
+    "bucket_mass2" -> (exprs => BucketMass2(exprs(0), exprs(1), exprs(2))),
+    "cms_agg" -> (exprs => CountMinAgg(exprs(0))),
+    "cms_estimate" -> (exprs => CountMinEstimate(exprs(0), exprs(1))),
+    "cov_triangle_agg" -> (exprs => CovTriangleAgg(exprs(0))),
+    "pq_encode" -> (exprs => PqEncode(exprs(0), exprs(1))),
+    "long_value_counts" -> (exprs => LongValueCounts(exprs(0))),
+    "word_profile" -> (exprs => WordProfile(exprs(0))),
+    "pq_dist_table" -> (exprs => PqDistTable(exprs(0), exprs(1))),
+    "hamming_pairs" -> (exprs => HammingPairs(exprs(0), exprs(1))),
+    "value_pairs" -> (exprs => ValuePairs(exprs(0))),
+    "hyperplane_bucket8" -> (exprs => HyperplaneBucket8(exprs(0))),
+    "minhash_sig16" -> (exprs => MinhashSig16(exprs(0))),
+    "argmin_dl" -> (exprs => ArgminDoubleLong(exprs(0), exprs(1))),
+    "gram_md5" -> (exprs => GramMd5(exprs(0), exprs(1))),
+    "dot_fold" -> (exprs => DotFold(exprs(0), exprs(1)))
+  )
+
+  /** Install graft's native expressions ([[builtins]]) into a session's
+    * function registry (GraftSession does this automatically): `cosine_sim`
+    * is then usable from SQL and via [[cosineSim]]. Idempotent and quiet:
+    * a session is only registered once. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
+    builtins.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   /** Column API over the registered function. */

@@ -1547,16 +1547,9 @@ object DedupOps {
       (s, d) => {
         val labels = clusterLabels(s, d)
         val q = Tables.documents(s, d)
-          // native word_profile (r11): one pass for n/sum_len/stop_hits
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("qm", floor((
-            least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-              (col("stop_hits").cast("double") / col("n")) * 0.3 +
-              least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2
-            ) * 1000.0).cast("long"))
+          .transform(wordStats(words(col("text"))))
+          .withColumn("qm", floor(
+            quality(col("n"), col("sum_len"), col("stop_hits")) * 1000.0).cast("long"))
           .select(col("doc_id"), col("n").cast("long").as("n_tokens"), col("qm"))
         labels.join(q, labels("src") === q("doc_id"))
           .withColumn("key", concat(lpad(col("qm").cast("string"), 7, "0"),
@@ -1732,18 +1725,10 @@ object DedupOps {
     // corpus pass.
     QueryDef.sql("d32_quality_dup_profile",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val clusters = Tables.documents(s, d)
           .withColumn("h", unhex(md5(trim(col("text")))))
-          .withColumn("wp", graft.functions.GraftFunctions
-            .wordProfile(OpUtils.words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("quality",
-            least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-              (col("stop_hits").cast("double") / col("n")) * 0.3 +
-              least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2)
+          .transform(wordStats(words(col("text"))))
+          .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
           .withColumn("band",
             least(floor(col("quality") * 20.0).cast("int"), lit(19)))
           .groupBy(col("h"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -17,6 +18,30 @@ import org.apache.spark.sql.expressions.Window
 object EventsOps {
 
   private val gapUs = 30L * 60 * 1000000 // 30-minute session gap
+
+  /** q47's sessions: per user, each 30-minute-gap session's first and
+    * last event time and its event count, through the native
+    * session_window operator. Input needs `user_id`, `ts`;
+    * `sessionWindowStream` runs it on a watermarked live feed. */
+  private[graft] def nativeSessions(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"),
+        unix_micros(col("session_window.start")).as("start_us"),
+        (unix_micros(col("session_window.end")) - gapUs).as("last_us"),
+        col("n_events"))
+
+  /** q55's velocity flags: (10-minute slide, user) pairs with 2+ events,
+    * slides every 5 minutes. Input needs `user_id`, `ts`;
+    * `slidingVelocityStream` runs it on a watermarked live feed. */
+  private[graft] def velocityFlags(events: DataFrame): DataFrame =
+    events
+      .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .filter(col("n_events") >= 2)
+      .select(unix_micros(col("window.start")).as("win_start_us"),
+        col("user_id"), col("n_events"))
 
   val all: Seq[QueryDef] = Seq(
 
@@ -594,16 +619,7 @@ object EventsOps {
     // hash by user_id once); the merging agg is O(open sessions) state
     // instead of O(events) window buffer per user.
     QueryDef.sql("q47_session_native",
-      (s, d) => {
-        Tables.events(s, d)
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("start_us"),
-            (unix_micros(col("session_window.end")) - gapUs).as("last_us"),
-            col("n_events"))
-          .orderBy(col("user_id"), col("start_us"))
-      },
+      (s, d) => nativeSessions(Tables.events(s, d)).orderBy(col("user_id"), col("start_us")),
       s"""WITH e AS (
          |  SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us FROM events),
          |f AS (
@@ -681,16 +697,7 @@ object EventsOps {
     // oracle mirrors the assignment arithmetic with an explicit 2-slide
     // unnest of the event's bin and its predecessor.
     QueryDef.sql("q55_sliding_velocity",
-      (s, d) => {
-        Tables.events(s, d)
-          .groupBy(window(col("ts"), "10 minutes", "5 minutes"),
-            col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .filter(col("n_events") >= 2)
-          .select(unix_micros(col("window.start")).as("win_start_us"),
-            col("user_id"), col("n_events"))
-          .orderBy(col("win_start_us"), col("user_id"))
-      },
+      (s, d) => velocityFlags(Tables.events(s, d)).orderBy(col("win_start_us"), col("user_id")),
       """WITH e AS (
         |  SELECT user_id, epoch_ns(ts) // 1000 AS us FROM events),
         |x AS (

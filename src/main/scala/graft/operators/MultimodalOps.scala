@@ -1229,22 +1229,10 @@ object MultimodalOps {
         val ws = col("ws")
         Tables.documents(s, d).filter(col("doc_id") < 1000)
           .withColumn("ws", graft.operators.OpUtils.words(col("text")))
-          // native word_profile + hashed bigrams (r11): one generated
-          // pass each — the interpreted HOF quartet is gone
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(ws))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("n_sym", element_at(col("wp"), 4))
+          .transform(graft.operators.OpUtils.wordStats(ws))
           .withColumn("g2", graft.functions.GraftFunctions.gramHashes60(ws, 2))
           .withColumn("text_fail",
-            col("n") < 50 || col("n") > 100000 ||
-              col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10 ||
-              col("stop_hits") < 2 ||
-              col("n_sym") * 10 > col("n") ||
-              (size(col("g2")) > 0 &&
-                (size(col("g2")) - size(array_distinct(col("g2")))) * 10 >
-                  size(col("g2")) * 3))
+            graft.operators.OpUtils.gopherRules(col("g2")).reduce(_ || _))
           .join(dims, Seq("doc_id"))
           .withColumn("image_fail",
             least(col("width"), col("height")) < 6 ||

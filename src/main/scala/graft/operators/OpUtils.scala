@@ -1,10 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cross-engine deterministic building blocks shared by the LLM-pipeline
   * operators (dedup / similarity / text analysis).
+  *
+  * It is also the one home of the corpus rules the query tiers and the
+  * streaming twins apply over and over, each defined once here:
+  *   - [[wordStats]]: the native `word_profile` and its per-document
+  *     fields (`n`, `sum_len`, `stop_hits`, `n_sym`, `n_complex`);
+  *   - [[quality]]: t02's quality score, in its fixed double op order;
+  *   - [[gopherRules]]: t12's five Gopher rules (p06, m11 and the
+  *     curation stream fail a document when any of them fires);
+  *   - [[shuffleHash]] / [[shard16]]: p09's `#shuffle` hash and the
+  *     16-shard assignment p16–p19 and p25 audit.
   *
   * Everything here is designed so the SAME value is computed by Spark and
   * by the DuckDB oracle:
@@ -49,6 +59,48 @@ object OpUtils {
 
   /** Whitespace-tokenized words of the trimmed text. */
   def words(text: Column): Column = split(trim(text), " +")
+
+  /** Adds the native `word_profile` of the words column `ws` as `wp`, and
+    * its BIGINT fields: `n` words, `stop_hits` house stopwords, `sum_len`
+    * characters in the words, `n_sym` words holding a character outside
+    * [a-z0-9], `n_complex` words of 7+ characters. Fields a caller does
+    * not read are pruned from its plan. */
+  def wordStats(ws: Column)(df: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.withColumn("wp", graft.functions.GraftFunctions.wordProfile(ws))
+      .withColumn("n", element_at(col("wp"), 1))
+      .withColumn("stop_hits", element_at(col("wp"), 3))
+      .withColumn("sum_len", element_at(col("wp"), 2))
+      .withColumn("n_sym", element_at(col("wp"), 4))
+      .withColumn("n_complex", element_at(col("wp"), 5))
+  }
+
+  /** t02's quality score
+    * 0.5·min(n/100, 1) + 0.3·stop_hits/n + 0.2·min(sum_len/n/8, 1),
+    * in the one double op order every oracle mirrors. */
+  def quality(n: Column, sumLen: Column, stopHits: Column): Column =
+    least(n.cast("double") / 100.0, lit(1.0)) * 0.5 +
+      (stopHits.cast("double") / n) * 0.3 +
+      least((sumLen.cast("double") / n) / 8.0, lit(1.0)) * 0.2
+
+  /** t12's Gopher rules over [[wordStats]]' fields and the document's
+    * bigram hashes `g2`, in fail-mask bit order: (0) 50 <= words <=
+    * 100000, (1) 3 <= mean word length <= 10, (2) at least 2 stopword
+    * hits, (3) symbol-bearing word fraction <= 0.1, (4) duplicate-bigram
+    * fraction <= 0.3. Each predicate is true when its rule FAILS. */
+  def gopherRules(g2: Column): Seq[Column] = Seq(
+    col("n") < 50 || col("n") > 100000,
+    col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10,
+    col("stop_hits") < 2,
+    col("n_sym") * 10 > col("n"),
+    size(g2) > 0 && (size(g2) - size(array_distinct(g2))) * 10 > size(g2) * 3)
+
+  /** p09's shuffle hash of an id: md5Val(id || '#shuffle', 15). */
+  def shuffleHash(id: Column): Column =
+    md5Val(concat(id.cast("string"), lit("#shuffle")), 15)
+
+  /** The id's shuffle shard in 0..15 (p09's assignment). */
+  def shard16(id: Column): Column = pmod(shuffleHash(id), lit(16L)).cast("int")
 
   /** Word 3-grams joined by single spaces (positions 1..n-2, 1-based). */
   def grams3(ws: Column): Column =

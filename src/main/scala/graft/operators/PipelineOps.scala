@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import OpUtils._
@@ -24,20 +25,49 @@ import OpUtils._
   */
 object PipelineOps {
 
+  /** p16's per-shard manifest: count, char and token mass, content
+    * checksum and doc_id range of each of the 16 shuffle shards. Input
+    * needs `doc_id`, `n_chars`, `text`; `shardManifestStream` runs it on
+    * a live feed. */
+  private[graft] def shardManifest(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), col("n_chars"),
+        size(words(col("text"))).cast("long").as("n_tokens"),
+        md5Val(trim(col("text")), 11).as("cs"),
+        shard16(col("doc_id")).as("shard"))
+      .groupBy(col("shard"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("total_chars"),
+        sum(col("n_tokens")).as("total_tokens"),
+        sum(col("cs")).as("checksum"),
+        min(col("doc_id")).as("min_doc"),
+        max(col("doc_id")).as("max_doc"))
+
+  /** p26's split counts: documents and tokens per (source, lang, split),
+    * the split a pure function of doc_id (md5(doc_id || '#split') mod
+    * 100 → train 98 / val 1 / test 1). Input needs `doc_id`, `source`,
+    * `lang`, `text`; `stratifiedSplitStream` runs it on a live feed. */
+  private[graft] def splitCounts(docs: DataFrame): DataFrame = {
+    val bucket = pmod(
+      md5Val(concat(col("doc_id").cast("string"), lit("#split")), 15),
+      lit(100L))
+    val split = when(bucket < 98, "train")
+      .when(bucket === 98, "val").otherwise("test")
+    docs
+      .select(col("source"), col("lang"), split.as("split"),
+        size(words(col("text"))).as("n"))
+      .groupBy(col("source"), col("lang"), col("split"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
+  }
+
   val all: Seq[QueryDef] = Seq(
 
     QueryDef.sql("p01_curated_corpus",
       (s, d) => {
         val q = Tables.documents(s, d)
-          // native word_profile (r11): one pass for n/sum_len/stop_hits
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n_words", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("quality",
-            least(col("n_words").cast("double") / 100.0, lit(1.0)) * 0.5 +
-              (col("stop_hits").cast("double") / col("n_words")) * 0.3 +
-              least((col("sum_len").cast("double") / col("n_words")) / 8.0, lit(1.0)) * 0.2)
+          .transform(wordStats(words(col("text"))))
+          .withColumnRenamed("n", "n_words")
+          .withColumn("quality", quality(col("n_words"), col("sum_len"), col("stop_hits")))
           .withColumn("h", unhex(md5(trim(col("text")))))
         q.withColumn("rn",
             row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
@@ -342,22 +372,9 @@ object PipelineOps {
         val ws = col("ws")
         val base = Tables.documents(s, d)
           .withColumn("ws", words(col("text")))
-          // native word_profile + hashed bigrams (r11): one generated
-          // pass each — the interpreted HOF quartet is gone
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(ws))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("n_sym", element_at(col("wp"), 4))
+          .transform(wordStats(ws))
           .withColumn("g2", graft.functions.GraftFunctions.gramHashes60(ws, 2))
-          .withColumn("gopher_fail",
-            col("n") < 50 || col("n") > 100000 ||
-              col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10 ||
-              col("stop_hits") < 2 ||
-              col("n_sym") * 10 > col("n") ||
-              (size(col("g2")) > 0 &&
-                (size(col("g2")) - size(array_distinct(col("g2")))) * 10 >
-                  size(col("g2")) * 3))
+          .withColumn("gopher_fail", gopherRules(col("g2")).reduce(_ || _))
           .select(col("doc_id"), col("source"), col("gopher_fail"),
             unhex(md5(trim(col("text")))).as("h"))
         val contam = DedupOps.gram8Exploded(s, d)
@@ -575,10 +592,9 @@ object PipelineOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val nShards = 16
-        val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
         val w = Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))
         Tables.documents(s, d)
-          .select(col("doc_id"), h.as("h"))
+          .select(col("doc_id"), shuffleHash(col("doc_id")).as("h"))
           .withColumn("shard", pmod(col("h"), lit(nShards)).cast("int"))
           .withColumn("pos", row_number().over(w))
           .withColumn("global_ord", (col("pos") - 1) * nShards + col("shard"))
@@ -665,10 +681,7 @@ object PipelineOps {
         val w = Window.partitionBy(col("phase"), col("shard"))
           .orderBy(col("h"), col("doc_id"))
         Tables.documents(s, d)
-          // native word_profile (r11): one pass for n/stop_hits
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
+          .transform(wordStats(words(col("text"))))
           .withColumn("phase",
             when(col("n").between(20, 100000) && col("stop_hits") >= 4, 0)
               .when(col("stop_hits") >= 2, 1)
@@ -827,15 +840,8 @@ object PipelineOps {
       (s, d) => {
         val per = OpUtils.transientPersist(s, s"p14:$d",
           Tables.documents(s, d)
-            // native word_profile (r11): one pass for n/sum_len/stop_hits
-            .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-            .withColumn("n", element_at(col("wp"), 1))
-            .withColumn("stop_hits", element_at(col("wp"), 3))
-            .withColumn("sum_len", element_at(col("wp"), 2))
-            .withColumn("quality",
-              least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-                (col("stop_hits").cast("double") / col("n")) * 0.3 +
-                least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2)
+            .transform(wordStats(words(col("text"))))
+            .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
             .groupBy(col("source"))
             .agg(sum(col("n")).as("avail"),
               sum(floor(col("quality") * 1000.0).cast("long")).as("w_m")))
@@ -990,22 +996,7 @@ object PipelineOps {
     // 100 TB shape: one pass, everything map-side to fixed-width
     // partials, a 16-row shuffle — the manifest costs one scan.
     QueryDef.sql("p16_shard_manifest",
-      (s, d) => {
-        val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("n_chars"),
-            size(words(col("text"))).cast("long").as("n_tokens"),
-            md5Val(trim(col("text")), 11).as("cs"),
-            pmod(h, lit(16L)).cast("int").as("shard"))
-          .groupBy(col("shard"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("total_chars"),
-            sum(col("n_tokens")).as("total_tokens"),
-            sum(col("cs")).as("checksum"),
-            min(col("doc_id")).as("min_doc"),
-            max(col("doc_id")).as("max_doc"))
-          .orderBy(col("shard"))
-      },
+      (s, d) => shardManifest(Tables.documents(s, d)).orderBy(col("shard")),
       s"""WITH m AS (
          |  SELECT doc_id, n_chars, len(${oWords("text")}) AS n_tokens,
          |    ${oMd5Val("trim(text)", 11)} AS cs,
@@ -1031,7 +1022,6 @@ object PipelineOps {
     // crosses back as a 1-row broadcast.
     QueryDef.sql("p17_shard_skew",
       (s, d) => {
-        val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
         // transientPersist: the 16-row shard frame feeds both the total
         // and the output — without the barrier Catalyst inlines the
         // corpus pass into BOTH consumers (two full scans; the s21/t25
@@ -1039,7 +1029,7 @@ object PipelineOps {
         val per = OpUtils.transientPersist(s, s"p17:$d",
           Tables.documents(s, d)
             .select(size(words(col("text"))).cast("long").as("n_tokens"),
-              pmod(h, lit(16L)).cast("int").as("shard"))
+              shard16(col("doc_id")).as("shard"))
             .groupBy(col("shard"))
             .agg(sum(col("n_tokens")).as("shard_tokens")))
         val tot = per.agg(sum(col("shard_tokens")).as("tot"))
@@ -1080,10 +1070,9 @@ object PipelineOps {
     QueryDef.sql("p18_shard_mixture",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
         val counts = OpUtils.transientPersist(s, s"p18:$d",
           Tables.documents(s, d)
-            .select(pmod(h, lit(16L)).cast("int").as("shard"), col("source"))
+            .select(shard16(col("doc_id")).as("shard"), col("source"))
             .groupBy(col("shard"), col("source"))
             .agg(count(lit(1)).as("cnt")))
         val shardTot = counts.groupBy(col("shard")).agg(sum(col("cnt")).as("shard_n"))
@@ -1141,9 +1130,8 @@ object PipelineOps {
     QueryDef.sql("p19_resume_manifest",
       (s, d) => {
         val step = 1000L
-        val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
         Tables.documents(s, d)
-          .select(pmod(h, lit(16L)).cast("int").as("shard"))
+          .select(shard16(col("doc_id")).as("shard"))
           .groupBy(col("shard"))
           .agg(count(lit(1)).as("n_docs"))
           .withColumn("consumed", least(col("n_docs"),
@@ -1410,13 +1398,10 @@ object PipelineOps {
     // aggregate-bounded total broadcast.
     QueryDef.sql("p25_shard_dedup_leakage",
       (s, d) => {
-        val shardOf = (c: org.apache.spark.sql.Column) =>
-          pmod(md5Val(concat(c.cast("string"), lit("#shuffle")), 15),
-            lit(16L)).cast("int")
         val pairs = OpUtils.transientPersist(s, s"p25:$d",
           graft.operators.DedupOps.simhashPairs(s, d)
-            .select(shardOf(col("a_id")).as("shard_a"),
-              shardOf(col("b_id")).as("shard_b")))
+            .select(shard16(col("a_id")).as("shard_a"),
+              shard16(col("b_id")).as("shard_b")))
         val tot = pairs.agg(count(lit(1)).as("total_pairs"))
         // ALL 16 shard rows, zero-filled (r14): an audit sheet must
         // show "no leakage observed" per shard explicitly — with the
@@ -1479,17 +1464,7 @@ object PipelineOps {
     // DECIMAL(38,0) house pattern.
     QueryDef.sql("p26_stratified_split",
       (s, d) => {
-        val bucket = pmod(
-          md5Val(concat(col("doc_id").cast("string"), lit("#split")), 15),
-          lit(100L))
-        val split = when(bucket < 98, "train")
-          .when(bucket === 98, "val").otherwise("test")
-        val agg = Tables.documents(s, d)
-          .select(col("source"), col("lang"), split.as("split"),
-            size(words(col("text"))).as("n"))
-          .groupBy(col("source"), col("lang"), col("split"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
-        agg.withColumn("stratum_docs",
+        splitCounts(Tables.documents(s, d)).withColumn("stratum_docs",
             sum(col("n_docs")).over(
               Window.partitionBy(col("source"), col("lang"))))
           .withColumn("split_share_ppm",

@@ -122,6 +122,18 @@ object Relational {
     "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))"
   private def odsum(e: String): String = s"CAST(ROUND(SUM($e), 2) AS DOUBLE)"
 
+  /** q72's per-slice partials: lines, exact revenue in 1e-4 units
+    * (DECIMAL(38,0)), and quantity range per (returnflag, ship year).
+    * The partials ride the [[sumFx]] cascade (~28 unbounded groups);
+    * q72 merges them across its two date slices, `rollupMergeStream`
+    * keeps them as streaming state across micro-batches. Input needs
+    * the `l_` columns it reads. */
+  private[graft] def rollupPartials(lineitem: DataFrame): DataFrame =
+    lineitem
+      .groupBy(col("l_returnflag"), year(col("l_shipdate")).as("ship_year"))
+      .agg(count(lit(1)).as("n_lines"), sumFx(rev4).as("rev_i"),
+        min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"))
+
   val all: Seq[QueryDef] = Seq(
 
     // ---------------------------------------------------------------
@@ -1920,16 +1932,7 @@ object Relational {
     // re-groups a slice-count-bounded partial table, never rows.
     QueryDef.sql("q72_partial_agg_merge",
       (s, d) => {
-        val rev_i = rev4 // exact 1e-4-unit long product (r14 fixed-point)
-        def slice(pred: Column): DataFrame = Tables.lineitem(s, d)
-          .filter(pred)
-          .groupBy(col("l_returnflag"), year(col("l_shipdate")).as("ship_year"))
-          // r15: per-slice partials ride the sumFx cascade (~28
-          // unbounded (flag, year) groups); the merge below re-sums the
-          // DECIMAL partials — exactly the two-level shape this query
-          // exists to prove
-          .agg(count(lit(1)).as("n_lines"), sumFx(rev_i).as("rev_i"),
-            min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"))
+        def slice(pred: Column): DataFrame = rollupPartials(Tables.lineitem(s, d).filter(pred))
         val cut = ts("1998-01-01 00:00:00")
         slice(col("l_shipdate") < cut)
           .unionAll(slice(col("l_shipdate") >= cut))

@@ -1991,16 +1991,9 @@ object SimilarityOps {
     QueryDef.sql("s30_cluster_quality",
       (s, d) => {
         val q = Tables.documents(s, d)
-          // native word_profile (r11): one pass for n/sum_len/stop_hits
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("qm", floor((
-            least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-              (col("stop_hits").cast("double") / col("n")) * 0.3 +
-              least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2
-            ) * 1000.0).cast("long"))
+          .transform(wordStats(words(col("text"))))
+          .withColumn("qm", floor(
+            quality(col("n"), col("sum_len"), col("stop_hits")) * 1000.0).cast("long"))
           .select(col("doc_id"), col("n").cast("long").as("n_tokens"), col("qm"))
         Tables.embeddings(s, d).select(col("vec_id"), col("label"))
           .join(q, col("vec_id") === col("doc_id"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import OpUtils._
@@ -80,6 +80,72 @@ object TextOps {
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "zh" -> Seq("的", "了", "是"))
 
+  /** t25's band frame: documents and tokens per 0.05-wide t02-score
+    * band (≤ 20 rows). Input needs `text`; `qualityBandStream` runs it
+    * on a live feed. */
+  private[graft] def qualityBands(docs: DataFrame): DataFrame =
+    docs.transform(wordStats(words(col("text"))))
+      .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
+      .withColumn("band",
+        least(floor(col("quality") * 20.0).cast("int"), lit(19)))
+      .groupBy(col("band"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
+
+  /** t26's per-source sheet: character count and digit / uppercase /
+    * punctuation / space per-mille of the trimmed texts. Input needs
+    * `source`, `text`; `charClassStream` runs it on a live feed. */
+  private[graft] def charClasses(docs: DataFrame): DataFrame = {
+    val t = trim(col("text"))
+    def ccount(pat: String): Column =
+      (length(t) - length(regexp_replace(t, pat, ""))).cast("long")
+    docs
+      .select(col("source"), length(t).cast("long").as("n"),
+        ccount("[0-9]").as("dg"), ccount("[A-Z]").as("up"),
+        ccount("[.,!?]").as("pu"), ccount(" ").as("sp"))
+      .groupBy(col("source"))
+      .agg(sum(col("n")).as("n_chars"), sum(col("dg")).as("dg"),
+        sum(col("up")).as("up"), sum(col("pu")).as("pu"),
+        sum(col("sp")).as("sp"))
+      .select(col("source"), col("n_chars"),
+        // n_chars = 0 (a source whose texts all trim empty) guarded
+        // explicitly: Spark div yields NULL but DuckDB // raises —
+        // the t27 zero-denominator contract (r8 ADVICE)
+        expr("CASE WHEN n_chars > 0 THEN dg * 1000 div n_chars ELSE 0 END")
+          .as("digit_pm"),
+        expr("CASE WHEN n_chars > 0 THEN up * 1000 div n_chars ELSE 0 END")
+          .as("upper_pm"),
+        expr("CASE WHEN n_chars > 0 THEN pu * 1000 div n_chars ELSE 0 END")
+          .as("punct_pm"),
+        expr("CASE WHEN n_chars > 0 THEN sp * 1000 div n_chars ELSE 0 END")
+          .as("space_pm"))
+  }
+
+  /** t31's per-(lang, source) fertility sheet: six counter sums and the
+    * ratios derived from them. Input needs `lang`, `source`, `text`;
+    * `tokenizerFertilityStream` runs it on a live feed. */
+  private[graft] def fertilitySheet(docs: DataFrame): DataFrame = {
+    val toks = regexp_extract_all(lower(trim(col("text"))),
+      lit("([a-z]+|[0-9]|[^a-z0-9 ])"), lit(0))
+    docs
+      .select(col("lang"), col("source"),
+        size(words(col("text"))).as("nw"),
+        size(toks).as("nt"),
+        length(concat_ws("", toks)).as("tok_chars"),
+        size(filter(toks, t => t.rlike("^[a-z]+$"))).as("nt_word"))
+      .groupBy(col("lang"), col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("nw")).as("n_words"),
+        sum(col("nt")).as("n_tokens"),
+        sum(col("tok_chars")).as("n_tok_chars"),
+        sum(col("nt") - col("nt_word")).as("n_fallback"))
+      .withColumn("fertility_milli",
+        expr("n_tokens * 1000 DIV n_words"))
+      .withColumn("chars_per_token_milli",
+        expr("n_tok_chars * 1000 DIV n_tokens"))
+      .withColumn("fallback_ppm",
+        expr("CAST(CAST(n_fallback AS DECIMAL(38,0)) * 1000000 DIV n_tokens AS BIGINT)"))
+  }
+
   val all: Seq[QueryDef] = Seq(
 
     // -- corpus token statistics per language --------------------------
@@ -106,25 +172,14 @@ object TextOps {
     // score = 0.5*min(tokens/100,1) + 0.3*stopword_ratio + 0.2*min(avg_len/8,1)
     // fixed double op order mirrored by the oracle.
     QueryDef.sql("t02_quality_score",
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        Tables.documents(s, d)
-          // native word_profile (r11): one generated pass replaces the
-          // interpreted filter/transform/aggregate HOF trio
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
+      (s, d) => Tables.documents(s, d)
+        .transform(wordStats(words(col("text"))))
         .select(col("doc_id"),
           col("n").cast("int").as("n_tokens"),
           (col("stop_hits").cast("double") / col("n")).as("stop_ratio"),
           (col("sum_len").cast("double") / col("n")).as("avg_word_len"),
-          (least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-            (col("stop_hits").cast("double") / col("n")) * 0.3 +
-            least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2
-            ).as("quality"))
-        .orderBy(col("doc_id"))
-      },
+          quality(col("n"), col("sum_len"), col("stop_hits")).as("quality"))
+        .orderBy(col("doc_id")),
       s"""WITH q AS (
          |  SELECT doc_id, ${oWords("text")} AS ws FROM documents),
          |m AS (
@@ -545,32 +600,20 @@ object TextOps {
     // the final sort) — linear at 100 TB like t02/t07.
     QueryDef.sql("t12_gopher_rules",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val ws = col("ws")
         Tables.documents(s, d)
           .withColumn("ws", words(col("text")))
-          // native word_profile (r11): n/sum_len/stop_hits/n_sym in one
-          // generated pass — the three interpreted HOFs are gone
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(ws))
-          .withColumn("n", element_at(col("wp"), 1).cast("int"))
-          .withColumn("sum_len", element_at(col("wp"), 2).cast("int"))
-          .withColumn("stop_hits", element_at(col("wp"), 3).cast("int"))
-          .withColumn("n_sym", element_at(col("wp"), 4).cast("int"))
+          .transform(wordStats(ws))
           // r11: bigram dup test over native 60-bit hashes (the t07 move)
           .withColumn("g2", graft.functions.GraftFunctions
             .gramHashes60(ws, 2))
-          .withColumn("n_dup_bg", size(col("g2")) - size(array_distinct(col("g2"))))
-          .withColumn("fail_mask",
-            when(col("n") < 50 || col("n") > 100000, lit(1)).otherwise(lit(0)) +
-            when(col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10,
-              lit(2)).otherwise(lit(0)) +
-            when(col("stop_hits") < 2, lit(4)).otherwise(lit(0)) +
-            when(col("n_sym") * 10 > col("n"), lit(8)).otherwise(lit(0)) +
-            when(size(col("g2")) > 0 && col("n_dup_bg") * 10 > size(col("g2")) * 3,
-              lit(16)).otherwise(lit(0)))
-          .select(col("doc_id"), col("n").as("n_words"),
+          .withColumn("fail_mask", gopherRules(col("g2")).zipWithIndex
+            .map { case (fails, bit) => when(fails, lit(1 << bit)).otherwise(lit(0)) }
+            .reduce(_ + _))
+          .select(col("doc_id"), col("n").cast("int").as("n_words"),
             (col("sum_len").cast("double") / col("n")).as("mean_word_len"),
-            col("stop_hits"), col("n_sym"),
+            col("stop_hits").cast("int").as("stop_hits"),
+            col("n_sym").cast("int").as("n_sym"),
             col("fail_mask"), (col("fail_mask") === 0).as("pass"))
           .orderBy(col("doc_id"))
       },
@@ -1069,14 +1112,12 @@ object TextOps {
     // projection, zero shuffles at any scale (PlanSpec-pinned).
     QueryDef.sql("t22_readability",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
-          // native word_profile (r11): n/sum_len/n_complex in one pass
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
+          .transform(wordStats(words(col("text"))))
           .select(col("doc_id"),
-            element_at(col("wp"), 1).cast("int").as("n_words"),
-            element_at(col("wp"), 2).cast("int").as("n_word_chars"),
-            element_at(col("wp"), 5).cast("int").as("n_complex"),
+            col("n").cast("int").as("n_words"),
+            col("sum_len").cast("int").as("n_word_chars"),
+            col("n_complex").cast("int").as("n_complex"),
             greatest(lit(1),
               length(col("text")) -
                 length(regexp_replace(col("text"), "[.!?]", ""))).as("n_sentences"))
@@ -1206,21 +1247,7 @@ object TextOps {
         // and the output — without the barrier Catalyst inlines the
         // corpus scan into the total agg (= corpus read twice; the
         // PlanSpec guard caught exactly this)
-        val g = OpUtils.transientPersist(s, s"t25:$d",
-          Tables.documents(s, d)
-          // native word_profile (r11): one pass for n/sum_len/stop_hits
-          .withColumn("wp", graft.functions.GraftFunctions.wordProfile(words(col("text"))))
-          .withColumn("n", element_at(col("wp"), 1))
-          .withColumn("stop_hits", element_at(col("wp"), 3))
-          .withColumn("sum_len", element_at(col("wp"), 2))
-          .withColumn("quality",
-            least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-              (col("stop_hits").cast("double") / col("n")) * 0.3 +
-              least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2)
-          .withColumn("band",
-            least(floor(col("quality") * 20.0).cast("int"), lit(19)))
-          .groupBy(col("band"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens")))
+        val g = OpUtils.transientPersist(s, s"t25:$d", qualityBands(Tables.documents(s, d)))
         val tot = g.agg(sum(col("n_docs")).as("tot_docs"))
         val w = Window.orderBy(col("band").desc) // ≤20 rows: bounded frame
         g.crossJoin(broadcast(tot)) // aggregate-bounded: 1 row
@@ -1271,32 +1298,7 @@ object TextOps {
     // map-side per doc; ONE source-keyed shuffle of integer partials;
     // shares are integer per-mille.
     QueryDef.sql("t26_char_classes",
-      (s, d) => {
-        val t = trim(col("text"))
-        def ccount(pat: String): Column =
-          (length(t) - length(regexp_replace(t, pat, ""))).cast("long")
-        Tables.documents(s, d)
-          .select(col("source"), length(t).cast("long").as("n"),
-            ccount("[0-9]").as("dg"), ccount("[A-Z]").as("up"),
-            ccount("[.,!?]").as("pu"), ccount(" ").as("sp"))
-          .groupBy(col("source"))
-          .agg(sum(col("n")).as("n_chars"), sum(col("dg")).as("dg"),
-            sum(col("up")).as("up"), sum(col("pu")).as("pu"),
-            sum(col("sp")).as("sp"))
-          .select(col("source"), col("n_chars"),
-            // n_chars = 0 (a source whose texts all trim empty) guarded
-            // explicitly: Spark div yields NULL but DuckDB // raises —
-            // the t27 zero-denominator contract (r8 ADVICE)
-            expr("CASE WHEN n_chars > 0 THEN dg * 1000 div n_chars ELSE 0 END")
-              .as("digit_pm"),
-            expr("CASE WHEN n_chars > 0 THEN up * 1000 div n_chars ELSE 0 END")
-              .as("upper_pm"),
-            expr("CASE WHEN n_chars > 0 THEN pu * 1000 div n_chars ELSE 0 END")
-              .as("punct_pm"),
-            expr("CASE WHEN n_chars > 0 THEN sp * 1000 div n_chars ELSE 0 END")
-              .as("space_pm"))
-          .orderBy(col("source"))
-      },
+      (s, d) => charClasses(Tables.documents(s, d)).orderBy(col("source")),
       """WITH m AS (
         |  SELECT source, length(trim(text)) AS n,
         |    length(trim(text)) - length(regexp_replace(trim(text), '[0-9]', '', 'g')) AS dg,
@@ -1602,29 +1604,7 @@ object TextOps {
     // shuffle — only six per-(lang, source) counters), one partial-agg
     // exchange on the ≤|langs×sources| frame, bounded output.
     QueryDef.sql("t31_tokenizer_fertility",
-      (s, d) => {
-        val toks = regexp_extract_all(lower(trim(col("text"))),
-          lit("([a-z]+|[0-9]|[^a-z0-9 ])"), lit(0))
-        Tables.documents(s, d)
-          .select(col("lang"), col("source"),
-            size(words(col("text"))).as("nw"),
-            size(toks).as("nt"),
-            length(concat_ws("", toks)).as("tok_chars"),
-            size(filter(toks, t => t.rlike("^[a-z]+$"))).as("nt_word"))
-          .groupBy(col("lang"), col("source"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("nw")).as("n_words"),
-            sum(col("nt")).as("n_tokens"),
-            sum(col("tok_chars")).as("n_tok_chars"),
-            sum(col("nt") - col("nt_word")).as("n_fallback"))
-          .withColumn("fertility_milli",
-            expr("n_tokens * 1000 DIV n_words"))
-          .withColumn("chars_per_token_milli",
-            expr("n_tok_chars * 1000 DIV n_tokens"))
-          .withColumn("fallback_ppm",
-            expr("CAST(CAST(n_fallback AS DECIMAL(38,0)) * 1000000 DIV n_tokens AS BIGINT)"))
-          .orderBy(col("lang"), col("source"))
-      },
+      (s, d) => fertilitySheet(Tables.documents(s, d)).orderBy(col("lang"), col("source")),
       s"""WITH t AS (
          |  SELECT lang, source,
          |    len(${oWords("text")}) AS nw,

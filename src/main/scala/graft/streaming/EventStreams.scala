@@ -1,12 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{EventsOps, PipelineOps, Relational, TextOps}
 
 /** Structured Streaming pipelines over the events table — the unbounded
   * twins of the batch queries in [[graft.operators.EventsOps]] (same
   * semantics, verified against them in EventStreamsSpec).
+  *
+  * A twin whose batch query is the same DataFrame query over a bounded
+  * input calls that query's own body, defined once in the operator
+  * object that owns it: t25, t26, t31 ([[TextOps]]), p16, p26
+  * ([[PipelineOps]]), q72's partials ([[Relational]]), q47 and q55
+  * ([[EventsOps]]). The twin adds only its `ts` column and watermark
+  * (or, for q72, the revenue projection of the merged partials), so
+  * the two can only differ where Spark's streaming engine does. The
+  * corpus rules the other twins apply (word stats, Gopher rules) come
+  * from [[graft.operators.OpUtils]].
   *
   * The reference's record-batch streams are bounded (schema-first, EOS);
   * its chunked HTTP servers demonstrate incremental batch-at-a-time
@@ -207,7 +219,7 @@ object EventStreams {
   def curationVerdictStream(docs: DataFrame, corpusHashes: DataFrame,
       horizon: String = "10 minutes"): Dataset[DocVerdict] = {
     import docs.sparkSession.implicits._
-    import graft.operators.OpUtils.words
+    import graft.operators.OpUtils.{gopherRules, wordStats, words}
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val horizonMs = horizon match {
       case s if s.endsWith(" minutes") => s.stripSuffix(" minutes").trim.toLong * 60000L
@@ -216,23 +228,9 @@ object EventStreams {
     val ws = col("ws")
     val scored = docs
       .withColumn("ws", words(col("text")))
-      // native word_profile + hashed bigrams (r11, same move as the
-      // p06 batch twin) — a per-micro-batch map stage should not pay
-      // interpreted HOFs either
-      .withColumn("wp", graft.functions.GraftFunctions.wordProfile(ws))
-      .withColumn("n", element_at(col("wp"), 1))
-      .withColumn("sum_len", element_at(col("wp"), 2))
-      .withColumn("stop_hits", element_at(col("wp"), 3))
-      .withColumn("n_sym", element_at(col("wp"), 4))
+      .transform(wordStats(ws))
       .withColumn("g2", graft.functions.GraftFunctions.gramHashes60(ws, 2))
-      .withColumn("gopher_fail",
-        col("n") < 50 || col("n") > 100000 ||
-          col("sum_len") < col("n") * 3 || col("sum_len") > col("n") * 10 ||
-          col("stop_hits") < 2 ||
-          col("n_sym") * 10 > col("n") ||
-          (size(col("g2")) > 0 &&
-            (size(col("g2")) - size(array_distinct(col("g2")))) * 10 >
-              size(col("g2")) * 3))
+      .withColumn("gopher_fail", gopherRules(col("g2")).reduce(_ || _))
       .withColumn("h", unhex(md5(trim(col("text")))))
       .join(corpusHashes.select(col("h"), lit(true).as("cd")), Seq("h"), "left")
       .select(col("doc_id"), col("us"),
@@ -470,16 +468,10 @@ object EventStreams {
     * emits a session once no event can extend it) and evicts state.
     * Same boundary contract as q19/q47: an event at exactly prev+gap
     * still merges (SessionContractSpec pins this by construction). */
-  def sessionWindowStream(events: DataFrame, gapUs: Long = 30L * 60 * 1000000): DataFrame =
-    events
+  def sessionWindowStream(events: DataFrame): DataFrame =
+    EventsOps.nativeSessions(events
       .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), s"${gapUs / 1000000} seconds"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("start_us"),
-        (unix_micros(col("session_window.end")) - gapUs).as("last_us"),
-        col("n_events"))
+      .withWatermark("ts", "10 minutes"))
 
   /** Streaming sliding-window velocity flags — q55's fraud/rate-limit
     * staple as it must run in production: ON the live stream, because a
@@ -497,43 +489,21 @@ object EventStreams {
     * emit exactly the batch frame and the state store drains to the
     * open slides only. */
   def slidingVelocityStream(events: DataFrame): DataFrame =
-    events
+    EventsOps.velocityFlags(events
       .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .filter(col("n_events") >= 2)
-      .select(unix_micros(col("window.start")).as("win_start_us"),
-        col("user_id"), col("n_events"))
+      .withWatermark("ts", "10 minutes"))
 
   /** Streaming quality-band monitor — t25's cutoff sheet kept live at
     * the point of ingest: per 0.05-wide t02-score band, running doc and
-    * token counts. The per-doc score and banding compute map-side with
-    * exactly t25's op order (EventStreamsSpec proves the final complete-
+    * token counts. The per-doc score and banding are t25's own body,
+    * computed map-side (EventStreamsSpec proves the final complete-
     * mode table equals the batch band frame on the same corpus), and
     * the grouped state is bounded at ≤20 band rows REGARDLESS of stream
     * volume — the rare streaming agg that needs no watermark to stay
     * finite. A live feed of this is the corpus drift alarm: a degrading
     * source slides its mass down-band long before any downstream eval
     * notices. */
-  def qualityBandStream(docs: DataFrame): DataFrame = {
-    import graft.operators.OpUtils.words
-    docs
-      .withColumn("ws", words(col("text")))
-      .withColumn("n", size(col("ws")))
-      .withColumn("stop_hits",
-        size(filter(col("ws"), w => w.isin("the", "a", "of", "and", "to"))))
-      .withColumn("sum_len",
-        aggregate(transform(col("ws"), w => length(w)), lit(0), (a, b) => a + b))
-      .withColumn("quality",
-        least(col("n").cast("double") / 100.0, lit(1.0)) * 0.5 +
-          (col("stop_hits").cast("double") / col("n")) * 0.3 +
-          least((col("sum_len").cast("double") / col("n")) / 8.0, lit(1.0)) * 0.2)
-      .withColumn("band",
-        least(floor(col("quality") * 20.0).cast("int"), lit(19)))
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
-  }
+  def qualityBandStream(docs: DataFrame): DataFrame = TextOps.qualityBands(docs)
 
   /** Streaming stratified-split manifest — p26's split accounting kept
     * live at the point of ingest. The split verdict is the same PURE
@@ -547,19 +517,7 @@ object EventStreams {
     * stay finite. The spec proves the complete-mode table equals p26's
     * oracle-checked counts on the same corpus (ppm shares are the
     * batch sheet's derived column; the live tile carries the counts). */
-  def stratifiedSplitStream(docs: DataFrame): DataFrame = {
-    import graft.operators.OpUtils.{md5Val, words}
-    val bucket = pmod(
-      md5Val(concat(col("doc_id").cast("string"), lit("#split")), 15),
-      lit(100L))
-    docs
-      .withColumn("split",
-        when(bucket < 98, "train").when(bucket === 98, "val")
-          .otherwise("test"))
-      .withColumn("n", size(words(col("text"))))
-      .groupBy(col("source"), col("lang"), col("split"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
-  }
+  def stratifiedSplitStream(docs: DataFrame): DataFrame = PipelineOps.splitCounts(docs)
 
   /** Streaming heavy-hitter sketch — t24's Count-Min tier kept live at
     * the point of ingest: the native `cms_agg` TypedImperativeAggregate
@@ -593,28 +551,13 @@ object EventStreams {
     * manifest EXACTLY whatever the arrival order — readers can verify
     * a shard the moment ingest pauses, no end-of-epoch barrier.
     * EventStreamsSpec pins equality against the oracle-checked p16. */
-  def shardManifestStream(docs: DataFrame): DataFrame = {
-    import graft.operators.OpUtils.{md5Val, words}
-    val h = md5Val(concat(col("doc_id").cast("string"), lit("#shuffle")), 15)
-    docs
-      .select(col("doc_id"), col("n_chars"),
-        size(words(col("text"))).cast("long").as("n_tokens"),
-        md5Val(trim(col("text")), 11).as("cs"),
-        pmod(h, lit(16L)).cast("int").as("shard"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("total_chars"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("cs")).as("checksum"),
-        min(col("doc_id")).as("min_doc"),
-        max(col("doc_id")).as("max_doc"))
-  }
+  def shardManifestStream(docs: DataFrame): DataFrame = PipelineOps.shardManifest(docs)
 
   /** Streaming char-class monitor — t26's per-source composition sheet
     * kept live at the point of ingest: each arriving document's class
     * counts (digits / uppercase / punctuation / spaces) compute
-    * map-side with exactly t26's regex arithmetic and fold into the
-    * per-source sums. State is bounded at one row per source
+    * map-side through t26's own body and fold into the per-source
+    * sums. State is bounded at one row per source
     * REGARDLESS of stream volume (no watermark needed, like
     * [[qualityBandStream]]); the per-mille projections derive from the
     * running sums each micro-batch, so the complete-mode table equals
@@ -624,53 +567,25 @@ object EventStreams {
     * A live feed of this is the encoding-drift alarm: a source whose
     * digit or punctuation per-mille jumps mid-ingest flags a scraper
     * or template change long before a batch audit runs. */
-  def charClassStream(docs: DataFrame): DataFrame = {
-    val t = trim(col("text"))
-    def ccount(pat: String): Column =
-      (length(t) - length(regexp_replace(t, pat, ""))).cast("long")
-    docs
-      .select(col("source"), length(t).cast("long").as("n"),
-        ccount("[0-9]").as("dg"), ccount("[A-Z]").as("up"),
-        ccount("[.,!?]").as("pu"), ccount(" ").as("sp"))
-      .groupBy(col("source"))
-      .agg(sum(col("n")).as("n_chars"), sum(col("dg")).as("dg"),
-        sum(col("up")).as("up"), sum(col("pu")).as("pu"),
-        sum(col("sp")).as("sp"))
-      .select(col("source"), col("n_chars"),
-        expr("CASE WHEN n_chars > 0 THEN dg * 1000 div n_chars ELSE 0 END")
-          .as("digit_pm"),
-        expr("CASE WHEN n_chars > 0 THEN up * 1000 div n_chars ELSE 0 END")
-          .as("upper_pm"),
-        expr("CASE WHEN n_chars > 0 THEN pu * 1000 div n_chars ELSE 0 END")
-          .as("punct_pm"),
-        expr("CASE WHEN n_chars > 0 THEN sp * 1000 div n_chars ELSE 0 END")
-          .as("space_pm"))
-  }
+  def charClassStream(docs: DataFrame): DataFrame = TextOps.charClasses(docs)
 
   /** Streaming revenue rollup — q72's partial-agg merge kept live: q72
     * proves count/sum/min/max partials merge across BATCH date slices;
     * this is the same merge running continuously, each micro-batch a
-    * slice. State is bounded at one row per (returnflag, ship year) —
+    * slice, aggregated by q72's own per-slice partials (fixed-point
+    * revenue through the overflow-safe sumFx cascade). State is
+    * bounded at one row per (returnflag, ship year) —
     * a handful of keys regardless of stream volume — and every
     * accumulator is associative+commutative, so the complete-mode table
     * equals q72's batch rollup whatever the arrival order
     * (EventStreamsSpec pins it against the oracle-checked q72). At
     * 100 TB this is the standing rollup an ingest tier maintains
     * instead of rescanning the fact table. */
-  def rollupMergeStream(lineitem: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val rev = col("l_extendedprice").cast(DecimalType(12, 2)) *
-      (lit(1) - col("l_discount").cast(DecimalType(4, 2)))
-    lineitem
-      .select(col("l_returnflag"), year(col("l_shipdate")).as("ship_year"),
-        (rev * 10000).cast("long").as("rev_i"), col("l_quantity"))
-      .groupBy(col("l_returnflag"), col("ship_year"))
-      .agg(count(lit(1)).as("n_lines"), sum(col("rev_i")).as("rev_i"),
-        min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"))
+  def rollupMergeStream(lineitem: DataFrame): DataFrame =
+    Relational.rollupPartials(lineitem)
       .select(col("l_returnflag"), col("ship_year"), col("n_lines"),
         (col("rev_i").cast("double") / 10000).as("revenue"),
         col("min_qty"), col("max_qty"))
-  }
 
   /** Streaming caption→asset referential audit — the unbounded twin of
     * m20: every ARRIVING caption probes the STATIC asset-verdict store
@@ -722,28 +637,7 @@ object EventStreams {
     * batch-exact whatever the arrival order. State is bounded at one
     * row per (lang, source) — the sheet a vocab-design run watches
     * while a crawl is still landing. */
-  def tokenizerFertilityStream(docs: DataFrame): DataFrame = {
-    val toks = regexp_extract_all(lower(trim(col("text"))),
-      lit("([a-z]+|[0-9]|[^a-z0-9 ])"), lit(0))
-    docs
-      .select(col("lang"), col("source"),
-        size(split(trim(col("text")), " +")).as("nw"),
-        size(toks).as("nt"),
-        length(concat_ws("", toks)).as("tok_chars"),
-        size(filter(toks, t => t.rlike("^[a-z]+$"))).as("nt_word"))
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("nw")).as("n_words"),
-        sum(col("nt")).as("n_tokens"),
-        sum(col("tok_chars")).as("n_tok_chars"),
-        sum(col("nt") - col("nt_word")).as("n_fallback"))
-      .select(col("lang"), col("source"), col("n_docs"), col("n_words"),
-        col("n_tokens"), col("n_tok_chars"), col("n_fallback"),
-        expr("n_tokens * 1000 DIV n_words").as("fertility_milli"),
-        expr("n_tok_chars * 1000 DIV n_tokens").as("chars_per_token_milli"),
-        expr("CAST(CAST(n_fallback AS DECIMAL(38,0)) * 1000000 DIV n_tokens AS BIGINT)")
-          .as("fallback_ppm"))
-  }
+  def tokenizerFertilityStream(docs: DataFrame): DataFrame = TextOps.fertilitySheet(docs)
 
   /** Events table as a bounded "stream" via a rate-limited file source
     * shape: for tests we use MemoryStream; this loader reads the parquet

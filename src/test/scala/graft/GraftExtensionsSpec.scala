@@ -31,6 +31,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(!r.isNullAt(2))
       assert(r.getLong(3) === 31L) // 2*5 + 3*7
 
+      // and so does every other function of the native-function table
+      val missing = functions.GraftFunctions.builtins.map(_._1)
+        .filterNot(spark.catalog.functionExists)
+      assert(missing.isEmpty, s"not installed via spark.sql.extensions: ${missing.mkString(", ")}")
+
       // the injected planner strategy plans the as-of join in this
       // session too (no AsOfJoin.install call — extensions only)
       import spark.implicits._

@@ -1,0 +1,69 @@
+package graft
+
+import java.security.MessageDigest
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+/** Prints one line per `SparkEntry.queries` entry: its name and a hash of
+  * its optimized logical plan, with `#<exprId>` suffixes stripped so two
+  * builds of the same plan agree. Diffing the output of two checkouts
+  * shows which queries a refactor of the operators moved.
+  *
+  *   sbt "Test/runMain graft.PlanDigest /path/to/sf0.01 [planDir]"
+  *
+  * With `planDir`, each query's canonical plan text is also written to
+  * `planDir/<name>.txt`, so a digest that moved can be diffed.
+  *
+  * Two things would make an unchanged query's digest vary between runs,
+  * and both are neutralised here:
+  *   - Spark orders the groups of several DISTINCT aggregates by a hash
+  *     of their expression ids, so the ids a query gets must not depend
+  *     on how many the queries before it used: each query's ids start
+  *     at a fixed base (the counter only ever moves forward);
+  *   - q52's bucketed tables carry the JVM's pid in their names.
+  */
+object PlanDigest {
+
+  private val pidSuffix = s"_${ProcessHandle.current().pid()}\\b"
+
+  /** The full plan tree (no field truncation) minus expression ids. */
+  def canonical(plan: LogicalPlan): String =
+    plan.treeString(verbose = true, addSuffix = false, maxFields = Int.MaxValue)
+      .replaceAll("#\\d+", "")
+      .replaceAll(pidSuffix, "_<pid>")
+
+  /** Spark's global expression-id counter. */
+  private lazy val exprIds: AtomicLong = {
+    val f = NamedExpression.getClass.getDeclaredField("curId")
+    f.setAccessible(true)
+    f.get(null).asInstanceOf[AtomicLong]
+  }
+
+  def digest(plan: LogicalPlan): String =
+    MessageDigest.getInstance("SHA-256")
+      .digest(canonical(plan).getBytes("UTF-8"))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val planDir = args.lift(1).map(java.nio.file.Paths.get(_))
+    planDir.foreach(java.nio.file.Files.createDirectories(_))
+    val spark = GraftSession.get("graft-plan-digest")
+    try {
+      SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, fn), i) =>
+        exprIds.accumulateAndGet((i + 1).toLong << 24, math.max)
+        val line =
+          try {
+            val plan = fn(spark, sfDir).queryExecution.optimizedPlan
+            planDir.foreach(dir =>
+              java.nio.file.Files.writeString(dir.resolve(s"$name.txt"), canonical(plan)))
+            digest(plan)
+          } catch { case e: Throwable => s"ERROR ${e.getClass.getSimpleName}" }
+        println(s"$name $line")
+        operators.OpUtils.releaseTransients(spark)
+      }
+    } finally spark.stop()
+  }
+}

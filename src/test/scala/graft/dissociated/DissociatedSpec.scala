@@ -7,12 +7,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import graft.arrow.ArrowBridge
 import graft.datagen.Generators
 import graft.server.ArrowHttpServer
 
-class DissociatedSpec extends AnyFunSuite {
+class DissociatedSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.builder("dissoc-spec", "4").getOrCreate()
 
   test("split + shuffled reassembly is byte-identical to the plain stream") {
@@ -135,7 +135,7 @@ class DissociatedSpec extends AnyFunSuite {
     // spill two partitions through the DSv2 writer, then rebuild the
     // stream from the meta/body file channels and decode it
     val df = Generators.ticker(spark, 5000, 2)
-    val dir = java.nio.file.Files.createTempDirectory("dissoc-files")
+    val dir = tempDir("dissoc-files")
     df.write.format("arrows").mode("overwrite").save(dir.toString)
     val parts = dir.toFile.listFiles().filter(_.getName.endsWith(".arrows"))
       .sortBy(_.getName).map(_.toPath).toVector

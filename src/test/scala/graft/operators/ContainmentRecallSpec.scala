@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, TempDirs}
 
 /** d13's reason to exist, demonstrated: a small document embedded
   * verbatim in a large one has containment 1.0 but tiny Jaccard, so the
@@ -12,7 +12,7 @@ import graft.{GraftSession, SparkEntry}
   * The corpus is built so the gap is real, then both queries run over
   * it end-to-end (the same code paths the driver gates).
   */
-class ContainmentRecallSpec extends AnyFunSuite {
+class ContainmentRecallSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession =
     GraftSession.builder("containment-recall", "4").getOrCreate()
 
@@ -25,7 +25,7 @@ class ContainmentRecallSpec extends AnyFunSuite {
     val fillerA = (1 to 94).map(i => s"fa$i").mkString(" ")
     val fillerB = (1 to 94).map(i => s"fb$i").mkString(" ")
     val huge = s"$fillerA $tiny $fillerB"
-    val dir = java.nio.file.Files.createTempDirectory("d13spec").toString
+    val dir = tempDir("d13spec").toString
     Seq((1L, "en", tiny), (2L, "en", huge))
       .toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, TempDirs}
 
 /** The dedup pipeline's composition contract, pinned across operators:
   * d14 (materialized corpus) must agree row-for-row with d07's cluster
@@ -11,7 +11,7 @@ import graft.{GraftSession, SparkEntry}
   * columns, and t10's per-source totals must tile the corpus. These are
   * invariants BETWEEN queries — the oracle gate checks each one alone.
   */
-class PipelineCompositionSpec extends AnyFunSuite {
+class PipelineCompositionSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession =
     GraftSession.builder("pipeline-composition", "4").getOrCreate()
   val sfDir = "/root/testdata/sf0.001"
@@ -103,7 +103,7 @@ class PipelineCompositionSpec extends AnyFunSuite {
     val short = (1 to 5).map(i => s"zz$i").mkString(" ")
     val long1 = (1 to 120).map(i => s"aa$i").mkString(" ")
     val long2 = (1 to 120).map(i => s"bb$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("p01spec").toString
+    val dir = tempDir("p01spec").toString
     Seq((1L, "en", "s0", short), (2L, "en", "s0", short),
         (3L, "en", "s1", long1), (4L, "en", "s1", long1),
         (5L, "en", "s1", long2))
@@ -138,7 +138,7 @@ class PipelineCompositionSpec extends AnyFunSuite {
     // three 1500-token docs in one shard — doc 2 spans blocks 0 and 1,
     // doc 3 spans 1 and 2
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("p02spec").toString
+    val dir = tempDir("p02spec").toString
     (1 to 3).map(i => (i.toLong, "en", "s0", (1 to 1500).map(j => s"w$j").mkString(" ")))
       .toDF("doc_id", "lang", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -174,7 +174,7 @@ class PipelineCompositionSpec extends AnyFunSuite {
     // The corpus doubles docs with perturbed twins (last word dropped), so
     // assert on the ORIGINAL ids only and just the shared-line relation.
     val shared = (1 to 10).map(i => s"s$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("d17spec").toString
+    val dir = tempDir("d17spec").toString
     Seq((1L, "en", "s0", shared),
         (2L, "en", "s0", shared + " " + (1 to 10).map(i => s"u$i").mkString(" ")),
         (3L, "en", "s0", "a b c d e"))

@@ -33,8 +33,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit =
     try if (serverStarted) server.stop()
     finally {
-      temps.foreach(t => java.nio.file.Files.walk(t).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+      temps.foreach(graft.TempDirs.delete)
       super.afterAll()
     }
 

@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import graft.arrow.ArrowBridge
 import graft.datagen.Generators
 
-class ArrowsStreamingSpec extends AnyFunSuite {
+class ArrowsStreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.builder("arrows-stream-spec", "4").getOrCreate()
 
   test("readStream over an append-only .arrows directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream").toString
 
     def dropFile(n: Int, rows: Int): Unit = {
       val df = Generators.ticker(spark, rows, 1)
@@ -50,7 +50,7 @@ class ArrowsStreamingSpec extends AnyFunSuite {
     // plain .arrows artifact (reassembly output IS a valid IPC stream),
     // and the micro-batch source picks it up on the next trigger; the
     // converged stream equals the batch read of the same directory
-    val dir = java.nio.file.Files.createTempDirectory("graft-dissoc-stream").toString
+    val dir = tempDir("graft-dissoc-stream").toString
     val server = new graft.server.ArrowHttpServer(spark)
     server.register("seg0", Generators.ticker(spark, 1000, 2))
     server.register("seg1", Generators.ticker(spark, 600, 2))
@@ -88,8 +88,8 @@ class ArrowsStreamingSpec extends AnyFunSuite {
   test("writeStream sink: per-epoch part files, batch- and stream-readable") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString
+    val dir = tempDir("graft-sink").toString
+    val ckpt = tempDir("graft-sink-ckpt").toString
 
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
@@ -128,7 +128,7 @@ class ArrowsStreamingSpec extends AnyFunSuite {
     // simulates a driver restart: a NEW stream instance (empty arrival
     // map) must replay a deserialized offset range exactly, not slice
     // an empty buffer into a silently-empty micro-batch
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay").toString
     def drop(n: Int): String = {
       val df = Generators.ticker(spark, 100, 1)
       val f = new java.io.File(dir, f"chunk-$n%03d.arrows")

@@ -2,30 +2,19 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSession
+import graft.{GraftSession, TempDirs}
 import graft.datagen.Generators
 
 /** One logical dataset materialized across formats and read back — the
   * reference's rand-many-types pipeline (data/rand-many-types/Makefile:
   * 18-33: .arrows → .arrow → .parquet → embedded DBs; arrow-commits
   * .arrows vs .jsonl twins). */
-class ConversionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ConversionsSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.builder("conversions-spec", "4").getOrCreate()
 
-  private val dirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-  private def tmpDir(tag: String) = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-$tag")
-    dirs += d
-    d.toString
-  }
-
-  override def afterAll(): Unit =
-    try dirs.foreach(d => java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p)))
-    finally super.afterAll()
+  private def tmpDir(tag: String) = tempDir(s"graft-$tag").toString
 
   test("arrows → arrow-file → parquet → jsonl all agree") {
     // ticker table: JSON-safe types (jsonl can't carry binary/decimal

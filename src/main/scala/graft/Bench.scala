@@ -28,6 +28,45 @@ import org.apache.spark.sql.SparkSession
   * {"metric":"total","value":S,"unit":"sec","cells":N,"queries":{...},"sf":...}
   */
 object Bench {
+  /** How long the transport child may run before it counts as wedged. */
+  private val TransportDeadline = java.time.Duration.ofMinutes(20)
+
+  /** Waits up to `deadline` for `proc` to exit, reading its stdout on a
+    * thread of its own (a filled pipe would block the child). Returns the
+    * exit code, or None when the deadline passed: the child's threads are
+    * then dumped to stderr and the child destroyed. Either way the stdout
+    * lines read so far come back too. */
+  private[graft] def awaitChild(proc: Process, deadline: java.time.Duration)
+      : (Option[Int], Seq[String]) = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() =>
+      try scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8")
+        .getLines().foreach(lines.add)
+      catch { case _: java.io.IOException => () }, "bench-child-stdout")
+    reader.setDaemon(true)
+    reader.start()
+    val exited = proc.waitFor(deadline.toMillis, java.util.concurrent.TimeUnit.MILLISECONDS)
+    if (!exited) {
+      dumpThreads(proc.pid())
+      proc.destroyForcibly().waitFor()
+    }
+    reader.join(10000)
+    (if (exited) Some(proc.exitValue()) else None, lines.asScala.toSeq)
+  }
+
+  /** `jcmd <pid> Thread.print` to stderr, bounded to 30 s. */
+  private def dumpThreads(pid: Long): Unit = try {
+    val jcmd = java.nio.file.Paths.get(sys.props("java.home"), "bin", "jcmd").toString
+    val p = new ProcessBuilder(jcmd, pid.toString, "Thread.print").redirectErrorStream(true).start()
+    val pump = new Thread(() =>
+      try p.getInputStream.transferTo(System.err)
+      catch { case _: java.io.IOException => () }, "bench-jcmd")
+    pump.setDaemon(true)
+    pump.start()
+    if (!p.waitFor(30, java.util.concurrent.TimeUnit.SECONDS)) p.destroyForcibly()
+    pump.join(1000)
+  } catch { case e: java.io.IOException => System.err.println(s"bench: no thread dump: $e") }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get("graft-bench")
@@ -70,6 +109,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val rss = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
 
     /** Between-cell checkpoint (r12 verdict #5: the driver box's bench
       * degraded late in the run — m23's reps grew [1.65→13.5 s] and the
@@ -126,13 +166,18 @@ object Bench {
       val pb = new ProcessBuilder(cmd)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT) // narration through
       System.err.println("bench: transport section (fresh JVM)")
-      val proc = pb.start()
-      // consume stdout LIVE (a filled pipe would deadlock the child)
-      val lines = scala.io.Source
-        .fromInputStream(proc.getInputStream, "UTF-8").getLines().toList
-      val exit = proc.waitFor()
-      require(exit == 0 && lines.contains("TRANSPORTDONE"),
-        s"transport subprocess failed: exit $exit, ${lines.takeRight(3)}")
+      val (exit, lines) = awaitChild(pb.start(), TransportDeadline)
+      exit match {
+        // a wedged child must not wedge the artifact: the cells it
+        // finished still count, the section is named as failed
+        case None =>
+          System.err.println(s"bench: transport section killed at its " +
+            s"${TransportDeadline.toMinutes}-minute deadline")
+          failed += "transport"
+        case Some(code) =>
+          require(code == 0 && lines.contains("TRANSPORTDONE"),
+            s"transport subprocess failed: exit $code, ${lines.takeRight(3)}")
+      }
       lines.foreach {
         case l if l.startsWith("TCELL ") =>
           val parts = l.split(" ")
@@ -188,6 +233,8 @@ object Bench {
     // the per-rep timings can only hint at. Same strip-the-prefix rule.
     val rj = rss.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     System.err.println(s"""rss {"rss_mb":$rj}""")
+    // sections that breached their deadline; same strip-the-prefix rule
+    System.err.println(failed.map("\"" + _ + "\"").mkString("failed {\"failed\":[", ",", "]}"))
     // The full per-cell map goes to stderr + disk. The STDOUT line must
     // stay under the driver's ~2000-byte tail capture: at 79 cells the
     // full map is ~2.5 KB and the capture decapitates the line

@@ -1,17 +1,35 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated TESTDATA star schema
-  * (see /root/repo/TESTDATA.md). One parquet file per table under the
-  * given scale-factor directory.
+  * (see TESTDATA.md). One parquet file per table under the given
+  * scale-factor directory.
+  *
+  * Each file's schema is inferred once per session and then supplied to
+  * every later read, so a load starts no schema-inference Spark job. The
+  * cache holds one entry per (session, path): the file's length, its
+  * modification time and the inferred schema. A file whose length or
+  * mtime no longer matches is inferred again and its entry replaced.
+  * Sessions are weak keys, and keyed separately because inference reads
+  * session confs (`spark.sql.legacy.parquet.nanosAsLong`).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  private final case class Inferred(length: Long, mtime: FileTime, schema: StructType)
+
+  private val schemas =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Inferred]]())
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // every operator reaches its input through here, so this is the one
@@ -20,7 +38,22 @@ object Tables {
     // session skipped GraftSession.get's registration and word_profile
     // failed to resolve in a query that hadn't registered explicitly
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val file = Paths.get(path)
+    // a directory or a missing path reads (and fails) as Spark's own
+    if (!Files.isRegularFile(file)) return spark.read.parquet(path)
+    val length = Files.size(file)
+    val mtime = Files.getLastModifiedTime(file)
+    val cached = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Inferred]())
+    val schema = Option(cached.get(path)) match {
+      case Some(e) if e.length == length && e.mtime == mtime => e.schema
+      case _ =>
+        // inferred outside any map lock: two racing loads may both infer
+        val s = spark.read.parquet(path).schema
+        cached.put(path, Inferred(length, mtime, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

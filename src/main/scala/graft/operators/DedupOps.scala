@@ -1548,8 +1548,7 @@ object DedupOps {
         val labels = clusterLabels(s, d)
         val q = Tables.documents(s, d)
           .transform(wordStats(words(col("text"))))
-          .withColumn("qm", floor(
-            quality(col("n"), col("sum_len"), col("stop_hits")) * 1000.0).cast("long"))
+          .withColumn("qm", qualityMilli(quality(col("n"), col("sum_len"), col("stop_hits"))))
           .select(col("doc_id"), col("n").cast("long").as("n_tokens"), col("qm"))
         labels.join(q, labels("src") === q("doc_id"))
           .withColumn("key", concat(lpad(col("qm").cast("string"), 7, "0"),
@@ -1729,8 +1728,7 @@ object DedupOps {
           .withColumn("h", unhex(md5(trim(col("text")))))
           .transform(wordStats(words(col("text"))))
           .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
-          .withColumn("band",
-            least(floor(col("quality") * 20.0).cast("int"), lit(19)))
+          .withColumn("band", qualityBand(col("quality")))
           .groupBy(col("h"))
           // all copies share the band (same text) — max is the identity
           .agg(max(col("band")).as("band"), count(lit(1)).as("n_copies"))

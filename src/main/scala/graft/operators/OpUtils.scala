@@ -83,6 +83,12 @@ object OpUtils {
       (stopHits.cast("double") / n) * 0.3 +
       least((sumLen.cast("double") / n) / 8.0, lit(1.0)) * 0.2
 
+  /** A [[quality]] score's 0.05-wide band 0..19 (1.0 falls in 19), INT. */
+  def qualityBand(q: Column): Column = least(floor(q * 20.0).cast("int"), lit(19))
+
+  /** A [[quality]] score in whole thousandths, floored, BIGINT. */
+  def qualityMilli(q: Column): Column = floor(q * 1000.0).cast("long")
+
   /** t12's Gopher rules over [[wordStats]]' fields and the document's
     * bigram hashes `g2`, in fail-mask bit order: (0) 50 <= words <=
     * 100000, (1) 3 <= mean word length <= 10, (2) at least 2 stopword

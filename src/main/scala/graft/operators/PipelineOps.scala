@@ -844,7 +844,7 @@ object PipelineOps {
             .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
             .groupBy(col("source"))
             .agg(sum(col("n")).as("avail"),
-              sum(floor(col("quality") * 1000.0).cast("long")).as("w_m")))
+              sum(qualityMilli(col("quality"))).as("w_m")))
         val tot = per.agg(sum(col("avail")).as("tot_avail"),
           sum(col("w_m")).as("q_tot"))
         // all products ride DECIMAL(38,0) (r8 ADVICE): budget×w_m and

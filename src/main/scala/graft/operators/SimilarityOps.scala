@@ -1992,8 +1992,7 @@ object SimilarityOps {
       (s, d) => {
         val q = Tables.documents(s, d)
           .transform(wordStats(words(col("text"))))
-          .withColumn("qm", floor(
-            quality(col("n"), col("sum_len"), col("stop_hits")) * 1000.0).cast("long"))
+          .withColumn("qm", qualityMilli(quality(col("n"), col("sum_len"), col("stop_hits"))))
           .select(col("doc_id"), col("n").cast("long").as("n_tokens"), col("qm"))
         Tables.embeddings(s, d).select(col("vec_id"), col("label"))
           .join(q, col("vec_id") === col("doc_id"))

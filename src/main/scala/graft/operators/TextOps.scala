@@ -86,8 +86,7 @@ object TextOps {
   private[graft] def qualityBands(docs: DataFrame): DataFrame =
     docs.transform(wordStats(words(col("text"))))
       .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
-      .withColumn("band",
-        least(floor(col("quality") * 20.0).cast("int"), lit(19)))
+      .withColumn("band", qualityBand(col("quality")))
       .groupBy(col("band"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("n_tokens"))
 

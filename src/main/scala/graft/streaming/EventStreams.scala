@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -36,6 +36,13 @@ object EventStreams {
   final case class SessionState(start: Long, last: Long, n: Int)
   final case class SessionOut(user_id: Long, n_events: Int, start_us: Long, dur_us: Long)
 
+  // Fixed contracts: session gap, how long a content hash is remembered,
+  // how far back a purchase looks for its view, HLL++ relative error.
+  private val SessionGapUs = 30L * 60 * 1000000
+  private val DedupHorizonMin = 10L
+  private val AttributionHorizon = "2 hours"
+  private val UniquesRsd = 0.05
+
   /** 5-minute tumbling-window counts by event type, 10-min watermark. */
   def tumblingCounts(events: DataFrame): DataFrame =
     events
@@ -50,12 +57,12 @@ object EventStreams {
     * row the moment an event's gap closes it. Requires events in
     * (us, event_id) order. */
   private def foldSessions(userId: Long, it: Iterator[Event], init: SessionState,
-      gapUs: Long, emit: SessionOut => Unit): SessionState = {
+      emit: SessionOut => Unit): SessionState = {
     var st = init
     it.foreach { e =>
       st match {
         case null => st = SessionState(e.us, e.us, 1)
-        case s if e.us - s.last > gapUs =>
+        case s if e.us - s.last > SessionGapUs =>
           emit(SessionOut(userId, s.n, s.start, s.last - s.start))
           st = SessionState(e.us, e.us, 1)
         case s => st = s.copy(last = e.us, n = s.n + 1)
@@ -77,8 +84,7 @@ object EventStreams {
     * an out-of-order event inside a batch would split a session, exactly
     * as it would if it arrived a micro-batch late. EventStreamsSpec
     * proves batch-equality under ordered replay. */
-  def sessionize(events: Dataset[Event], gapUs: Long = 30L * 60 * 1000000)
-      : Dataset[SessionOut] = {
+  def sessionize(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
@@ -86,7 +92,7 @@ object EventStreams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (userId: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
           val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-          val st = foldSessions(userId, it, state.getOption.orNull, gapUs, out += _)
+          val st = foldSessions(userId, it, state.getOption.orNull, out += _)
           if (st != null) state.update(st)
           out.iterator
       }
@@ -97,13 +103,12 @@ object EventStreams {
     * sort rides Spark's spill-backed shuffle sort, so no whole-group
     * heap buffer here either; the fold itself is the same O(1)-state
     * incremental pass as the streaming path. */
-  def residualSessions(events: Dataset[Event], gapUs: Long = 30L * 60 * 1000000)
-      : Dataset[SessionOut] = {
+  def residualSessions(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
       .flatMapSortedGroups(col("us"), col("event_id")) { (userId, it) =>
         val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-        val st = foldSessions(userId, it, null, gapUs, out += _)
+        val st = foldSessions(userId, it, null, out += _)
         if (st != null) out += SessionOut(userId, st.n, st.start, st.last - st.start)
         out.iterator
       }
@@ -116,11 +121,11 @@ object EventStreams {
     * watermark both bounds state AND defines the dedup contract
     * (duplicates farther apart than the horizon are re-emitted — the
     * only well-defined semantics for infinite streams). */
-  def dedupStream(docs: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def dedupStream(docs: DataFrame): DataFrame =
     docs
       .withColumn("h", md5(trim(col("text"))))
       .withColumn("ts", timestamp_micros(col("us")))
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", s"$DedupHorizonMin minutes")
       .dropDuplicatesWithinWatermark("h")
 
   /** Streaming ingest dedup against a STATIC corpus snapshot — the
@@ -216,15 +221,11 @@ object EventStreams {
     * as [[sessionize]]; gopher/corpus flags are text-determined, so
     * every member of a hash group carries identical flags and the
     * kept/stream_dup split is the only order-dependent piece. */
-  def curationVerdictStream(docs: DataFrame, corpusHashes: DataFrame,
-      horizon: String = "10 minutes"): Dataset[DocVerdict] = {
+  def curationVerdictStream(docs: DataFrame, corpusHashes: DataFrame)
+      : Dataset[DocVerdict] = {
     import docs.sparkSession.implicits._
     import graft.operators.OpUtils.{gopherRules, wordStats, words}
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val horizonMs = horizon match {
-      case s if s.endsWith(" minutes") => s.stripSuffix(" minutes").trim.toLong * 60000L
-      case s => s.trim.toLong
-    }
     val ws = col("ws")
     val scored = docs
       .withColumn("ws", words(col("text")))
@@ -238,7 +239,7 @@ object EventStreams {
         hex(col("h")).as("hh"),
         col("gopher_fail"),
         coalesce(col("cd"), lit(false)).as("corpus_dup"))
-      .withWatermark("ts", horizon)
+      .withWatermark("ts", s"$DedupHorizonMin minutes")
       .as[ScoredDoc]
     scored.groupByKey(_.hh)
       .flatMapGroupsWithState[Boolean, DocVerdict](
@@ -260,7 +261,7 @@ object EventStreams {
             }
             if (seen) {
               state.update(true)
-              state.setTimeoutTimestamp(maxUs / 1000 + horizonMs)
+              state.setTimeoutTimestamp(maxUs / 1000 + DedupHorizonMin * 60000)
             }
             out.iterator
           }
@@ -331,28 +332,34 @@ object EventStreams {
     * join (append mode finalizes a purchase's row once the watermark
     * passes its 1-minute window) — the multi-stateful-operator shape.
     */
-  def asofStream(events: DataFrame, horizon: String = "2 hours"): DataFrame = {
-    val base = events.withColumn("ts", timestamp_micros(col("us")))
-    val views = base.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"), col("us").as("view_us"))
-      .withWatermark("v_ts", horizon)
-    val purchases = base.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("p_ts"), col("us").as("purchase_us"))
-      .withWatermark("p_ts", horizon)
-    purchases.join(views,
-        col("v_user") === col("user_id") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") >= col("p_ts") - expr(s"interval $horizon") &&
-          (col("v_ts") < col("p_ts") || col("view_id") < col("purchase_id")),
-        "inner")
-      .groupBy(window(col("p_ts"), "1 minute"), col("purchase_id"),
-        col("user_id"), col("purchase_us"))
+  def asofStream(events: DataFrame): DataFrame =
+    purchaseViews(events, "inner")
       .agg(max(struct(col("view_us"), col("view_id"))).as("best"))
       .select(col("purchase_id"), col("user_id"), col("purchase_us"),
         col("best.view_id").as("last_view_id"),
         (col("purchase_us") - col("best.view_us")).as("gap_us"))
+
+  /** Each purchase `joinType`-joined to its user's earlier views inside
+    * the horizon, grouped per purchase in 1-minute windows: the body
+    * [[asofStream]] and [[attributionStream]] share. */
+  private def purchaseViews(events: DataFrame, joinType: String): RelationalGroupedDataset = {
+    val base = events.withColumn("ts", timestamp_micros(col("us")))
+    val views = base.filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
+        col("ts").as("v_ts"), col("us").as("view_us"))
+      .withWatermark("v_ts", AttributionHorizon)
+    val purchases = base.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("p_ts"), col("us").as("purchase_us"))
+      .withWatermark("p_ts", AttributionHorizon)
+    purchases.join(views,
+        col("v_user") === col("user_id") &&
+          col("v_ts") <= col("p_ts") &&
+          col("v_ts") >= col("p_ts") - expr(s"interval $AttributionHorizon") &&
+          (col("v_ts") < col("p_ts") || col("view_id") < col("purchase_id")),
+        joinType)
+      .groupBy(window(col("p_ts"), "1 minute"), col("purchase_id"),
+        col("user_id"), col("purchase_us"))
   }
 
   /** Streaming LEFT-OUTER attribution — the semantics asofStream's
@@ -368,24 +375,8 @@ object EventStreams {
     * finalized a window past the watermark. EventStreamsSpec replays
     * the corpus and checks every purchase against the batch q21 twin
     * under the horizon contract. */
-  def attributionStream(events: DataFrame, horizon: String = "2 hours"): DataFrame = {
-    val base = events.withColumn("ts", timestamp_micros(col("us")))
-    val views = base.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"), col("us").as("view_us"))
-      .withWatermark("v_ts", horizon)
-    val purchases = base.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("p_ts"), col("us").as("purchase_us"))
-      .withWatermark("p_ts", horizon)
-    purchases.join(views,
-        col("v_user") === col("user_id") &&
-          col("v_ts") <= col("p_ts") &&
-          col("v_ts") >= col("p_ts") - expr(s"interval $horizon") &&
-          (col("v_ts") < col("p_ts") || col("view_id") < col("purchase_id")),
-        "leftOuter")
-      .groupBy(window(col("p_ts"), "1 minute"), col("purchase_id"),
-        col("user_id"), col("purchase_us"))
+  def attributionStream(events: DataFrame): DataFrame =
+    purchaseViews(events, "leftOuter")
       .agg(count(col("view_id")).as("n_views"),
         max(struct(col("view_us"), col("view_id"))).as("best"))
       .select(col("purchase_id"), col("user_id"), col("purchase_us"),
@@ -393,7 +384,6 @@ object EventStreams {
         when(col("n_views") > 0, col("best.view_id")).as("last_view_id"),
         when(col("n_views") > 0, col("purchase_us") - col("best.view_us"))
           .as("gap_us"))
-  }
 
   final case class LatestState(us: Long, eventId: Long, eventType: String,
       value: Double, n: Long)
@@ -449,12 +439,12 @@ object EventStreams {
     * infinite stream). 10-min watermark finalizes windows. The spec
     * applies the q34 move: replay vs the batch EXACT distinct and
     * assert the documented HLL++ relative-error envelope. */
-  def windowedUniques(events: DataFrame, rsd: Double = 0.05): DataFrame =
+  def windowedUniques(events: DataFrame): DataFrame =
     events
       .withColumn("ts", timestamp_micros(col("us")))
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("approx_users"),
+      .agg(approx_count_distinct(col("user_id"), UniquesRsd).as("approx_users"),
         count(lit(1)).as("n_events"))
       .select(col("window.start").as("win_start"),
         col("approx_users"), col("n_events"))

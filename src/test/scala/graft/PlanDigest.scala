@@ -16,22 +16,27 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * With `planDir`, each query's canonical plan text is also written to
   * `planDir/<name>.txt`, so a digest that moved can be diffed.
   *
-  * Two things would make an unchanged query's digest vary between runs,
-  * and both are neutralised here:
+  * Three things would make an unchanged query's digest vary between runs,
+  * and all three are neutralised here:
   *   - Spark orders the groups of several DISTINCT aggregates by a hash
   *     of their expression ids, so the ids a query gets must not depend
   *     on how many the queries before it used: each query's ids start
   *     at a fixed base (the counter only ever moves forward);
-  *   - q52's bucketed tables carry the JVM's pid in their names.
+  *   - q52's bucketed tables carry the JVM's pid in their names;
+  *   - a physical plan embedded in a persisted store's `InMemoryRelation`
+  *     prints `[plan_id=N]` from a global counter, which moves with the
+  *     number of plans the JVM built before the query.
   */
 object PlanDigest {
 
   private val pidSuffix = s"_${ProcessHandle.current().pid()}\\b"
 
-  /** The full plan tree (no field truncation) minus expression ids. */
+  /** The full plan tree (no field truncation) minus expression ids and
+    * physical plan ids. */
   def canonical(plan: LogicalPlan): String =
     plan.treeString(verbose = true, addSuffix = false, maxFields = Int.MaxValue)
       .replaceAll("#\\d+", "")
+      .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=<n>]")
       .replaceAll(pidSuffix, "_<pid>")
 
   /** Spark's global expression-id counter. */

@@ -226,7 +226,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val horizonUs = 2L * 3600 * 1000000
 
     val input = MemoryStream[EventStreams.Event]
-    val query = EventStreams.asofStream(input.toDF(), "2 hours")
+    val query = EventStreams.asofStream(input.toDF())
       .writeStream.outputMode("append")
       .format("memory").queryName("asof_out").start()
 
@@ -271,7 +271,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val horizonUs = 2L * 3600 * 1000000
 
     val input = MemoryStream[EventStreams.Event]
-    val query = EventStreams.attributionStream(input.toDF(), "2 hours")
+    val query = EventStreams.attributionStream(input.toDF())
       .writeStream.outputMode("append")
       .format("memory").queryName("attr_out").start()
 

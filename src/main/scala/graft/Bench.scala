@@ -107,6 +107,10 @@ object Bench {
     }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    /** One stderr line as each query rep starts: a run that stalls
+      * names the query and the rep it stalled in. */
+    def heartbeat(name: String, rep: Int): Unit =
+      System.err.println(s"bench: $name rep $rep/$reps")
     val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val rss = scala.collection.mutable.LinkedHashMap[String, Long]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
@@ -194,7 +198,7 @@ object Bench {
       // tail identifies the victim without a reproduction session (the
       // r6 crash surfaced as a bare stack with no query name)
       System.err.println(s"bench: $name")
-      runs(name) = (1 to reps).map(_ => timed(mat(fns(name)(spark, sfDir))))
+      runs(name) = (1 to reps).map { i => heartbeat(name, i); timed(mat(fns(name)(spark, sfDir))) }
       checkpoint(name)
     }
 
@@ -205,7 +209,8 @@ object Bench {
     // it never perturbs d08/d11/d13/d15's warm timings.
     locally {
       System.err.println("bench: d08_substring_dedup_cold")
-      runs("d08_substring_dedup_cold") = (1 to reps).map { _ =>
+      runs("d08_substring_dedup_cold") = (1 to reps).map { i =>
+        heartbeat("d08_substring_dedup_cold", i)
         graft.operators.DedupOps.invalidateGram8Store(spark, sfDir)
         timed(mat(fns("d08_substring_dedup")(spark, sfDir)))
       }

@@ -11,7 +11,7 @@ import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.{ListVector, StructVector}
-import org.apache.arrow.vector.compression.CompressionUtil
+import org.apache.arrow.vector.compression.{CompressionCodec, CompressionUtil, NoCompressionCodec}
 import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ASchema}
@@ -57,19 +57,28 @@ object ArrowBridge {
 
   // =================== write: InternalRow -> IPC ===================
 
-  /** Driver-side InternalRow iterator over a DataFrame, partition at a
-    * time. The `.copy()` is load-bearing: whole-stage codegen reuses one
-    * UnsafeRow buffer, and local-mode collection skips the serialization
-    * that would otherwise snapshot it. */
-  def internalRows(df: org.apache.spark.sql.DataFrame): Iterator[InternalRow] =
-    df.queryExecution.toRdd.map(_.copy()).toLocalIterator
+  /** The one encoder of a relayed stream: [[writeDeltaDict]] over
+    * `deltaDictCols` when there are any, else [[write]] with `opts`.
+    * Returns (rows, batches). */
+  private def encode(schema: StructType, rows: Iterator[InternalRow], out: OutputStream,
+      opts: WriteOptions, deltaDictCols: Seq[String]): (Long, Long) =
+    if (deltaDictCols.isEmpty) write(schema, rows, out, opts)
+    else {
+      val (r, b, _) = writeDeltaDict(schema, rows, out, deltaDictCols, opts.batchSize, opts.codec)
+      (r, b)
+    }
 
-  /** The serialized schema message of an IPC stream with these options —
-    * also the byte prefix of every per-partition stream, which is what
-    * makes executor-side serialization concatenable. */
-  def schemaBytes(schema: StructType, opts: WriteOptions = WriteOptions()): Array[Byte] = {
+  /** The header of a [[writeParallel]] stream with these options: its
+    * schema message, which is what the encoder writes for no rows minus
+    * EOS. It is also the byte prefix of every per-partition stream, which
+    * is what makes executor-side serialization concatenable. No
+    * dictionary message is in it: arrow-java's writer emits dictionaries
+    * with the first batch (`ArrowWriter.writeBatch`), and a delta stream
+    * emits them as values appear. */
+  def schemaBytes(schema: StructType, opts: WriteOptions = WriteOptions(),
+      deltaDictCols: Seq[String] = Nil): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    write(schema, Iterator.empty, bos, opts)
+    encode(schema, Iterator.empty, bos, opts, deltaDictCols)
     val all = bos.toByteArray
     java.util.Arrays.copyOfRange(all, 0, all.length - EosBytes.length)
   }
@@ -79,7 +88,7 @@ object ArrowBridge {
 
   /** Parallel DataFrame → IPC stream: each partition serializes (and,
     * with `zstd`, compresses) its own batches inside its Spark task
-    * (all cores busy); the driver relays [schema][first dictionary]
+    * (all cores busy); the driver relays [schema][dictionaries]
     * [partition batches…][EOS] in partition order, one Spark job per
     * group of up to [[RelayWindow]] partitions with two groups in
     * flight (see [[PartitionStreamer]] for how groups are sized) —
@@ -88,39 +97,47 @@ object ArrowBridge {
     * ~10 MB chunks. The schema goes out before any partition finishes,
     * so a client sees first bytes at once.
     *
-    * Dictionary streams stay parallel: the value set is fixed at
-    * registration, so every partition emits IDENTICAL dictionary
-    * messages right after its schema; the relay keeps the first
-    * partition's and drops the rest, preserving one dictionary per
-    * stream on the wire (the reference's shape).
+    * Dictionary streams stay parallel. With `opts.dictColumns` the
+    * value set is fixed at registration, so every partition emits
+    * IDENTICAL dictionary messages right after its schema; the relay
+    * keeps the first partition's and drops the rest, preserving one
+    * dictionary per stream on the wire (the reference's shape). With
+    * `deltaDictCols` each partition runs [[writeDeltaDict]] over its
+    * own rows, so it opens with its own full (non-delta) dictionary
+    * batch, which replaces the previous partition's on the reader (the
+    * IPC stream format allows replacement; arrow-java's
+    * `ArrowReader.loadDictionary` replaces on a non-delta batch), and
+    * its delta batches follow among its record batches; the relay keeps
+    * every partition's dictionary messages.
     *
     * With `zstd` the HTTP-level zstd coding is done as INDEPENDENT
-    * zstd frames — one for the schema, one for the dictionary, one per
-    * non-empty partition chunk, one for EOS. Concatenated frames are
-    * standard zstd (the CLI produces them for multi-file input) and any
-    * zstd decoder reads them as one stream, so the decompressed bytes
-    * equal the uncoded output. (libzstd's own MT encoder,
-    * ZstdOutputStream.setWorkers, intermittently stalled serves 20–80 s
-    * under concurrent decode load; one-shot per-task frames share no
-    * native context. Ratio cost of per-chunk frames is < 0.5% on the
-    * ticker payload.)
+    * zstd frames — one for the schema, one per partition dictionary
+    * kept, one per non-empty partition chunk, one for EOS.
+    * Concatenated frames are standard zstd (the CLI produces them for
+    * multi-file input) and any zstd decoder reads them as one stream,
+    * so the decompressed bytes equal the uncoded output. (libzstd's own
+    * multi-threaded stream encoder intermittently stalled serves
+    * 20–80 s under concurrent decode load; one-shot per-task frames
+    * share no native context. Ratio cost of per-chunk frames is < 0.5%
+    * on the ticker payload.)
     *
     * Returns (rows, batches, uncoded stream bytes). The relay writes
     * the IPC stream format only.
     */
   def writeParallel(df: org.apache.spark.sql.DataFrame, out: OutputStream,
       opts: WriteOptions = WriteOptions(),
-      zstd: Boolean = false): (Long, Long, Long) = {
+      zstd: Boolean = false,
+      deltaDictCols: Seq[String] = Nil): (Long, Long, Long) = {
     require(!opts.fileFormat, "writeParallel writes the IPC stream format only")
     def code(bytes: Array[Byte]): Array[Byte] =
       if (zstd) com.github.luben.zstd.Zstd.compress(bytes, ZstdLevel) else bytes
-    val header = schemaBytes(df.schema, opts)
+    val header = schemaBytes(df.schema, opts, deltaDictCols)
     out.write(code(header))
     out.flush()
     val schema = df.schema
     val parts = df.queryExecution.toRdd.mapPartitions { it =>
       val bos = new java.io.ByteArrayOutputStream(1 << 20)
-      val (r, b) = write(schema, it, bos, opts)
+      val (r, b) = encode(schema, it, bos, opts, deltaDictCols)
       val all = bos.toByteArray
       // [schema][dictionaries…][batches…][EOS] → (dictionaries, batches)
       val frames = IpcFrames.scan(all)
@@ -132,13 +149,14 @@ object ArrowBridge {
       def coded(raw: Array[Byte]) = if (raw.isEmpty) raw else code(raw)
       Iterator.single(RelayPart(coded(dict), dict.length, coded(batches), batches.length, r, b))
     }
+    val everyDict = deltaDictCols.nonEmpty
     var rows = 0L
     var batches = 0L
     var bytes = header.length.toLong
     var dictSent = false
     PartitionStreamer.foreachOrdered(parts, RelayWindow,
         (p: RelayPart) => p.dict.length.toLong + p.batches.length) { p =>
-      if (!dictSent && p.dictLen > 0) {
+      if (p.dictLen > 0 && (everyDict || !dictSent)) {
         dictSent = true
         out.write(p.dict)
         bytes += p.dictLen
@@ -229,17 +247,6 @@ object ArrowBridge {
     } finally w.close()
   }
 
-  /** Wire schema bytes of a [[writeDeltaDict]] stream: the schema
-    * message ONLY — unlike the one-dict-per-stream path, no dictionary
-    * batch precedes the first data (dictionaries appear when values
-    * do), so a schema probe of a delta stream is exactly this prefix. */
-  def deltaDictSchemaBytes(schema: StructType, dictCols: Seq[String]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    writeDeltaDict(schema, Iterator.empty, bos, dictCols)
-    java.util.Arrays.copyOfRange(bos.toByteArray, 0,
-      bos.size() - EosBytes.length)
-  }
-
   /** Single-pass dictionary-DELTA stream writer: encodes `dictCols`
     * (string columns) against dictionaries that GROW as values appear —
     * the first values emit as a full dictionary batch, later batches
@@ -257,10 +264,14 @@ object ArrowBridge {
     * evolution of dictionary streams (format/Columnar.rst, dictionary
     * messages).
     *
+    * `codec` is the IPC body codec (None | Some("lz4") | Some("zstd")),
+    * applied to the dictionary batches and the record batches alike, as
+    * arrow-java's own writer does.
+    *
     * Returns (rows, batches, final dictionary size per column). */
   def writeDeltaDict(schema: StructType, rows: Iterator[InternalRow],
-      out: OutputStream, dictCols: Seq[String], batchSize: Int = 4096)
-      : (Long, Long, Map[String, Int]) = {
+      out: OutputStream, dictCols: Seq[String], batchSize: Int = 4096,
+      codec: Option[String] = None): (Long, Long, Map[String, Int]) = {
     import org.apache.arrow.vector.ipc.WriteChannel
     import org.apache.arrow.vector.ipc.message.{ArrowDictionaryBatch, IpcOption, MessageSerializer}
     import org.apache.arrow.vector.util.DictionaryUtility
@@ -268,6 +279,9 @@ object ArrowBridge {
     dictCols.foreach(c => require(
       schema(c).dataType == StringType, s"dictionary column $c must be string"))
     val alloc = newAllocator("delta-dict-write")
+    val bodyCodec = codec.fold[CompressionCodec](NoCompressionCodec.INSTANCE)(c =>
+      CommonsCompressionFactory.INSTANCE.createCodec(codecType(c)))
+    def unload(root: VectorSchemaRoot) = new VectorUnloader(root, true, bodyCodec, true).getRecordBatch
     val dictIds = dictCols.zipWithIndex.toMap
     def encoding(c: String) =
       new DictionaryEncoding(dictIds(c).toLong, false, new ArrowType.Int(32, true))
@@ -341,7 +355,7 @@ object ArrowBridge {
             dv.setValueCount(pend.size)
             val droot = new VectorSchemaRoot(
               List(dv.getField).asJava, List[FieldVector](dv).asJava, pend.size)
-            val rb = new VectorUnloader(droot).getRecordBatch
+            val rb = unload(droot)
             val db = new ArrowDictionaryBatch(dictIds(c).toLong, rb,
               /* isDelta = */ emittedOnce.contains(c))
             try MessageSerializer.serialize(wch, db) finally db.close()
@@ -351,7 +365,7 @@ object ArrowBridge {
           }
         }
         vroot.setRowCount(n)
-        val rb = new VectorUnloader(vroot).getRecordBatch
+        val rb = unload(vroot)
         try MessageSerializer.serialize(wch, rb) finally rb.close()
         vroot.allocateNew() // reset buffers for the next fill
         rowsN += n

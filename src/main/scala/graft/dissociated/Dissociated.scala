@@ -1,11 +1,9 @@
 package graft.dissociated
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, IOException, InputStream, OutputStream}
+import java.io.{DataInputStream, DataOutputStream, EOFException, IOException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
 import scala.collection.mutable
-
-import org.apache.spark.sql.DataFrame
 
 import graft.arrow.{ArrowBridge, IpcFrames}
 
@@ -47,30 +45,23 @@ object Dissociated {
   val TypeSchema: Byte = 1
   val TypeBatch: Byte = 2
 
-  final case class Split(seq: Int, metadata: Array[Byte], body: Array[Byte])
-
-  /** Serialize a DataFrame into (schema message, per-batch splits). */
-  def split(df: DataFrame, batchSize: Int = 4096): (Array[Byte], Vector[Split]) = {
-    val full = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), full,
-      ArrowBridge.WriteOptions(batchSize = batchSize))
-    splitStream(full.toByteArray)
-  }
-
-  /** Serve the metadata channel from spilled `.arrows` part files (one
-    * per partition, name-sorted): reads ONLY the encapsulation headers —
-    * body regions are `skip`ped (an lseek on a file stream, no read, no
-    * allocation), since reassembly can't emit a batch until its META
-    * frame arrives and a metadata channel that read every body would
-    * gate it on a whole-dataset pass. The query that produced the spill
-    * is NOT re-run, so meta and body channels built from the same files
-    * are consistent by construction. Returns the batch count. */
-  def streamMetadataFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream): Int = {
+  /** Writes the metadata channel of the IPC streams `parts` opens, one
+    * after another (the server's are its spilled `.arrows` part files,
+    * one per partition, name-sorted): reads ONLY the encapsulation
+    * headers — body regions are `skip`ped (an lseek on a file stream, no
+    * read, no allocation), since reassembly can't emit a batch until its
+    * META frame arrives and a metadata channel that read every body
+    * would gate it on a whole-dataset pass. The query that produced the
+    * spill is NOT re-run, so meta and body channels built from the same
+    * files are consistent by construction. The first part's schema is
+    * the channel's. Each part is opened when its turn comes and closed
+    * after it. Returns the batch count. */
+  def streamMetadata(parts: Seq[() => IpcFrames.Reader], out: OutputStream): Int = {
     val d = new DataOutputStream(out)
     var schemaSent = false
     var seq = 0
-    paths.foreach { p =>
-      val frames = IpcFrames.open(p)
+    parts.foreach { open =>
+      val frames = open()
       try frames.foreach { f =>
         if (!f.isSchema) { seq += 1; writeMetaFrame(d, TypeBatch, seq, f.framedHeader) }
         else if (!schemaSent) { writeMetaFrame(d, TypeSchema, 0, f.framedHeader); schemaSent = true }
@@ -81,18 +72,19 @@ object Dissociated {
     seq
   }
 
-  /** Body frames per delivery window of [[streamBodyFromFiles]]. */
+  /** Body frames per delivery window of [[streamBody]]. */
   private val ShuffleWindow = 8
 
-  /** Serve the body channel from the same spilled part files; delivery
-    * is permuted within `ShuffleWindow`-frame windows to exercise
-    * out-of-order reassembly (reference transport tags are unordered).
+  /** Writes the body channel of the same parts as [[streamMetadata]];
+    * delivery is permuted within `ShuffleWindow`-frame windows to
+    * exercise out-of-order reassembly (reference transport tags are
+    * unordered).
     *
     * Bodies are read into a ring of `ShuffleWindow` grow-only reused
     * buffers — at most window-many bodies are ever live and no body
     * array is allocated per batch after warm-up (a fresh array per batch
     * is the whole dataset volume in per-request allocation churn). */
-  def streamBodyFromFiles(paths: Seq[java.nio.file.Path], out: OutputStream): Unit = {
+  def streamBody(parts: Seq[() => IpcFrames.Reader], out: OutputStream): Unit = {
     val d = new DataOutputStream(out)
     var seq = 0
     // ring slot: (seq, buffer, true body length)
@@ -108,8 +100,8 @@ object Dissociated {
       }
       filled = 0
     }
-    paths.foreach { p =>
-      val frames = IpcFrames.open(p)
+    parts.foreach { open =>
+      val frames = open()
       try frames.foreach { f =>
         if (!f.isSchema) {
           val bodyLen = f.bodyLength.toInt
@@ -125,20 +117,6 @@ object Dissociated {
     }
     flushWindow()
     d.flush()
-  }
-
-  /** Split a serialized Arrow IPC stream into schema + batch messages,
-    * each batch cut at its body offset. */
-  def splitStream(stream: Array[Byte]): (Array[Byte], Vector[Split]) = {
-    val frames = IpcFrames.reader(new ByteArrayInputStream(stream), stream.length)
-    var schema: Array[Byte] = null
-    val splits = Vector.newBuilder[Split]
-    var seq = 0
-    frames.foreach { f =>
-      if (f.isSchema) schema = f.framedHeader
-      else { seq += 1; splits += Split(seq, f.framedHeader, frames.body()) }
-    }
-    (schema, splits.result())
   }
 
   // ---------------- channel framing ----------------
@@ -161,38 +139,18 @@ object Dissociated {
     out.write(bytes)
   }
 
-  def writeBodyFrame(out: DataOutputStream, seq: Int, bytes: Array[Byte]): Unit =
-    writeBodyFrameRef(out, seq, bytes, bytes.length)
-
-  /** [[writeBodyFrame]] over a reused buffer prefix. */
+  /** Writes body frame `seq` of the first `len` bytes of `bytes`. */
   def writeBodyFrameRef(out: DataOutputStream, seq: Int,
       bytes: Array[Byte], len: Int): Unit = {
     val pad = (padTo8(len) - len).toInt
     out.writeInt(Integer.reverseBytes(seq))
     out.writeInt(Integer.reverseBytes(len + pad))
     out.write(bytes, 0, len)
-    if (pad > 0) out.write(new Array[Byte](pad), 0, pad)
+    if (pad > 0) out.write(Padding, 0, pad)
   }
 
-  /** Serve the metadata stream of a pre-split dataset. */
-  def writeMetadataChannel(out: OutputStream, schema: Array[Byte],
-      splits: Seq[Split]): Unit = {
-    val d = new DataOutputStream(out)
-    writeMetaFrame(d, TypeSchema, 0, schema)
-    splits.foreach(s => writeMetaFrame(d, TypeBatch, s.seq, s.metadata))
-    writeMetaFrame(d, TypeEos, splits.size, Array.empty)
-    d.flush()
-  }
-
-  /** Serve the body stream; `order` permutes delivery to exercise
-    * out-of-order transfer (reference tags are unordered by design). */
-  def writeBodyChannel(out: OutputStream, splits: Seq[Split],
-      order: Seq[Int] = Nil): Unit = {
-    val d = new DataOutputStream(out)
-    val seq = if (order.nonEmpty) order.map(i => splits(i)) else splits
-    seq.foreach(s => writeBodyFrame(d, s.seq, s.body))
-    d.flush()
-  }
+  /** Zeros a body frame is padded with: at most 7 of them. */
+  private val Padding = new Array[Byte](7)
 
   // ---------------- client: reassembly ----------------
 

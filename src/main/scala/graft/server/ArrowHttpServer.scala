@@ -22,7 +22,11 @@ import graft.dissociated.Dissociated
   *                           schema, one for the dictionary of a
   *                           dictionary-encoded dataset, one per
   *                           non-empty partition chunk, one for EOS —
-  *                           any zstd decoder reads them as one stream
+  *                           any zstd decoder reads them as one stream.
+  *                           For a delta-dictionary dataset, each
+  *                           partition's full dictionaries are one frame
+  *                           ahead of that partition's chunk, and its
+  *                           delta dictionaries travel inside the chunk
   *   GET  /multipart/<name>  multipart/mixed: JSON + Arrow + footnotes
   *   GET  /                  indirect JSON listing of /files artifacts
   *   GET  /files/<name>      static .arrows artifact, Content-Length +
@@ -51,7 +55,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   private val files = scala.collection.concurrent.TrieMap[String, java.nio.file.Path]()
   /** Per-dataset dictionary-encoded columns (value sets computed at
     * registration — one dictionary per stream, the reference's
-    * USE_DICTIONARY_ENCODING behavior, get_compressed/server.py:50-52). */
+    * USE_DICTIONARY_ENCODING behavior, get_compressed/server.py:50-52);
+    * the relay keeps the first partition's dictionary message. */
   private val dictCols = scala.collection.concurrent.TrieMap[String, Map[String, Array[String]]]()
 
   // reference preference order zstd > br > gzip (server.py:444-449);
@@ -94,7 +99,9 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   }
 
   /** Register with dictionary encoding on the given string columns;
-    * their distinct values are collected once, eagerly. The collect is
+    * their distinct values are collected once, eagerly, and every serve
+    * of `/q/` carries them as the one dictionary message of its stream,
+    * written ahead of the first record batch. The collect is
     * CAPPED at [[ArrowHttpServer.MaxDictValues]] per column: an
     * up-front dictionary only makes sense for genuinely low-cardinality
     * columns (the reference's case is 60 tickers), and an unguarded
@@ -115,12 +122,17 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     datasets.put(name, () => df)
   }
 
-  /** Per-dataset DELTA-dictionary columns: encoded single-pass against
-    * dictionaries that grow as values appear — no distinct() pre-scan,
-    * no up-front value collection (the scale shape for serving streams
-    * whose value set is unknown; see ArrowBridge.writeDeltaDict). */
+  /** Per-dataset DELTA-dictionary columns. */
   private val deltaDictCols = scala.collection.concurrent.TrieMap[String, Seq[String]]()
 
+  /** Register with delta-dictionary encoding on the given string
+    * columns: no distinct() pre-scan, no up-front value collection (the
+    * scale shape for serving streams whose value set is unknown). A
+    * `/q/` serve goes through the parallel relay like any other: each
+    * partition encodes its own rows with `ArrowBridge.writeDeltaDict`,
+    * so it opens with a full dictionary of its first batch's values,
+    * which replaces the previous partition's, and adds delta batches as
+    * new values appear. Every coding and IPC codec applies. */
   def registerDictDelta(name: String, df: => DataFrame, columns: Seq[String]): Unit = {
     deltaDictCols.put(name, columns)
     register(name, df)
@@ -151,20 +163,16 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
         case Right(strategy) =>
           exchange.setHeader("Content-Type", strategy.contentType)
           exchange.setHeader("Content-Disposition", s"""attachment; filename="$name.arrows"""")
+          val opts = ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
+            dictColumns = dictCols.getOrElse(name, Map.empty))
+          val delta = deltaDictCols.getOrElse(name, Nil)
           // schema-only probe: answer [schema][EOS] without running
           // the query (keeps DSv2 inferSchema from triggering a full
-          // serve that is then abandoned)
+          // serve that is then abandoned); the header is the relay's own
           if (exchange.requestHeader("X-Arrow-Schema-Only").isDefined) {
             exchange.sendResponseHeaders(200, 0)
             val out = exchange.responseBody
-            // must reflect the dictionary layout of the real stream:
-            // one-dict streams prefix an (empty-tolerant) dictionary
-            // message; delta streams are schema-only until data flows
-            out.write(deltaDictCols.get(name) match {
-              case Some(cols) => ArrowBridge.deltaDictSchemaBytes(dfFn().schema, cols)
-              case None => ArrowBridge.schemaBytes(dfFn().schema,
-                ArrowBridge.WriteOptions(dictColumns = dictCols.getOrElse(name, Map.empty)))
-            })
+            out.write(ArrowBridge.schemaBytes(dfFn().schema, opts, delta))
             out.write(ArrowBridge.EosBytes)
             out.close()
           } else {
@@ -172,36 +180,15 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
             exchange.sendResponseHeaders(200, 0) // 0 = chunked
             val sink = exchange.responseBody
             val df = dfFn()
-            // the parallel relay codes zstd as per-task frames
-            // (ArrowBridge.writeParallel); the delta-dict row loop
-            // keeps the single-threaded ZstdOutputStream
-            if (strategy.httpCoding.contains("zstd") &&
-                !deltaDictCols.contains(name)) {
-              try ArrowBridge.writeParallelZstd(df, sink,
-                ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
-                  dictColumns = dictCols.getOrElse(name, Map.empty)))
-              finally sink.close()
-            } else {
-              val out: OutputStream = strategy.httpCoding match {
-                case Some("gzip") => new java.util.zip.GZIPOutputStream(sink, true)
-                case Some("zstd") => new com.github.luben.zstd.ZstdOutputStream(sink)
-                case Some("br")   => new Brotli.BrotliStoredOutputStream(sink)
-                case _            => sink
-              }
-              try {
-                deltaDictCols.get(name) match {
-                  case Some(cols) =>
-                    // single-pass growing-dictionary encode (no IPC body
-                    // codec on this path; HTTP coding still applies)
-                    ArrowBridge.writeDeltaDict(df.schema,
-                      ArrowBridge.internalRows(df), out, cols)
-                  case None =>
-                    ArrowBridge.writeParallel(df, out,
-                      ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
-                        dictColumns = dictCols.getOrElse(name, Map.empty)))
-                }
-              } finally { out.close() }
+            // the relay codes zstd itself, as per-task frames
+            val out: OutputStream = strategy.httpCoding match {
+              case Some("gzip") => new java.util.zip.GZIPOutputStream(sink, true)
+              case Some("br")   => new Brotli.BrotliStoredOutputStream(sink)
+              case _            => sink
             }
+            try ArrowBridge.writeParallel(df, out, opts,
+              zstd = strategy.httpCoding.contains("zstd"), deltaDictCols = delta)
+            finally out.close()
           }
       }
     }
@@ -617,6 +604,10 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   private def bodyChannelLen(keys: Seq[String]): Long =
     keys.map(frameIndex(_).bodyTotal).sum
 
+  /** Openers of the frames of each spilled part, in order. */
+  private def partFrames(keys: Seq[String]): Seq[() => IpcFrames.Reader] =
+    keys.map(files(_)).map(p => () => IpcFrames.open(p))
+
   /** A dissociated channel endpoint over the spilled parts it addresses
     * (see [[dissocTarget]]). */
   private def dissocChannel(prefix: String)(
@@ -642,7 +633,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // writes (the meta channel makes ~4 small writes per batch).
   dissocChannel("/dissoc/meta/") { (exchange, keys) =>
     exchange.sendResponseHeaders(200, metaChannelLen(keys))
-    Dissociated.streamMetadataFromFiles(keys.map(files(_)), exchange.responseBody)
+    Dissociated.streamMetadata(partFrames(keys), exchange.responseBody)
   }
 
   // bodies are delivered out of order within windows of 8 (under the
@@ -653,7 +644,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       exchange.sendResponseHeaders(200, -1)
     } else {
       exchange.sendResponseHeaders(200, len)
-      Dissociated.streamBodyFromFiles(keys.map(files(_)), exchange.responseBody)
+      Dissociated.streamBody(partFrames(keys), exchange.responseBody)
     }
   }
 

@@ -16,7 +16,7 @@ class ArrowBridgeSpec extends AnyFunSuite {
   private def encode(df: DataFrame, opts: ArrowBridge.WriteOptions)
       : (Array[Byte], Long, Long) = {
     val out = new ByteArrayOutputStream()
-    val (nRows, nBatches) = ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out, opts)
+    val (nRows, nBatches) = ArrowBridge.write(df.schema, DriverRows.internalRows(df), out, opts)
     (out.toByteArray, nRows, nBatches)
   }
 
@@ -117,7 +117,7 @@ class ArrowBridgeSpec extends AnyFunSuite {
     val df = Generators.ticker(spark, 20000, 1)
     def bytesWith(o: ArrowBridge.WriteOptions): Int = {
       val out = new ByteArrayOutputStream()
-      ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out, o)
+      ArrowBridge.write(df.schema, DriverRows.internalRows(df), out, o)
       out.size()
     }
     val plain = bytesWith(ArrowBridge.WriteOptions())
@@ -131,7 +131,7 @@ class ArrowBridgeSpec extends AnyFunSuite {
   test("a value outside the registered dictionary fails naming the column and the value") {
     val df = spark.range(3).selectExpr("if(id = 2, 'ZZQX', 'AAPL') AS ticker", "id")
     val e = intercept[IllegalArgumentException] {
-      ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), new ByteArrayOutputStream(),
+      ArrowBridge.write(df.schema, DriverRows.internalRows(df), new ByteArrayOutputStream(),
         ArrowBridge.WriteOptions(dictColumns = Map("ticker" -> Array("AAPL", "MSFT"))))
     }
     assert(e.getMessage.contains("'ticker'") && e.getMessage.contains("'ZZQX'"), e.getMessage)
@@ -169,7 +169,7 @@ class ArrowBridgeSpec extends AnyFunSuite {
       .coalesce(1).sortWithinPartitions("id")
     val out = new ByteArrayOutputStream()
     val (nRows, nBatches, sizes) = ArrowBridge.writeDeltaDict(
-      df.schema, ArrowBridge.internalRows(df), out, Seq("cat"), batchSize = 4)
+      df.schema, DriverRows.internalRows(df), out, Seq("cat"), batchSize = 4)
     assert(nRows === 12 && nBatches === 3)
     assert(sizes === Map("cat" -> 4))
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, TempDirs}
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, IpcFrames}
 import graft.datagen.Generators
 import graft.server.ArrowHttpServer
 
@@ -16,26 +16,20 @@ class DissociatedSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.builder("dissoc-spec", "4").getOrCreate()
 
   test("split + shuffled reassembly is byte-identical to the plain stream") {
-    val df = Generators.ticker(spark, 5000, 2)
-    val plain = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), plain,
-      ArrowBridge.WriteOptions(batchSize = 512))
-    val (schema, splits) = Dissociated.splitStream(plain.toByteArray)
-    assert(splits.size === 10) // 5000/512 -> 9 full + 1 tail
+    val plain = Channels.plainStream(Generators.ticker(spark, 5000, 2), batchSize = 512)
+    assert(Channels.bodies(plain).size === 10) // 5000/512 -> 9 full + 1 tail
 
-    // metadata channel in order; bodies shuffled within a window
-    val metaCh = new ByteArrayOutputStream()
-    Dissociated.writeMetadataChannel(metaCh, schema, splits)
-    val bodyCh = new ByteArrayOutputStream()
-    val order = splits.indices.grouped(4).flatMap(_.reverse).toSeq
-    Dissociated.writeBodyChannel(bodyCh, splits, order)
+    // metadata channel in order; bodies reversed within the writer's
+    // windows of 8
+    val metaCh = Channels.metadata(plain)
+    val bodyCh = Channels.body(plain)
 
     val sink = new ByteArrayOutputStream()
     val (batches, _) = Dissociated.reassemble(
-      new ByteArrayInputStream(metaCh.toByteArray),
-      new ByteArrayInputStream(bodyCh.toByteArray), sink, maxPending = 8)
+      new ByteArrayInputStream(metaCh),
+      new ByteArrayInputStream(bodyCh), sink, maxPending = 8)
     assert(batches === 10)
-    assert(sink.toByteArray.toSeq === plain.toByteArray.toSeq)
+    assert(sink.toByteArray.toSeq === plain.toSeq)
 
     val res = ArrowBridge.read(new ByteArrayInputStream(sink.toByteArray))
     assert(res.rows.size === 5000)
@@ -55,8 +49,8 @@ class DissociatedSpec extends AnyFunSuite with TempDirs {
 
   test("streamed partition-wise channels reassemble to the full dataset") {
     // the channels batch per spilled partition (2 partitions x 2500
-    // rows here), unlike the cached split's global row loop — the
-    // contract is the decoded rows, not the batch layout
+    // rows here) — the contract is the decoded rows, not the batch
+    // layout
     val server = new ArrowHttpServer(spark)
     server.register("parts", Generators.ticker(spark, 5000, 2))
     server.start()
@@ -84,17 +78,15 @@ class DissociatedSpec extends AnyFunSuite with TempDirs {
   }
 
   test("reassemble: truncated body channel fails loudly, no deadlock") {
-    val df = Generators.ticker(spark, 5000, 2)
-    val (schema, splits) = Dissociated.split(df, batchSize = 512)
-    val metaCh = new ByteArrayOutputStream()
-    Dissociated.writeMetadataChannel(metaCh, schema, splits)
-    val bodyCh = new ByteArrayOutputStream()
-    Dissociated.writeBodyChannel(bodyCh, splits.dropRight(1)) // lose the tail
+    val plain = Channels.plainStream(Generators.ticker(spark, 5000, 2), batchSize = 512)
+    val metaCh = Channels.metadata(plain)
+    val bodies = Channels.bodies(plain)
+    val bodyCh = Channels.bodyChannel(bodies, bodies.indices.dropRight(1)) // lose the tail
     val sink = new ByteArrayOutputStream()
     val e = intercept[java.io.EOFException] {
       Dissociated.reassemble(
-        new ByteArrayInputStream(metaCh.toByteArray),
-        new ByteArrayInputStream(bodyCh.toByteArray), sink)
+        new ByteArrayInputStream(metaCh),
+        new ByteArrayInputStream(bodyCh), sink)
     }
     assert(e.getMessage.contains("truncated"))
   }
@@ -140,10 +132,11 @@ class DissociatedSpec extends AnyFunSuite with TempDirs {
     val parts = dir.toFile.listFiles().filter(_.getName.endsWith(".arrows"))
       .sortBy(_.getName).map(_.toPath).toVector
     assert(parts.size === 2)
+    val opens = parts.map(p => () => IpcFrames.open(p))
     val metaCh = new ByteArrayOutputStream()
-    val n = Dissociated.streamMetadataFromFiles(parts, metaCh)
+    val n = Dissociated.streamMetadata(opens, metaCh)
     val bodyCh = new ByteArrayOutputStream()
-    Dissociated.streamBodyFromFiles(parts, bodyCh)
+    Dissociated.streamBody(opens, bodyCh)
     val sink = new ByteArrayOutputStream()
     val (batches, _) = Dissociated.reassemble(
       new ByteArrayInputStream(metaCh.toByteArray),

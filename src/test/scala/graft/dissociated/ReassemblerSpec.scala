@@ -1,6 +1,6 @@
 package graft.dissociated
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, OutputStream}
+import java.io.{ByteArrayInputStream, EOFException, OutputStream}
 import java.lang.management.ManagementFactory
 
 import scala.concurrent.{Await, Future}
@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
-import graft.arrow.{ArrowBridge, IpcFrames}
+import graft.arrow.IpcFrames
 import graft.datagen.Generators
 
 /** [[Dissociated.Reassembler]] on truncated, corrupted and wrongly
@@ -21,30 +21,19 @@ import graft.datagen.Generators
 class ReassemblerSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("reassembler-spec", "4").getOrCreate()
 
-  /** DissociatedSpec's split: ticker(5000) in 10 batches of up to 512
-    * rows, the plain stream and its splits. */
-  private lazy val (plain, schema, splits) = {
-    val df = Generators.ticker(spark, 5000, 2)
-    val out = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out,
-      ArrowBridge.WriteOptions(batchSize = 512))
-    val (schema, splits) = Dissociated.splitStream(out.toByteArray)
-    assert(splits.size === 10)
-    (out.toByteArray, schema, splits)
-  }
-
-  private lazy val metaCh: Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    Dissociated.writeMetadataChannel(out, schema, splits)
-    out.toByteArray
+  /** DissociatedSpec's stream: ticker(5000) in 10 batches of up to 512
+    * rows, its metadata channel and its batch bodies. */
+  private lazy val plain = Channels.plainStream(Generators.ticker(spark, 5000, 2), batchSize = 512)
+  private lazy val metaCh: Array[Byte] = Channels.metadata(plain)
+  private lazy val bodies = {
+    val b = Channels.bodies(plain)
+    assert(b.size === 10)
+    b
   }
 
   /** Bodies in `order`, by default reversed within groups of 4. */
-  private def bodyCh(order: Seq[Int] = splits.indices.grouped(4).flatMap(_.reverse).toSeq): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    Dissociated.writeBodyChannel(out, splits, order)
-    out.toByteArray
-  }
+  private def bodyCh(order: Seq[Int] = bodies.indices.grouped(4).flatMap(_.reverse).toSeq): Array[Byte] =
+    Channels.bodyChannel(bodies, order)
 
   /** Compares what is written to it with `want`, storing nothing. */
   private final class Compare(want: Array[Byte]) extends OutputStream {
@@ -140,7 +129,7 @@ class ReassemblerSpec extends AnyFunSuite {
 
   test("a body beyond the window throws instead of blocking") {
     // all ten bodies reversed: batch 10 arrives while batch 1 is next
-    val reversed = bodyCh(splits.indices.reverse)
+    val reversed = bodyCh(bodies.indices.reverse)
     val res = reassemble(metaCh, reversed, metaCh.length, reversed.length,
       maxPending = 2, limit = 10.seconds)
     assert(res.failed.get.isInstanceOf[IpcFrames.Malformed], res)

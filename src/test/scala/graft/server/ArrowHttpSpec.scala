@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, DriverRows}
 import graft.datagen.Generators
 
 class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -379,10 +379,127 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaSource.count() === 5000)
   }
 
+  /** (full, delta) dictionary messages of an uncoded served stream. */
+  private def dictMessages(body: Array[Byte]): (Int, Int) = {
+    val dicts = graft.arrow.IpcFrames.scan(body).filter(_.isDictionary).map { f =>
+      message(f).header(new org.apache.arrow.flatbuf.DictionaryBatch())
+        .asInstanceOf[org.apache.arrow.flatbuf.DictionaryBatch].isDelta
+    }
+    (dicts.count(!_), dicts.count(identity))
+  }
+
+  private def message(f: graft.arrow.IpcFrames.Frame): org.apache.arrow.flatbuf.Message =
+    org.apache.arrow.flatbuf.Message.getRootAsMessage(
+      java.nio.ByteBuffer.wrap(f.framedHeader, 8, f.metaLen).slice()
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN))
+
+  /** 4 partitions of 10,000 rows, each holding 100 `k` values (and
+    * nulls) no other partition has; the values grow within a partition,
+    * so its later batches carry new ones. */
+  private def partitionedKeys = {
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
+    spark.range(0, 40000, 1, 4).select(col("id"),
+      when(col("id") % 7 === 0, lit(null))
+        .otherwise(concat(lit("k"), (col("id") / 10000).cast("long"), lit("_"),
+          (col("id") % 10000 / 100).cast("long"))).as("k"))
+  }
+
+  test("delta-dictionary serving: several partitions with disjoint values read back exactly") {
+    val df = partitionedKeys
+    assert(df.rdd.getNumPartitions === 4)
+    server.registerDictDelta("keys_delta", df, Seq("k"))
+    val (code, _, body) = get("/q/keys_delta")
+    assert(code === 200)
+    // each partition opens with its own full dictionary, then deltas
+    val (full, delta) = dictMessages(body)
+    assert(full === 4, s"expected one full dictionary per partition, saw $full")
+    assert(delta >= 4, s"expected delta dictionaries in every partition, saw $delta")
+
+    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), Option(r.getString(1)))
+    val want = df.collect().map(key).toVector
+    val res = ArrowBridge.read(new java.io.ByteArrayInputStream(body))
+    val rows = try res.rows.map(key).toVector finally res.close()
+    assert(rows === want)
+
+    val viaSource = spark.read.format("arrows")
+      .option("split", "false")
+      .option("url", s"${server.baseUrl}/q/keys_delta").load()
+    assert(viaSource.collect().map(key).toVector.sorted === want.sorted)
+  }
+
+  test("delta-dictionary serving: a negotiated zstd IPC codec compresses every batch") {
+    server.registerDictDelta("keys_delta_zstd", partitionedKeys, Seq("k"))
+    val (code, headers, body) = get("/q/keys_delta_zstd",
+      Map("Accept" -> s"""${Negotiation.ArrowMime}; codecs="zstd""""))
+    assert(code === 200)
+    assert(headers("content-type").contains("codecs=\"zstd\""))
+    val batches = graft.arrow.IpcFrames.scan(body).filterNot(_.isSchema).map { f =>
+      val msg = message(f)
+      val rb =
+        if (f.isDictionary) msg.header(new org.apache.arrow.flatbuf.DictionaryBatch())
+          .asInstanceOf[org.apache.arrow.flatbuf.DictionaryBatch].data()
+        else msg.header(new org.apache.arrow.flatbuf.RecordBatch())
+          .asInstanceOf[org.apache.arrow.flatbuf.RecordBatch]
+      (f.isDictionary, Option(rb.compression()).map(_.codec()))
+    }
+    assert(batches.count(!_._1) >= 4 && batches.count(_._1) >= 4)
+    val zstd = org.apache.arrow.flatbuf.CompressionType.ZSTD
+    assert(batches.forall(_._2.contains(zstd)), batches)
+    val res = ArrowBridge.read(new java.io.ByteArrayInputStream(body))
+    try assert(res.rows.size === 40000) finally res.close()
+  }
+
+  test("delta-dictionary zstd serve: the schema decodes before the last partition finishes") {
+    val base = Generators.ticker(spark, 4000, 4)
+    val gated = spark.createDataFrame(base.rdd.mapPartitionsWithIndex { (i, it) =>
+      if (i == 3) FirstByteGate.latch.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      it
+    }, base.schema)
+    FirstByteGate.latch = new java.util.concurrent.CountDownLatch(1)
+    server.registerDictDelta("gated_delta", gated, Seq("ticker"))
+    val conn = URI.create(server.baseUrl + "/q/gated_delta").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestProperty("Accept-Encoding", "zstd")
+    val alloc = ArrowBridge.newAllocator("first-byte-delta-spec")
+    try {
+      val reader = try {
+        scala.concurrent.Await.result(scala.concurrent.Future {
+          val r = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+            new com.github.luben.zstd.ZstdInputStream(conn.getInputStream), alloc)
+          assert(r.getVectorSchemaRoot.getSchema.getFields.size === 3)
+          r
+        }(scala.concurrent.ExecutionContext.global), scala.concurrent.duration.Duration(30, "s"))
+      } finally {
+        val held = FirstByteGate.latch.getCount
+        FirstByteGate.latch.countDown()
+        assert(held === 1, "the last partition was released early")
+      }
+      var rows = 0L
+      while (reader.loadNextBatch()) rows += reader.getVectorSchemaRoot.getRowCount
+      reader.close()
+      assert(rows === 4000)
+    } finally alloc.close()
+  }
+
+  test("a schema-only probe answers the served stream's first message, then EOS") {
+    val df = Generators.ticker(spark, 5000, 2)
+    server.registerDict("probe_dict", df, Seq("ticker"))
+    server.registerDictDelta("probe_delta", df, Seq("ticker"))
+    for (name <- Seq("ticker", "probe_dict", "probe_delta")) {
+      val (pc, _, probe) = get(s"/q/$name", Map("X-Arrow-Schema-Only" -> "1"))
+      val (sc, _, served) = get(s"/q/$name")
+      assert(pc === 200 && sc === 200)
+      assert(probe.takeRight(8).toSeq === ArrowBridge.EosBytes.toSeq, name)
+      val first = graft.arrow.IpcFrames.scan(served).head
+      assert(first.isSchema, name)
+      assert(probe.dropRight(8).toSeq === served.slice(0, first.end.toInt).toSeq, name)
+    }
+  }
+
   test("POST /ingest round-trips a stream into a temp view") {
     val df = Generators.ticker(spark, 500, 1)
     val bytes = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), bytes)
     val conn = URI.create(s"${server.baseUrl}/ingest/posted").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("POST")
@@ -399,7 +516,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tickerBody(rows: Int): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
     val df = Generators.ticker(spark, rows, 1)
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), bytes)
     bytes.toByteArray
   }
 
@@ -500,7 +617,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reads back through the DSv2 source.
     val df = Generators.ticker(spark, 50000, 2)
     val bytes = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), bytes)
     val conn = URI.create(s"${server.baseUrl}/ingest/bigpost").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("POST")
@@ -522,7 +639,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("POST /ingest-multipart: JSON + Arrow parts ingest to a temp view") {
     val df = Generators.ticker(spark, 300, 1)
     val arrow = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), arrow)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), arrow)
     val boundary = "graftTestBoundary42"
     val body = new ByteArrayOutputStream()
     def part(ct: String): Unit =
@@ -622,7 +739,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Generators.ticker(spark, 2000, 1)
     val tmp = temp(java.nio.file.Files.createTempFile("graft", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), out)
     out.close()
     server.registerFile("ticker.arrows", tmp)
 
@@ -655,7 +772,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Generators.ticker(spark, 1000, 1)
     val tmp = temp(java.nio.file.Files.createTempFile("graft-rv", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), out)
     out.close()
     server.registerFile("rv.arrows", tmp)
     val size = java.nio.file.Files.size(tmp)
@@ -679,7 +796,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = Generators.ticker(spark, 20000, 1)
     val tmp = temp(java.nio.file.Files.createTempFile("graft-ranged", ".arrows"))
     val out = java.nio.file.Files.newOutputStream(tmp)
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out,
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), out,
       ArrowBridge.WriteOptions(batchSize = 1000)) // 20 batches
     out.close()
     server.registerFile("ranged.arrows", tmp)
@@ -696,7 +813,7 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a corrupt registered file: /offsets answers 500 promptly and logs the path") {
     val df = Generators.ticker(spark, 2000, 1)
     val bytes = new ByteArrayOutputStream()
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes,
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), bytes,
       ArrowBridge.WriteOptions(batchSize = 500))
     val bad = bytes.toByteArray
     // a metaLen of 1 GiB in the second message

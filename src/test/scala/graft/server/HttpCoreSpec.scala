@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, DriverRows}
 import graft.datagen.Generators
 
 /** The server's HTTP framing, seen on the wire through raw sockets. */
@@ -91,7 +91,7 @@ class HttpCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def tickerBody(rows: Int): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
     val df = Generators.ticker(spark, rows, 1)
-    ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), bytes)
+    ArrowBridge.write(df.schema, DriverRows.internalRows(df), bytes)
     bytes.toByteArray
   }
 

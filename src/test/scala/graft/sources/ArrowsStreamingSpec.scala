@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, TempDirs}
-import graft.arrow.ArrowBridge
+import graft.arrow.{ArrowBridge, DriverRows}
 import graft.datagen.Generators
 
 class ArrowsStreamingSpec extends AnyFunSuite with TempDirs {
@@ -18,7 +18,7 @@ class ArrowsStreamingSpec extends AnyFunSuite with TempDirs {
       val df = Generators.ticker(spark, rows, 1)
       val f = new java.io.File(dir, f"chunk-$n%03d.arrows")
       val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(f))
-      ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
+      ArrowBridge.write(df.schema, DriverRows.internalRows(df), out)
       out.close()
     }
 
@@ -133,7 +133,7 @@ class ArrowsStreamingSpec extends AnyFunSuite with TempDirs {
       val df = Generators.ticker(spark, 100, 1)
       val f = new java.io.File(dir, f"chunk-$n%03d.arrows")
       val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(f))
-      ArrowBridge.write(df.schema, ArrowBridge.internalRows(df), out)
+      ArrowBridge.write(df.schema, DriverRows.internalRows(df), out)
       out.close()
       f.getPath
     }

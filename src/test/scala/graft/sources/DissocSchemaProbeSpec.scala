@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, IOException}
+import java.io.IOException
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 import graft.datagen.Generators
-import graft.dissociated.Dissociated
+import graft.dissociated.Channels
 
 /** A dissociated schema probe reads the metadata channel only: against
   * a stub server that counts them, it requests no body channel. */
@@ -21,11 +21,9 @@ class DissocSchemaProbeSpec extends AnyFunSuite {
   /** Runs `f(infoUrl, bodyRequests)` against a stub serving a canned
     * discovery document and the channels of ticker(5000). */
   private def withStub(f: (String, AtomicInteger) => Unit): Unit = {
-    val (schema, splits) = Dissociated.split(Generators.ticker(spark, 5000, 2), batchSize = 512)
-    val meta = new ByteArrayOutputStream()
-    Dissociated.writeMetadataChannel(meta, schema, splits)
-    val body = new ByteArrayOutputStream()
-    Dissociated.writeBodyChannel(body, splits)
+    val plain = Channels.plainStream(Generators.ticker(spark, 5000, 2), batchSize = 512)
+    val meta = Channels.metadata(plain)
+    val body = Channels.body(plain)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val base = s"http://127.0.0.1:${server.getAddress.getPort}/dissoc"
     val bodyRequests = new AtomicInteger()
@@ -42,8 +40,8 @@ class DissocSchemaProbeSpec extends AnyFunSuite {
          |  {"uri": "$base/meta/canned", "channel": "metadata"},
          |  {"uri": "$base/data/canned", "channel": "body"}
          |]}""".stripMargin.getBytes(UTF_8))
-    serve("/dissoc/meta/canned")(meta.toByteArray)
-    serve("/dissoc/data/canned") { bodyRequests.incrementAndGet(); body.toByteArray }
+    serve("/dissoc/meta/canned")(meta)
+    serve("/dissoc/data/canned") { bodyRequests.incrementAndGet(); body }
     server.start()
     try f(s"$base/info/canned", bodyRequests) finally server.stop(0)
   }

@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.TimeUnit
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
 
 /** Benchmark main. Runs the headline queries on SPARK_GRAFT_SF_DIR plus
   * the reference's own throughput figure — the get_simple loop: serve a
@@ -30,6 +32,69 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** How long the transport child may run before it counts as wedged. */
   private val TransportDeadline = java.time.Duration.ofMinutes(20)
+  /** How long one query rep may run before it counts as wedged: far
+    * above any rep the bench has recorded, at sf1 included. */
+  private val RepDeadline = java.time.Duration.ofMinutes(10)
+  /** How long a cancelled rep gets to unwind before the next cell starts. */
+  private val UnwindMs = 30000L
+
+  /** Generated classes compiled in this JVM so far: `CodeGenerator`
+    * updates this histogram once per codegen cache miss. */
+  private def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** The query cells of one bench run: their rep timings, and the cells
+    * (and the transport section) that breached their deadline. */
+  private[graft] final class Cells(sc: SparkContext, reps: Int, deadline: java.time.Duration) {
+    val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+
+    /** Runs `reps` reps of `rep` (which returns its timed seconds). A rep
+      * past the deadline names the cell failed: the cell keeps no
+      * timings and runs no further rep, and the caller goes on to the
+      * next cell. A rep that throws in time fails the bench. */
+    def run(name: String)(rep: => Double): Unit = {
+      val secs = (1 to reps).iterator.map(i => bounded(name, i)(rep))
+        .takeWhile(_.isDefined).flatten.toSeq
+      if (secs.size == reps) runs(name) = secs
+      else failed += name
+    }
+
+    /** One rep, on a thread of its own under its own job group, with this
+      * thread as its deadline; None when the deadline passed, after the
+      * JVM's threads are dumped to stderr and the group's jobs cancelled.
+      * The rep's start, and after it the number of classes it compiled,
+      * go to stderr. */
+    private def bounded(name: String, i: Int)(rep: => Double): Option[Double] = {
+      System.err.println(s"bench: $name rep $i/$reps")
+      val c0 = compiledClasses
+      val group = s"bench-$name-$i"
+      val task = new java.util.concurrent.FutureTask[Double](
+        new java.util.concurrent.Callable[Double] {
+          def call(): Double = {
+            sc.setJobGroup(group, s"$name rep $i", interruptOnCancel = true)
+            try rep finally sc.clearJobGroup()
+          }
+        })
+      val t = new Thread(task, group)
+      t.setDaemon(true)
+      t.start()
+      val secs = try Some(task.get(deadline.toMillis, TimeUnit.MILLISECONDS))
+      catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        case _: java.util.concurrent.TimeoutException =>
+          System.err.println(s"bench: $name rep $i passed its ${deadline.toSeconds} s " +
+            "deadline; thread dump follows")
+          dumpThreads(ProcessHandle.current().pid())
+          sc.cancelJobGroup(group)
+          t.interrupt()
+          t.join(UnwindMs)
+          None
+      }
+      System.err.println(s"bench: $name rep $i codegen ${compiledClasses - c0} classes")
+      secs
+    }
+  }
 
   /** Waits up to `deadline` for `proc` to exit, reading its stdout on a
     * thread of its own (a filled pipe would block the child). Returns the
@@ -83,8 +148,12 @@ object Bench {
       * discards every row, full width, executor-side. */
     def mat(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    // Warm-up: JVM/codegen/parquet footer caches on the smallest query,
-    // so the measured numbers reflect steady-state execution. The LSH
+    // Warm-up: JVM and parquet footer caches on the smallest query, so
+    // the measured numbers reflect steady-state execution. Codegen warms
+    // per query, not here: each query's rep 1 compiles its classes and
+    // GraftSession's codegen cache keeps them, so reps 2 and 3 compile
+    // none unless AQE plans the query differently (the stderr codegen
+    // line after each rep shows it). The LSH
     // warm-up additionally materializes the MinHash signature store —
     // the steady-state shape at scale is signatures persisted to a
     // bucketed table, with dedup queries running against it, so the
@@ -107,13 +176,9 @@ object Bench {
     }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    /** One stderr line as each query rep starts: a run that stalls
-      * names the query and the rep it stalled in. */
-    def heartbeat(name: String, rep: Int): Unit =
-      System.err.println(s"bench: $name rep $rep/$reps")
-    val runs = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val cells = new Cells(spark.sparkContext, reps, RepDeadline)
+    import cells.{runs, failed}
     val rss = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val failed = scala.collection.mutable.ArrayBuffer[String]()
 
     /** Between-cell checkpoint (r12 verdict #5: the driver box's bench
       * degraded late in the run — m23's reps grew [1.65→13.5 s] and the
@@ -198,7 +263,7 @@ object Bench {
       // tail identifies the victim without a reproduction session (the
       // r6 crash surfaced as a bare stack with no query name)
       System.err.println(s"bench: $name")
-      runs(name) = (1 to reps).map { i => heartbeat(name, i); timed(mat(fns(name)(spark, sfDir))) }
+      cells.run(name)(timed(mat(fns(name)(spark, sfDir))))
       checkpoint(name)
     }
 
@@ -209,8 +274,7 @@ object Bench {
     // it never perturbs d08/d11/d13/d15's warm timings.
     locally {
       System.err.println("bench: d08_substring_dedup_cold")
-      runs("d08_substring_dedup_cold") = (1 to reps).map { i =>
-        heartbeat("d08_substring_dedup_cold", i)
+      cells.run("d08_substring_dedup_cold") {
         graft.operators.DedupOps.invalidateGram8Store(spark, sfDir)
         timed(mat(fns("d08_substring_dedup")(spark, sfDir)))
       }

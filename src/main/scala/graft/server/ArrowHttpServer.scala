@@ -44,7 +44,7 @@ import graft.dissociated.Dissociated
   */
 final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
-  private val datasets = scala.collection.concurrent.TrieMap[String, () => DataFrame]()
+  private val datasets = scala.collection.concurrent.TrieMap[String, ArrowHttpServer.Dataset]()
   /** Ingest spool file of each ingested dataset, and the references to
     * each spool file: one from its registration, one per request
     * reading its dataset (a DSv2 task opens its file lazily, after the
@@ -53,11 +53,6 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   private val spools = scala.collection.mutable.Map[String, java.nio.file.Path]()
   private val spoolRefs = scala.collection.mutable.Map[java.nio.file.Path, Int]()
   private val files = scala.collection.concurrent.TrieMap[String, java.nio.file.Path]()
-  /** Per-dataset dictionary-encoded columns (value sets computed at
-    * registration — one dictionary per stream, the reference's
-    * USE_DICTIONARY_ENCODING behavior, get_compressed/server.py:50-52);
-    * the relay keeps the first partition's dictionary message. */
-  private val dictCols = scala.collection.concurrent.TrieMap[String, Map[String, Array[String]]]()
 
   // reference preference order zstd > br > gzip (server.py:444-449);
   // br is the RFC 7932 stored-mode coding (see Brotli.scala)
@@ -67,15 +62,15 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   /** Runs `serve` on dataset `name` (404 when there is none), holding a
     * reference to its spool file until `serve` returns. */
   private def withDataset(exchange: HttpCore.Exchange, name: String)(
-      serve: (() => DataFrame) => Unit): Unit = {
-    val (dfFn, held) = spoolRefs.synchronized {
+      serve: ArrowHttpServer.Dataset => Unit): Unit = {
+    val (ds, held) = spoolRefs.synchronized {
       val held = spools.get(name)
       held.foreach(p => spoolRefs(p) += 1)
       (datasets.get(name), held)
     }
-    try dfFn match {
+    try ds match {
       case None => exchange.sendText(404, s"no dataset $name")
-      case Some(f) => serve(f)
+      case Some(d) => serve(d)
     } finally held.foreach(releaseSpool)
   }
 
@@ -88,11 +83,20 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     }
   }
 
-  def register(name: String, df: => DataFrame): Unit = {
-    spillCache.remove(name).foreach(_ =>
-      files.keys.filter(_.startsWith(s"$name/")).foreach(files.remove))
-    datasets.put(name, () => df)
-  }
+  /** The one registration path: replaces the name's dataset together
+    * with its dictionary settings, and drops the `/qsplit/` spill of
+    * what it replaces (and that spill's `/files/<name>/` entries).
+    * Serialized per name with [[ensureSpilled]], so a spill of the old
+    * data cannot land in the cache after the new data is in place. */
+  private def put(name: String, ds: ArrowHttpServer.Dataset): Unit =
+    spillLocks.computeIfAbsent(name, _ => new Object).synchronized {
+      spillCache.remove(name).foreach(_ =>
+        files.keys.filter(_.startsWith(s"$name/")).foreach(files.remove))
+      datasets.put(name, ds)
+    }
+
+  def register(name: String, df: => DataFrame): Unit =
+    put(name, ArrowHttpServer.Dataset(() => df))
   def registerFile(name: String, path: java.nio.file.Path): Unit = {
     frameIndexCache.remove(name)
     files.put(name, path)
@@ -118,12 +122,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
           "use registerDictDelta, which never collects the value set")
       c -> vals
     }.toMap
-    dictCols.put(name, dicts)
-    datasets.put(name, () => df)
+    put(name, ArrowHttpServer.Dataset(() => df, dicts = dicts))
   }
-
-  /** Per-dataset DELTA-dictionary columns. */
-  private val deltaDictCols = scala.collection.concurrent.TrieMap[String, Seq[String]]()
 
   /** Register with delta-dictionary encoding on the given string
     * columns: no distinct() pre-scan, no up-front value collection (the
@@ -133,10 +133,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     * so it opens with a full dictionary of its first batch's values,
     * which replaces the previous partition's, and adds delta batches as
     * new values appear. Every coding and IPC codec applies. */
-  def registerDictDelta(name: String, df: => DataFrame, columns: Seq[String]): Unit = {
-    deltaDictCols.put(name, columns)
-    register(name, df)
-  }
+  def registerDictDelta(name: String, df: => DataFrame, columns: Seq[String]): Unit =
+    put(name, ArrowHttpServer.Dataset(() => df, deltaDicts = columns))
 
   // Sized for the parallel dissociated scan (r12 ADVICE): each of up to
   // `defaultParallelism` reader tasks holds TWO long-lived channel
@@ -154,7 +152,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // ------------------------------------------------------------------
   server.route("/q/") { exchange => safely(exchange) {
     val name = exchange.path.stripPrefix("/q/")
-    withDataset(exchange, name) { dfFn =>
+    withDataset(exchange, name) { ds =>
       Negotiation.negotiate(
         exchange.requestHeader("Accept"), exchange.requestHeader("Accept-Encoding"),
         ipcCodecs, httpCodings, http10 = exchange.protocol == "HTTP/1.0"
@@ -163,23 +161,21 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
         case Right(strategy) =>
           exchange.setHeader("Content-Type", strategy.contentType)
           exchange.setHeader("Content-Disposition", s"""attachment; filename="$name.arrows"""")
-          val opts = ArrowBridge.WriteOptions(codec = strategy.ipcCodec,
-            dictColumns = dictCols.getOrElse(name, Map.empty))
-          val delta = deltaDictCols.getOrElse(name, Nil)
+          val opts = ArrowBridge.WriteOptions(codec = strategy.ipcCodec, dictColumns = ds.dicts)
           // schema-only probe: answer [schema][EOS] without running
           // the query (keeps DSv2 inferSchema from triggering a full
           // serve that is then abandoned); the header is the relay's own
           if (exchange.requestHeader("X-Arrow-Schema-Only").isDefined) {
             exchange.sendResponseHeaders(200, 0)
             val out = exchange.responseBody
-            out.write(ArrowBridge.schemaBytes(dfFn().schema, opts, delta))
+            out.write(ArrowBridge.schemaBytes(ds.df().schema, opts, ds.deltaDicts))
             out.write(ArrowBridge.EosBytes)
             out.close()
           } else {
             strategy.httpCoding.foreach(c => exchange.setHeader("Content-Encoding", c))
             exchange.sendResponseHeaders(200, 0) // 0 = chunked
             val sink = exchange.responseBody
-            val df = dfFn()
+            val df = ds.df()
             // the relay codes zstd itself, as per-task frames
             val out: OutputStream = strategy.httpCoding match {
               case Some("gzip") => new java.util.zip.GZIPOutputStream(sink, true)
@@ -187,7 +183,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
               case _            => sink
             }
             try ArrowBridge.writeParallel(df, out, opts,
-              zstd = strategy.httpCoding.contains("zstd"), deltaDictCols = delta)
+              zstd = strategy.httpCoding.contains("zstd"), deltaDictCols = ds.deltaDicts)
             finally out.close()
           }
       }
@@ -197,7 +193,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // ------------------------------------------------------------------
   server.route("/multipart/") { exchange => safely(exchange) {
     val name = exchange.path.stripPrefix("/multipart/")
-    withDataset(exchange, name) { dfFn =>
+    withDataset(exchange, name) { ds =>
       // CSPRNG boundary: 28 bytes entropy, base64url (reference
       // algorithm, http/get_multipart/README.md:34-56)
       val rnd = new Array[Byte](28)
@@ -208,7 +204,7 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       exchange.sendResponseHeaders(200, 0)
       val out = exchange.responseBody
       val t0 = System.nanoTime()
-      val df = dfFn()
+      val df = ds.df()
       def part(ct: String): Unit =
         out.write(s"\r\n--$boundary\r\nContent-Type: $ct\r\n\r\n".getBytes(UTF_8))
 
@@ -292,8 +288,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
 
   server.route("/qsplit/") { exchange => safely(exchange) {
     val name = exchange.path.stripPrefix("/qsplit/")
-    withDataset(exchange, name) { dfFn =>
-      val parts = ensureSpilled(name, dfFn)
+    withDataset(exchange, name) { ds =>
+      val parts = ensureSpilled(name, ds.df)
       val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k"}""").mkString(",\n  ")
       exchange.setHeader("Content-Type", "application/json")
       exchange.sendText(200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
@@ -559,9 +555,9 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   server.route("/dissoc/info/") { exchange => safely(exchange) {
     val (name, idx) = dissocTarget(
       exchange.path.stripPrefix("/dissoc/info/"))
-    withDataset(exchange, name) { dfFn =>
+    withDataset(exchange, name) { ds =>
       exchange.setHeader("Content-Type", "application/json")
-      val n = ensureSpilled(name, dfFn).size
+      val n = ensureSpilled(name, ds.df).size
       idx match {
         case Some(i) if i >= n =>
           exchange.sendText(404, s"no part $i of $name ($n parts)")
@@ -614,8 +610,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       serve: (HttpCore.Exchange, Vector[String]) => Unit): Unit =
     server.route(prefix) { exchange => safely(exchange) {
       val (name, idx) = dissocTarget(exchange.path.stripPrefix(prefix))
-      withDataset(exchange, name) { dfFn =>
-        val keys = ensureSpilled(name, dfFn)
+      withDataset(exchange, name) { ds =>
+        val keys = ensureSpilled(name, ds.df)
         if (idx.exists(_ >= keys.size))
           exchange.sendText(404, s"no part ${idx.get} of $name (${keys.size} parts)")
         else {
@@ -704,6 +700,14 @@ object ArrowHttpServer {
     * [[ArrowHttpServer.registerDict]]; beyond this the value set is no
     * longer "small" and must stream via registerDictDelta. */
   val MaxDictValues: Int = 4096
+
+  /** A registered dataset and how `/q/` encodes its string columns:
+    * `dicts` are dictionary columns with their value sets, computed at
+    * registration (one dictionary per stream, the reference's
+    * USE_DICTIONARY_ENCODING behavior, get_compressed/server.py:50-52);
+    * `deltaDicts` are delta-dictionary columns. */
+  private final case class Dataset(df: () => DataFrame,
+      dicts: Map[String, Array[String]] = Map.empty, deltaDicts: Seq[String] = Nil)
 
   private val IngestName = "[A-Za-z_][A-Za-z0-9_]*".r
 

@@ -1,0 +1,65 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A repeated query reuses its generated classes. The benchmark's query
+  * loop runs 13 queries in turn; Spark's codegen cache, sized in
+  * [[GraftSession.builder]], holds all of their classes, so a second
+  * pass over the loop compiles none. At Spark's default of 100 entries
+  * the other queries evict each query's classes before it comes round
+  * again, and every pass compiles them anew. Whole-stage classes are
+  * named without their stage id (see [[GraftSession.builder]]), so a
+  * stage that AQE numbers differently on another run still reuses its
+  * class.
+  *
+  * `CodeGenerator` updates the compilation-time histogram once per
+  * cache miss, so the histogram's count is the number of classes
+  * compiled. */
+class CodegenReuseSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = {
+    val s = GraftSession.builder("codegen-reuse-spec", "4").getOrCreate()
+    functions.GraftFunctions.register(s)
+    s
+  }
+  private val sf = "/root/testdata/sf0.001"
+
+  /** The queries of the benchmark's `query_batch` workload. */
+  private val loop = Seq(
+    "q05_local_supplier_volume", "q48_price_deciles", "q50_basket_pairs",
+    "q58_market_share", "d03_minhash_lsh_pairs", "d13_containment_complete",
+    "d24_soft_dedup_weights", "d28_cluster_keeper", "s25_kmeans_churn",
+    "s31_quantization_sheet", "t18_keyword_tfidf", "p25_shard_dedup_leakage",
+    "m23_caption_transfer")
+
+  /** Queries whose physical plan can differ between two runs, so that a
+    * second run may compile classes the first did not. Each self-joins a
+    * frame that `OpUtils.transientPersist` caches afresh on every run,
+    * and AQE picks that join's build side from the cache's size
+    * statistic, which it can read while the cache is still filling: the
+    * build side, and with it the generated join code, then varies with
+    * task timing. They still run in both passes, so their classes count
+    * in the working set the cache must hold. */
+  private val perRunPlans =
+    Set("d24_soft_dedup_weights", "d28_cluster_keeper", "m23_caption_transfer")
+
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One pass over the loop, every query through the noop sink; returns
+    * the number of classes each query compiled. */
+  private def pass(): Seq[(String, Long)] = loop.map { q =>
+    val c0 = compiled
+    SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+    q -> (compiled - c0)
+  }
+
+  test("a second pass over the query loop compiles no class") {
+    pass()
+    val (varying, fixed) = pass().partition { case (q, _) => perRunPlans(q) }
+    def show(qs: Seq[(String, Long)]) =
+      qs.filter(_._2 > 0).map { case (q, n) => s"$q $n" }.mkString(", ")
+    info(s"recompiled by a plan that varies per run: ${show(varying)}")
+    assert(fixed.map(_._2).sum === 0, s"recompiled on the second pass: ${show(fixed)}")
+  }
+}

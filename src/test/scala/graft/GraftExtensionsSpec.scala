@@ -14,12 +14,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // later suites rebuild through GraftSession.getOrCreate)
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-spec")
+    // through GraftSession.builder, which registers no function, so
+    // that this suite also sizes the JVM-global codegen cache if it
+    // builds the JVM's first session
+    val spark = GraftSession.builder("graft-ext-spec", "2")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val r = spark.sql(

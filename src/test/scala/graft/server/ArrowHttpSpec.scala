@@ -496,6 +496,37 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a plain register over a dictionary dataset serves its rows without the old dictionary") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    def rowsOf(path: String): Vector[org.apache.spark.sql.Row] = {
+      val (code, _, body) = get(path)
+      assert(code === 200, path)
+      val res = ArrowBridge.read(new java.io.ByteArrayInputStream(body))
+      try res.rows.toVector finally res.close()
+    }
+    server.registerDict("redict", Generators.ticker(spark, 5000, 2), Seq("ticker"))
+    // every value lies outside the dictionary registered first
+    server.register("redict", Generators.ticker(spark, 5000, 2)
+      .withColumn("ticker", concat(col("ticker"), lit("X"))))
+    val rows = rowsOf("/q/redict")
+    assert(rows.size === 5000)
+    assert(rows.forall(_.getString(0).endsWith("X")))
+
+    // and a frame without the delta-dictionary column
+    server.registerDictDelta("redelta", Generators.ticker(spark, 5000, 2), Seq("ticker"))
+    server.register("redelta", Generators.flightBench(spark, 10000, 2))
+    assert(rowsOf("/q/redelta").size === 10000)
+  }
+
+  test("registerDict over a served name drops its /qsplit/ spill") {
+    def count(): Long = spark.read.format("arrows")
+      .option("url", s"${server.baseUrl}/q/respill").load().count()
+    server.register("respill", Generators.ticker(spark, 5000, 2))
+    assert(count() === 5000)
+    server.registerDict("respill", Generators.ticker(spark, 9000, 2), Seq("ticker"))
+    assert(count() === 9000)
+  }
+
   test("POST /ingest round-trips a stream into a temp view") {
     val df = Generators.ticker(spark, 500, 1)
     val bytes = new ByteArrayOutputStream()

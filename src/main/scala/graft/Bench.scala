@@ -37,6 +37,8 @@ object Bench {
   private val RepDeadline = java.time.Duration.ofMinutes(10)
   /** How long a cancelled rep gets to unwind before the next cell starts. */
   private val UnwindMs = 30000L
+  /** How long a rep's job count waits for the listener bus to catch up. */
+  private val DrainMs = 10000L
 
   /** Generated classes compiled in this JVM so far: `CodeGenerator`
     * updates this histogram once per codegen cache miss. */
@@ -63,8 +65,8 @@ object Bench {
     /** One rep, on a thread of its own under its own job group, with this
       * thread as its deadline; None when the deadline passed, after the
       * JVM's threads are dumped to stderr and the group's jobs cancelled.
-      * The rep's start, and after it the number of classes it compiled,
-      * go to stderr. */
+      * The rep's start, and after it the number of classes it compiled
+      * and of jobs its group ran, go to stderr. */
     private def bounded(name: String, i: Int)(rep: => Double): Option[Double] = {
       System.err.println(s"bench: $name rep $i/$reps")
       val c0 = compiledClasses
@@ -91,7 +93,10 @@ object Bench {
           t.join(UnwindMs)
           None
       }
-      System.err.println(s"bench: $name rep $i codegen ${compiledClasses - c0} classes")
+      val classes = compiledClasses - c0
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc, DrainMs)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      System.err.println(s"bench: $name rep $i codegen $classes classes, $jobs jobs")
       secs
     }
   }

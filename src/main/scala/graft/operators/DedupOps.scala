@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import OpUtils._
@@ -300,7 +300,7 @@ object DedupOps {
     * Jaccard only via md5 collisions inside one doc's ~10²-gram set
     * (odds ~1e-5 per doc); both engines compute the identical hashed
     * value, and d04 remains the string-exact Jaccard reference. */
-  private def candidatePairs(s: SparkSession, d: String): DataFrame =
+  private[operators] def candidatePairs(s: SparkSession, d: String): DataFrame =
     candidateGramSets(s, d)
       .select(col("a_id"), col("b_id"),
         (size(array_intersect(col("ga"), col("gb"))).cast("double") /
@@ -309,35 +309,92 @@ object DedupOps {
 
   /** Min doc id within ≤ 4 hops over the verified near-dup pairs:
     * (src, cluster) where cluster = min doc_id reachable within <= 4
-    * hops (two doubling self-joins — the log-diameter closure d07
-    * documents). These are not connected components: a chain longer
-    * than 4 hops keeps more than one label, as the DuckDB oracle's
-    * `oLabelCtes` does. Shared by d07 (cluster report) and d14 (corpus
-    * materialization). Only docs that appear in some pair get a row;
-    * singleton docs are implicitly their own cluster. */
-  private[operators] def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    // persist() barriers are load-bearing twice over: the edge frame is
-    // referenced 4 ways by the union and TWICE per doubling self-join,
-    // and each dbl() output feeds the next level twice — without the
-    // barriers Catalyst inlines (= recomputes) the whole
-    // candidate-pair verification pipeline at every reference, which
-    // benched d24 at 84 s vs 8 s on 10× data (the r7c super-linear
-    // outlier). Both frames are bounded by the verified pair count.
-    // r14: both barriers ride transientPersist (tagged per data dir) —
-    // the raw .persist() calls left two cached pair-frames behind on
-    // EVERY invocation (d07/d14/d24/d28 × reps), the session-heap
-    // accumulation class the r13 verdict flagged; same-tag re-entry now
-    // releases the previous build first, so at most one closure's
-    // frames are ever cached.
-    // r15: the r14 union referenced the candidate-pair frame FOUR times
-    // INSIDE the persisted edge frame — the persist stops downstream
-    // recompute, but its own one-time materialization ran the whole
-    // LSH-verify pipeline once per union branch (labels 3.2–5.0 s vs
-    // 1.0 s for one pairs pass, OPTIMIZATION_r15.md §8). One explode
-    // emits the same four edges per pair from ONE pass; distinct
-    // unchanged.
-    val p = candidatePairs(s, d).select(col("a_id"), col("b_id"))
-    val e = OpUtils.transientPersist(s, s"d07edges:$d",
+    * hops. These are not connected components: a chain longer than 4
+    * hops keeps more than one label, as the DuckDB oracle's
+    * `oLabelCtes` does. Shared by d07 (cluster report), d14 (corpus
+    * materialization), d20, d24, d28 and p03. Only docs that appear in
+    * some pair get a row; singleton docs are implicitly their own
+    * cluster.
+    *
+    * The verified pairs come to the driver in one bounded fetch (at most
+    * [[MaxDriverPairs]] + 1 rows), the second of the dedup tier after
+    * d18's bloom blob, and [[hopLabels]] labels them there; the labels
+    * return as a local frame. Only a pair set past the bound takes the
+    * distributed [[doublingLabels]] path. */
+  private[operators] def clusterLabels(s: SparkSession, d: String): DataFrame =
+    labelsOf(s, candidatePairs(s, d).select(col("a_id"), col("b_id")), MaxDriverPairs, d)
+
+  /** The most verified pairs [[clusterLabels]] labels on the driver: a
+    * constant, not a setting. The test data holds 603 pairs at sf0.001,
+    * 596 at sf0.01 and 5,965 at sf0.1, so the bound leaves 16x headroom
+    * over sf0.1. On 100,000 synthetic pairs (JDK 17, 4 cores, local[4])
+    * the fetch and the labelling allocated 150-175 MB on the calling
+    * thread, short-lived, and the returned local frame (180,001 label
+    * rows) retained about 20 MB. */
+  private[operators] val MaxDriverPairs = 100000
+
+  /** Hops a label travels: the ≤ 4-hop reach of the oracle's two
+    * doubling joins. */
+  private val LabelHops = 4
+
+  private val labelSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, cluster BIGINT")
+
+  /** Labels of the `(a_id, b_id)` pairs: on the driver when at most
+    * `maxPairs` of them come back from one fetch, else through
+    * [[doublingLabels]] (which persists its frames under `tag`); that
+    * path computes the pairs a second time, the fetch having run them
+    * once. */
+  private[operators] def labelsOf(s: SparkSession, pairs: DataFrame, maxPairs: Int,
+      tag: String): DataFrame = {
+    val got = pairs.limit(maxPairs + 1).collect()
+    if (got.length > maxPairs) doublingLabels(s, pairs, tag)
+    else {
+      val (ids, labels) = hopLabels(got.map(_.getLong(0)), got.map(_.getLong(1)))
+      s.createDataFrame(
+        java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), labels(i))): _*),
+        labelSchema)
+    }
+  }
+
+  /** Min id within [[LabelHops]] hops of each id in the pairs `(a(i),
+    * b(i))`: the distinct ids in ascending order, and each one's label.
+    * Ids are compacted to their rank, so the min rank is the min id.
+    * Every round is synchronous: it reads the labels of the round
+    * before and writes fresh ones, so a label moves one hop per round.
+    * An in-place update could carry a label down a whole chain in one
+    * round, and a chain longer than 4 hops would then get one label
+    * where the oracle gives it several. */
+  private[operators] def hopLabels(a: Array[Long], b: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = (a ++ b).distinct.sorted
+    val x = a.map(java.util.Arrays.binarySearch(ids, _))
+    val y = b.map(java.util.Arrays.binarySearch(ids, _))
+    var cur = Array.range(0, ids.length)
+    for (_ <- 1 to LabelHops) {
+      val next = cur.clone()
+      var i = 0
+      while (i < x.length) {
+        next(x(i)) = math.min(next(x(i)), cur(y(i)))
+        next(y(i)) = math.min(next(y(i)), cur(x(i)))
+        i += 1
+      }
+      cur = next
+    }
+    (ids, cur.map(ids))
+  }
+
+  /** [[hopLabels]] as Spark joins, for a pair set too large for the
+    * driver: two doubling self-joins over the edge set (both directions
+    * plus self-loops), the log-diameter closure the oracle mirrors.
+    * Both joined frames are persisted through `transientPersist` under
+    * `tag`: each is referenced twice by the join that reads it, and
+    * without the barrier Catalyst recomputes the whole candidate-pair
+    * verification at every reference (d24 once took 84 s instead of
+    * 8 s on 10x data that way). Re-entry with the same tag releases the
+    * previous build, so at most one closure's frames stay cached. One
+    * explode emits a pair's four edges from one pass over the pairs. */
+  private[operators] def doublingLabels(s: SparkSession, p: DataFrame, tag: String): DataFrame = {
+    val e = OpUtils.transientPersist(s, s"d07edges:$tag",
       p.select(explode(array(
           struct(col("a_id").as("src"), col("b_id").as("dst")),
           struct(col("b_id").as("src"), col("a_id").as("dst")),
@@ -349,7 +406,7 @@ object DedupOps {
       r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
         .select(col("x.src").as("src"), col("y.dst").as("dst"))
         .distinct()
-    dbl(OpUtils.transientPersist(s, s"d07dbl:$d", dbl(e)))
+    dbl(OpUtils.transientPersist(s, s"d07dbl:$tag", dbl(e)))
       .groupBy(col("src")).agg(min(col("dst")).as("cluster"))
   }
 
@@ -534,9 +591,10 @@ object DedupOps {
     // The dedup-pipeline step after pair finding: group transitive
     // near-dups into clusters and mark one canonical doc per cluster
     // (min id). Both engines compute "min id reachable within <= 4
-    // hops" via two doubling self-joins over the (sparse) pair edge
-    // set — the log-diameter transitive-closure shape that scales to
-    // low-diameter dup graphs without per-vertex iteration state.
+    // hops": the oracle via two doubling self-joins over the (sparse)
+    // pair edge set, Spark via clusterLabels (four synchronous label
+    // rounds on the driver, or the same doubling joins past its pair
+    // bound).
     QueryDef.sql("d07_neardup_clusters",
       (s, d) => {
         // r15 (the q73 move, as in d24): cluster size via a window over
@@ -985,10 +1043,11 @@ object DedupOps {
         graft.functions.GraftFunctions.register(s)
         val oldKeys = corpus(s, d).filter(col("doc_id") < 1000000L)
           .select(md5Val(col("t"), 15).as("k"))
-        // the ONE bounded driver fetch in the dedup tier: the ~100 KB
-        // filter blob itself (Catalyst requires might_contain's filter
-        // side be a constant / scalar subquery — this is exactly how
-        // Spark's own runtime filters carry their bloom to the probe)
+        // one of the dedup tier's two bounded driver fetches (the other
+        // is clusterLabels' verified pairs): the ~100 KB filter blob
+        // itself (Catalyst requires might_contain's filter side be a
+        // constant / scalar subquery — this is exactly how Spark's own
+        // runtime filters carry their bloom to the probe)
         val bf: Array[Byte] = oldKeys
           .agg(expr("graft_bloom_agg(k, 100000L, 800000L)").as("bf"))
           .head().getAs[Array[Byte]](0)

@@ -46,6 +46,23 @@ class BenchSpec extends AnyFunSuite {
     while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < until) Thread.sleep(50)
     assert(sc.statusTracker.getActiveJobIds().isEmpty, "the wedged rep's job is still running")
   }
+
+  test("each rep's stderr line states the classes it compiled and the jobs it ran") {
+    val sc = GraftSession.builder("bench-spec", "2").getOrCreate().sparkContext
+    val cells = new Bench.Cells(sc, reps = 2, Duration.ofSeconds(60))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try cells.run("three-jobs") {
+      (1 to 3).foreach(_ => sc.parallelize(1 to 4, 2).count())
+      0.5
+    } finally System.setErr(stderr)
+    val lines = err.toString("UTF-8").linesIterator.filter(_.contains(" codegen ")).toSeq
+    assert(lines.size === 2, lines.mkString("\n"))
+    lines.zipWithIndex.foreach { case (l, i) =>
+      assert(l.matches(s"bench: three-jobs rep ${i + 1} codegen \\d+ classes, 3 jobs"), l)
+    }
+  }
 }
 
 object BenchSpec {

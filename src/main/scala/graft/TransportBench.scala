@@ -70,8 +70,8 @@ object TransportBench {
           // served part's /offsets index (not derived from row count)
           val parts = graft.sources.ArrowsTableProvider
             .probeSplits(s"${server.baseUrl}/q/bench")
-          batches = parts.map { u =>
-            val oc = java.net.URI.create(u.replace("/files/", "/offsets/"))
+          batches = parts.map { p =>
+            val oc = java.net.URI.create(p.uri.replace("/files/", "/offsets/"))
               .toURL.openConnection()
             oc.setConnectTimeout(30000); oc.setReadTimeout(180000)
             oc.setRequestProperty("Connection", "close")
@@ -142,8 +142,8 @@ object TransportBench {
     // get_simple scale, through the public read path. Server startup +
     // one-time spill registration hoisted OUT of the timed region (r11
     // rule); single-pair = the reference client's exact shape, fan-out
-    // = one task per published channel pair at part sizes where the
-    // per-part fixed costs amortize.
+    // = the published channel pairs packed into read tasks by Spark's
+    // file-packing rule (ArrowsScan.pack).
     if (benchFull) {
       val dRows = 10000000L
       val server = new graft.server.ArrowHttpServer(spark)

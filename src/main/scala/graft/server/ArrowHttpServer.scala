@@ -290,11 +290,16 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
     val name = exchange.path.stripPrefix("/qsplit/")
     withDataset(exchange, name) { ds =>
       val parts = ensureSpilled(name, ds.df)
-      val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k"}""").mkString(",\n  ")
+      val uris = parts.map(k => s"""{"uri": "$baseUrl/files/$k", "bytes": ${partBytes(k)}}""")
+        .mkString(",\n  ")
       exchange.setHeader("Content-Type", "application/json")
       exchange.sendText(200, s"""{"arrow_stream_files": [\n  $uris\n]}""")
     }
   }}
+
+  /** Byte size of a spilled part file: listings publish it so a client
+    * can pack small parts into fewer read tasks. */
+  private def partBytes(key: String): Long = java.nio.file.Files.size(files(key))
 
   // ------------------------------------------------------------------
   // batch-offset index for ranged-parallel clients: the stream format
@@ -557,7 +562,8 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
       exchange.path.stripPrefix("/dissoc/info/"))
     withDataset(exchange, name) { ds =>
       exchange.setHeader("Content-Type", "application/json")
-      val n = ensureSpilled(name, ds.df).size
+      val keys = ensureSpilled(name, ds.df)
+      val n = keys.size
       idx match {
         case Some(i) if i >= n =>
           exchange.sendText(404, s"no part $i of $name ($n parts)")
@@ -570,17 +576,18 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
         case None =>
           // whole-dataset channels stay first (single-pair clients);
           // a multi-part spill additionally publishes one entry per
-          // part so a parallel scan plans one task per pair. Each
-          // entry carries its channel pair INLINE (metadata/body) so
-          // a planned task opens its two streams without a per-part
-          // discovery round-trip; the per-part info URI stays for
+          // part so a parallel scan can spread the pairs over tasks.
+          // Each entry carries its channel pair INLINE (metadata/body)
+          // so a planned task opens its two streams without a per-part
+          // discovery round-trip, and the part file's byte size so the
+          // scan can pack small parts; the per-part info URI stays for
           // indirection-style clients.
           val parts =
             if (n <= 1) ""
             else (0 until n)
               .map(i => s"""{"uri": "$baseUrl/dissoc/info/$name/$i", """ +
                 s""""metadata": "$baseUrl/dissoc/meta/$name/$i", """ +
-                s""""body": "$baseUrl/dissoc/data/$name/$i"}""")
+                s""""body": "$baseUrl/dissoc/data/$name/$i", "bytes": ${partBytes(keys(i))}}""")
               .mkString(""", "parts": [""", ", ", "]")
           exchange.sendText(200,
             s"""{"ticket": "$name", "locations": [

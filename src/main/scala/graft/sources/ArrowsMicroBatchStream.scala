@@ -63,7 +63,7 @@ final class ArrowsMicroBatchStream(schema: StructType, dirs: Seq[String])
     require(e.take(s.size) == s,
       s"offset ranges diverge: start is not a prefix of end (${s.size} vs ${e.size} files)")
     e.drop(s.size).map(p =>
-      ArrowsInputPartition(p, -1, -1, -1): InputPartition).toArray
+      ArrowsInputPartition(Seq(ArrowsPiece(p))): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

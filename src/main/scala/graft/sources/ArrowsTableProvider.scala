@@ -7,11 +7,14 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.vector.ipc.ArrowStreamReader
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -22,9 +25,12 @@ import graft.arrow.{ArrowBridge, ArrowSchemas, InternalRows}
 /** DataSource V2 for Arrow IPC streams: `format("arrows")`.
   *
   * Read: local `.arrows` files (or directories of them) and `http(s)://`
-  * URIs — one InputPartition per file/URI, which is exactly the
-  * reference's own scale-out story (get_indirect's JSON-of-URIs,
-  * `curl --parallel`; SURVEY §2.4). Column pruning supported; schemas
+  * URIs, the reference's own scale-out story (get_indirect's
+  * JSON-of-URIs, `curl --parallel`; SURVEY §2.4). Each file, URI or
+  * dissociated channel pair is a piece, and the scan packs contiguous
+  * runs of sized pieces into read tasks by Spark's file-packing rule
+  * (see [[ArrowsScan.pack]]); a piece of unknown size is a task of its
+  * own. Column pruning supported; schemas
   * that map 1:1 onto Spark types take a zero-copy columnar path
   * (ArrowColumnVector), widened/dictionary schemas fall back to row
   * conversion.
@@ -73,9 +79,8 @@ object ArrowsTableProvider {
     * the streaming source re-lists them per micro-batch. */
   def rawPaths(options: CaseInsensitiveStringMap): Seq[String] = {
     // Spark passes load(paths*) as a JSON string array
-    val multi = Option(options.get("paths")).toSeq.flatMap { json =>
-      new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(json, classOf[Array[String]]).toSeq
+    val multi = Option(options.get("paths")).toSeq.flatMap { paths =>
+      json.readValue(paths, classOf[Array[String]]).toSeq
     }
     multi ++ Option(options.get("path")).toSeq ++ Option(options.get("url")).toSeq
   }
@@ -133,19 +138,30 @@ object ArrowsTableProvider {
       new BufferedInputStream(decoded, 1 << 16)
     } else new BufferedInputStream(new java.io.FileInputStream(stripScheme(path)), 1 << 16)
 
-  /** Probe the server's /offsets index and build range partitions of
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** GET a server JSON document as a Jackson tree. */
+  private def getJson(url: String): com.fasterxml.jackson.databind.JsonNode =
+    json.readTree(httpTimeouts(URI.create(url).toURL
+        .openConnection().asInstanceOf[HttpURLConnection])
+      .getInputStream.readAllBytes())
+
+  /** A listing entry's `bytes` field; -1 when the listing does not give it. */
+  private def bytesOf(entry: com.fasterxml.jackson.databind.JsonNode): Long = {
+    val b = entry.path("bytes")
+    if (b.isIntegralNumber && b.asLong >= 0) b.asLong else -1L
+  }
+
+  /** Probe the server's /offsets index and build range pieces of
     * roughly equal byte size, each covering whole batches. Empty when
     * the server has no index. */
-  def rangedPartitions(fileUrl: String, n: Int): Seq[ArrowsInputPartition] =
+  def rangedPartitions(fileUrl: String, n: Int): Seq[ArrowsPiece] =
     try {
-      val offsetsUrl = fileUrl.replace("/files/", "/offsets/")
-      val json = new String(httpTimeouts(URI.create(offsetsUrl).toURL
-          .openConnection().asInstanceOf[HttpURLConnection])
-        .getInputStream.readAllBytes(), "UTF-8")
-      val schemaEnd = "\"schema_end\": (\\d+)".r.findFirstMatchIn(json).get.group(1).toLong
-      val spans = "\\[(\\d+),(\\d+)\\]".r.findAllMatchIn(json)
-        .map(m => (m.group(1).toLong, m.group(2).toLong)).toVector
-      if (spans.isEmpty) Nil
+      val root = getJson(fileUrl.replace("/files/", "/offsets/"))
+      val schemaEnd = root.path("schema_end")
+      val spans = root.path("batches").elements().asScala
+        .map(b => (b.path(0).asLong, b.path(1).asLong)).toVector
+      if (!schemaEnd.isIntegralNumber || spans.isEmpty) Nil
       else {
         val total = spans.last._2 - spans.head._1
         val target = math.max(1L, total / n)
@@ -157,23 +173,29 @@ object ArrowsTableProvider {
           if (end - start >= target) { groups += ((start, end)); start = end }
         }
         if (end > start) groups += ((start, end))
-        groups.toSeq.map { case (s, e) => ArrowsInputPartition(fileUrl, schemaEnd, s, e) }
+        groups.toSeq.map { case (s, e) =>
+          ArrowsPiece(fileUrl, schemaEnd = schemaEnd.asLong, start = s, end = e)
+        }
       }
     } catch { case _: Exception => Nil }
 
+  /** One entry of a `/qsplit/` listing: a part's URI and its byte size
+    * (-1 when the listing does not give one). */
+  final case class SplitPart(uri: String, bytes: Long)
+
   /** Probe a /q/ URL's /qsplit/ twin: a graft server answers with a
     * JSON-of-URIs listing of spilled per-partition artifacts (the
-    * indirect-listing shape). Empty on 404/foreign servers → caller
-    * falls back to the single-stream read. */
-  def probeSplits(qUrl: String): Seq[String] =
+    * indirect-listing shape), each with its byte size. Empty on
+    * 404/foreign servers → caller falls back to the single-stream read. */
+  def probeSplits(qUrl: String): Seq[SplitPart] =
     try {
       val conn = httpTimeouts(URI.create(qUrl.replace("/q/", "/qsplit/")).toURL
         .openConnection().asInstanceOf[HttpURLConnection])
       if (conn.getResponseCode != 200) Nil
-      else {
-        val json = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-        "\"uri\": \"([^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSeq
-      }
+      else json.readTree(conn.getInputStream.readAllBytes())
+        .path("arrow_stream_files").elements().asScala
+        .map(e => SplitPart(e.path("uri").asText(), bytesOf(e)))
+        .filter(_.uri.nonEmpty).toSeq
     } catch { case _: Exception => Nil }
 
   /** GET a byte range of a URL. */
@@ -190,29 +212,26 @@ object ArrowsTableProvider {
   // client's out-of-order completion / in-order delivery,
   // dissociated-ipc/cudf-flight-client.cc:51-325, as a spark.read path)
 
-  /** Parse a `/dissoc/info/` discovery document (real JSON parsing via
-    * the jackson already on Spark's classpath — key order and whitespace
-    * are not part of the contract; the r11 regex was): the
-    * channel→uri map from `locations` plus any per-part info URIs from
-    * `parts` (the reference's FlightInfo endpoint list is plural by
-    * design, cudf-flight-server.cc:349-365 — a spilled dataset publishes
-    * one (metadata, body) pair per part for a parallel scan). */
   /** One publishable unit of dissociated parallelism: a per-part info
     * URI plus (when the server inlines them) the part's resolved
     * channel pair — a task with the pair opens its two streams with no
-    * discovery round-trip. */
-  final case class DissocPart(infoUri: String, metaUri: String, bodyUri: String)
+    * discovery round-trip — and the part's byte size (-1 when not
+    * published). */
+  final case class DissocPart(infoUri: String, metaUri: String, bodyUri: String, bytes: Long)
 
+  /** Parse a `/dissoc/info/` discovery document (key order and
+    * whitespace are not part of the contract): the channel→uri map from
+    * `locations` plus any per-part entries from `parts` (the reference's
+    * FlightInfo endpoint list is plural by design,
+    * cudf-flight-server.cc:349-365 — a spilled dataset publishes one
+    * (metadata, body) pair per part for a parallel scan). */
   def dissocInfo(infoUrl: String): (Map[String, String], Seq[DissocPart]) = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(httpTimeouts(URI.create(infoUrl).toURL
-          .openConnection().asInstanceOf[HttpURLConnection])
-        .getInputStream.readAllBytes())
+    val root = getJson(infoUrl)
     val chans = root.path("locations").elements().asScala
       .map(l => l.path("channel").asText() -> l.path("uri").asText()).toMap
     val parts = root.path("parts").elements().asScala
       .map(p => DissocPart(p.path("uri").asText(),
-        p.path("metadata").asText(), p.path("body").asText()))
+        p.path("metadata").asText(), p.path("body").asText(), bytesOf(p)))
       .filter(_.infoUri.nonEmpty).toSeq
     (chans, parts)
   }
@@ -334,8 +353,7 @@ final class ArrowsScanBuilder(full: StructType, options: CaseInsensitiveStringMa
       new ArrowsScan(full, required, Nil, 1, Nil, dissoc = Some(infoUrl),
         // dissocfanout=false forces the whole dataset through ONE
         // channel pair (the reference client's single dual-location
-        // loop) — the right shape when per-part fixed costs would
-        // dominate tiny parts; the default plans one task per pair
+        // loop); the default packs the published pairs into tasks
         dissocFanout = Option(options.get("dissocfanout")).forall(_.toBoolean))
     case None => buildPaths()
   }
@@ -361,6 +379,8 @@ final class ArrowsScanBuilder(full: StructType, options: CaseInsensitiveStringMa
   }
 }
 
+/** A batch scan of files, URLs or a dissociated dataset: its read
+  * tasks are contiguous runs of pieces packed by [[ArrowsScan.pack]]. */
 final class ArrowsScan(full: StructType, required: StructType, paths: Seq[String],
     rangePartitions: Int, rawDirs: Seq[String], split: Boolean = true,
     dissoc: Option[String] = None, dissocFanout: Boolean = true,
@@ -377,58 +397,103 @@ final class ArrowsScan(full: StructType, required: StructType, paths: Seq[String
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ArrowsMicroBatchStream(required, rawDirs)
 
-  /** One partition per file/URL; a /q/ dynamic serve first probes the
-    * server's /qsplit/ spill listing and expands to one partition per
-    * spilled part file (option split=false opts out); a URL whose
-    * server publishes a batch-offset index (our /offsets endpoint)
-    * additionally splits into byte-range partitions — the get_range
-    * split-fetch made a parallel scan (SURVEY §2.4; §4). */
+  /** Read tasks: each file/URL is a piece; a /q/ dynamic serve first
+    * probes the server's /qsplit/ spill listing and expands to one piece
+    * per spilled part file (option split=false opts out); a URL whose
+    * server publishes a batch-offset index (our /offsets endpoint) and
+    * option rangepartitions > 1 splits into byte-range pieces — the
+    * get_range split-fetch made a parallel scan (SURVEY §2.4; §4). The
+    * pieces are then packed into tasks by [[ArrowsScan.pack]]. */
   override def planInputPartitions(): Array[InputPartition] =
     // dissociated dual-channel dataset: the protocol's unit of
     // parallelism is the CHANNEL PAIR — a spilled dataset publishes one
     // per part (the reference's FlightInfo endpoint list is plural,
-    // cudf-flight-server.cc:349-365), so plan one InputPartition per
-    // pair; the out-of-order concurrency lives INSIDE each pair's fetch.
-    // A single-pair dataset (unspilled/empty) stays one partition.
+    // cudf-flight-server.cc:349-365), so each pair is a piece; the
+    // out-of-order concurrency lives INSIDE each pair's fetch. A
+    // single-pair dataset (unspilled/empty) stays one partition.
     if (dissoc.isDefined) {
       val parts =
         if (!dissocFanout) Nil
         else try ArrowsTableProvider.dissocInfo(dissoc.get)._2
         catch { case _: Exception => Nil }
       if (parts.size > 1)
-        // pair-direct partitions: the inline channel URIs skip the
+        // pair-direct pieces: the inline channel URIs skip the
         // per-part discovery GET; entries without them (a foreign
         // server publishing info URIs only) resolve at open time
-        parts.map(p => ArrowsInputPartition(p.infoUri, -1, -1, -1,
-          dissoc = true, dissocMeta = p.metaUri, dissocBody = p.bodyUri)).toArray
-      else Array(ArrowsInputPartition(dissoc.get, -1, -1, -1, dissoc = true))
-    } else paths.flatMap { p =>
+        ArrowsScan.packed(parts.map(p => ArrowsPiece(p.infoUri,
+          dissoc = true, dissocMeta = p.metaUri, dissocBody = p.bodyUri) -> p.bytes))
+      else Array(ArrowsInputPartition(Seq(ArrowsPiece(dissoc.get, dissoc = true))))
+    } else ArrowsScan.packed(paths.flatMap { p =>
       val expanded =
         if (split && ArrowsTableProvider.isUrl(p) && p.contains("/q/")) {
           val parts = ArrowsTableProvider.probeSplits(p)
-          if (parts.nonEmpty) parts else Seq(p)
-        } else Seq(p)
-      expanded.flatMap { u =>
+          if (parts.nonEmpty) parts.map(s => s.uri -> s.bytes) else Seq(p -> -1L)
+        } else if (ArrowsTableProvider.isUrl(p)) Seq(p -> -1L)
+        else Seq(p -> new java.io.File(ArrowsTableProvider.stripScheme(p)).length)
+      expanded.flatMap { case (u, bytes) =>
         val ranged =
           if (rangePartitions > 1 && ArrowsTableProvider.isUrl(u) && u.contains("/files/"))
             ArrowsTableProvider.rangedPartitions(u, rangePartitions)
           else Nil
-        if (ranged.nonEmpty) ranged
-        else Seq(ArrowsInputPartition(u, -1, -1, -1, accept = accept))
+        // a range piece is a task of its own: the option asked for that split
+        if (ranged.nonEmpty) ranged.map(_ -> -1L)
+        else Seq(ArrowsPiece(u, accept = accept) -> bytes)
       }
-    }.toArray
+    })
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ArrowsReaderFactory(required)
 }
 
-final case class ArrowsInputPartition(path: String,
-    schemaEnd: Long, start: Long, end: Long,
+object ArrowsScan {
+  /** Spark's file-packing rule over pieces of known byte size (-1:
+    * unknown), in their given order: each piece adds its size plus
+    * `spark.sql.files.openCostInBytes` to the current group, and a
+    * group closes when its total plus the next piece's size is more
+    * than `maxSplitBytes`. A piece of unknown size is a group of its
+    * own, and so, by the rule, is a piece of `maxSplitBytes` or more.
+    * Pieces are never sorted, so rows come back in piece order. */
+  def pack[T](pieces: Seq[(T, Long)], maxSplitBytes: Long, openCost: Long): Seq[Seq[T]] = {
+    val groups = Seq.newBuilder[Seq[T]]
+    val current = scala.collection.mutable.ArrayBuffer[T]()
+    var size = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      groups += current.toList; current.clear(); size = 0L
+    }
+    pieces.foreach { case (piece, bytes) =>
+      if (bytes < 0 || size + bytes > maxSplitBytes) close()
+      current += piece
+      if (bytes < 0) close() else size += bytes + openCost
+    }
+    close()
+    groups.result()
+  }
+
+  /** [[pack]] with Spark's own split size for these pieces
+    * (`FilePartition.maxSplitBytes` over the sum of size + open cost of
+    * the sized pieces, which reads `spark.sql.files.maxPartitionBytes`
+    * and `spark.sql.files.minPartitionNum` or the default parallelism). */
+  def packed(pieces: Seq[(ArrowsPiece, Long)]): Array[InputPartition] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val total = pieces.map(_._2).filter(_ >= 0).map(_ + openCost).sum
+    val maxSplit = FilePartition.maxSplitBytes(SparkSession.active, total)
+    pack(pieces, maxSplit, openCost).map(g => ArrowsInputPartition(g): InputPartition).toArray
+  }
+}
+
+/** One stream a read task opens: a local file or URL, a byte span of
+  * one (`start >= 0`: [schema][span][EOS] from two range GETs), or a
+  * dissociated channel pair. */
+final case class ArrowsPiece(path: String,
+    schemaEnd: Long = -1, start: Long = -1, end: Long = -1,
     dissoc: Boolean = false,
     dissocMeta: String = "", dissocBody: String = "",
-    accept: String = "") extends InputPartition {
+    accept: String = "") {
   def isRanged: Boolean = start >= 0
 }
+
+/** A read task: a contiguous run of pieces, read one after another. */
+final case class ArrowsInputPartition(pieces: Seq[ArrowsPiece]) extends InputPartition
 
 /** 1:1 Arrow↔Spark mapping (no widening/dictionary) → columnar OK. */
 object ExactMap {
@@ -449,17 +514,41 @@ final class ArrowsReaderFactory(required: StructType)
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new ArrowsRowReader(p.asInstanceOf[ArrowsInputPartition], required)
+    new ArrowsPackedReader(p.asInstanceOf[ArrowsInputPartition].pieces,
+      new ArrowsRowReader(_, required))
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    new ArrowsColumnarReader(p.asInstanceOf[ArrowsInputPartition], required)
+    new ArrowsPackedReader(p.asInstanceOf[ArrowsInputPartition].pieces,
+      new ArrowsColumnarReader(_, required))
+}
+
+/** Reads a task's pieces in order, holding one piece's reader (and its
+  * sockets) open at a time. A failure in any piece fails the task. */
+final class ArrowsPackedReader[T](pieces: Seq[ArrowsPiece],
+    open: ArrowsPiece => PartitionReader[T]) extends PartitionReader[T] {
+  private val rest = pieces.iterator
+  private var current: PartitionReader[T] = _
+
+  override def next(): Boolean = {
+    var found = false
+    while (!found && (current != null || rest.hasNext)) {
+      if (current == null) current = open(rest.next())
+      found = current.next()
+      if (!found) close()
+    }
+    found
+  }
+  override def get(): T = current.get()
+  override def close(): Unit = if (current != null) {
+    try current.close() finally current = null
+  }
 }
 
 /** Shared reader plumbing: stream/file → per-batch vector access. A
-  * ranged partition synthesizes [schema][its byte span][EOS] from two
+  * ranged piece synthesizes [schema][its byte span][EOS] from two
   * range GETs — a valid standalone stream (the get_range concatenation
   * premise). */
-abstract class ArrowsReaderBase(part: ArrowsInputPartition) {
+abstract class ArrowsReaderBase(part: ArrowsPiece) {
   protected val alloc = ArrowBridge.newAllocator("dsv2-read")
   protected val reader =
     if (part.dissoc) {
@@ -484,7 +573,7 @@ abstract class ArrowsReaderBase(part: ArrowsInputPartition) {
   def closeAll(): Unit = { reader.close(); alloc.close() }
 }
 
-final class ArrowsColumnarReader(part: ArrowsInputPartition, required: StructType)
+final class ArrowsColumnarReader(part: ArrowsPiece, required: StructType)
     extends ArrowsReaderBase(part) with PartitionReader[ColumnarBatch] {
   private val arrowFieldIndex: Map[String, Int] =
     root.getSchema.getFields.asScala.map(_.getName).zipWithIndex.toMap
@@ -504,7 +593,7 @@ final class ArrowsColumnarReader(part: ArrowsInputPartition, required: StructTyp
   override def close(): Unit = { if (batch != null) batch.close(); closeAll() }
 }
 
-final class ArrowsRowReader(part: ArrowsInputPartition, required: StructType)
+final class ArrowsRowReader(part: ArrowsPiece, required: StructType)
     extends ArrowsReaderBase(part) with PartitionReader[InternalRow] {
   private val rows = new InternalRows(reader, required)
   private var row: InternalRow = _

@@ -3,8 +3,11 @@ package graft
 import java.security.MessageDigest
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.catalyst.expressions.NamedExpression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Prints one line per `SparkEntry.queries` entry: its name and a hash of
   * its optimized logical plan, with `#<exprId>` suffixes stripped so two
@@ -16,28 +19,60 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * With `planDir`, each query's canonical plan text is also written to
   * `planDir/<name>.txt`, so a digest that moved can be diffed.
   *
-  * Three things would make an unchanged query's digest vary between runs,
-  * and all three are neutralised here:
+  * Five things would make an unchanged query's digest vary between runs,
+  * and all five are neutralised here:
   *   - Spark orders the groups of several DISTINCT aggregates by a hash
   *     of their expression ids, so the ids a query gets must not depend
   *     on how many the queries before it used: each query's ids start
   *     at a fixed base (the counter only ever moves forward);
+  *   - a lambda variable built through the Column API is named from a
+  *     JVM-global counter (`x_17`), so its number moves with the lambdas
+  *     the queries before it built: variables are renumbered in order of
+  *     first appearance in the plan;
   *   - q52's bucketed tables carry the JVM's pid in their names;
-  *   - a physical plan embedded in a persisted store's `InMemoryRelation`
-  *     prints `[plan_id=N]` from a global counter, which moves with the
-  *     number of plans the JVM built before the query.
+  *   - a persisted store's `InMemoryRelation` prints its physical plan,
+  *     whose adaptive part changes once the store has run (an earlier
+  *     query may have run it), so the store is printed through the
+  *     logical plan it caches instead;
+  *   - a physical plan still embedded in the printed tree prints
+  *     `[plan_id=N]` from a global counter, which moves with the number
+  *     of plans the JVM built before the query.
   */
 object PlanDigest {
 
   private val pidSuffix = s"_${ProcessHandle.current().pid()}\\b"
 
+  /** Stands in the printed tree for a persisted store: its output and
+    * storage level over the logical plan it caches. */
+  private final case class Store(output: Seq[Attribute], level: StorageLevel, cached: LogicalPlan)
+      extends LeafNode {
+    override def innerChildren: Seq[QueryPlan[_]] = Seq(cached)
+    override def simpleString(maxFields: Int): String =
+      s"InMemoryRelation [${output.mkString(", ")}], $level"
+  }
+
+  private def withStores(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries { case r: InMemoryRelation =>
+      Store(r.output, r.cacheBuilder.storageLevel, withStores(r.cacheBuilder.logicalPlan))
+    }
+
+  private val lambdaVar = "lambda ([A-Za-z]\\w*?)_(\\d+)".r
+
+  private def renumberLambdas(text: String): String = {
+    val seen = scala.collection.mutable.Map[String, Int]()
+    lambdaVar.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+      s"lambda ${m.group(1)}_${seen.getOrElseUpdate(m.group(0), seen.size)}"))
+  }
+
   /** The full plan tree (no field truncation) minus expression ids and
-    * physical plan ids. */
+    * physical plan ids, each persisted store printed as the plan it
+    * caches and lambda variables numbered by the plan. */
   def canonical(plan: LogicalPlan): String =
-    plan.treeString(verbose = true, addSuffix = false, maxFields = Int.MaxValue)
+    renumberLambdas(withStores(plan).treeString(verbose = true, addSuffix = false,
+        maxFields = Int.MaxValue)
       .replaceAll("#\\d+", "")
       .replaceAll("\\[plan_id=\\d+\\]", "[plan_id=<n>]")
-      .replaceAll(pidSuffix, "_<pid>")
+      .replaceAll(pidSuffix, "_<pid>"))
 
   /** Spark's global expression-id counter. */
   private lazy val exprIds: AtomicLong = {

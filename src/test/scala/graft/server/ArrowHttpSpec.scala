@@ -87,17 +87,20 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     val uris = "\"uri\": \"([^\"]+)\"".r.findAllMatchIn(new String(body, UTF_8))
       .map(_.group(1)).toVector
     assert(uris.size === 2, s"expected one URI per partition, got $uris") // 2 input partitions
-    // the split-aware read plans one partition per part file and
-    // returns the same rows as the single-stream read
-    val df = spark.read.format("arrows")
-      .option("url", s"${server.baseUrl}/q/bench").load()
-    assert(df.rdd.getNumPartitions === 2, df.rdd.getNumPartitions.toString)
-    assert(df.count() === 10000)
-    val single = spark.read.format("arrows")
-      .option("split", "false")
-      .option("url", s"${server.baseUrl}/q/bench").load()
-    assert(single.rdd.getNumPartitions === 1)
-    assert(df.except(single).count() === 0 && single.except(df).count() === 0)
+    // the split-aware read packs the part files into tasks (two parts
+    // no bigger than the open cost each, at 4 pinned cores, stay one
+    // task each) and returns the same rows as the single-stream read
+    graft.SqlConfs.withConf(spark, graft.SqlConfs.PinnedPacking: _*) {
+      val df = spark.read.format("arrows")
+        .option("url", s"${server.baseUrl}/q/bench").load()
+      assert(df.rdd.getNumPartitions === 2, df.rdd.getNumPartitions.toString)
+      assert(df.count() === 10000)
+      val single = spark.read.format("arrows")
+        .option("split", "false")
+        .option("url", s"${server.baseUrl}/q/bench").load()
+      assert(single.rdd.getNumPartitions === 1)
+      assert(df.except(single).count() === 0 && single.except(df).count() === 0)
+    }
   }
 
   test("negotiation: zstd HTTP coding round-trips") {

@@ -151,12 +151,14 @@ class ArrowsStreamingSpec extends AnyFunSuite with TempDirs {
     val parts = s2.planInputPartitions(
       s2.deserializeOffset(start.json()), s2.deserializeOffset(endJson))
     assert(parts.length === 2)
-    assert(parts.map(_.asInstanceOf[ArrowsInputPartition].path).toSet === Set(f0, f1))
+    assert(parts.flatMap(_.asInstanceOf[ArrowsInputPartition].pieces.map(_.path)).toSet ===
+      Set(f0, f1))
 
     // and new arrivals continue after the restored assignments
     val f2 = drop(2)
     val next = s2.latestOffset()
     val tail = s2.planInputPartitions(s2.deserializeOffset(endJson), next)
-    assert(tail.map(_.asInstanceOf[ArrowsInputPartition].path).toSeq === Seq(f2))
+    assert(tail.flatMap(_.asInstanceOf[ArrowsInputPartition].pieces.map(_.path)).toSeq ===
+      Seq(f2))
   }
 }

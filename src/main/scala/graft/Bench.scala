@@ -280,7 +280,7 @@ object Bench {
     locally {
       System.err.println("bench: d08_substring_dedup_cold")
       cells.run("d08_substring_dedup_cold") {
-        graft.operators.DedupOps.invalidateGram8Store(spark, sfDir)
+        graft.operators.OpUtils.release(spark, graft.operators.DedupOps.gram8Stores(sfDir): _*)
         timed(mat(fns("d08_substring_dedup")(spark, sfDir)))
       }
       checkpoint("d08_substring_dedup_cold")

@@ -31,31 +31,23 @@ object D09Audit {
     val sfDir = args(0)
     val spark = GraftSession.builder("graft-d09audit", "32").getOrCreate()
     try {
-      graft.functions.GraftFunctions.register(spark)
       val t0 = System.nanoTime()
-      // the exact d09 sketch pipeline (DedupOps d09_simhash_band_pairs;
-      // r14: 120-bit sketch over 3-GRAM shingles, 4×30-bit bands)
+      // d09's own sketch frame (120-bit sketch over 3-GRAM shingles,
+      // 4×30-bit bands); every frame read twice is a transient frame
       val bandKey = "(CASE WHEN band < 2 THEN shiftright(sh_hi, band * 30) " +
         "ELSE shiftright(sh_lo, (band - 2) * 30) END) & 1073741823"
-      val sh = Tables.documents(spark, sfDir)
-        .withColumn("sk", graft.functions.GraftFunctions.simHash120(
-          graft.functions.GraftFunctions
-            .gramHashes120(operators.OpUtils.words(col("text")), 3)))
-        .select(col("doc_id"),
-          element_at(col("sk"), 1).as("sh_hi"),
-          element_at(col("sk"), 2).as("sh_lo"))
-        .persist()
+      val sh = operators.DedupOps.sketch120(spark, sfDir)
       val nDocs = sh.count()
       val bands = sh.select(col("doc_id"), col("sh_hi"), col("sh_lo"),
           explode(sequence(lit(0), lit(3))).as("band"))
         .withColumn("key", expr(bandKey))
-      val joined = bands.as("a").join(bands.as("b"),
+      val joined = operators.OpUtils.transient(spark, "audit:joined",
+        bands.as("a").join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
           (expr("bit_count(a.sh_hi ^ b.sh_hi)") +
-            expr("bit_count(a.sh_lo ^ b.sh_lo)")).as("hamming"))
-        .persist()
+            expr("bit_count(a.sh_lo ^ b.sh_lo)")).as("hamming")))
       val collisionRows = joined.count() // band-join output (incl. multi-band hits)
       // bucket-population profile: the collect_list skew guard's working
       // set (max members per (band, key)) and how the collision mass
@@ -66,13 +58,14 @@ object D09Audit {
         .agg(max(col("n")).as("mx"), count(lit(1)).as("nb")).head()
       val (maxBucket, nBuckets) = (bstats.getLong(0), bstats.getLong(1))
       val candidatePairs = joined.select("a_id", "b_id").distinct().count()
-      val truePairs = joined.filter(col("hamming") <= 3)
-        .select("a_id", "b_id").distinct().persist()
+      val truePairs = operators.OpUtils.transient(spark, "audit:true",
+        joined.filter(col("hamming") <= 3).select("a_id", "b_id").distinct())
       val nTrue = truePairs.count()
       // the same candidate join over the DISTINCT sketch frame (the m18
       // exact-dedup-first move): how much of the collision volume is
       // identical sketches colliding with themselves copy × copy?
-      val reps = sh.select(col("sh_hi"), col("sh_lo")).distinct().persist()
+      val reps = operators.OpUtils.transient(spark, "audit:reps",
+        sh.select(col("sh_hi"), col("sh_lo")).distinct())
       val nSketches = reps.count()
       val bandsD = reps.select(col("sh_hi"), col("sh_lo"),
           explode(sequence(lit(0), lit(3))).as("band"))
@@ -82,7 +75,6 @@ object D09Audit {
             (col("a.sh_hi") < col("b.sh_hi") ||
               (col("a.sh_hi") === col("b.sh_hi") &&
                 col("a.sh_lo") < col("b.sh_lo")))).count()
-      reps.unpersist()
       // CONTENT ground truth (r14): pairs with 3-gram jaccard >= 0.5
       // over hashed shingle sets — d04's notion of near-dup, computed
       // with an inverted-index join on shared shingles (pairs that
@@ -92,20 +84,19 @@ object D09Audit {
           .gramHashes60(operators.OpUtils.words(col("text")), 3)).as("gs"))
         .filter(size(col("gs")) > 0)
         .select(col("doc_id"), size(col("gs")).as("ng"), explode(col("gs")).as("h"))
-      val gt = g.as("a").join(g.as("b"),
+      val gt = operators.OpUtils.transient(spark, "audit:gt",
+        g.as("a").join(g.as("b"),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
           col("a.ng").as("na"), col("b.ng").as("nb"))
         .agg(count(lit(1)).as("inter"))
         .filter(col("inter").cast("double") /
           (col("na") + col("nb") - col("inter")) >= 0.5)
-        .select(col("a_id"), col("b_id"))
-        .persist()
+        .select(col("a_id"), col("b_id")))
       val gtPairs = gt.count()
       val gtCaught = gt.join(truePairs, Seq("a_id", "b_id")).count()
-      gt.unpersist(); truePairs.unpersist()
       val secs = (System.nanoTime() - t0) / 1e9
-      joined.unpersist(); sh.unpersist()
+      operators.OpUtils.releaseTransients(spark)
       val json =
         f"""{"sf_dir":"$sfDir","n_docs":$nDocs,"n_sketches":$nSketches,""" +
           f""""max_bucket":$maxBucket,"n_buckets":$nBuckets,""" +

@@ -72,6 +72,17 @@ object Dissociated {
     seq
   }
 
+  /** Writes the metadata channel of a schema probe: the schema frame of
+    * the stream `first` opens, then EOS after no batch. */
+  def streamSchema(first: () => IpcFrames.Reader, out: OutputStream): Unit = {
+    val frames = first()
+    val schema = try frames.find(_.isSchema).get finally frames.close()
+    val d = new DataOutputStream(out)
+    writeMetaFrame(d, TypeSchema, 0, schema.framedHeader)
+    writeMetaFrame(d, TypeEos, 0, Array.empty)
+    d.flush()
+  }
+
   /** Body frames per delivery window of [[streamBody]]. */
   private val ShuffleWindow = 8
 

@@ -43,26 +43,20 @@ object DedupOps {
       |         regexp_replace(trim(text), ' +[^ ]+$', '') AS t
       |  FROM documents)""".stripMargin
 
-  /** corpus + 16-hash MinHash signature per doc. persist() calls are
-    * load-bearing: the signature frame is read 4× by the band explode
-    * and twice by the self-join; without the barrier Catalyst inlines
-    * (= recomputes) the md5 shingle pipeline at every reference —
-    * measured 10× slowdown at sf0.1.
+  /** corpus + 16-hash MinHash signature per doc. The store barriers
+    * are load-bearing: the signature frame is read 4× by the band
+    * explode and twice by the self-join; without the barrier Catalyst
+    * inlines (= recomputes) the md5 shingle pipeline at every reference
+    * — measured 10× slowdown at sf0.1.
     *
-    * The per-(session, dir) caches make repeated dedup calls reuse the
-    * materialized frames — the session-local analogue of the 100 TB
-    * design (signatures written once to a bucketed table, LSH queries
-    * run against it); without them every invocation re-did the full
-    * shingle→minhash build. The gram-VALUE frame is cached separately
-    * from the signatures because the pair-verification step reuses it
+    * Both are session stores ([[OpUtils.store]]) — the session-local
+    * analogue of the 100 TB design (signatures written once to a
+    * bucketed table, LSH queries run against it). The gram-VALUE frame
+    * is a store of its own because the pair-verification step reuses it
     * (hashed gram sets), so the text→words→3-gram→md5 pipeline runs
     * once per (session, dir) total. */
-  private val gvCache = scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
-  private val sigCache = scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
-
   private def gramFrame(s: SparkSession, d: String): DataFrame =
-    gvCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      graft.functions.GraftFunctions.register(s)
+    OpUtils.store(s, s"gramValues:$d") {
       corpus(s, d)
         // r11: native gram_hashes60(ws,3) % 2^30 is BIT-IDENTICAL to
         // gramVals(grams3(ws)) — same md5, same low 30 bits — without
@@ -70,11 +64,10 @@ object DedupOps {
         .withColumn("gvs", transform(
           graft.functions.GraftFunctions.gramHashes60(words(col("t")), 3),
           h => pmod(h, lit(1L << 30))))
-        .persist()
-    })
+    }
 
   private def signatures(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((System.identityHashCode(s), d),
+    OpUtils.store(s, s"signatures:$d") {
       gramFrame(s, d)
         // r14: native minhash_sig16 — one generated pass computes all 16
         // running minima; the HOF form ran 16 INTERPRETED array
@@ -82,7 +75,7 @@ object DedupOps {
         // Bit-identical (MinhashSig16Spec pins it against the HOF form).
         .withColumn("sig", graft.functions.GraftFunctions.minhashSig16(col("gvs")))
         .drop("gvs")
-        .persist())
+    }
 
   private val oSignatures =
     s"""$oCorpus,
@@ -200,7 +193,7 @@ object DedupOps {
     * pass per 3-gram window feeds both 60-bit halves. */
   private[graft] def sketch120(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    OpUtils.transientPersist(s, s"d09:$d",
+    OpUtils.transient(s, s"d09:$d",
       Tables.documents(s, d)
         .withColumn("sk", graft.functions.GraftFunctions.simHash120(
           graft.functions.GraftFunctions.gramHashes120(words(col("text")), 3)))
@@ -386,15 +379,14 @@ object DedupOps {
   /** [[hopLabels]] as Spark joins, for a pair set too large for the
     * driver: two doubling self-joins over the edge set (both directions
     * plus self-loops), the log-diameter closure the oracle mirrors.
-    * Both joined frames are persisted through `transientPersist` under
-    * `tag`: each is referenced twice by the join that reads it, and
-    * without the barrier Catalyst recomputes the whole candidate-pair
-    * verification at every reference (d24 once took 84 s instead of
-    * 8 s on 10x data that way). Re-entry with the same tag releases the
-    * previous build, so at most one closure's frames stay cached. One
-    * explode emits a pair's four edges from one pass over the pairs. */
+    * Both joined frames are [[OpUtils.transient]] under `tag`: each is
+    * referenced twice by the join that reads it, and without the
+    * barrier Catalyst recomputes the whole candidate-pair verification
+    * at every reference (d24 once took 84 s instead of 8 s on 10x data
+    * that way). One explode emits a pair's four edges from one pass
+    * over the pairs. */
   private[operators] def doublingLabels(s: SparkSession, p: DataFrame, tag: String): DataFrame = {
-    val e = OpUtils.transientPersist(s, s"d07edges:$tag",
+    val e = OpUtils.transient(s, s"d07edges:$tag",
       p.select(explode(array(
           struct(col("a_id").as("src"), col("b_id").as("dst")),
           struct(col("b_id").as("src"), col("a_id").as("dst")),
@@ -406,14 +398,14 @@ object DedupOps {
       r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
         .select(col("x.src").as("src"), col("y.dst").as("dst"))
         .distinct()
-    dbl(OpUtils.transientPersist(s, s"d07dbl:$tag", dbl(e)))
+    dbl(OpUtils.transient(s, s"d07dbl:$tag", dbl(e)))
       .groupBy(col("src")).agg(min(col("dst")).as("cluster"))
   }
 
   /** Shared word-8-gram store over `documents` — ONE gram pipeline for
     * every exact-substring-family operator (d08 duplication profile,
     * d11 decontamination, d13 containment-complete candidates). Two
-    * cached frames per (session, dir):
+    * session stores per dir, which [[gram8Stores]] names:
     *
     *  - [[gram8Exploded]] `(doc_id, n_grams, h)`: every word 8-gram as
     *    a 16-byte binary md5, map-side only (no shuffle in the cached
@@ -431,12 +423,10 @@ object DedupOps {
     * tokenized and hashed exactly once. Docs under 8 words contribute
     * no rows (explode of an empty array), matching both engines'
     * oracles. */
-  private val gram8Cache = scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
-  private val gram8AggCache = scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
+  private[graft] def gram8Stores(d: String): Seq[String] = Seq(s"gram8Agg:$d", s"gram8:$d")
 
   private[operators] def gram8Exploded(s: SparkSession, d: String): DataFrame =
-    gram8Cache.getOrElseUpdate((System.identityHashCode(s), d), {
-      graft.functions.GraftFunctions.register(s)
+    OpUtils.store(s, s"gram8:$d") {
       Tables.documents(s, d)
         .withColumn("ws", words(col("text")))
         .select(col("doc_id"),
@@ -447,22 +437,10 @@ object DedupOps {
           // (GramMd5Spec pins it) — the store build was the dominant
           // cost of every d08-family cell (guide §1.2 per-task work).
           explode(graft.functions.GraftFunctions.gramMd5(col("ws"), 8)).as("h"))
-        .persist()
-    })
-
-  /** Drop the per-(session,dir) 8-gram store so a bench can time the
-    * COLD path — store build + query — in the same JVM. The store-warm
-    * d08 cell times the recurring cost against a persisted store (the
-    * steady-state shape at scale); this makes the amortized one-time
-    * build cost measurable alongside it instead of hiding in warm-up. */
-  def invalidateGram8Store(s: SparkSession, d: String): Unit = {
-    val k = (System.identityHashCode(s), d)
-    gram8AggCache.remove(k).foreach(_.unpersist(true))
-    gram8Cache.remove(k).foreach(_.unpersist(true))
-  }
+    }
 
   private[operators] def gram8Agg(s: SparkSession, d: String): DataFrame =
-    gram8AggCache.getOrElseUpdate((System.identityHashCode(s), d), {
+    OpUtils.store(s, s"gram8Agg:$d") {
       // Register the cache with AQE off: an ADAPTIVE cached plan
       // advertises UnknownPartitioning to consumers, which would
       // re-shuffle the full gram volume above every InMemoryTableScan —
@@ -472,14 +450,15 @@ object DedupOps {
       // inherit it exchange-free (PlanSpec pins this). persist()
       // compiles the physical plan eagerly, so the toggle only scopes
       // this registration, not the queries that later materialize it.
+      val exploded = gram8Exploded(s, d)
       val prev = s.conf.get("spark.sql.adaptive.enabled")
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      try gram8Exploded(s, d)
+      try exploded
         .repartition(col("h"))
         .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("c"))
         .persist()
       finally s.conf.set("spark.sql.adaptive.enabled", prev)
-    })
+    }
 
   /** The d11 benchmark gram set: distinct word-8-gram md5s of the eval
     * snippets (words 5..20 of every doc_id % 25 == 0 under the absolute
@@ -1564,7 +1543,7 @@ object DedupOps {
             sequence(lit(0), ((size(col("ws")) - 1) / lit(10)).cast("int")),
             k => unhex(md5(concat_ws(" ", slice(col("ws"), k * 10 + 1, lit(10)))))))
             .as("h"))
-        val grp = OpUtils.transientPersist(s, "d27grp",
+        val grp = OpUtils.transient(s, "d27grp",
           lines.repartition(col("h"))
             .groupBy(col("h"), col("source")).agg(count(lit(1)).as("cnt")))
         val a = grp.select(col("h"), col("source").as("src_a"), col("cnt").as("cnt_a"))
@@ -1940,7 +1919,7 @@ object DedupOps {
           // one combined (sig, gram-set) frame per doc: candidates join
           // back TWICE total instead of four times (sigs and gsets
           // separately per side)
-          val combined = OpUtils.transientPersist(s, s"d34:$d",
+          val combined = OpUtils.transient(s, s"d34:$d",
             signatures(s, d).select(col("doc_id"), col("sig"))
               .join(gramFrame(s, d)
                 .select(col("doc_id"), array_distinct(col("gvs")).as("gs"))
@@ -2008,7 +1987,7 @@ object DedupOps {
     QueryDef.sql("d35_simhash_band_calibration",
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
-        val sh = OpUtils.transientPersist(s, s"d35:$d",
+        val sh = OpUtils.transient(s, s"d35:$d",
           Tables.documents(s, d)
             .withColumn("sk", graft.functions.GraftFunctions.simHash120(
               graft.functions.GraftFunctions.gramHashes120(words(col("text")), 1)))

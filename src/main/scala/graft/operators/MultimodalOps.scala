@@ -1704,7 +1704,7 @@ object MultimodalOps {
         // persist barrier: without it both sides of the self-join re-run
         // the decode RDD and the distinct-sketch rollup (two full decode
         // passes — the p17/s21 lesson)
-        val reps = OpUtils.transientPersist(s, s"m18:$d",
+        val reps = OpUtils.transient(s, s"m18:$d",
           df.groupBy(col("dhash"))
             .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_copies")))
         val bands = reps.select(col("dhash"), col("rep"), col("n_copies"),
@@ -1799,7 +1799,7 @@ object MultimodalOps {
           StructField("doc_id", LongType, nullable = false),
           StructField("n_frames", IntegerType, nullable = false),
           StructField("fp", LongType, nullable = false))))
-        val reps = OpUtils.transientPersist(s, s"m19:$d",
+        val reps = OpUtils.transient(s, s"m19:$d",
           df.groupBy(col("n_frames"), col("fp"))
             .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_copies")))
         val bands = reps.select(col("n_frames"), col("fp"), col("rep"),
@@ -2144,7 +2144,7 @@ object MultimodalOps {
           .distinct()
         // one distinct caption-content frame per gid; 16-byte hashes
         // shuffle, captions don't
-        val dh = OpUtils.transientPersist(s, s"m23:$d",
+        val dh = OpUtils.transient(s, s"m23:$d",
           Tables.documents(s, d)
             .select(((col("doc_id") % 640) % 40).as("gid"),
               unhex(md5(trim(col("text")))).as("h"))
@@ -2246,7 +2246,7 @@ object MultimodalOps {
           StructField("doc_id", LongType, nullable = false),
           StructField("n_frames", IntegerType, nullable = false),
           StructField("vhash", LongType, nullable = false))))
-        val reps = OpUtils.transientPersist(s, s"m24:$d",
+        val reps = OpUtils.transient(s, s"m24:$d",
           df.groupBy(col("n_frames"), col("vhash"))
             .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_copies")))
         val bands = reps.select(col("n_frames"), col("vhash"), col("rep"),

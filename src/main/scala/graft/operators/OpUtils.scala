@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Cross-engine deterministic building blocks shared by the LLM-pipeline
   * operators (dedup / similarity / text analysis).
@@ -27,35 +32,54 @@ import org.apache.spark.sql.functions._
   */
 object OpUtils {
 
-  /** Bounded per-query persist: some operators persist a mid-plan frame
-    * consumed by two downstream branches (s17's candidate set, t21/t23's
-    * head counts). A bare `.persist()` there leaks — the frame can't be
-    * unpersisted before the lazy result materializes, so every bench /
-    * gate replay pinned another copy for the session lifetime (r7
-    * ADVICE). This registry keeps AT MOST ONE live frame per
-    * (session, tag): re-invoking the same query releases the previous
-    * invocation's frame (each rep still recomputes — the timing
-    * semantics are unchanged), and [[releaseTransients]] drops them all.
-    */
-  private val transients =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.sql.DataFrame]()
+  /** The session frame registry: the persisted frames the operator
+    * tiers share, keyed by session and a tag naming the frame and its
+    * dir. A [[store]] lives as long as the session, or until
+    * [[release]]; a [[transient]] is one frame per key, replaced by a
+    * re-entry (each rep still recomputes) and dropped by
+    * [[releaseTransients]]. Every frame is filled (persisted, then
+    * counted on the caller's thread) before it is handed out: AQE
+    * planning a consumer against a cache still filling reads a growing
+    * size statistic, and picks a join's build side per run. */
+  private val frames = new ConcurrentHashMap[(SparkSession, String), Frame]()
 
-  def transientPersist(s: org.apache.spark.sql.SparkSession, tag: String,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val k = (System.identityHashCode(s), tag)
-    transients.remove(k).foreach(_.unpersist(false))
-    val p = df.persist()
-    transients(k) = p
-    p
+  /** One entry. The first caller of `result` builds and fills it, and
+    * concurrent callers wait for that build and share its outcome. A
+    * build that persisted its frame itself (under its own confs) is not
+    * persisted again. */
+  private final class Frame(val transient: Boolean, build: () => DataFrame) {
+    lazy val result: Either[Throwable, DataFrame] = try {
+      val df = build()
+      val p = if (df.storageLevel == StorageLevel.NONE) df.persist() else df
+      try { p.count(); Right(p) } catch { case t: Throwable => p.unpersist(false); throw t }
+    } catch { case t: Throwable => Left(t) }
+    def unpersist(blocking: Boolean): Unit = result.foreach(_.unpersist(blocking))
   }
 
-  /** Release every transient frame registered for `s`. */
-  def releaseTransients(s: org.apache.spark.sql.SparkSession): Unit = {
-    val sid = System.identityHashCode(s)
-    transients.keys.filter(_._1 == sid).foreach { k =>
-      transients.remove(k).foreach(_.unpersist(true))
-    }
+  /** The frame of `f`, or its failure thrown after dropping the entry. */
+  private def handOut(k: (SparkSession, String), f: Frame): DataFrame =
+    f.result.fold(t => { frames.remove(k, f); throw t }, identity)
+
+  /** The store (`s`, `tag`), built by `build` on the first call; a build
+    * may ask for another store. A failed build leaves no entry. */
+  def store(s: SparkSession, tag: String)(build: => DataFrame): DataFrame =
+    handOut((s, tag),
+      frames.computeIfAbsent((s, tag), _ => new Frame(transient = false, () => build)))
+
+  /** `df` as the transient frame (`s`, `tag`), replacing the previous one. */
+  def transient(s: SparkSession, tag: String, df: DataFrame): DataFrame = {
+    val f = new Frame(transient = true, () => df)
+    Option(frames.put((s, tag), f)).foreach(_.unpersist(blocking = false))
+    handOut((s, tag), f)
   }
+
+  /** Drops the frames (`s`, `tags`) of either lifetime. */
+  def release(s: SparkSession, tags: String*): Unit =
+    tags.foreach(t => Option(frames.remove((s, t))).foreach(_.unpersist(blocking = true)))
+
+  /** Drops every transient frame of `s`; its stores stay. */
+  def releaseTransients(s: SparkSession): Unit =
+    frames.asScala.foreach { case ((fs, t), f) => if ((fs eq s) && f.transient) release(s, t) }
 
   /** Whitespace-tokenized words of the trimmed text. */
   def words(text: Column): Column = split(trim(text), " +")

@@ -163,7 +163,7 @@ object PipelineOps {
         val wLocal = Window.partitionBy(col("source"), col("sub"))
           .orderBy(col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val local = OpUtils.transientPersist(s, s"p22:$d",
+        val local = OpUtils.transient(s, s"p22:$d",
           Tables.documents(s, d)
             .select(col("doc_id"), col("source"),
               (col("doc_id") % 16).as("sub"),
@@ -838,7 +838,7 @@ object PipelineOps {
     // arithmetic on that bounded frame via two 1-row broadcast aggs.
     QueryDef.sql("p14_token_budget",
       (s, d) => {
-        val per = OpUtils.transientPersist(s, s"p14:$d",
+        val per = OpUtils.transient(s, s"p14:$d",
           Tables.documents(s, d)
             .transform(wordStats(words(col("text"))))
             .withColumn("quality", quality(col("n"), col("sum_len"), col("stop_hits")))
@@ -1022,11 +1022,11 @@ object PipelineOps {
     // crosses back as a 1-row broadcast.
     QueryDef.sql("p17_shard_skew",
       (s, d) => {
-        // transientPersist: the 16-row shard frame feeds both the total
+        // the 16-row shard frame feeds both the total
         // and the output — without the barrier Catalyst inlines the
         // corpus pass into BOTH consumers (two full scans; the s21/t25
         // lesson, PlanSpec-pinned here)
-        val per = OpUtils.transientPersist(s, s"p17:$d",
+        val per = OpUtils.transient(s, s"p17:$d",
           Tables.documents(s, d)
             .select(size(words(col("text"))).cast("long").as("n_tokens"),
               shard16(col("doc_id")).as("shard"))
@@ -1070,7 +1070,7 @@ object PipelineOps {
     QueryDef.sql("p18_shard_mixture",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val counts = OpUtils.transientPersist(s, s"p18:$d",
+        val counts = OpUtils.transient(s, s"p18:$d",
           Tables.documents(s, d)
             .select(shard16(col("doc_id")).as("shard"), col("source"))
             .groupBy(col("shard"), col("source"))
@@ -1335,7 +1335,7 @@ object PipelineOps {
     // two ppm denominators ride a 1-row aggregate-bounded broadcast.
     QueryDef.sql("p24_post_dedup_mixture",
       (s, d) => {
-        val marked = OpUtils.transientPersist(s, s"p24:$d",
+        val marked = OpUtils.transient(s, s"p24:$d",
           Tables.documents(s, d)
             .select(col("doc_id"), col("source"),
               unhex(md5(trim(col("text")))).as("h"))
@@ -1398,7 +1398,7 @@ object PipelineOps {
     // aggregate-bounded total broadcast.
     QueryDef.sql("p25_shard_dedup_leakage",
       (s, d) => {
-        val pairs = OpUtils.transientPersist(s, s"p25:$d",
+        val pairs = OpUtils.transient(s, s"p25:$d",
           graft.operators.DedupOps.simhashPairs(s, d)
             .select(shard16(col("a_id")).as("shard_a"),
               shard16(col("b_id")).as("shard_b")))

@@ -21,11 +21,6 @@ import OpUtils._
   */
 object SimilarityOps {
 
-  /** Centroid table cache per (session, dir) — the coarse quantizer is
-    * built once and reused by every IVF query, the session-local
-    * analogue of a persisted centroid table at cluster scale. */
-  private val centCache = scala.collection.concurrent.TrieMap[(Int, String), DataFrame]()
-
   private def vecs(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, d)
@@ -34,8 +29,9 @@ object SimilarityOps {
 
   private val oVecs = "SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
 
-  /** Per-label centroid table (the IVF coarse quantizer), built once per
-    * (session, dir) and persisted. Means are exact fixed-point sums —
+  /** Per-label centroid table (the IVF coarse quantizer), a session
+    * store reused by every IVF query, as a persisted centroid table
+    * would be at cluster scale. Means are exact fixed-point sums —
     * order-independent, O(1) agg state (see s03).
     *
     * r14 (guide §1.2 per-task work): the fixed-point sums ride LONG
@@ -49,12 +45,12 @@ object SimilarityOps {
     * cardinalities revisit with a two-level (long partial, decimal
     * final) cascade. */
   private def centroids(s: SparkSession, d: String, e: DataFrame): DataFrame =
-    centCache.getOrElseUpdate((System.identityHashCode(s), d),
+    OpUtils.store(s, s"centroids:$d") {
       e.groupBy(col("label"))
         .agg(array((1 to 64).map(dim =>
           sum(round(element_at(col("v"), dim) * lit(1e7)).cast("long"))
             .cast("double") / lit(1e7) / count(lit(1))): _*).as("cv"))
-        .persist())
+    }
 
   /** The s04/s05 shared oracle CTE for the centroid table. */
   private val oCents =
@@ -1150,12 +1146,10 @@ object SimilarityOps {
           .select(col("q_id"),
             posexplode(graft.functions.GraftFunctions.mipsBuckets(col("va")))
               .as(Seq("t", "bucket")))
-        // transientPersist: the candidate set feeds BOTH the per-query
-        // count and the exact-dot re-rank — without the barrier the
-        // whole 16-table bucket pipeline would run twice. Routed
-        // through the bounded registry so replays release the previous
-        // frame instead of pinning one per invocation (r7 ADVICE).
-        val cand = OpUtils.transientPersist(s, s"s17:$d",
+        // the candidate set feeds BOTH the per-query count and the
+        // exact-dot re-rank — without the barrier the whole 16-table
+        // bucket pipeline would run twice
+        val cand = OpUtils.transient(s, s"s17:$d",
           qt.join(ct, Seq("t", "bucket"))
             .select(col("q_id"), col("vec_id").as("n_id")).distinct())
         val nc = cand.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
@@ -1434,11 +1428,11 @@ object SimilarityOps {
         val e = vecs(s, d).filter(col("vec_id") < 200)
         val a = e.select(col("vec_id").as("i"), col("v").as("vi"))
         val b = e.select(col("vec_id").as("j"), col("v").as("vj"))
-        // transientPersist: the ≤20-row histogram feeds both the total
+        // the ≤20-row histogram feeds both the total
         // and the output — without the barrier Catalyst inlines the
         // whole pair pipeline into the total agg (= cosines computed
         // twice; the PlanSpec guard caught exactly this)
-        val g = OpUtils.transientPersist(s, s"s21:$d",
+        val g = OpUtils.transient(s, s"s21:$d",
           a.join(b, col("i") < col("j"))
             .withColumn("cos", cosine(col("vi"), col("vj")))
             .withColumn("bucket",
@@ -1496,9 +1490,9 @@ object SimilarityOps {
                 .otherwise(acc)
             }))
           .select(col("best").getField("c").as("cell"))
-        // transientPersist: the ≤|cells| frame feeds the totals AND the
+        // the ≤|cells| frame feeds the totals AND the
         // output — the barrier keeps the corpus argmax to one pass
-        val g = OpUtils.transientPersist(s, s"s22:$d",
+        val g = OpUtils.transient(s, s"s22:$d",
           assigned.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs")))
         val tot = g.agg(sum(col("n_vecs")).as("tot"), count(lit(1)).as("n_cells"))
         g.crossJoin(broadcast(tot)) // aggregate-bounded: 1 row
@@ -1544,7 +1538,7 @@ object SimilarityOps {
         val n = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
-        val top3 = OpUtils.transientPersist(s, s"s23:$d",
+        val top3 = OpUtils.transient(s, s"s23:$d",
           q.join(n, col("q_id") =!= col("n_id"))
             .withColumn("cos", cosine(col("qv"), col("nv")))
             .withColumn("rnk", row_number().over(w))
@@ -1598,12 +1592,12 @@ object SimilarityOps {
         val n = e.select(col("vec_id").as("n_id"), col("label"), col("v").as("nv"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))
-        // transientPersist: the ≤600-row edge list feeds both the
+        // the ≤600-row edge list feeds both the
         // in-degree agg and the edge total — the barrier keeps the pair
         // pipeline to one pass, and the DERIVED total (r8 ADVICE: the
         // literal 600 misscaled shares on corpora with < 200 vectors)
         // makes the shares sum to ~1e6 at any probe size
-        val top3 = OpUtils.transientPersist(s, s"s24:$d",
+        val top3 = OpUtils.transient(s, s"s24:$d",
           q.join(n, col("q_id") =!= col("n_id"))
             .withColumn("cos", cosine(col("qv"), col("nv")))
             .withColumn("rnk", row_number().over(w))
@@ -1670,7 +1664,7 @@ object SimilarityOps {
         val cents0 = centroids(s, d, e)
           .select(col("label").cast("long").as("cell"), col("cv"))
         val arr0 = cents0.agg(collect_list(struct(col("cell"), col("cv"))).as("cents"))
-        val a1 = OpUtils.transientPersist(s, "s25a1",
+        val a1 = OpUtils.transient(s, "s25a1",
           e.crossJoin(broadcast(arr0))
             .withColumn("cell1", argmax(col("cents")))
             .select(col("vec_id"), col("v"), col("cell1")))
@@ -1735,7 +1729,7 @@ object SimilarityOps {
         val e = vecs(s, d).filter(col("vec_id") < 200)
         val q = e.select(col("vec_id").as("q_id"), col("v").as("qv"))
         val n = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
-        val pc = OpUtils.transientPersist(s, s"s26:$d",
+        val pc = OpUtils.transient(s, s"s26:$d",
           q.join(n, col("q_id") =!= col("n_id"))
             .withColumn("cos_full", cosine(col("qv"), col("nv")))
             .withColumn("cos_trunc",
@@ -1808,7 +1802,7 @@ object SimilarityOps {
           // see the centroids() note
           sum(round(element_at(col("v"), dim) * lit(1e7)).cast("long"))
             .cast("double") / lit(1e7) / count(lit(1))
-        val halves = OpUtils.transientPersist(s, s"s27:$d",
+        val halves = OpUtils.transient(s, s"s27:$d",
           e.groupBy(col("label"), col("half"))
             .agg(count(lit(1)).as("n"), array((1 to 64).map(fxMean): _*).as("cv")))
         val a = halves.filter(col("half") === 0)
@@ -2227,7 +2221,7 @@ object SimilarityOps {
           .select(col("best").getField("c").as("cell"),
             floor((lit(1.0) - col("best").getField("s")) * lit(1e9))
               .cast("long").as("resid_nano"))
-        val g = OpUtils.transientPersist(s, s"s32:$d",
+        val g = OpUtils.transient(s, s"s32:$d",
           assigned.groupBy(col("cell"))
             .agg(count(lit(1)).as("n_vecs"),
               sum(col("resid_nano")).as("sum_resid_nano")))

@@ -14,18 +14,14 @@ import OpUtils._
   */
 object TextOps {
 
-  /** t11's hashed-bigram feature frame (doc_id, bks), cached per
-    * (session, dir) — the session-local analogue of a persisted feature
+  /** t11's hashed-bigram feature frame (doc_id, bks), a session store
+    * per dir — the session-local analogue of a persisted feature
     * store: the corpus-count pass, the target-count pass, and the
     * scoring pass all read ONE tokenize+hash pipeline instead of each
     * re-deriving it (the d08/d11 gram-store lesson; at 100 TB this
     * frame is a bucketed table written once per corpus snapshot). */
-  private val bgCache =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.sql.DataFrame]()
-
   private def bigramFrame(s: org.apache.spark.sql.SparkSession, d: String) =
-    bgCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      graft.functions.GraftFunctions.register(s)
+    OpUtils.store(s, s"bigrams:$d") {
       Tables.documents(s, d)
         .withColumn("ws", words(col("text")))
         .select(col("doc_id"),
@@ -37,24 +33,19 @@ object TextOps {
           // same rows the when() arm produced.
           transform(graft.functions.GraftFunctions.gramHashes60(col("ws"), 2),
             h => pmod(h, lit(4096L))).as("bks"))
-        .persist()
-    })
+    }
 
   /** t16's UNBUCKETED bigram-instance frame: one row per bigram
     * occurrence, carrying the 60-bit hash of the bigram (`bh`) and of
     * its prefix word (`ph`). Distinct from [[bigramFrame]] (t11's
     * 4096-bucket feature vectors — collisions are the point there; the
-    * LM counts here need real bigram identity). Cached per (session,
-    * dir) like the gram stores: the three aggregations t16 reads (per
+    * LM counts here need real bigram identity). A session store like
+    * the gram stores: the three aggregations t16 reads (per
     * (doc,bigram) multiplicity, corpus bigram counts, corpus prefix
     * counts) all scan THIS frame instead of re-tokenizing three times.
     * At 100 TB this is a bucketed table written once per snapshot. */
-  private val biCache =
-    scala.collection.concurrent.TrieMap[(Int, String), org.apache.spark.sql.DataFrame]()
-
   private def bigramInstances(s: org.apache.spark.sql.SparkSession, d: String) =
-    biCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      graft.functions.GraftFunctions.register(s)
+    OpUtils.store(s, s"bigramInstances:$d") {
       Tables.documents(s, d)
         .withColumn("ws", words(col("text")))
         .filter(size(col("ws")) >= 2)
@@ -68,8 +59,7 @@ object TextOps {
           slice(graft.functions.GraftFunctions.gramHashes60(col("ws"), 1),
             lit(1), size(col("ws")) - 1).as("ph"))).as("g"))
         .select(col("doc_id"), col("g.bh").as("bh"), col("g.ph").as("ph"))
-        .persist()
-    })
+    }
 
   /** Stopword profiles for the language-ID heuristic (public stopword
     * lists, truncated). Scores are hit counts of profile words. */
@@ -1051,13 +1041,11 @@ object TextOps {
     // broadcast; integer ppm end-to-end.
     QueryDef.sql("t21_head_coverage",
       (s, d) => {
-        // transientPersist: tot and the head cut both read the counted
-        // frame — without the barrier Catalyst would inline (= run
-        // twice) the explode+count pipeline, the dominant cost at
-        // corpus scale. Bounded registry: replays release the previous
-        // frame (r7 ADVICE).
+        // tot and the head cut both read the counted frame — without
+        // the barrier Catalyst would inline (= run twice) the
+        // explode+count pipeline, the dominant cost at corpus scale
         graft.functions.GraftFunctions.register(s)
-        val gc = OpUtils.transientPersist(s, s"t21:$d",
+        val gc = OpUtils.transient(s, s"t21:$d",
           Tables.documents(s, d)
             // native gram_hashes60 (one generated pass, no gram strings)
             .select(explode(graft.functions.GraftFunctions
@@ -1166,8 +1154,7 @@ object TextOps {
             .gramHashes60(words(col("text")), 3)).as("gh"))
           .groupBy(col("gh")).agg(count(lit(1)).as("cnt"))
         val wTop = Window.orderBy(col("cnt").desc, col("gh"))
-        // bounded registry, not a bare persist (r7 ADVICE)
-        val ranked = OpUtils.transientPersist(s, s"t23:$d",
+        val ranked = OpUtils.transient(s, s"t23:$d",
           gc.orderBy(col("cnt").desc, col("gh")).limit(1024)
             .withColumn("rnk", row_number().over(wTop))
             .select(col("rnk"), col("cnt")))
@@ -1242,11 +1229,11 @@ object TextOps {
     // touched exactly once, no joins. Shares are integer ppm.
     QueryDef.sql("t25_quality_bands",
       (s, d) => {
-        // transientPersist: the ≤20-row band frame feeds both the total
+        // the ≤20-row band frame feeds both the total
         // and the output — without the barrier Catalyst inlines the
         // corpus scan into the total agg (= corpus read twice; the
         // PlanSpec guard caught exactly this)
-        val g = OpUtils.transientPersist(s, s"t25:$d", qualityBands(Tables.documents(s, d)))
+        val g = OpUtils.transient(s, s"t25:$d", qualityBands(Tables.documents(s, d)))
         val tot = g.agg(sum(col("n_docs")).as("tot_docs"))
         val w = Window.orderBy(col("band").desc) // ≤20 rows: bounded frame
         g.crossJoin(broadcast(tot)) // aggregate-bounded: 1 row
@@ -1498,7 +1485,7 @@ object TextOps {
     QueryDef.sql("t30_footer_strip_effect",
       (s, d) => {
         val ws = words(trim(col("text")))
-        val tails = OpUtils.transientPersist(s, s"t30:$d",
+        val tails = OpUtils.transient(s, s"t30:$d",
           Tables.documents(s, d)
             .select(col("source"), ws.as("ws"))
             .filter(size(col("ws")) >= 8)

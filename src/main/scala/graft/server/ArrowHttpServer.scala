@@ -634,9 +634,17 @@ final class ArrowHttpServer(spark: SparkSession, port: Int = 0) {
   // a chunked channel pinned in ChunkedInputStream chunk decode), and
   // the connection's 64 KiB socket buffer coalesces the per-frame
   // writes (the meta channel makes ~4 small writes per batch).
+  // a schema probe (`X-Arrow-Schema-Only`, as on /q/) gets the schema
+  // frame and EOS only, not a whole channel it will not read
   dissocChannel("/dissoc/meta/") { (exchange, keys) =>
-    exchange.sendResponseHeaders(200, metaChannelLen(keys))
-    Dissociated.streamMetadata(partFrames(keys), exchange.responseBody)
+    if (exchange.requestHeader("X-Arrow-Schema-Only").isDefined) {
+      exchange.sendResponseHeaders(200, Dissociated.metaFrameLen(
+        frameIndex(keys.head).schemaFramed) + Dissociated.metaFrameLen(0))
+      Dissociated.streamSchema(partFrames(keys).head, exchange.responseBody)
+    } else {
+      exchange.sendResponseHeaders(200, metaChannelLen(keys))
+      Dissociated.streamMetadata(partFrames(keys), exchange.responseBody)
+    }
   }
 
   // bodies are delivered out of order within windows of 8 (under the

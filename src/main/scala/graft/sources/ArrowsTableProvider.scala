@@ -247,11 +247,12 @@ object ArrowsTableProvider {
         throw new IllegalArgumentException(s"no body channel in $infoUrl")))
   }
 
-  private def openRaw(url: String): InputStream = {
+  private def openRaw(url: String, schemaOnly: Boolean = false): InputStream = {
     // a channel is drained to EOF once, so a pooled connection buys
     // nothing; httpTimeouts opts it out of the keep-alive pool
     val conn = httpTimeouts(
       URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection])
+    if (schemaOnly) conn.setRequestProperty("X-Arrow-Schema-Only", "1")
     val code = conn.getResponseCode
     require(code == 200, s"GET $url -> HTTP $code")
     new BufferedInputStream(conn.getInputStream, 1 << 16)
@@ -280,10 +281,15 @@ object ArrowsTableProvider {
     new graft.dissociated.Dissociated.Reassembler(openRaw(metaUrl), () => openRaw(bodyUrl))
 
   /** Schema of a dissociated dataset: reads the schema frame off the
-    * metadata channel only; the body channel is never requested. */
-  def dissocSchema(infoUrl: String): StructType =
-    probeSchema("dissoc-schema-probe")(new ArrowStreamReader(openDissoc(infoUrl), _,
+    * metadata channel only (asked for alone with `X-Arrow-Schema-Only`);
+    * the body channel is never requested. */
+  def dissocSchema(infoUrl: String): StructType = {
+    val (metaUrl, bodyUrl) = resolveDissoc(infoUrl)
+    probeSchema("dissoc-schema-probe")(new ArrowStreamReader(
+      new graft.dissociated.Dissociated.Reassembler(
+        openRaw(metaUrl, schemaOnly = true), () => openRaw(bodyUrl)), _,
       org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE))
+  }
 
   /** Local file in the Arrow IPC *file* format? (ARROW1 magic) */
   def isFileFormat(path: String): Boolean =

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * again, and every pass compiles them anew. Whole-stage classes are
   * named without their stage id (see [[GraftSession.builder]]), so a
   * stage that AQE numbers differently on another run still reuses its
-  * class.
+  * class, and the frames the queries share are filled before any
+  * consumer is planned (see [[operators.OpUtils.store]]), so AQE picks
+  * the same join sides on every run.
   *
   * `CodeGenerator` updates the compilation-time histogram once per
   * cache miss, so the histogram's count is the number of classes
@@ -33,18 +35,6 @@ class CodegenReuseSpec extends AnyFunSuite {
     "s31_quantization_sheet", "t18_keyword_tfidf", "p25_shard_dedup_leakage",
     "m23_caption_transfer")
 
-  /** The query whose physical plan can differ between two runs, so that
-    * a second run may compile classes the first did not. m23 self-joins
-    * a frame that `OpUtils.transientPersist` caches afresh on every run,
-    * and AQE picks that join's build side from the cache's size
-    * statistic, which it can read while the cache is still filling: the
-    * build side, and with it the generated join code, then varies with
-    * task timing. It still runs in both passes, so its classes count in
-    * the working set the cache must hold. d24 and d28 take their
-    * cluster labels as a local frame from `DedupOps.clusterLabels`, with
-    * no persisted self-join, so they are held to the rule. */
-  private val perRunPlans = Set("m23_caption_transfer")
-
   private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** One pass over the loop, every query through the noop sink; returns
@@ -57,10 +47,8 @@ class CodegenReuseSpec extends AnyFunSuite {
 
   test("a second pass over the query loop compiles no class") {
     pass()
-    val (varying, fixed) = pass().partition { case (q, _) => perRunPlans(q) }
-    def show(qs: Seq[(String, Long)]) =
-      qs.filter(_._2 > 0).map { case (q, n) => s"$q $n" }.mkString(", ")
-    info(s"recompiled by a plan that varies per run: ${show(varying)}")
-    assert(fixed.map(_._2).sum === 0, s"recompiled on the second pass: ${show(fixed)}")
+    val again = pass()
+    assert(again.map(_._2).sum === 0, "recompiled on the second pass: " +
+      again.filter(_._2 > 0).map { case (q, n) => s"$q $n" }.mkString(", "))
   }
 }

@@ -727,10 +727,12 @@ class PlanSpec extends AnyFunSuite {
   test("s17: only the truth arm pays a corpus NLJ; candidates hash-join on (t, bucket)") {
     val p = plan("s17_mips_lsh")
     // the persisted candidate cache renders its subtree once per
-    // consumer — count DISTINCT nested-loop nodes, not renderings
+    // consumer, and its filled AQE plan renders each node twice (final
+    // plan with its codegen stage id, then initial plan) — count
+    // DISTINCT nested-loop nodes, not renderings
     val nlj = p.split("\n")
       .filter(l => l.contains("BroadcastNestedLoopJoin") || l.contains("CartesianProduct"))
-      .map(_.replaceAll("^[\\s:+|-]+", "")).distinct.length
+      .map(_.replaceAll("^[\\s:+|-]+", "").replaceAll("^\\*\\(\\d+\\) ", "")).distinct.length
     assert(nlj <= 2, p) // brute-force truth + the 1-row M² broadcast
     // (truth ⟕ top-3 may SMJ in the static plan — both sides are
     // query-sample-sized aggregates; AQE converts it at runtime)

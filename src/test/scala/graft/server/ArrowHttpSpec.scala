@@ -115,8 +115,8 @@ class ArrowHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("zstd parallel frames: decompressed bytes identical to identity serve") {
-    // r15: the zstd serve compresses each relay chunk as an independent
-    // frame on JVM threads (writeParallelZstd). Concatenated-frame decode
+    // the zstd serve codes each partition as an independent zstd frame
+    // inside its Spark task (writeParallel). Concatenated-frame decode
     // must yield EXACTLY the identity stream — same schema header, same
     // single leading dictionary (duplicates stripped), same partition
     // order, one EOS. A dict-encoded multi-partition dataset covers the

@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.io.IOException
-import java.net.InetSocketAddress
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
+import java.net.{HttpURLConnection, InetSocketAddress, URI}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -10,11 +11,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
+import graft.arrow.ArrowBridge
 import graft.datagen.Generators
-import graft.dissociated.Channels
+import graft.dissociated.{Channels, Dissociated}
+import graft.server.ArrowHttpServer
 
 /** A dissociated schema probe reads the metadata channel only: against
-  * a stub server that counts them, it requests no body channel. */
+  * a stub server that counts them, it requests no body channel; a graft
+  * server answers its schema-only request with the schema frame and EOS
+  * alone. */
 class DissocSchemaProbeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("dissoc-probe-spec", "4").getOrCreate()
 
@@ -62,5 +67,51 @@ class DissocSchemaProbeSpec extends AnyFunSuite {
       assert(df.count() === 5000)
       assert(bodyRequests.get === 1)
     }
+  }
+
+  /** (Content-Length, body) of a GET, with `X-Arrow-Schema-Only` when
+    * `schemaOnly`. */
+  private def get(url: String, schemaOnly: Boolean): (Long, Array[Byte]) = {
+    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+    if (schemaOnly) conn.setRequestProperty("X-Arrow-Schema-Only", "1")
+    assert(conn.getResponseCode === 200)
+    val in = conn.getInputStream
+    try (conn.getContentLengthLong, in.readAllBytes()) finally in.close()
+  }
+
+  test("a schema-only metadata request reads the schema frame and EOS, nothing more") {
+    val df = Generators.ticker(spark, 5000, 2)
+    val server = new ArrowHttpServer(spark)
+    server.register("probe", df)
+    server.start()
+    try {
+      val (fullLen, full) = get(s"${server.baseUrl}/dissoc/meta/probe", schemaOnly = false)
+      assert(fullLen === full.length)
+      // the whole channel opens with the same schema frame: [type][seq][len][bytes]
+      val schemaFrame = Dissociated.metaFrameLen(
+        ByteBuffer.wrap(full, 5, 4).order(ByteOrder.LITTLE_ENDIAN).getInt).toInt
+      val (len, probe) = get(s"${server.baseUrl}/dissoc/meta/probe", schemaOnly = true)
+      assert(probe.length === schemaFrame + Dissociated.metaFrameLen(0))
+      assert(len === probe.length)
+      assert(probe.take(schemaFrame).toSeq === full.take(schemaFrame).toSeq)
+
+      val sink = new ByteArrayOutputStream()
+      val (batches, _) = Dissociated.reassemble(
+        new ByteArrayInputStream(probe), new ByteArrayInputStream(Array.emptyByteArray), sink)
+      assert(batches === 0)
+      val res = ArrowBridge.read(new ByteArrayInputStream(sink.toByteArray))
+      try {
+        assert(res.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+          df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+        assert(res.rows.isEmpty)
+      } finally res.close()
+
+      val info = s"${server.baseUrl}/dissoc/info/probe"
+      val loaded = spark.read.format("arrows").option("dissoc", info).load()
+      assert(loaded.schema === ArrowsTableProvider.dissocSchema(info))
+      assert(loaded.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
+        df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+      assert(loaded.count() === 5000)
+    } finally server.stop()
   }
 }

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Cross-engine deterministic building blocks shared by the LLM-pipeline
   * operators (dedup / similarity / text analysis).
@@ -44,13 +43,10 @@ object OpUtils {
   private val frames = new ConcurrentHashMap[(SparkSession, String), Frame]()
 
   /** One entry. The first caller of `result` builds and fills it, and
-    * concurrent callers wait for that build and share its outcome. A
-    * build that persisted its frame itself (under its own confs) is not
-    * persisted again. */
+    * concurrent callers wait for that build and share its outcome. */
   private final class Frame(val transient: Boolean, build: () => DataFrame) {
     lazy val result: Either[Throwable, DataFrame] = try {
-      val df = build()
-      val p = if (df.storageLevel == StorageLevel.NONE) df.persist() else df
+      val p = build().persist()
       try { p.count(); Right(p) } catch { case t: Throwable => p.unpersist(false); throw t }
     } catch { case t: Throwable => Left(t) }
     def unpersist(blocking: Boolean): Unit = result.foreach(_.unpersist(blocking))

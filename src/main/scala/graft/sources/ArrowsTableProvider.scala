@@ -263,9 +263,9 @@ object ArrowsTableProvider {
     * reading thread, bodies may arrive out of order within its bounded
     * window (16 pending slots: constant memory at any stream length),
     * and batches come out in sequence order. */
-  def openDissoc(infoUrl: String): InputStream = {
+  def openDissoc(infoUrl: String, schemaOnly: Boolean = false): InputStream = {
     val (metaUrl, bodyUrl) = resolveDissoc(infoUrl)
-    openDissocPair(metaUrl, bodyUrl)
+    openDissocPair(metaUrl, bodyUrl, schemaOnly)
   }
 
   /** As [[openDissoc]] with the channel pair already resolved (planned
@@ -277,19 +277,18 @@ object ArrowsTableProvider {
     * covers both channels of every reader task that can run at once, so
     * a body request never queues behind another task's streaming meta
     * handler. */
-  def openDissocPair(metaUrl: String, bodyUrl: String): InputStream =
-    new graft.dissociated.Dissociated.Reassembler(openRaw(metaUrl), () => openRaw(bodyUrl))
+  def openDissocPair(metaUrl: String, bodyUrl: String,
+      schemaOnly: Boolean = false): InputStream =
+    new graft.dissociated.Dissociated.Reassembler(
+      openRaw(metaUrl, schemaOnly), () => openRaw(bodyUrl))
 
   /** Schema of a dissociated dataset: reads the schema frame off the
     * metadata channel only (asked for alone with `X-Arrow-Schema-Only`);
     * the body channel is never requested. */
-  def dissocSchema(infoUrl: String): StructType = {
-    val (metaUrl, bodyUrl) = resolveDissoc(infoUrl)
+  def dissocSchema(infoUrl: String): StructType =
     probeSchema("dissoc-schema-probe")(new ArrowStreamReader(
-      new graft.dissociated.Dissociated.Reassembler(
-        openRaw(metaUrl, schemaOnly = true), () => openRaw(bodyUrl)), _,
+      openDissoc(infoUrl, schemaOnly = true), _,
       org.apache.arrow.compression.CommonsCompressionFactory.INSTANCE))
-  }
 
   /** Local file in the Arrow IPC *file* format? (ARROW1 magic) */
   def isFileFormat(path: String): Boolean =
